@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,34 +86,55 @@ object Dedup {
     * (round-21): the PPJoin LENGTH filter (J(A,B) ≥ t ⟹ t·|A| ≤ |B| and
     * t·|B| ≤ |A|, because J ≤ min/max — the `- 1e-9` nudge absorbs the
     * float-product ulp exactly as in [[prefixJaccardPairs]]), and
-    * FIRST-BAND dedup: a pair agreeing on k bands previously surfaced k
-    * times and was re-verified k times (measured 1.43× duplicate factor
-    * at sf0.1); emitting it only from its lowest agreeing band makes
-    * candidates unique without any shuffle — a plain codegen'd filter on
-    * the carried band keys. Matched rows always have non-null band keys
-    * (a null text nulls the WHOLE signature, so null keys never
-    * equi-join), so the null-safe `<=>` negation is purely defensive.
-    * Both prunes drop only pairs the exact verify would reject — the
-    * output set is bit-identical (oracle-checked).
+    * first-band emission ([[firstBandJoin]]): a pair agreeing on k bands
+    * would otherwise surface k times and be verified k times (measured
+    * 1.43× duplicate factor at sf0.1). Both prunes drop only pairs the
+    * exact verify would reject or has already seen — the output set is
+    * bit-identical (oracle-checked).
     */
   private def bandCandidates(bx: DataFrame, by: DataFrame,
                              minJaccard: Double, bands: Int,
                              requireIdOrder: Boolean): DataFrame = {
-    val sameBucket = col("x.band_idx") === col("y.band_idx") &&
-      col("x.band_key") === col("y.band_key")
     val idOrder = if (requireIdOrder) col("x.id") < col("y.id") else lit(true)
     val lengthOk =
       col("y.n") >= lit(minJaccard) * col("x.n") - lit(1e-9) &&
         col("x.n") >= lit(minJaccard) * col("y.n") - lit(1e-9)
-    // candidate survives only in its FIRST agreeing band: for band_idx=i
-    // every earlier band must disagree
-    val firstBand = (0 until bands).map { i =>
-      col("x.band_idx") === i && (0 until i).map { j =>
-        !(col(s"x.band$j") <=> col(s"y.band$j"))
-      }.foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    bx.as("x").join(by.as("y"), sameBucket && idOrder && lengthOk && firstBand)
+    firstBandJoin(bx, by, bands, idOrder && lengthOk)
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+  }
+
+  /** One row per (document, band): every column of `withBands` — which
+    * carries all band keys `band0`…`band{bands-1}` — plus the exploded
+    * `band_idx`/`band_key` that [[firstBandJoin]] buckets on.
+    */
+  private[llm] def explodeBands(withBands: DataFrame, bands: Int): DataFrame =
+    withBands.select(col("*"),
+        posexplode(array((0 until bands).map(b => col(s"band$b")): _*)))
+      .withColumnRenamed("pos", "band_idx")
+      .withColumnRenamed("col", "band_key")
+
+  /** Band-bucket join (aliases `x`, `y`) of two [[explodeBands]] frames
+    * that meets each pair ONCE: rows meet on (band_idx, band_key) and
+    * `cond`, and a pair agreeing on k bands — k bucket meetings — is kept
+    * only from its lowest agreeing band, so candidates are unique without
+    * a distinct() shuffle (within one band a pair meets at most once).
+    * The CASE finds the lowest agreeing band with one `<=>` per band;
+    * the equi-join makes band `band_idx` agree, so the CASE stops at or
+    * before it, and equals it exactly when no earlier band agrees.
+    * `<=>` counts two null keys as agreeing; no matched row has them, as
+    * band keys are null only all together (a null signature or vector
+    * nulls every band) and null keys never equi-join.
+    */
+  private[llm] def firstBandJoin(bx: DataFrame, by: DataFrame, bands: Int,
+                                 cond: Column): DataFrame = {
+    val firstAgreeing = (1 until bands).foldLeft(
+        when(col("x.band0") <=> col("y.band0"), 0)) { (c, j) =>
+      c.when(col(s"x.band$j") <=> col(s"y.band$j"), j)
+    }
+    bx.as("x").join(by.as("y"),
+      col("x.band_idx") === col("y.band_idx") &&
+        col("x.band_key") === col("y.band_key") &&
+        cond && firstAgreeing === col("x.band_idx"))
   }
 
   /** Incremental ingest near-dedup: pairs (existing, incoming) where an
@@ -133,7 +155,7 @@ object Dedup {
                               bands: Int = 3): DataFrame = {
     // same materialize-once + pruned-candidate shape as the batch form
     // (round-21); the bipartite join keeps both directions, so no id
-    // order — first-band dedup and the length filter apply unchanged
+    // order — first-band emission and the length filter apply unchanged
     val te = tokenHashSets(existing, textCol, idCol).localCheckpoint()
     val ti = tokenHashSets(incoming, textCol, idCol).localCheckpoint()
     val cand = bandCandidates(
@@ -217,7 +239,7 @@ object Dedup {
   /** (id, n, band0..band{b-1}, band_idx, band_key) LSH buckets from the
     * minhash signature. Besides the exploded (band_idx, band_key) join
     * key, every row carries the token-set size `n` (for the candidate
-    * length filter) and ALL band keys (for first-band dedup) — b longs
+    * length filter) and ALL band keys (for [[firstBandJoin]]) — b longs
     * and an int of width per row, paid once in the materialized index.
     */
   private def minhashBandBuckets(toks: DataFrame, numHashes: Int,
@@ -236,17 +258,12 @@ object Dedup {
       when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
         .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
     }
-    val withBands = sigs.select(col("id") +: col("n") +: bandCols: _*)
-    withBands.select(col("id") +: col("n") +:
-        (0 until bands).map(b => col(s"band$b")) :+
-        posexplode(array((0 until bands).map(b => col(s"band$b")): _*)): _*)
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
+    explodeBands(sigs.select(col("id") +: col("n") +: bandCols: _*), bands)
   }
 
   /** Exact jaccard verify of a candidate pair list against the hash sets.
     * The minhash band paths hand over candidates already unique
-    * (first-band dedup in [[bandCandidates]]), so they skip the trailing
+    * (first-band emission in [[firstBandJoin]]), so they skip the trailing
     * distinct; [[prefixJaccardPairs]] can surface a pair once per shared
     * prefix token and dedups AFTER the jaccard filter — the merge-verify
     * is so cheap that re-checking duplicates costs less than a distinct()
@@ -305,32 +322,24 @@ object Dedup {
     // JVM shifts count mod 64, so (1L << 64) - 1 would be 0 — an all-rows
     // single bucket (silent N²) for bands=1
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val sigs = docs.select(col(idCol).as("id"),
-      TextStats.simhash64(col(textCol)).as("sig"))
+    // a null text's null signature never matches, so those rows go first
+    // and the signature is declared non-null: a nullable `sig` lets the
+    // hamming verify's inferred isnotnull(sig) be pushed under this
+    // projection, re-inlining the tokenize+hash chain into a per-row
+    // filter (every document hashed twice per join side)
+    val bridge = org.apache.spark.sql.graftbridge.Bridge
+    val sigs = docs.filter(col(textCol).isNotNull).select(col(idCol).as("id"),
+      bridge.column(KnownNotNull(bridge.expression(
+        TextStats.simhash64(col(textCol))))).as("sig"))
     val bandCols = (0 until b).map { i =>
       shiftrightunsigned(col("sig"), i * width)
         .bitwiseAND(lit(mask)).as(s"band$i")
     }
-    // round-22: rows keep ALL band slices through the explode so a pair
-    // agreeing on k bands is emitted only from its lowest agreeing band
-    // (the minhash/LSH first-band filter) — replaces the distinct()
-    // shuffle of the candidate list; within one band a pair meets at
-    // most once, so first-band emission is exactly-once, same set
-    val buckets = sigs.select(col("id") +: col("sig") +: bandCols: _*)
-      .select(col("id") +: col("sig") +:
-        (0 until b).map(i => col(s"band$i")) :+
-        posexplode(array((0 until b).map(i => col(s"band$i")): _*)): _*)
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
-    val firstBand = (0 until b).map { i =>
-      col("x.band_idx") === i && (0 until i).map { j =>
-        !(col(s"x.band$j") <=> col(s"y.band$j"))
-      }.foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id") && firstBand)
+    // every row keeps ALL band slices through the explode, so
+    // [[firstBandJoin]] can emit a pair agreeing on k bands once
+    val buckets = explodeBands(
+      sigs.select(col("id") +: col("sig") +: bandCols: _*), b)
+    val cand = firstBandJoin(buckets, buckets, b, col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
     cand.withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))

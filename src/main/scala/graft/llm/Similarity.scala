@@ -413,12 +413,12 @@ object Similarity {
       // round-21: self-joined below — materialize so the centroid-rank
       // assignment (crossJoin + window) runs once, not per join side
       .localCheckpoint()
-    // round-22: a pair probing both cells in common used to arrive twice
-    // and pay a dropDuplicates shuffle of the candidate list WITH its
-    // vector payloads; emitting it only from the SMALLEST shared cell
-    // (array_min ∘ array_intersect on the carried cell sets — a codegen
-    // filter, order-insensitive) is exactly-once by construction, so the
-    // verify still runs once per candidate and no exchange remains
+    // a pair sharing several probed cells meets once per shared cell;
+    // keeping only the meeting in the SMALLEST shared cell (array_min ∘
+    // array_intersect on the carried cell sets — a codegen filter,
+    // order-insensitive) is exactly-once by construction, so the verify
+    // runs once per candidate with no dedup exchange of the candidate
+    // list and its vector payloads
     assigned.as("x").join(assigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.id") < col("y.id") &&
           col("x.cell") ===
@@ -712,30 +712,15 @@ object Similarity {
       when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
         .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
     }
-    // round-22: every row carries ALL band keys (the minhashBandBuckets
-    // shape) so a pair agreeing on k bands can be emitted only from its
-    // LOWEST agreeing band — a plain codegen filter replaces the former
-    // distinct() shuffle of the candidate pair list. Within one band a
-    // pair meets at most once (one row per id per band), so first-band
-    // emission IS exactly-once — the output set is unchanged.
-    val withBands = bucketed.select(col("id") +: bandCols: _*)
-    val buckets = withBands.select(col("id") +:
-        (0 until bands).map(b => col(s"band$b")) :+
-        posexplode(array((0 until bands).map(b => col(s"band$b")): _*)): _*)
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_key")
+    // every row carries ALL band keys, so Dedup.firstBandJoin can emit a
+    // pair agreeing on k bands once, not k times
+    val buckets = Dedup.explodeBands(
+        bucketed.select(col("id") +: bandCols: _*), bands)
       // round-21: self-joined below — materialize so the 8 hyperplane
       // projections are computed once per vector, not per join side
       .localCheckpoint()
-    val firstBand = (0 until bands).map { i =>
-      col("x.band_idx") === i && (0 until i).map { j =>
-        !(col(s"x.band$j") <=> col(s"y.band$j"))
-      }.foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    val cand = buckets.as("x").join(buckets.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") < col("y.id") && firstBand)
+    val cand = Dedup.firstBandJoin(buckets, buckets, bands,
+        col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
     val ua = unit.select(col("id").as("id_a"), col("u").as("ua"))
     val ub = unit.select(col("id").as("id_b"), col("u").as("ub"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge lists — the same
@@ -89,17 +89,24 @@ object Graph {
     * of degree < k until none remain; survivors form the k-core — the
     * "dense kernel" membership test (spam rings, tight dup communities)
     * that degree alone can't answer (a hub wired to leaves has high
-    * degree and no core). Each round is one degree aggregate + one
-    * semi-join filter, checkpoint-per-round with eager release (the
-    * pageRank/CC discipline); rounds are bounded by the peel depth,
-    * which is small on real graphs (each round removes every
-    * currently-underqualified node at once, not one node at a time).
+    * degree and no core). Each round checkpoints the degree frame with
+    * an [[Observation]] of `min(deg)`, which rides on the checkpoint job:
+    * `min(deg) ≥ k` (or no edges left, a null min) means nothing would be
+    * peeled, and that degree frame IS the result; otherwise one semi-join
+    * filter peels every underqualified node at once. Checkpoint-per-round
+    * with eager release (the pageRank/CC discipline); rounds are bounded
+    * by the peel depth, which is small on real graphs.
+    *
+    * `maxIter` bounds the PEEL rounds: a graph whose peel depth (rounds
+    * that delete nodes) is at most `maxIter` converges; one deeper fails
+    * loudly with "k-core peel did not converge" (GraphSpec pins the
+    * boundary).
     *
     * Returns the k-core's (node, deg_in_core). Oracle-checked despite
     * the data-dependent round count: a fixpoint unrolled past its
     * convergence depth is stable, so the DuckDB oracle unrolls a
     * generous fixed round count (LlmQueries.kcoreOracleSql) and the
-    * `require(converged)` below guarantees any under-unroll surfaces as
+    * convergence `require` below guarantees any under-unroll surfaces as
     * a loud hash mismatch, never a silent wrong answer. Spec-level
     * contract on top: hand graphs with known cores, plus the invariant
     * every returned degree ≥ k.
@@ -107,43 +114,40 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     val bridge = org.apache.spark.sql.graftbridge.Bridge
     require(k >= 1, s"k must be >= 1: $k")
-    var cur = edges
+    @annotation.tailrec
+    def peel(cur: DataFrame, peels: Int): DataFrame = {
+      val obs = Observation()
+      val deg = cur.select(col("u").as("node"))
+        .union(cur.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg_in_core"))
+        .observe(obs, min(col("deg_in_core")).as("min_deg"))
+        .localCheckpoint()
+      // deg is materialized, so releasing cur cannot truncate its lineage
+      // (the CC/pageRank release rule)
+      val converged = obs.get("min_deg") match {
+        case null => true // no edges left: the k-core is empty
+        case m: Long => m >= k
+      }
+      if (converged) {
+        bridge.releaseLocalCheckpoint(cur)
+        deg
+      } else {
+        require(peels < maxIter, s"k-core peel did not converge in $maxIter rounds")
+        val keep = deg.filter(col("deg_in_core") >= k).select("node")
+        val next = cur
+          .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+          .localCheckpoint()
+        bridge.releaseLocalCheckpoint(cur)
+        bridge.releaseLocalCheckpoint(deg)
+        peel(next, peels + 1)
+      }
+    }
+    peel(edges
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
-    // round-22: carry the surviving-edge count across rounds — the old
-    // `next.count() == cur.count()` re-counted the PREVIOUS frame every
-    // round (it was already counted as next last round), one redundant
-    // job per peel round
-    var curCount = cur.count()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val deg = cur.select(col("u").as("node"))
-        .union(cur.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("node")
-      val next = cur
-        .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .localCheckpoint()
-      val nextCount = next.count()
-      converged = nextCount == curCount
-      curCount = nextCount
-      bridge.releaseLocalCheckpoint(cur)
-      cur = next
-      iter += 1
-    }
-    require(converged, s"k-core peel did not converge in $maxIter rounds")
-    // materialize BEFORE releasing cur: the result must not read through
-    // a truncated checkpoint lineage (the CC/pageRank release rule)
-    val out = cur.select(col("u").as("node"))
-      .union(cur.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).cast("bigint").as("deg_in_core"))
-      .localCheckpoint()
-    bridge.releaseLocalCheckpoint(cur)
-    out
+      .localCheckpoint(), 0)
   }
 
   /** Degree assortativity: Pearson correlation of endpoint degrees over

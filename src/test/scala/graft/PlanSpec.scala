@@ -143,7 +143,8 @@ class PlanSpec extends AnyFunSuite {
         llm.CorpusQueries.sourceVocab(spark, sf),
         llm.CorpusQueries.bigramLogprob(spark, sf),
         llm.CorpusQueries.interDocDupFraction(spark, sf),
-        llm.CorpusQueries.dupSpans(spark, sf))) {
+        llm.CorpusQueries.dupSpans(spark, sf),
+        llm.LlmQueries.simhashBanded(spark, sf))) {
       val p = plan(df)
       val bad = p.linesIterator.exists(l => l.contains("Filter") && l.contains("split("))
       assert(!bad, s"split() re-inlined into a filter:\n${p.take(3000)}")

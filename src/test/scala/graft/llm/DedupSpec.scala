@@ -124,19 +124,22 @@ class DedupSpec extends AnyFunSuite {
   test("banded simhash pairs: subset of exact, complete for hamming < bands") {
     val corpus = graft.Tables.table(spark, GraftTestSpark.sfDir, "documents")
       .filter($"doc_id" < 200)
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
+    def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.simhashPairs(corpus, maxHamming = 12, maxId = 200)
-    val banded = Dedup.simhashNearDupPairs(corpus, maxHamming = 12)
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
     // auto-banding picks 16 bands > 12 = maxHamming, so recall is total:
     // the banded SCALE path must equal the all-pairs verification form —
-    // exactly what makes q_simhash_banded and q_simhash_pairs interchangeable
-    assert(pairSet(banded) == pairSet(exact))
-    // pigeonhole guarantee: h < 4 bands → at least one 16-bit slice equal
-    val exact3 = pairSet(Dedup.simhashPairs(corpus, maxHamming = 3, maxId = 200))
-    val banded3 = pairSet(Dedup.simhashNearDupPairs(corpus, maxHamming = 3))
-    assert(exact3.subsetOf(banded3) && banded3 == exact3)
+    // exactly what makes q_simhash_banded and q_simhash_pairs interchangeable.
+    // Pigeonhole guarantee: h < b bands → at least one (64/b)-bit slice
+    // equal; auto-banding picks b = 1, 2, 4, 8, 16, 32, 64 for these h, so
+    // every band count of the first-band filter is checked against the
+    // exact form — and each pair must be emitted once, not once per band
+    for (h <- Seq(0, 1, 3, 7, 12, 20, 40)) {
+      val exact = pairs(Dedup.simhashPairs(corpus, maxHamming = h, maxId = 200))
+      val banded = pairs(Dedup.simhashNearDupPairs(corpus, maxHamming = h))
+      assert(banded.toSet == exact.toSet, s"maxHamming=$h")
+      assert(banded.size == banded.distinct.size, s"maxHamming=$h: a pair emitted twice")
+    }
   }
 
   test("winnowing overlap finds a copied passage inside different docs") {

@@ -112,4 +112,26 @@ class GraphSpec extends AnyFunSuite {
     val c2 = Graph.kCore(tri, k = 2).collect().map(_.getLong(0)).toSet
     assert(c2 == Set(1L, 2L, 3L))
   }
+
+  test("kCore: an empty edge list returns an empty core, not a wait") {
+    // no edges → the degree frame is empty and its observed min(deg) is
+    // null, which is convergence: the call must return, not wait on the
+    // Observation (the Future turns a hang into a failure)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val core = Await.result(Future(Graph.kCore(empty, k = 2).collect()), 2.minutes)
+    assert(core.isEmpty)
+  }
+
+  test("kCore: maxIter bounds the peel rounds; one short fails loudly") {
+    // a 6-node chain loses both ends every round: 3 peel rounds to empty.
+    // maxIter counts peel rounds, so 3 converges and 2 fails loudly
+    val chain6 = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    assert(Graph.kCore(chain6, k = 2, maxIter = 3).count() == 0)
+    val err = intercept[IllegalArgumentException](
+      Graph.kCore(chain6, k = 2, maxIter = 2))
+    assert(err.getMessage.contains("k-core peel did not converge in 2 rounds"))
+  }
 }
