@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SF dir given by SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -22,15 +21,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(
+      GraftSession.envCpus(Runtime.getRuntime.availableProcessors()))
 
     // host-load telemetry: sampled before and after the run and stamped
     // into the JSON, so a noisy capture is self-documenting (two judging

@@ -11,7 +11,7 @@ import graft.functions.{CharEntropy, DotProduct, RepetitionMicro, SimHash64,
   * works anywhere the Scala `ArrayMath.dot` does. Attach with:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * GraftSession.create(cpus, Seq("spark.sql.extensions" -> "graft.GraftExtensions"))
   * // or: --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   */

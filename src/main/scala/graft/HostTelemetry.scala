@@ -1,7 +1,7 @@
 package graft
 
-/** Host-load sampling shared by every timed main (Bench, BenchOne, Verify,
-  * ScaleCheck): the three /proc/loadavg averages plus the cumulative
+/** Host-load sampling shared by every timed main (Bench, Verify,
+  * ScaleCheck, Dev's `time`): the three /proc/loadavg averages plus the cumulative
   * hypervisor steal ticks (8th field of /proc/stat's aggregate cpu line).
   *
   * Sampled before AND after a run, the steal delta separates "host

@@ -54,35 +54,21 @@ object ScaleCheck {
         sys.exit(1)
       }
     }
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-only perturbation knob, mirroring Verify's: SPARK_GRAFT_CONF=
-    // "k=v;k=v" lets the scale tiers run under physical-execution sweeps
-    // (e.g. the RocksDB state-store provider for the streaming decade)
-    // without a code edit. The invariants must hold under any of them.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            builder.config(k, v)
-            println(s"[scale] conf $k=$v")
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
-        }
-      })
-    val spark = builder
-      // driver and executor share one JVM here: a long full-GC pause under
-      // the x100 tier's heap pressure stalls heartbeat replies and the
-      // executor kills itself after 60 misses ("unable to send heartbeats"),
-      // which presents as a phantom RpcEndpointNotFound cascade. Generous
-      // timeouts are correct for this harness; a real cluster would keep
-      // the defaults and size executor heaps instead.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .appName("graft-scalecheck").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CONF lets the scale tiers run under physical-execution
+    // sweeps (e.g. the RocksDB state-store provider for the streaming
+    // decade); the invariants must hold under any of them.
+    val conf = GraftSession.envConf()
+    conf.foreach { case (k, v) => println(s"[scale] conf $k=$v") }
+    // driver and executor share one JVM here: a long full-GC pause under
+    // the x100 tier's heap pressure stalls heartbeat replies and the
+    // executor kills itself after 60 misses ("unable to send heartbeats"),
+    // which presents as a phantom RpcEndpointNotFound cascade. Generous
+    // timeouts are correct for this harness; a real cluster would keep
+    // the defaults and size executor heaps instead.
+    val spark = GraftSession.create(32, conf ++ Seq(
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.app.name" -> "graft-scalecheck"))
     // host stamp at tier entry and exit: the 14–22 min tiers span many
     // contention windows, so their OK/FAIL log carries the same
     // loadavg+steal evidence Bench's JSON does

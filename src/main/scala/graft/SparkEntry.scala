@@ -14,6 +14,14 @@ object SparkEntry {
     RelationalQueries.all ++ graft.ops.StatsQueries.all ++ LlmQueries.all ++
       graft.llm.CorpusQueries.all ++ graft.llm.Curation.all ++
       graft.ops.EventQueries.all ++ MlQueries.all ++ StreamQueries.all
+  /** Refuses, naming each, any name that is not a key of [[queries]]: a
+    * typo in a dev main's query subset must fail before a session starts,
+    * not quietly shrink the run. */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+  }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,32 +6,15 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // dev-only: an optional 3rd arg restricts the run to a comma-separated
-    // query subset (the driver always passes exactly 2 args → full run)
+    // query subset (the correctness gate passes exactly 2 args → full run);
+    // an unknown name is refused, or oracle_sql.json would shrink with it
+    // and the DuckDB compare would pass on fewer queries than asked
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev-only perturbation knob (mirrors BenchOne's): SPARK_GRAFT_CONF=
-    // "k=v;k=v" lets physical-execution sweeps (codegen off, AQE flipped,
-    // odd shuffle-partition counts) re-run the FULL oracle gate without a
-    // code edit — results must hash-match DuckDB under any physical plan.
-    // The driver never sets it, so the standing gate is unchanged.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            builder.config(k, v)
-            System.err.println(s"[verify] conf $k=$v")
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    only.foreach(SparkEntry.requireKnown)
+    val conf = GraftSession.envConf()
+    conf.foreach { case (k, v) => System.err.println(s"[verify] conf $k=$v") }
+    val spark = GraftSession.create(GraftSession.envCpus(4), conf)
     // host stamp (stderr, like the per-query failure lines): a Verify
     // sweep that straddled a hypervisor dip is self-documenting
     System.err.println(HostTelemetry.stampLine("verify"))

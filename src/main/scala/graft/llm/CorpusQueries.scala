@@ -272,7 +272,7 @@ object CorpusQueries {
     // posting row anyway, so the "pruned" variant adds a second
     // doc-keyed aggregate (and a re-tokenize, in its naive form) while
     // the prune removes almost nothing on a high-duplication corpus
-    // (BenchOne: 6.2 s pruned vs 3.6-4.1 s single-join). The single
+    // (timed alone: 6.2 s pruned vs 3.6-4.1 s single-join). The single
     // gram-keyed join below is linear in the posting list — the same
     // scale class as the tfidf join — and stays the cheaper plan
     // wherever the dup fraction (this query's own output) is high.

@@ -30,16 +30,16 @@ object StreamQueries {
     * fixed small-file commit cost that dominates when per-partition state
     * is small: the executed interval join here holds ~40 k state rows,
     * and 32 partitions spent 2-3.5 s/batch on empty-batch state commits
-    * alone (measured via BenchOne's progress listener; 8 partitions cut
-    * the query median 8.0 s → 3.3 s with identical results). At 100 TB
-    * the same knob goes UP (thousands), set via
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+    * alone (measured from the per-batch progress durations; 8
+    * partitions cut the query median 8.0 s → 3.3 s with identical
+    * results). It is a constant because 8 is the only value any caller
+    * has used; a corpus whose state outgrows 8 partitions needs the
+    * count derived from its measured state size, not a knob.
     */
   private def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+    spark.conf.set(key, "8")
     try body finally spark.conf.set(key, prev)
   }
 

@@ -381,10 +381,29 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_converted") == 0L)
   }
 
-  test("Explain.eagerQueries names real queries (typo canary for the " +
+  test("Dev.eagerQueries names real queries (typo canary for the " +
       "construction-eager exclusion list)") {
-    assert(graft.Explain.eagerQueries.subsetOf(
+    assert(graft.Dev.eagerQueries.subsetOf(
       graft.SparkEntry.queries.keySet))
+  }
+
+  test("a dev query subset with an unknown name is refused, naming it") {
+    SparkEntry.requireKnown(Seq("q1_lineitem", "q_stream_windowed"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.requireKnown(Seq("q1_lineitem", "q1_lineitme")))
+    assert(e.getMessage.endsWith("unknown queries: q1_lineitme"))
+  }
+
+  test("SPARK_GRAFT_CONF parsing: first '=' splits, empty entries skip, " +
+      "a malformed entry is refused by name") {
+    assert(GraftSession.parseConf("k=a=b;;x.y=1;") ==
+      Seq("k" -> "a=b", "x.y" -> "1"))
+    assert(GraftSession.parseConf(";;").isEmpty)
+    val e = intercept[IllegalArgumentException](
+      GraftSession.parseConf("a=1;foo"))
+    assert(e.getMessage ==
+      "SPARK_GRAFT_CONF entry 'foo' is not of the form key=value")
+    intercept[IllegalArgumentException](GraftSession.parseConf("=v"))
   }
 
   test("decimal-routed micro ratios stay exact past the Long product " +

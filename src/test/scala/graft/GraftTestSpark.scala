@@ -6,18 +6,9 @@ import org.apache.spark.sql.SparkSession
   * run in the same JVM, and a second SparkContext would be an error.
   */
 object GraftTestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", tempPath("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.create(4, Seq(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" -> tempPath("graft_wh").toString))
 
   val sfDir = "/root/testdata/sf0.001"
 
