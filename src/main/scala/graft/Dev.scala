@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * config plus SPARK_GRAFT_CONF:
   *
   *  - `plan <sfDir> [query...]`: the formatted physical plan of each named
-  *    query, without running it (all but [[eagerQueries]] if none named),
+  *    query, without running it (all but the `eager` ones if none named),
   *    to review scan pruning, pushdown, broadcasts and codegen spans;
   *  - `executed-plan <sfDir> <query>...`: runs each query first, rows
   *    discarded, so AQE's final plan prints, not the isFinalPlan=false one;
@@ -23,23 +23,6 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The subcommand and the query names are checked before a session starts.
   */
 object Dev {
-  /** Queries whose constructors execute work (model fits, eager writes,
-    * streaming runs, driver-side aggregates) — `plan` skips them unless
-    * one is named.
-    */
-  val eagerQueries: Set[String] = Set(
-    "q_ml_pipeline", "q_ml_cluster_sizes", "q_ml_confusion",
-    "q_dup_clusters",
-    "q_stream_windowed", "q_csv_roundtrip", "q_json_roundtrip",
-    "q_stream_dedup", "q_stream_enrich", "q_stream_hll",
-    "q_orc_roundtrip",
-    "q_pq_topk", "q_pagerank", "q_ivf_topk", "q_semantic_dedup",
-    "q_stream_interval_join", "q_approx_heavy_hitters", "q_source_kl",
-    "q_dedup_keep_best", "q_leakage_safe_split", "q_kcore",
-    "q_bpe_learn", "q_bpe_vocab", "q_importance_weights",
-    "q_budget_waterfill", "q_temperature_mix", "q_curriculum_order",
-    "q_class_balance")
-
   private val usage = "usage: Dev plan <sfDir> [query...] | " +
     "Dev executed-plan <sfDir> <query>... | Dev time <sfDir> <runs> <query>..."
 
@@ -48,7 +31,7 @@ object Dev {
     val (cmd, sfDir) = (args(0), args(1))
     val (runs, names) = cmd match {
       case "plan" if args.length == 2 =>
-        (0, SparkEntry.queries.keys.toSeq.sorted.filterNot(eagerQueries))
+        (0, SparkEntry.registry.filterNot(_.eager).map(_.name).sorted)
       case "plan" | "executed-plan" => (0, args.drop(2).toSeq)
       case "time" =>
         val runs = args.lift(2).flatMap(_.toIntOption).filter(_ > 0)

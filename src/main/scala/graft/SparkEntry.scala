@@ -1,19 +1,46 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.llm.LlmQueries
+import graft.llm.{CorpusQueries, Curation, LlmQueries}
 import graft.ml.MlQueries
-import graft.ops.RelationalQueries
+import graft.ops.{EventQueries, RelationalQueries, StatsQueries}
 import graft.stream.StreamQueries
+
+/** One query of the registry: its name, its builder over the tables of a
+  * scale-factor directory, the DuckDB SQL that must reproduce its rows
+  * (None for the adjudicated queries, which are pinned by digest instead),
+  * and whether building it already runs work (model fits, eager writes,
+  * streaming runs, driver-side aggregates), so `Dev plan` skips it unless
+  * it is named.
+  */
+final case class QueryDef(name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String] = None, eager: Boolean = false)
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.countsByType(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.all ++ graft.ops.StatsQueries.all ++ LlmQueries.all ++
-      graft.llm.CorpusQueries.all ++ graft.llm.Curation.all ++
-      graft.ops.EventQueries.all ++ MlQueries.all ++ StreamQueries.all
+
+  /** Every query, each family's list in turn; each name appears once. */
+  val registry: Seq[QueryDef] = registryOf(
+    RelationalQueries.queries ++ StatsQueries.queries ++ LlmQueries.queries ++
+      CorpusQueries.queries ++ Curation.queries ++ EventQueries.queries ++
+      MlQueries.queries ++ StreamQueries.queries)
+
+  /** Refuses, naming each, any name that `defs` carries twice: the maps
+    * below would silently keep only the last of them. */
+  def registryOf(defs: Seq[QueryDef]): Seq[QueryDef] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate queries: ${dups.toSeq.sorted.mkString(", ")}")
+    defs
+  }
+
+  /** Each query's builder, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
   /** Refuses, naming each, any name that is not a key of [[queries]]: a
     * typo in a dev main's query subset must fail before a session starts,
     * not quietly shrink the run. */
@@ -22,11 +49,9 @@ object SparkEntry {
     val unknown = names.filterNot(known)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
   }
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracle ++ graft.ops.StatsQueries.oracle ++
-      LlmQueries.oracle ++ graft.llm.CorpusQueries.oracle ++
-      graft.llm.Curation.oracle ++ graft.ops.EventQueries.oracle ++
-      MlQueries.oracle ++ StreamQueries.oracle
+
+  /** Each query's DuckDB SQL over the same parquet tables; the
+    * adjudicated queries have none. */
+  val oracleSql: Map[String, String] =
+    registry.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }

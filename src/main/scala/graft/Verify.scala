@@ -3,7 +3,10 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val usage = "usage: Verify <sfDir> <outDir> [query,query,...]"
+
   def main(args: Array[String]): Unit = {
+    require(args.length == 2 || args.length == 3, usage)
     val (sfDir, outDir) = (args(0), args(1))
     // dev-only: an optional 3rd arg restricts the run to a comma-separated
     // query subset (the correctness gate passes exactly 2 args → full run);

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Second wave of LLM-training-corpus operators: rule-based quality
@@ -16,8 +17,6 @@ import graft.Tables.table
   * ones (ln-based log-probabilities can't land on a .5e-6 tie).
   */
 object CorpusQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Stopwords for the Gopher-style "must contain ≥2 stop words" rule —
     * drawn from the corpus vocabulary so the rule discriminates.
@@ -1101,38 +1100,6 @@ object CorpusQueries {
           .as("entropy"))
       .orderBy("doc_id")
 
-  val all: Map[String, Q] = Map(
-    "q_char_entropy" -> (charEntropy _),
-    "q_sketch_counts" -> (sketchCounts _),
-    "q_collocations" -> (collocations _),
-    "q_zipf_slope" -> (zipfSlope _),
-    "q_bpe_pairs" -> (bpePairs _),
-    "q_bpe_learn" -> (bpeLearn _),
-    "q_bpe_vocab" -> (bpeVocab _),
-    "q_quality_mix" -> (qualityMix _),
-    "q_gopher_rules" -> (gopherRules _),
-    "q_heavy_hitters" -> (heavyHitters _),
-    "q_approx_heavy_hitters" -> (approxHeavyHitters _),
-    "q_unigram_logprob" -> (unigramLogprob _),
-    "q_interdoc_dup" -> (interDocDupFraction _),
-    "q_source_overlap" -> (sourceOverlap _),
-    "q_inverted_index" -> (invertedIndex _),
-    "q_bm25_rank" -> (bm25Rank _),
-    "q_temperature_mix" -> (temperatureMixDocs _),
-    "q_curriculum_order" -> (curriculumOrder _),
-    "q_chunk_docs" -> (chunkDocs _),
-    "q_chunk_dupes" -> (chunkDupes _),
-    "q_dup_spans" -> (dupSpans _),
-    "q_weighted_sample" -> (weightedSampleDocs _),
-    "q_cooccur_pairs" -> (cooccurPairs _),
-    "q_seq_pack" -> (seqPack _),
-    "q_pii_redact" -> (piiRedact _),
-    "q_hash_sample" -> (hashSample _),
-    "q_bigram_logprob" -> (bigramLogprob _),
-    "q_source_vocab" -> (sourceVocab _),
-    "q_source_kl" -> (sourceKl _)
-  )
-
   /** DuckDB replay of [[approxHeavyHitters]]'s count-min sketch: Spark's
     * `stat.countMinSketch` buckets a string item with the Guava
     * double-hash scheme — h1 = Murmur3_x86_32(bytes, 0), h2 =
@@ -1180,8 +1147,8 @@ object CorpusQueries {
        |LIMIT 20""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_char_entropy" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_char_entropy", charEntropy, Some(
       """WITH ch AS (
         |  SELECT doc_id, unnest(string_split(text, '')) AS ch
         |  FROM documents WHERE length(text) > 0),
@@ -1192,9 +1159,9 @@ object CorpusQueries {
         |        ln(CAST(c.c AS DOUBLE) / t.len)), 6) AS entropy
         |FROM c JOIN t USING (doc_id)
         |GROUP BY c.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
+        |ORDER BY c.doc_id""".stripMargin)),
 
-    "q_collocations" ->
+    QueryDef("q_collocations", collocations, Some(
       s"""WITH tok AS (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |uni AS (SELECT token, count(*) AS uc FROM tok GROUP BY token),
@@ -1219,9 +1186,9 @@ object CorpusQueries {
         |  CROSS JOIN bt CROSS JOIN ut)
         |SELECT g, bc, pmi FROM s
         |ORDER BY pmi DESC, g
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin)),
 
-    "q_zipf_slope" ->
+    QueryDef("q_zipf_slope", zipfSlope, Some(
       s"""WITH tok AS (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |uni AS (SELECT token, count(*) AS c FROM tok GROUP BY token),
@@ -1240,9 +1207,9 @@ object CorpusQueries {
         |SELECT n_head,
         |  round(CASE WHEN vr IS NULL OR vr = 0 THEN 'NaN'::DOUBLE
         |        ELSE cv / vr END, 6) AS slope
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin)),
 
-    "q_bpe_pairs" ->
+    QueryDef("q_bpe_pairs", bpePairs, Some(
       """WITH t AS (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |f AS (SELECT token, count(*) AS c FROM t GROUP BY token),
@@ -1255,12 +1222,14 @@ object CorpusQueries {
         |g AS (SELECT pair, CAST(sum(c) AS BIGINT) AS cnt FROM e GROUP BY pair)
         |SELECT pair, cnt FROM g
         |ORDER BY cnt DESC, pair
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin)),
 
-    "q_bpe_learn" -> bpeLearnOracleSql(bpeMerges),
-    "q_bpe_vocab" -> bpeVocabOracleSql(bpeMerges, bpeVocabTopK),
+    QueryDef("q_bpe_learn", bpeLearn, Some(bpeLearnOracleSql(bpeMerges)),
+      eager = true),
+    QueryDef("q_bpe_vocab", bpeVocab,
+      Some(bpeVocabOracleSql(bpeMerges, bpeVocabTopK)), eager = true),
 
-    "q_quality_mix" ->
+    QueryDef("q_quality_mix", qualityMix, Some(
       """WITH c AS (
         |  SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS t,
@@ -1281,9 +1250,9 @@ object CorpusQueries {
         |  CAST(sum(t) AS BIGINT) AS tokens
         |FROM q
         |GROUP BY band
-        |ORDER BY band""".stripMargin,
+        |ORDER BY band""".stripMargin)),
 
-    "q_gopher_rules" ->
+    QueryDef("q_gopher_rules", gopherRules, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |m AS (
@@ -1306,18 +1275,19 @@ object CorpusQueries {
         |       AND mean_len_micro <= 10000000 AND stop_hits >= 2
         |       AS BIGINT) AS keep
         |FROM m
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_heavy_hitters" ->
+    QueryDef("q_heavy_hitters", heavyHitters, Some(
       """WITH t AS (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |c AS (
         |  SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY token)
         |SELECT token, cnt FROM c
         |ORDER BY cnt DESC, token
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "q_approx_heavy_hitters" -> approxHeavyHittersOracleSql(),
+    QueryDef("q_approx_heavy_hitters", approxHeavyHitters,
+      Some(approxHeavyHittersOracleSql()), eager = true),
 
     // HLL++ replay in the linear-counting regime: Spark's
     // approx_count_distinct(rsd=0.02) is p=12 (m=4096 registers), register
@@ -1328,7 +1298,7 @@ object CorpusQueries {
     // were confirmed against the engine, including a register-collision
     // case (65 distinct values → 64 registers → estimate 65). A corpus
     // drift past the LC regime fails loudly, never silently.
-    "q_sketch_counts" -> {
+    QueryDef("q_sketch_counts", sketchCounts, Some {
       val xxh = graft.llm.DuckXxh.xxh64("t")
       s"""WITH tok AS MATERIALIZED (
          |  SELECT source, unnest(string_split(text, ' ')) AS t
@@ -1345,9 +1315,9 @@ object CorpusQueries {
          |  CAST(round(4096 * ln(4096.0 / v.zreg)) AS BIGINT) AS estimate
          |FROM ex JOIN v USING (source)
          |ORDER BY source""".stripMargin
-    },
+    }),
 
-    "q_unigram_logprob" ->
+    QueryDef("q_unigram_logprob", unigramLogprob, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1358,9 +1328,9 @@ object CorpusQueries {
         |    AS avg_logprob
         |FROM tok JOIN freq USING (token) CROSS JOIN tot
         |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_chunk_dupes" ->
+    QueryDef("q_chunk_dupes", chunkDupes, Some(
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks,
         |    len(string_split(text, ' ')) AS n
@@ -1382,9 +1352,9 @@ object CorpusQueries {
         |FROM h GROUP BY chunk_md5
         |HAVING count(DISTINCT doc_id) >= 2
         |ORDER BY n_docs DESC, n_chunks DESC, chunk_md5
-        |LIMIT 50""".stripMargin,
+        |LIMIT 50""".stripMargin)),
 
-    "q_chunk_docs" ->
+    QueryDef("q_chunk_docs", chunkDocs, Some(
       """WITH d AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks,
         |    len(string_split(text, ' ')) AS n
@@ -1402,9 +1372,9 @@ object CorpusQueries {
         |  CAST(start_tok AS BIGINT) AS start_tok,
         |  CAST(len(ch) AS BIGINT) AS n_tokens,
         |  md5(array_to_string(ch, ' ')) AS chunk_md5
-        |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
+        |FROM s ORDER BY doc_id, chunk_id""".stripMargin)),
 
-    "q_curriculum_order" ->
+    QueryDef("q_curriculum_order", curriculumOrder, Some(
       """WITH bi AS (
         |  SELECT source,
         |    row_number() OVER (ORDER BY source) - 1 AS bi
@@ -1417,9 +1387,9 @@ object CorpusQueries {
         |SELECT CAST((r.rk - 1) * nb.n + bi.bi AS BIGINT) AS pos,
         |       r.source, r.doc_id
         |FROM r JOIN bi USING (source) CROSS JOIN nb
-        |ORDER BY pos LIMIT 100""".stripMargin,
+        |ORDER BY pos LIMIT 100""".stripMargin), eager = true),
 
-    "q_temperature_mix" ->
+    QueryDef("q_temperature_mix", temperatureMixDocs, Some(
       """WITH n AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY source),
@@ -1438,9 +1408,9 @@ object CorpusQueries {
         |  FROM documents)
         |SELECT r.source, CAST(rk AS BIGINT) AS rk, doc_id
         |FROM r JOIN a USING (source) WHERE rk <= alloc
-        |ORDER BY source, rk""".stripMargin,
+        |ORDER BY source, rk""".stripMargin), eager = true),
 
-    "q_bm25_rank" ->
+    QueryDef("q_bm25_rank", bm25Rank, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1468,9 +1438,9 @@ object CorpusQueries {
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
         |       round(sum(s), 6) AS score
         |FROM sc GROUP BY doc_id
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin)),
 
-    "q_inverted_index" ->
+    QueryDef("q_inverted_index", invertedIndex, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1485,9 +1455,9 @@ object CorpusQueries {
         |      x -> x.d || ':' || x.tf), ',') AS postings
         |  FROM pd GROUP BY token)
         |SELECT token, df, tf_total, postings
-        |FROM bt ORDER BY df DESC, token LIMIT 200""".stripMargin,
+        |FROM bt ORDER BY df DESC, token LIMIT 200""".stripMargin)),
 
-    "q_source_overlap" ->
+    QueryDef("q_source_overlap", sourceOverlap, Some(
       """WITH sh AS (
         |  SELECT source,
         |    CASE WHEN len(string_split(text, ' ')) >= 3
@@ -1511,9 +1481,9 @@ object CorpusQueries {
         |    AS overlap_micro
         |FROM c JOIN tot ta ON ta.source = c.src_a
         |       JOIN tot tb ON tb.source = c.src_b
-        |ORDER BY src_a, src_b""".stripMargin,
+        |ORDER BY src_a, src_b""".stripMargin)),
 
-    "q_interdoc_dup" ->
+    QueryDef("q_interdoc_dup", interDocDupFraction, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
@@ -1536,9 +1506,9 @@ object CorpusQueries {
         |    ELSE CAST((1000000 * agg.dup) // agg.tot AS BIGINT)
         |  END AS interdup_micro
         |FROM sh LEFT JOIN agg ON sh.doc_id = agg.doc_id
-        |ORDER BY sh.doc_id""".stripMargin,
+        |ORDER BY sh.doc_id""".stripMargin)),
 
-    "q_pii_redact" ->
+    QueryDef("q_pii_redact", piiRedact, Some(
       """WITH s AS (
         |  SELECT doc_id,
         |    text || ' user' || CAST(doc_id AS VARCHAR) || '@mail.com' ||
@@ -1562,18 +1532,18 @@ object CorpusQueries {
         |    '[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+', '<IP>', 'g'),
         |    '\+[0-9]{8,}', '<PHONE>', 'g')) AS red_fp
         |FROM s
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_hash_sample" ->
+    QueryDef("q_hash_sample", hashSample, Some(
       """WITH r AS (
         |  SELECT source, doc_id,
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
         |  FROM documents)
         |SELECT source, rk, doc_id FROM r WHERE rk <= 10
-        |ORDER BY source, rk""".stripMargin,
+        |ORDER BY source, rk""".stripMargin)),
 
-    "q_cooccur_pairs" ->
+    QueryDef("q_cooccur_pairs", cooccurPairs, Some(
       """WITH dt0 AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1596,9 +1566,9 @@ object CorpusQueries {
         |        (CAST(df_a AS DOUBLE) * CAST(df_b AS DOUBLE)), 6) AS lift
         |FROM p CROSS JOIN tot
         |ORDER BY n_docs DESC, tok_a, tok_b
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin)),
 
-    "q_weighted_sample" ->
+    QueryDef("q_weighted_sample", weightedSampleDocs, Some(
       """WITH d AS (
         |  SELECT source, doc_id, n_chars,
         |    -ln((CAST(concat('0x',
@@ -1612,9 +1582,9 @@ object CorpusQueries {
         |  FROM d)
         |SELECT source, rk, doc_id, n_chars, round(es_key, 9) AS es_key
         |FROM r WHERE rk <= 10
-        |ORDER BY source, rk""".stripMargin,
+        |ORDER BY source, rk""".stripMargin)),
 
-    "q_dup_spans" ->
+    QueryDef("q_dup_spans", dupSpans, Some(
       """WITH toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (
@@ -1653,9 +1623,9 @@ object CorpusQueries {
         |  CAST((1000000 * COALESCE(agg.dup_tokens, 0)) // CAST(len(t.t) AS BIGINT)
         |    AS BIGINT) AS dupspan_micro
         |FROM toks t LEFT JOIN agg USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_bigram_logprob" ->
+    QueryDef("q_bigram_logprob", bigramLogprob, Some(
       """WITH bg AS (
         |  SELECT doc_id,
         |    list_transform(range(1, len(string_split(text, ' '))),
@@ -1677,9 +1647,9 @@ object CorpusQueries {
         |SELECT d.doc_id, COALESCE(agg.n_bigrams, 0) AS n_bigrams,
         |  agg.avg_logprob
         |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
 
-    "q_source_kl" ->
+    QueryDef("q_source_kl", sourceKl, Some(
       """WITH tok AS (
         |  SELECT source, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1694,9 +1664,9 @@ object CorpusQueries {
         |    AS kl
         |FROM st JOIN ct USING (token) JOIN ns USING (source) CROSS JOIN n
         |GROUP BY st.source
-        |ORDER BY st.source""".stripMargin,
+        |ORDER BY st.source""".stripMargin), eager = true),
 
-    "q_source_vocab" ->
+    QueryDef("q_source_vocab", sourceVocab, Some(
       """WITH tok AS (
         |  SELECT source, doc_id, unnest(string_split(text, ' ')) AS token
         |  FROM documents)
@@ -1708,9 +1678,9 @@ object CorpusQueries {
         |    AS ttr_micro
         |FROM tok
         |GROUP BY source
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
 
-    "q_seq_pack" ->
+    QueryDef("q_seq_pack", seqPack, Some(
       """WITH d AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
@@ -1726,6 +1696,6 @@ object CorpusQueries {
         |  CAST(sum(n) AS BIGINT) AS bin_tokens
         |FROM c
         |GROUP BY source, bin_id
-        |ORDER BY source, bin_id""".stripMargin
+        |ORDER BY source, bin_id""".stripMargin))
   )
 }

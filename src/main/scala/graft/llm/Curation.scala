@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Corpus-curation operators a production pretraining pipeline runs after
@@ -16,8 +17,6 @@ import graft.Tables.table
   * bounded by SCHEMA (the 1-row totals, the per-event-type bounds) are.
   */
 object Curation {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Max documents retained per source in [[sourceCap]]. */
   val capPerSource = 10
@@ -177,24 +176,17 @@ object Curation {
       .limit(importanceTopK)
   }
 
-  val all: Map[String, Q] = Map(
-    "q_source_cap" -> (sourceCap _),
-    "q_winsorized_stats" -> (winsorizedStats _),
-    "q_winsorized_approx" -> (winsorizedStatsApprox _),
-    "q_importance_weights" -> (importanceWeights _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_source_cap" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_source_cap", sourceCap, Some(
       s"""SELECT doc_id, source, n_chars FROM (
          |  SELECT doc_id, source, n_chars,
          |    row_number() OVER (PARTITION BY source
          |                       ORDER BY n_chars DESC, doc_id) AS rk
          |  FROM documents)
          |WHERE rk <= $capPerSource
-         |ORDER BY source, doc_id""".stripMargin,
+         |ORDER BY source, doc_id""".stripMargin)),
 
-    "q_winsorized_stats" ->
+    QueryDef("q_winsorized_stats", winsorizedStats, Some(
       """WITH ev AS (
         |  SELECT event_type, value FROM events WHERE value IS NOT NULL),
         |b AS (
@@ -209,9 +201,9 @@ object Curation {
         |  round(avg(least(greatest(ev.value, b.lo), b.hi)), 6) AS wmean
         |FROM ev JOIN b USING (event_type)
         |GROUP BY ev.event_type, b.lo, b.hi
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_importance_weights" ->
+    QueryDef("q_importance_weights", importanceWeights, Some(
       s"""WITH tok AS (
          |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
          |  FROM documents),
@@ -236,6 +228,8 @@ object Curation {
          |WHERE t.source <> '$importanceTarget'
          |GROUP BY t.doc_id
          |ORDER BY llr DESC, doc_id
-         |LIMIT $importanceTopK""".stripMargin
+         |LIMIT $importanceTopK""".stripMargin), eager = true),
+
+    QueryDef("q_winsorized_approx", winsorizedStatsApprox)
   )
 }

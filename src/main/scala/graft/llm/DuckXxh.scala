@@ -46,7 +46,7 @@ private[llm] object DuckXxh {
   private val Seed = BigInt(42)
 
   // fresh-variable counter: generation happens once at object init on a
-  // single thread (the oracle map is a val), so a plain var suffices
+  // single thread (each family's `queries` is a val), so a plain var suffices
   private var ctr = 0
   private def fresh(p: String): String = { ctr += 1; s"$p$ctr" }
 

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Harness wiring for the LLM-data-pipeline operator family
@@ -14,14 +15,12 @@ import graft.Tables.table
   * round 10, the MinHash/SimHash/LSH/winnowing fingerprint family
   * (DuckXxh replays Spark's xxhash64/Murmur3 bit-exactly in DuckDB SQL,
   * so q_minhash_pairs, q_simhash_pairs/banded, q_winnow_pairs and
-  * q_lsh_cosine_pairs are full hash oracles). The only rows-only
-  * queries left are the nine adjudicated in SURVEY §8 (MLlib RNG/LBFGS,
-  * Lloyd float iteration, DataSketches dense-HLL4, GK percentile
-  * internals), each gated by an error-bound or stability spec instead.
+  * q_lsh_cosine_pairs are full hash oracles). A query registered without
+  * an oracle is rows-only: EdgeCasesSpec "the queries without a DuckDB
+  * oracle are exactly the digest-pinned ones" holds that set to the keys
+  * of tools/pinned_digests_sf0.*.json.
   */
 object LlmQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Exact dedup groups (fingerprint → keep-first id + copy count). */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
@@ -628,56 +627,6 @@ object LlmQueries {
     Multimodal.audioFeatures(spark, table(spark, dir, "documents"))
       .orderBy("doc_id")
 
-  val all: Map[String, Q] = Map(
-    "q_dedup_exact" -> (dedupExact _),
-    "q_jaccard_pairs" -> (jaccardPairs _),
-    "q_prefix_jaccard" -> (prefixJaccard _),
-    "q_minhash_pairs" -> (minhashPairs _),
-    "q_simhash_pairs" -> (simhashPairs _),
-    "q_simhash_banded" -> (simhashBanded _),
-    "q_near_dedup_exact" -> (nearDedupExact _),
-    "q_incremental_dedup" -> (incrementalDedup _),
-    "q_incremental_minhash" -> (incrementalMinhashPairs _),
-    "q_winnow_pairs" -> (winnowPairs _),
-    "q_knn_cosine" -> (knnCosine _),
-    "q_mmr_diverse" -> (mmrDiverse _),
-    "q_mrl_rerank" -> (mrlRerank _),
-    "q_class_balance" -> (classBalance _),
-    "q_cosine_pairs" -> (cosinePairs _),
-    "q_lsh_cosine_pairs" -> (lshCosinePairs _),
-    "q_semantic_dedup" -> (semanticDedup _),
-    "q_int8_topk" -> (int8TopK _),
-    "q_rrf_fusion" -> (rrfFusion _),
-    "q_ivf_topk" -> (ivfTopK _),
-    "q_pq_topk" -> (pqTopK _),
-    "q_embedding_dedup" -> (embeddingDedup _),
-    "q_embedding_norms" -> (embeddingNorms _),
-    "q_embedding_int8" -> (embeddingInt8 _),
-    "q_label_centroids" -> (labelCentroids _),
-    "q_near_deduped_docs" -> (nearDedupedDocs _),
-    "q_dup_clusters" -> (dupClusters _),
-    "q_dedup_keep_best" -> (dedupKeepBest _),
-    "q_triangle_stats" -> (triangleStats _),
-    "q_leakage_safe_split" -> (leakageSafeSplit _),
-    "q_assortativity" -> (dupAssortativity _),
-    "q_kcore" -> (dupKcore _),
-    "q_text_stats" -> (textStats _),
-    "q_lang_id" -> (langId _),
-    "q_quality_score" -> (qualityScore _),
-    "q_doc_fingerprint" -> (docFingerprint _),
-    "q_text_normalize" -> (textNormalize _),
-    "q_tfidf_top_terms" -> (tfidfTopTerms _),
-    "q_source_mix" -> (sourceMix _),
-    "q_repetition_score" -> (repetitionScore _),
-    "q_contamination" -> (contamination _),
-    "q_token_budget_sample" -> (tokenBudgetSample _),
-    "q_budget_waterfill" -> (budgetWaterfill _),
-    "q_multimodal_meta" -> (multimodalMeta _),
-    "q_multimodal_decode" -> (multimodalDecode _),
-    "q_multimodal_audio" -> (multimodalAudio _),
-    "q_multimodal_frames" -> (multimodalFrames _)
-  )
-
   /** k-round CTE unroll of the MMR greedy (λ hardcoded 0.7; the
     * diversity weight is written `(1.0 - 0.7)` — an evaluated
     * subtraction, not a folded 0.3 literal — so DuckDB's double matches
@@ -1044,28 +993,34 @@ object LlmQueries {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_mmr_diverse" -> mmrOracleSql(20, 10),
-    "q_kcore" -> kcoreOracleSql(k = 3, rounds = 12),
-    "q_lsh_cosine_pairs" -> lshCosineOracleSql(minCosine = 0.3,
-      bucketLength = 1.0),
-    "q_minhash_pairs" -> minhashOracleSql("pairs", 0.9),
-    "q_incremental_minhash" -> minhashOracleSql("incremental", 0.9),
-    "q_near_deduped_docs" -> minhashOracleSql("keepfirst", 0.9),
-    "q_winnow_pairs" -> winnowPairsOracleSql(minShared = 3,
-      maxDocFreq = 20L, maxId = 500L),
-    "q_simhash_pairs" -> simhashPairsOracleSql(maxHamming = 12, maxId = 200L),
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_mmr_diverse", mmrDiverse, Some(mmrOracleSql(20, 10))),
+    QueryDef("q_kcore", dupKcore, Some(kcoreOracleSql(k = 3, rounds = 12)),
+      eager = true),
+    QueryDef("q_lsh_cosine_pairs", lshCosinePairs,
+      Some(lshCosineOracleSql(minCosine = 0.3, bucketLength = 1.0))),
+    QueryDef("q_minhash_pairs", minhashPairs,
+      Some(minhashOracleSql("pairs", 0.9))),
+    QueryDef("q_incremental_minhash", incrementalMinhashPairs,
+      Some(minhashOracleSql("incremental", 0.9))),
+    QueryDef("q_near_deduped_docs", nearDedupedDocs,
+      Some(minhashOracleSql("keepfirst", 0.9))),
+    QueryDef("q_winnow_pairs", winnowPairs, Some(winnowPairsOracleSql(
+      minShared = 3, maxDocFreq = 20L, maxId = 500L))),
+    QueryDef("q_simhash_pairs", simhashPairs,
+      Some(simhashPairsOracleSql(maxHamming = 12, maxId = 200L))),
     // deliberately the SAME SQL: the banded plan must reproduce the
     // all-pairs result set exactly (pigeonhole makes banding lossless)
-    "q_simhash_banded" -> simhashPairsOracleSql(maxHamming = 12, maxId = 200L),
-    "q_dedup_exact" ->
+    QueryDef("q_simhash_banded", simhashBanded,
+      Some(simhashPairsOracleSql(maxHamming = 12, maxId = 200L))),
+    QueryDef("q_dedup_exact", dedupExact, Some(
       """SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS copies
         |FROM documents
         |WHERE text IS NOT NULL
         |GROUP BY fp
-        |ORDER BY keep_id""".stripMargin,
+        |ORDER BY keep_id""".stripMargin)),
 
-    "q_jaccard_pairs" ->
+    QueryDef("q_jaccard_pairs", jaccardPairs, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 200)
@@ -1075,11 +1030,11 @@ object LlmQueries {
         |FROM sh a JOIN sh b ON a.id < b.id
         |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
     // deliberately the SAME SQL as q_jaccard_pairs: the prefix-filtered
     // plan must reproduce the exact result set, not an approximation
-    "q_prefix_jaccard" ->
+    QueryDef("q_prefix_jaccard", prefixJaccard, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 200)
@@ -1089,9 +1044,9 @@ object LlmQueries {
         |FROM sh a JOIN sh b ON a.id < b.id
         |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
-    "q_near_dedup_exact" ->
+    QueryDef("q_near_dedup_exact", nearDedupExact, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 200),
@@ -1103,9 +1058,9 @@ object LlmQueries {
         |SELECT doc_id, lang, source
         |FROM documents
         |WHERE doc_id < 200 AND doc_id NOT IN (SELECT drop_id FROM p)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_incremental_dedup" ->
+    QueryDef("q_incremental_dedup", incrementalDedup, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 400),
@@ -1118,9 +1073,9 @@ object LlmQueries {
         |FROM documents
         |WHERE doc_id >= 200 AND doc_id < 400
         |  AND doc_id NOT IN (SELECT drop_id FROM p)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_dup_clusters" ->
+    QueryDef("q_dup_clusters", dupClusters, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 1000),
@@ -1138,9 +1093,9 @@ object LlmQueries {
         |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id)
         |SELECT id, CAST(min(r) AS BIGINT) AS component
         |FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin), eager = true),
 
-    "q_triangle_stats" ->
+    QueryDef("q_triangle_stats", triangleStats, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 200),
@@ -1167,9 +1122,9 @@ object LlmQueries {
         |       ELSE (1000000 * COALESCE(n.n_tri, 0)) //
         |            ((d.deg * (d.deg - 1)) // 2) END AS lcc_micro
         |FROM d LEFT JOIN n USING (node)
-        |ORDER BY node""".stripMargin,
+        |ORDER BY node""".stripMargin)),
 
-    "q_assortativity" ->
+    QueryDef("q_assortativity", dupAssortativity, Some(
       """WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 200),
@@ -1188,9 +1143,9 @@ object LlmQueries {
         |sym AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e)
         |SELECT CAST(count(*) / 2 AS BIGINT) AS n_edges,
         |       round(corr(a, b), 6) AS assortativity
-        |FROM sym""".stripMargin,
+        |FROM sym""".stripMargin)),
 
-    "q_leakage_safe_split" ->
+    QueryDef("q_leakage_safe_split", leakageSafeSplit, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 1000),
@@ -1213,9 +1168,9 @@ object LlmQueries {
         |  CAST(CASE WHEN CAST('0x' ||
         |      substring(md5(CAST(component AS VARCHAR)), 1, 2) AS BIGINT)
         |    < 205 THEN 1 ELSE 0 END AS BIGINT) AS in_train
-        |FROM comp ORDER BY doc_id""".stripMargin,
+        |FROM comp ORDER BY doc_id""".stripMargin), eager = true),
 
-    "q_dedup_keep_best" ->
+    QueryDef("q_dedup_keep_best", dedupKeepBest, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 1000),
@@ -1244,9 +1199,9 @@ object LlmQueries {
         |       CAST(m.best_q AS BIGINT) AS best_quality
         |FROM m JOIN j ON j.component = m.component AND j.n_chars = m.best_q
         |GROUP BY m.component, m.n_members, m.best_q
-        |ORDER BY component""".stripMargin,
+        |ORDER BY component""".stripMargin), eager = true),
 
-    "q_class_balance" ->
+    QueryDef("q_class_balance", classBalance, Some(
       """WITH n AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
         |m AS (SELECT min(n) AS n_min FROM n),
         |r AS (
@@ -1255,9 +1210,9 @@ object LlmQueries {
         |  FROM embeddings)
         |SELECT label, CAST(rk AS BIGINT) AS rk, vec_id
         |FROM r, m WHERE rk <= n_min
-        |ORDER BY label, rk""".stripMargin,
+        |ORDER BY label, rk""".stripMargin), eager = true),
 
-    "q_mrl_rerank" ->
+    QueryDef("q_mrl_rerank", mrlRerank, Some(
       """WITH q AS (SELECT vec_id AS query_id, embedding[1:16] AS qh,
         |                  embedding AS qf
         |           FROM embeddings WHERE vec_id < 5),
@@ -1294,9 +1249,9 @@ object LlmQueries {
         |  FROM rer)
         |SELECT query_id, rk, neighbor_id, score, head_score
         |FROM ranked WHERE rk <= 10
-        |ORDER BY query_id, rk""".stripMargin,
+        |ORDER BY query_id, rk""".stripMargin)),
 
-    "q_knn_cosine" ->
+    QueryDef("q_knn_cosine", knnCosine, Some(
       """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
         |           FROM embeddings WHERE vec_id < 5),
         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -1316,13 +1271,13 @@ object LlmQueries {
         |  FROM scored)
         |SELECT query_id, rk, neighbor_id, score
         |FROM ranked WHERE rk <= 10
-        |ORDER BY query_id, rk""".stripMargin,
+        |ORDER BY query_id, rk""".stripMargin)),
 
     // op-order-shared with Similarity.int8TopK: normalize → per-vector
     // (min, scale) → least(floor(...), 255) codes → dequant mn + c*sc →
     // sequential-fold dot — identical doubles, so the deterministic
     // approximation hashes exactly
-    "q_int8_topk" ->
+    QueryDef("q_int8_topk", int8TopK, Some(
       """WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
@@ -1352,11 +1307,11 @@ object LlmQueries {
         |  FROM scored)
         |SELECT query_id, rk, neighbor_id, score
         |FROM ranked WHERE rk <= 10
-        |ORDER BY query_id, rk""".stripMargin,
+        |ORDER BY query_id, rk""".stripMargin)),
 
     // the two input rankings are verbatim the q_knn_cosine and
     // q_int8_topk oracle pipelines at k=20; fusion is rank-only
-    "q_rrf_fusion" ->
+    QueryDef("q_rrf_fusion", rrfFusion, Some(
       """WITH fq AS (SELECT vec_id AS query_id, embedding AS qv
         |            FROM embeddings WHERE vec_id < 5),
         |fc AS (SELECT vec_id AS neighbor_id, embedding AS cv
@@ -1421,9 +1376,9 @@ object LlmQueries {
         |SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id,
         |  CAST(floor(rrf * 1000000000.0) AS BIGINT) AS rrf_nano
         |FROM final WHERE rk <= 10
-        |ORDER BY query_id, rk""".stripMargin,
+        |ORDER BY query_id, rk""".stripMargin)),
 
-    "q_cosine_pairs" ->
+    QueryDef("q_cosine_pairs", cosinePairs, Some(
       """WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
@@ -1436,9 +1391,9 @@ object LlmQueries {
         |FROM u a JOIN u b ON a.vec_id < b.vec_id
         |WHERE round(list_sum(list_transform(range(1, len(a.uv) + 1),
         |    i -> a.uv[i] * b.uv[i])), 6) >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
-    "q_embedding_dedup" ->
+    QueryDef("q_embedding_dedup", embeddingDedup, Some(
       """WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
@@ -1453,16 +1408,16 @@ object LlmQueries {
         |SELECT e.vec_id, e.label
         |FROM embeddings e
         |WHERE e.vec_id < 1000 AND e.vec_id NOT IN (SELECT id_b FROM p)
-        |ORDER BY e.vec_id""".stripMargin,
+        |ORDER BY e.vec_id""".stripMargin)),
 
-    "q_label_centroids" ->
+    QueryDef("q_label_centroids", labelCentroids, Some(
       """SELECT label, CAST(r.i AS BIGINT) AS pos,
         |  round(sum(CAST(embedding[r.i + 1] AS DOUBLE)) / count(*), 6) AS mean
         |FROM embeddings CROSS JOIN range(0, 64) r(i)
         |GROUP BY label, pos
-        |ORDER BY label, pos""".stripMargin,
+        |ORDER BY label, pos""".stripMargin)),
 
-    "q_embedding_int8" ->
+    QueryDef("q_embedding_int8", embeddingInt8, Some(
       """WITH e AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1481,16 +1436,16 @@ object LlmQueries {
         |    AS BIGINT)
         |  END AS BIGINT) AS max_err_micro
         |FROM s
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
-    "q_embedding_norms" ->
+    QueryDef("q_embedding_norms", embeddingNorms, Some(
       """SELECT vec_id,
         |  round(sqrt(list_sum(list_transform(embedding,
         |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
-    "q_text_stats" ->
+    QueryDef("q_text_stats", textStats, Some(
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
@@ -1500,9 +1455,9 @@ object LlmQueries {
         |    x -> length(x))) AS DOUBLE) /
         |    len(string_split(text, ' ')), 6) AS mean_tok_len
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_lang_id" ->
+    QueryDef("q_lang_id", langId, Some(
       """WITH scored AS (
         |  SELECT lang,
         |    len(list_filter(string_split(text, ' '),
@@ -1519,9 +1474,9 @@ object LlmQueries {
         |  count(*) AS n
         |FROM scored
         |GROUP BY lang, lang_pred
-        |ORDER BY lang, lang_pred""".stripMargin,
+        |ORDER BY lang, lang_pred""".stripMargin)),
 
-    "q_quality_score" ->
+    QueryDef("q_quality_score", qualityScore, Some(
       """WITH c AS (
         |  SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS t,
@@ -1536,14 +1491,14 @@ object LlmQueries {
         |  CAST((1000000 * (10 * m * t + 3750 * (h + d))) // (12500 * t)
         |    AS BIGINT) AS quality_micro
         |FROM c
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_doc_fingerprint" ->
+    QueryDef("q_doc_fingerprint", docFingerprint, Some(
       """SELECT doc_id, md5(text) AS fp
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_text_normalize" ->
+    QueryDef("q_text_normalize", textNormalize, Some(
       """WITH n AS (
         |  SELECT doc_id,
         |    trim(regexp_replace(regexp_replace(lower(text),
@@ -1552,9 +1507,9 @@ object LlmQueries {
         |SELECT doc_id, md5(norm) AS norm_fp,
         |       CAST(length(norm) AS BIGINT) AS norm_len
         |FROM n
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_repetition_score" ->
+    QueryDef("q_repetition_score", repetitionScore, Some(
       """WITH s AS (
         |  SELECT doc_id,
         |    CASE WHEN len(string_split(text, ' ')) >= 3
@@ -1569,9 +1524,9 @@ object LlmQueries {
         |    ELSE CAST((1000000 * (len(sh) - len(list_distinct(sh)))) // len(sh)
         |         AS BIGINT) END AS rep3_micro
         |FROM s
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
-    "q_contamination" ->
+    QueryDef("q_contamination", contamination, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
@@ -1591,9 +1546,9 @@ object LlmQueries {
         |    ELSE CAST((1000000 * COALESCE(hit.h, 0)) // len(sh.grams)
         |         AS BIGINT) END AS contam_micro
         |FROM sh LEFT JOIN hit ON sh.doc_id = hit.doc_id
-        |ORDER BY sh.doc_id""".stripMargin,
+        |ORDER BY sh.doc_id""".stripMargin)),
 
-    "q_token_budget_sample" ->
+    QueryDef("q_token_budget_sample", tokenBudgetSample, Some(
       """WITH c AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1605,12 +1560,12 @@ object LlmQueries {
         |  FROM c)
         |SELECT doc_id, source, n_tokens, cum_weight
         |FROM s WHERE cum_weight <= 800
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // the oracle uses the textbook sorted-prefix scan; the engine bisects
     // scalar aggregates — same unique water level, and the level's final
     // division uses the same integer operands in both (bit-identical)
-    "q_budget_waterfill" ->
+    QueryDef("q_budget_waterfill", budgetWaterfill, Some(
       """WITH counts AS (
         |  SELECT source AS g,
         |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS c
@@ -1634,9 +1589,9 @@ object LlmQueries {
         |  round(least(CAST(c AS DOUBLE), t), 6) AS alloc,
         |  CAST(CAST(c AS DOUBLE) > t AS BIGINT) AS capped
         |FROM counts CROSS JOIN lvl
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin), eager = true),
 
-    "q_source_mix" ->
+    QueryDef("q_source_mix", sourceMix, Some(
       """WITH per AS (
         |  SELECT source, count(*) AS n_docs,
         |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1645,9 +1600,9 @@ object LlmQueries {
         |SELECT source, n_docs, n_tokens,
         |  CAST(CAST(n_tokens AS HUGEINT) * 1000000 // total AS BIGINT) AS share_ppm
         |FROM per, tot
-        |ORDER BY source""".stripMargin,
+        |ORDER BY source""".stripMargin)),
 
-    "q_tfidf_top_terms" ->
+    QueryDef("q_tfidf_top_terms", tfidfTopTerms, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
         |  FROM documents),
@@ -1667,21 +1622,21 @@ object LlmQueries {
         |  FROM scored)
         |SELECT doc_id, rk, term, tfidf
         |FROM ranked WHERE rk <= 3
-        |ORDER BY doc_id, rk""".stripMargin,
+        |ORDER BY doc_id, rk""".stripMargin)),
 
-    "q_multimodal_meta" ->
+    QueryDef("q_multimodal_meta", multimodalMeta, Some(
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
         |  sha256(text) AS sha
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // predicts the DECODED statistics from the closed-form fixture pixel
     // function (w = 8 + id%24, h = 8 + 3id%24, px(i) = (31id + 7i)%256):
     // mean over the raster, the raster top-left byte, and the
     // nearest-neighbor 8×8 resize mean (sy = ry·h//8, sx = rx·w//8,
     // idx = (sy·w + sx)·3 + c with j enumerating (ry, rx, c))
-    "q_multimodal_decode" ->
+    QueryDef("q_multimodal_decode", multimodalDecode, Some(
       """WITH dims AS (
         |  SELECT doc_id,
         |    8 + doc_id % 24 AS w,
@@ -1703,12 +1658,12 @@ object LlmQueries {
         |  CAST((doc_id * 31) % 256 AS BIGINT) AS top_left,
         |  CAST((1000000 * rs) // 192 AS BIGINT) AS resized_mean_micro
         |FROM px
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // rate = 8000 + (id%3)*4000, ch = 1 + id%2, frames = 64 + id%128,
     // sample(j) = ((id*17 + j*11) % 4096) - 2048 — the oracle recomputes
     // the generator; Spark decodes the actual RIFF/PCM bytes
-    "q_multimodal_audio" ->
+    QueryDef("q_multimodal_audio", multimodalAudio, Some(
       """WITH p AS (
         |  SELECT doc_id,
         |    8000 + (doc_id % 3) * 4000 AS rate,
@@ -1727,11 +1682,11 @@ object LlmQueries {
         |  CAST((1000000 * nf) // rate AS BIGINT) AS duration_micro,
         |  CAST((1000000 * sabs) // (nf * ch) AS BIGINT) AS mean_abs_micro
         |FROM s
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
 
     // every 2nd frame of F = 1 + id%4 frames; per frame f:
     // w = 4 + (id+f)%5, h = 3 + (2id+f)%4, px(i) = (id + 13f + 7i)%256
-    "q_multimodal_frames" ->
+    QueryDef("q_multimodal_frames", multimodalFrames, Some(
       """WITH fr AS (
         |  SELECT doc_id, r.f AS f,
         |    4 + (doc_id + r.f) % 5 AS w,
@@ -1747,6 +1702,10 @@ object LlmQueries {
         |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
         |  CAST((1000000 * s) // (w * h * 3) AS BIGINT) AS mean_px_micro
         |FROM px
-        |ORDER BY doc_id, frame_idx""".stripMargin
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
+
+    QueryDef("q_semantic_dedup", semanticDedup, eager = true),
+    QueryDef("q_ivf_topk", ivfTopK, eager = true),
+    QueryDef("q_pq_topk", pqTopK, eager = true)
   )
 }

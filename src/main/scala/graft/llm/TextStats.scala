@@ -155,13 +155,6 @@ object TextStats {
   def meanTokenLength(text: Column): Column =
     sumTokenLengths(text).cast("double") / tokenCount(text)
 
-  /** Fraction of tokens found in `words` (stopword ratio and the building
-    * block of the language-ID heuristic).
-    */
-  def wordHitRatio(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(words))).cast("double") /
-      tokenCount(text)
-
   /** Marker-word lists per language for the n-gram/stopword language-ID
     * heuristic. Deliberately tiny and deterministic: language ID at corpus
     * scale is a per-row scoring pass, and this keeps the oracle SQL exact.

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Harness wiring for the ML surface. All rows-only (not SQL-expressible;
@@ -11,8 +12,6 @@ import graft.Tables.table
   * queries exist so the driver exercises the pipelines end-to-end.
   */
 object MlQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Deterministic crime-shaped frame derived from the events table:
     * Category≈event_type, day-of-week + district + address categoricals,
@@ -180,15 +179,8 @@ object MlQueries {
         catCol = "o_orderpriority", targetCol = "o_totalprice", m = 10.0)
       .orderBy("o_orderpriority")
 
-  val all: Map[String, Q] = Map(
-    "q_ml_pipeline" -> (mlPipeline _),
-    "q_ml_confusion" -> (confusionStats _),
-    "q_ml_cluster_sizes" -> (clusterSizes _),
-    "q_target_encode" -> (targetEncode _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_target_encode" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_target_encode", targetEncode, Some(
       """WITH g AS (
         |  SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |           / count(*) AS gmean
@@ -200,6 +192,10 @@ object MlQueries {
         |SELECT o_orderpriority, n,
         |  round((s + 10.0 * gmean) / (n + 10.0), 6) AS enc
         |FROM c, g
-        |ORDER BY o_orderpriority""".stripMargin
+        |ORDER BY o_orderpriority""".stripMargin)),
+
+    QueryDef("q_ml_pipeline", mlPipeline, eager = true),
+    QueryDef("q_ml_confusion", confusionStats, eager = true),
+    QueryDef("q_ml_cluster_sizes", clusterSizes, eager = true)
   )
 }

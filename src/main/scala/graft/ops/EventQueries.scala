@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Event-analytics operators: cohort retention, equi-depth histogram,
@@ -12,8 +13,6 @@ import graft.Tables.table
   * chained CTEs (generated below, one d/c/r block per round).
   */
 object EventQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Cohort retention: users bucketed by first-active day, activity
     * counted by day offset from that cohort day — the classic retention
@@ -329,20 +328,6 @@ object EventQueries {
       .orderBy("day")
   }
 
-  val all: Map[String, Q] = Map(
-    "q_cusum_alarms" -> (cusumAlarms _),
-    "q_scd2_intervals" -> (scd2Intervals _),
-    "q_attribution" -> (attribution _),
-    "q_new_vs_returning" -> (newVsReturning _),
-    "q_decayed_counts" -> (decayedCounts _),
-    "q_cohort_retention" -> (cohortRetention _),
-    "q_equidepth_hist" -> (equidepthHistogram _),
-    "q_anomaly_days" -> (anomalyDays _),
-    "q_trend_slope" -> (trendSlope _),
-    "q_event_transitions" -> (eventTransitions _),
-    "q_pagerank" -> (transitionPageRank _)
-  )
-
   /** DuckDB unroll of [[Graph.pageRank]]'s 10 damped rounds over the
     * transition graph: one (dangling-mass, contribution, rank) CTE block
     * per round, chained. Arithmetic mirrors the Spark side op-for-op —
@@ -396,10 +381,11 @@ object EventQueries {
       .stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_pagerank" -> pageRankOracleSql(),
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_pagerank", transitionPageRank, Some(pageRankOracleSql()),
+      eager = true),
 
-    "q_new_vs_returning" ->
+    QueryDef("q_new_vs_returning", newVsReturning, Some(
       """WITH act AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |f AS (SELECT user_id, min(day) AS first_day FROM act
@@ -411,9 +397,9 @@ object EventQueries {
         |    AS returning_users
         |FROM act JOIN f USING (user_id)
         |GROUP BY act.day
-        |ORDER BY day""".stripMargin,
+        |ORDER BY day""".stripMargin)),
 
-    "q_attribution" ->
+    QueryDef("q_attribution", attribution, Some(
       """WITH a AS (
         |  SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
         |    first_value(CASE WHEN event_type = 'click' THEN event_id END
@@ -429,9 +415,9 @@ object EventQueries {
         |SELECT event_id AS purchase_id, user_id, first_touch, last_touch,
         |  us - last_us AS latency_us
         |FROM a WHERE event_type = 'purchase'
-        |ORDER BY purchase_id""".stripMargin,
+        |ORDER BY purchase_id""".stripMargin)),
 
-    "q_scd2_intervals" ->
+    QueryDef("q_scd2_intervals", scd2Intervals, Some(
       """WITH f AS (
         |  SELECT user_id, event_id, event_type, ts, epoch_us(ts) AS us,
         |    CASE WHEN lag(event_type) OVER (PARTITION BY user_id
@@ -452,9 +438,9 @@ object EventQueries {
         |  CAST(lead(valid_from) OVER (PARTITION BY user_id ORDER BY seq)
         |    AS BIGINT) AS valid_to,
         |  n_events
-        |FROM i ORDER BY user_id, seq""".stripMargin,
+        |FROM i ORDER BY user_id, seq""".stripMargin)),
 
-    "q_cusum_alarms" ->
+    QueryDef("q_cusum_alarms", cusumAlarms, Some(
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
         |    CAST(count(*) AS BIGINT) AS n
@@ -484,9 +470,9 @@ object EventQueries {
         |  min(CASE WHEN s > 10000000 THEN day END) AS first_alarm_day
         |FROM s
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_decayed_counts" ->
+    QueryDef("q_decayed_counts", decayedCounts, Some(
       """WITH ev AS (
         |  SELECT event_type,
         |    CAST(epoch_us(ts) // 1000000 AS BIGINT) AS sec
@@ -497,9 +483,9 @@ object EventQueries {
         |    AS decayed
         |FROM ev CROSS JOIN h
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_cohort_retention" ->
+    QueryDef("q_cohort_retention", cohortRetention, Some(
       """WITH d AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |c AS (
@@ -509,9 +495,9 @@ object EventQueries {
         |  CAST(count(*) AS BIGINT) AS users
         |FROM d JOIN c USING (user_id)
         |GROUP BY c.cohort_day, day_offset
-        |ORDER BY c.cohort_day, day_offset""".stripMargin,
+        |ORDER BY c.cohort_day, day_offset""".stripMargin)),
 
-    "q_trend_slope" ->
+    QueryDef("q_trend_slope", trendSlope, Some(
       """WITH d AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
         |  FROM events GROUP BY event_type, day)
@@ -522,9 +508,9 @@ object EventQueries {
         |    CAST(day - DATE '1970-01-01' AS DOUBLE)), 6) AS intercept
         |FROM d
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_anomaly_days" ->
+    QueryDef("q_anomaly_days", anomalyDays, Some(
       """WITH d AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
         |  FROM events GROUP BY event_type, day),
@@ -540,9 +526,9 @@ object EventQueries {
         |  CAST(CASE WHEN isnan(z) THEN 0
         |       WHEN abs(z) > 2 THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
         |FROM z
-        |ORDER BY event_type, day""".stripMargin,
+        |ORDER BY event_type, day""".stripMargin)),
 
-    "q_event_transitions" ->
+    QueryDef("q_event_transitions", eventTransitions, Some(
       """WITH p AS (
         |  SELECT lag(event_type) OVER (PARTITION BY user_id
         |           ORDER BY ts, event_id) AS prev_type,
@@ -557,9 +543,9 @@ object EventQueries {
         |SELECT c.prev_type, c.next_type, c.cnt,
         |  CAST((1000000 * c.cnt) // t.tot AS BIGINT) AS p_micro
         |FROM c JOIN t USING (prev_type)
-        |ORDER BY c.prev_type, c.next_type""".stripMargin,
+        |ORDER BY c.prev_type, c.next_type""".stripMargin)),
 
-    "q_equidepth_hist" ->
+    QueryDef("q_equidepth_hist", equidepthHistogram, Some(
       """WITH b AS (
         |  SELECT quantile_disc(value, 0.1) AS b1, quantile_disc(value, 0.2) AS b2,
         |         quantile_disc(value, 0.3) AS b3, quantile_disc(value, 0.4) AS b4,
@@ -580,6 +566,6 @@ object EventQueries {
         |  min(value) AS lo, max(value) AS hi
         |FROM x
         |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin
+        |ORDER BY bucket""".stripMargin))
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.{dec, table}
 
 /** Relational operator surface (SURVEY.md §2.2–2.5) expressed as named
@@ -28,8 +29,6 @@ import graft.Tables.{dec, table}
   * parquet scan.
   */
 object RelationalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** A1/A2 (crime.py:33-37,62,67): group-by count ranked descending. */
   def countsByType(spark: SparkSession, dir: String): DataFrame =
@@ -580,47 +579,6 @@ object RelationalQueries {
       .orderBy("fk")
   }
 
-  val all: Map[String, Q] = Map(
-    "q_fk_violations" -> (fkViolations _),
-    "q_counts_by_type" -> (countsByType _),
-    "q_pivot_status" -> (pivotStatus _),
-    "q_pivot_ranked" -> (pivotRanked _),
-    "q_rollup_flags" -> (rollupFlags _),
-    "q_cube_flags" -> (cubeFlags _),
-    "q_topk_orders" -> (topkOrders _),
-    "q_year_orders" -> (yearOrders _),
-    "q_date_split" -> (dateSplit _),
-    "q_hourly_events" -> (hourlyEvents _),
-    "q_funnel_steps" -> (funnelSteps _),
-    "q_upsert_latest" -> (upsertLatest _),
-    "q_window_rolling_avg" -> (windowRollingAvg _),
-    "q_range_join" -> (rangeJoinBalances _),
-    "q_bloom_semi" -> (bloomSemiOrders _),
-    "q_csv_roundtrip" -> (csvRoundtrip _),
-    "q_json_roundtrip" -> (jsonRoundtrip _),
-    "q_orc_roundtrip" -> (orcRoundtrip _),
-    "q_fuzzy_pairs" -> (fuzzyNamePairs _),
-    "q_fill_missing" -> (fillMissing _),
-    "q_select_rename" -> (selectRename _),
-    "q_zscore_acctbal" -> (zscoreAcctbal _),
-    "q_mktsegment_revenue" -> (mktsegmentRevenue _),
-    "q_region_revenue" -> (regionRevenue _),
-    "q1_lineitem" -> (q1Lineitem _),
-    "q_unpivot_metrics" -> (unpivotMetrics _),
-    "q_window_top_users" -> (windowTopUsers _),
-    "q_window_running_sum" -> (windowRunningSum _),
-    "q_window_lag_gap" -> (windowLagGap _),
-    "q_anti_customers_no_orders" -> (antiCustomersNoOrders _),
-    "q_semi_customers_with_f" -> (semiCustomersWithF _),
-    "q_corr_stats" -> (corrStats _),
-    "q_distinct_users" -> (distinctUsers _),
-    "q_union_top_accounts" -> (unionTopAccounts _),
-    "q_intersect_except" -> (intersectExcept _),
-    "q_region_roster" -> (regionNationRoster _),
-    "q_props_json" -> (propsJson _),
-    "q_head_limit" -> (headLimit _)
-  )
-
   private def fkArmSql(name: String, childT: String, ck: String,
                        parentT: String, pk: String): String =
     s"""SELECT '$name' AS fk,
@@ -632,8 +590,8 @@ object RelationalQueries {
        |                        WHERE p.$pk = c.$ck)) AS BIGINT) AS orphans
        |""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_fk_violations" -> (Seq(
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_fk_violations", fkViolations, Some(Seq(
       fkArmSql("customer.nation", "customer", "c_nationkey",
         "nation", "n_nationkey"),
       fkArmSql("lineitem.orders", "lineitem", "l_orderkey",
@@ -642,23 +600,23 @@ object RelationalQueries {
         "customer", "c_custkey"),
       fkArmSql("supplier.nation", "supplier", "s_nationkey",
         "nation", "n_nationkey"))
-      .mkString("", "UNION ALL\n", "ORDER BY fk")),
-    "q_counts_by_type" ->
+      .mkString("", "UNION ALL\n", "ORDER BY fk"))),
+    QueryDef("q_counts_by_type", countsByType, Some(
       """SELECT event_type, count(*) AS n
         |FROM events
         |GROUP BY event_type
-        |ORDER BY n DESC, event_type ASC""".stripMargin,
+        |ORDER BY n DESC, event_type ASC""".stripMargin)),
 
-    "q_pivot_status" ->
+    QueryDef("q_pivot_status", pivotStatus, Some(
       """SELECT o_orderpriority,
         |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS "F",
         |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS "O",
         |  count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS "P"
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "q_pivot_ranked" ->
+    QueryDef("q_pivot_ranked", pivotRanked, Some(
       """SELECT o_orderpriority,
         |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS "F",
         |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS "O",
@@ -666,65 +624,65 @@ object RelationalQueries {
         |  count(*) AS row_total
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY row_total DESC, o_orderpriority ASC""".stripMargin,
+        |ORDER BY row_total DESC, o_orderpriority ASC""".stripMargin)),
 
-    "q_rollup_flags" ->
+    QueryDef("q_rollup_flags", rollupFlags, Some(
       """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
         |       COALESCE(l_linestatus, 'ALL') AS ls,
         |       count(*) AS n
         |FROM lineitem
         |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
+        |ORDER BY rf, ls""".stripMargin)),
 
-    "q_cube_flags" ->
+    QueryDef("q_cube_flags", cubeFlags, Some(
       """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
         |       COALESCE(l_linestatus, 'ALL') AS ls,
         |       count(*) AS n
         |FROM lineitem
         |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
+        |ORDER BY rf, ls""".stripMargin)),
 
-    "q_topk_orders" ->
+    QueryDef("q_topk_orders", topkOrders, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey ASC
-        |LIMIT 100""".stripMargin,
+        |LIMIT 100""".stripMargin)),
 
-    "q_year_orders" ->
+    QueryDef("q_year_orders", yearOrders, Some(
       """SELECT year(o_orderdate) AS yr, count(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
         |GROUP BY yr
-        |ORDER BY yr""".stripMargin,
+        |ORDER BY yr""".stripMargin)),
 
-    "q_date_split" ->
+    QueryDef("q_date_split", dateSplit, Some(
       """SELECT event_id, strftime(ts, '%Y-%m-%d') AS date_str,
         |       strftime(ts, '%H:%M:%S') AS time_str
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_hourly_events" ->
+    QueryDef("q_hourly_events", hourlyEvents, Some(
       """SELECT hour(ts) AS hr, count(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
         |FROM events
         |GROUP BY hr
-        |ORDER BY hr""".stripMargin,
+        |ORDER BY hr""".stripMargin)),
 
-    "q_json_roundtrip" ->
+    QueryDef("q_json_roundtrip", jsonRoundtrip, Some(
       """SELECT c_mktsegment, count(*) AS n,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
         |FROM customer
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin), eager = true),
 
-    "q_csv_roundtrip" ->
+    QueryDef("q_csv_roundtrip", csvRoundtrip, Some(
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders
         |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
+        |ORDER BY o_orderstatus""".stripMargin), eager = true),
 
-    "q_fuzzy_pairs" ->
+    QueryDef("q_fuzzy_pairs", fuzzyNamePairs, Some(
       """WITH c AS (
         |  SELECT c_custkey AS id, c_name AS name,
         |    substr(c_name, 1, 16) AS blk
@@ -733,49 +691,49 @@ object RelationalQueries {
         |  CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
         |FROM c a JOIN c b ON a.blk = b.blk AND a.id < b.id
         |WHERE levenshtein(a.name, b.name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin)),
 
-    "q_orc_roundtrip" ->
+    QueryDef("q_orc_roundtrip", orcRoundtrip, Some(
       """SELECT s_nationkey, count(*) AS n,
         |  CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
         |FROM supplier
         |GROUP BY s_nationkey
-        |ORDER BY s_nationkey""".stripMargin,
+        |ORDER BY s_nationkey""".stripMargin), eager = true),
 
-    "q_bloom_semi" ->
+    QueryDef("q_bloom_semi", bloomSemiOrders, Some(
       """SELECT o_orderkey, o_custkey
         |FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer
         |                    WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "q_range_join" ->
+    QueryDef("q_range_join", rangeJoinBalances, Some(
       """SELECT c.c_custkey, s.s_suppkey
         |FROM customer c JOIN supplier s
         |  ON c.c_acctbal >= s.s_acctbal - 25.0
         | AND c.c_acctbal <= s.s_acctbal + 25.0
         |WHERE c.c_custkey < 300
-        |ORDER BY c_custkey, s_suppkey""".stripMargin,
+        |ORDER BY c_custkey, s_suppkey""".stripMargin)),
 
-    "q_window_rolling_avg" ->
+    QueryDef("q_window_rolling_avg", windowRollingAvg, Some(
       """SELECT event_id, user_id,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) /
         |    COUNT(*) OVER w AS rolling_avg
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_upsert_latest" ->
+    QueryDef("q_upsert_latest", upsertLatest, Some(
       """SELECT user_id, event_type, event_id, value FROM (
         |  SELECT user_id, event_type, event_id, value,
         |    row_number() OVER (PARTITION BY user_id, event_type
         |                       ORDER BY ts DESC, event_id DESC) AS rk
         |  FROM events)
         |WHERE rk = 1
-        |ORDER BY user_id, event_type""".stripMargin,
+        |ORDER BY user_id, event_type""".stripMargin)),
 
-    "q_funnel_steps" ->
+    QueryDef("q_funnel_steps", funnelSteps, Some(
       """WITH v AS (
         |  SELECT user_id, min(ts) AS t0 FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
@@ -795,9 +753,9 @@ object RelationalQueries {
         |SELECT CAST(2 AS BIGINT), 'click', (SELECT count(*) FROM c)
         |UNION ALL
         |SELECT CAST(3 AS BIGINT), 'purchase', (SELECT count(*) FROM p)
-        |ORDER BY step""".stripMargin,
+        |ORDER BY step""".stripMargin)),
 
-    "q_fill_missing" ->
+    QueryDef("q_fill_missing", fillMissing, Some(
       """SELECT COALESCE(NULLIF(event_type, 'click'), 'none') AS etype,
         |  count(*) AS n,
         |  CAST(SUM(CAST(COALESCE(
@@ -805,14 +763,14 @@ object RelationalQueries {
         |    AS DECIMAL(18,2))) AS DOUBLE) AS v_sum
         |FROM events
         |GROUP BY etype
-        |ORDER BY etype""".stripMargin,
+        |ORDER BY etype""".stripMargin)),
 
-    "q_select_rename" ->
+    QueryDef("q_select_rename", selectRename, Some(
       """SELECT c_custkey AS id, c_name AS cust_name, c_mktsegment AS segment
         |FROM customer
-        |ORDER BY id""".stripMargin,
+        |ORDER BY id""".stripMargin)),
 
-    "q_zscore_acctbal" ->
+    QueryDef("q_zscore_acctbal", zscoreAcctbal, Some(
       """WITH st AS (
         |  SELECT
         |    CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS s,
@@ -823,16 +781,16 @@ object RelationalQueries {
         |SELECT c_custkey,
         |  round((c_acctbal - s / n) / sqrt((ss - s * s / n) / (n - 1)), 6) AS z
         |FROM customer, st
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
 
-    "q_mktsegment_revenue" ->
+    QueryDef("q_mktsegment_revenue", mktsegmentRevenue, Some(
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin)),
 
-    "q_region_revenue" ->
+    QueryDef("q_region_revenue", regionRevenue, Some(
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |    (CAST(1.0 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2))))
@@ -845,9 +803,9 @@ object RelationalQueries {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name ASC""".stripMargin,
+        |ORDER BY revenue DESC, n_name ASC""".stripMargin)),
 
-    "q1_lineitem" ->
+    QueryDef("q1_lineitem", q1Lineitem, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -865,9 +823,9 @@ object RelationalQueries {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2001-06-30 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "q_unpivot_metrics" ->
+    QueryDef("q_unpivot_metrics", unpivotMetrics, Some(
       """SELECT l_returnflag, 'l_quantity' AS metric,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total
         |FROM lineitem GROUP BY l_returnflag
@@ -875,9 +833,9 @@ object RelationalQueries {
         |SELECT l_returnflag, 'l_extendedprice' AS metric,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag, metric""".stripMargin,
+        |ORDER BY l_returnflag, metric""".stripMargin)),
 
-    "q_window_top_users" ->
+    QueryDef("q_window_top_users", windowTopUsers, Some(
       """SELECT * FROM (
         |  SELECT event_type, user_id, count(*) AS n,
         |    row_number() OVER (PARTITION BY event_type
@@ -885,58 +843,58 @@ object RelationalQueries {
         |  FROM events
         |  GROUP BY event_type, user_id)
         |WHERE rk <= 5
-        |ORDER BY event_type, rk""".stripMargin,
+        |ORDER BY event_type, rk""".stripMargin)),
 
-    "q_window_running_sum" ->
+    QueryDef("q_window_running_sum", windowRunningSum, Some(
       """SELECT event_id,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_window_lag_gap" ->
+    QueryDef("q_window_lag_gap", windowLagGap, Some(
       """SELECT event_id,
         |  COALESCE(epoch_us(ts) - epoch_us(lag(ts, 1) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id)), -1) AS gap_us
         |FROM events
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_anti_customers_no_orders" ->
+    QueryDef("q_anti_customers_no_orders", antiCustomersNoOrders, Some(
       """SELECT c_custkey, c_name
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
 
-    "q_semi_customers_with_f" ->
+    QueryDef("q_semi_customers_with_f", semiCustomersWithF, Some(
       """SELECT c_custkey
         |FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
 
-    "q_corr_stats" ->
+    QueryDef("q_corr_stats", corrStats, Some(
       """SELECT round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
         |  round(stddev_samp(l_quantity), 6) AS sd_qty,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS mean_qty
-        |FROM lineitem""".stripMargin,
+        |FROM lineitem""".stripMargin)),
 
-    "q_distinct_users" ->
+    QueryDef("q_distinct_users", distinctUsers, Some(
       """SELECT event_type, count(DISTINCT user_id) AS nu, count(*) AS n
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_union_top_accounts" ->
+    QueryDef("q_union_top_accounts", unionTopAccounts, Some(
       """SELECT name, acctbal, kind FROM (
         |  SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS kind FROM customer
         |  UNION ALL
         |  SELECT s_name AS name, s_acctbal AS acctbal, 'supplier' AS kind FROM supplier)
         |ORDER BY acctbal DESC, name ASC
-        |LIMIT 50""".stripMargin,
+        |LIMIT 50""".stripMargin)),
 
-    "q_intersect_except" ->
+    QueryDef("q_intersect_except", intersectExcept, Some(
       """WITH urgent AS (
         |  SELECT DISTINCT c.c_nationkey
         |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -953,28 +911,28 @@ object RelationalQueries {
         |  SELECT c_nationkey, 'urgent_only' AS tag
         |  FROM (SELECT c_nationkey FROM urgent
         |        EXCEPT SELECT c_nationkey FROM fstatus))
-        |ORDER BY tag, c_nationkey""".stripMargin,
+        |ORDER BY tag, c_nationkey""".stripMargin)),
 
-    "q_region_roster" ->
+    QueryDef("q_region_roster", regionNationRoster, Some(
       """SELECT r.r_name,
         |  CAST(count(*) AS BIGINT) AS n_nations,
         |  string_agg(n.n_name, ',' ORDER BY n.n_name) AS roster
         |FROM region r JOIN nation n ON r.r_regionkey = n.n_regionkey
         |GROUP BY r.r_name
-        |ORDER BY r.r_name""".stripMargin,
+        |ORDER BY r.r_name""".stripMargin)),
 
-    "q_props_json" ->
+    QueryDef("q_props_json", propsJson, Some(
       """SELECT event_type,
         |  CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS k_sum,
         |  count(*) AS n
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_head_limit" ->
+    QueryDef("q_head_limit", headLimit, Some(
       """SELECT event_id, event_type
         |FROM events
         |ORDER BY event_id
-        |LIMIT 5""".stripMargin
+        |LIMIT 5""".stripMargin))
   )
 }

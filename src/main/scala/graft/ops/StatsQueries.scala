@@ -2,12 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Harness wiring for the statistics operators (A7/A8/F4). */
 object StatsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private val liCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
@@ -300,24 +299,6 @@ object StatsQueries {
       .orderBy("col")
   }
 
-  val all: Map[String, Q] = Map(
-    "q_corr_matrix" -> (corrMatrix _),
-    "q_hll_cube" -> (hllSketchCube _),
-    "q_skew_report" -> (skewReport _),
-    "q_dwell_percentiles" -> (dwellPercentiles _),
-    "q_funnel_time" -> (funnelTime _),
-    "q_top_correlated" -> (topCorrelated _),
-    "q_argmax_embedding" -> (argmaxEmbedding _),
-    "q_percentiles" -> (percentiles _),
-    "q_resample_hourly" -> (resampleHourly _),
-    "q_asof_clicks" -> (asofClicks _),
-    "q_ewma_values" -> (ewmaValues _),
-    "q_benford_digits" -> (benfordDigits _),
-    "q_robust_zscore" -> (robustZscore _),
-    "q_table_profile" -> (tableProfile _),
-    "q_value_histogram" -> (valueHistogram _)
-  )
-
   private def corrPair(a: String, b: String): String =
     s"SELECT '$a' AS col_a, '$b' AS col_b, round(corr($a, $b), 6) AS corr FROM lineitem"
 
@@ -328,8 +309,8 @@ object StatsQueries {
        |  CAST(max($c) AS VARCHAR) AS max_val
        |FROM orders""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_skew_report" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_skew_report", skewReport, Some(
       """WITH kc AS (
         |  SELECT 'user_id' AS col, CAST(user_id AS VARCHAR) AS key,
         |    CAST(count(*) AS BIGINT) AS c
@@ -356,38 +337,38 @@ object StatsQueries {
         |       // (n_keys * total) AS BIGINT) AS gini_micro,
         |  CAST((1000000 * cmax) // total AS BIGINT) AS top1_micro,
         |  CAST((1000000 * top5) // total AS BIGINT) AS top5_micro
-        |FROM a ORDER BY col""".stripMargin,
+        |FROM a ORDER BY col""".stripMargin)),
 
-    "q_table_profile" -> (
+    QueryDef("q_table_profile", tableProfile, Some(
       Seq("o_orderstatus", "o_orderpriority", "o_custkey").map(profileArm)
-        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")),
+        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\""))),
 
-    "q_value_histogram" ->
+    QueryDef("q_value_histogram", valueHistogram, Some(
       """SELECT CAST(floor(value / 25.0) AS BIGINT) AS bucket, count(*) AS n
         |FROM events
         |WHERE value IS NOT NULL
         |GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin)),
 
-    "q_corr_matrix" -> (
+    QueryDef("q_corr_matrix", corrMatrix, Some(
       (for { a <- liCols; b <- liCols } yield corrPair(a, b))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY col_a, col_b")),
+        .mkString("", "\nUNION ALL\n", "\nORDER BY col_a, col_b"))),
 
-    "q_top_correlated" ->
+    QueryDef("q_top_correlated", topCorrelated, Some(
       s"""WITH m AS (
          |${liCols.filter(_ != "l_extendedprice")
              .map(c => corrPair("l_extendedprice", c)).mkString("\nUNION ALL\n")})
          |SELECT col_b AS feature, corr FROM m
          |ORDER BY corr DESC, feature ASC
-         |LIMIT 3""".stripMargin,
+         |LIMIT 3""".stripMargin)),
 
-    "q_argmax_embedding" ->
+    QueryDef("q_argmax_embedding", argmaxEmbedding, Some(
       """SELECT vec_id,
         |  CAST(list_indexof(embedding, list_max(embedding)) - 1 AS BIGINT) AS arg_max
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
 
-    "q_funnel_time" ->
+    QueryDef("q_funnel_time", funnelTime, Some(
       """WITH s AS (
         |  SELECT user_id, min(epoch_us(ts)) AS s_us
         |  FROM events WHERE event_type = 'signup' GROUP BY user_id),
@@ -401,9 +382,9 @@ object StatsQueries {
         |SELECT CAST(count(*) AS BIGINT) AS n_converted,
         |  CAST(quantile_disc(latency_us, 0.5) AS BIGINT) AS p50_us,
         |  CAST(quantile_disc(latency_us, 0.9) AS BIGINT) AS p90_us
-        |FROM l WHERE latency_us IS NOT NULL""".stripMargin,
+        |FROM l WHERE latency_us IS NOT NULL""".stripMargin)),
 
-    "q_dwell_percentiles" ->
+    QueryDef("q_dwell_percentiles", dwellPercentiles, Some(
       """WITH d AS (
         |  SELECT event_type,
         |    lead(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -415,9 +396,9 @@ object StatsQueries {
         |  CAST(quantile_disc(dwell_us, 0.99) AS BIGINT) AS p99_us
         |FROM d WHERE dwell_us IS NOT NULL
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_percentiles" ->
+    QueryDef("q_percentiles", percentiles, Some(
       """SELECT o_orderpriority,
         |  quantile_disc(o_totalprice, 0.5) AS p50,
         |  quantile_disc(o_totalprice, 0.95) AS p95,
@@ -425,9 +406,9 @@ object StatsQueries {
         |  max(o_totalprice) AS hi
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
 
-    "q_resample_hourly" ->
+    QueryDef("q_resample_hourly", resampleHourly, Some(
       """WITH agg AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) // 1000000 -
@@ -440,9 +421,9 @@ object StatsQueries {
         |          FROM bounds)
         |SELECT s.k AS k, s.bucket AS bucket, COALESCE(a.n, 0) AS n
         |FROM spine s LEFT JOIN agg a USING (k, bucket)
-        |ORDER BY k, bucket""".stripMargin,
+        |ORDER BY k, bucket""".stripMargin)),
 
-    "q_benford_digits" ->
+    QueryDef("q_benford_digits", benfordDigits, Some(
       """WITH d AS (
         |  SELECT CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
         |    AS VARCHAR), 1, 1) AS BIGINT) AS digit
@@ -455,9 +436,9 @@ object StatsQueries {
         |  CAST(floor(1000000.0 * log10(1.0 + 1.0 / digit)) AS BIGINT)
         |    AS benford_micro
         |FROM n CROSS JOIN g
-        |ORDER BY digit""".stripMargin,
+        |ORDER BY digit""".stripMargin)),
 
-    "q_ewma_values" ->
+    QueryDef("q_ewma_values", ewmaValues, Some(
       """WITH ev AS (
         |  SELECT event_id, user_id, ts, value
         |  FROM events WHERE value IS NOT NULL),
@@ -473,9 +454,9 @@ object StatsQueries {
         |    list_sum(list_transform(range(len(win)),
         |      i -> pow(0.5, len(win)-1-i))), 6) AS ewma
         |FROM w
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_robust_zscore" ->
+    QueryDef("q_robust_zscore", robustZscore, Some(
       """WITH ev AS (
         |  SELECT event_type, value FROM events WHERE value IS NOT NULL),
         |med AS (
@@ -494,9 +475,9 @@ object StatsQueries {
         |    (3.5 * 1.4826) * mad) AS BIGINT) AS n_outliers
         |FROM j
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin)),
 
-    "q_asof_clicks" ->
+    QueryDef("q_asof_clicks", asofClicks, Some(
       // the clicks side pre-dedupes (user_id, ts) ties to the max-event_id
       // row: the Spark side's rightTieBreak resolves same-instant clicks
       // deterministically (running last() over asc __tie = max event_id
@@ -510,6 +491,8 @@ object StatsQueries {
         |                FROM events WHERE event_type = 'click'
         |                GROUP BY user_id, ts) c
         |  ON e.user_id = c.user_id AND c.ts <= e.ts
-        |ORDER BY event_id""".stripMargin
+        |ORDER BY event_id""".stripMargin)),
+
+    QueryDef("q_hll_cube", hllSketchCube)
   )
 }

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{MapType, StringType}
 
 /** Streaming ingest (SURVEY.md §2.7 ST1–ST6).
@@ -104,8 +103,4 @@ object Ingest {
         r(rightTs) >= l(leftTs) &&
         r(rightTs) <= l(leftTs) + expr(s"INTERVAL $withinSeconds SECONDS"))
   }
-
-  /** ST1 trigger cadence matching the producer's 5 s sleep (stream.py:73). */
-  def withProducerCadence[T](w: DataStreamWriter[T]): DataStreamWriter[T] =
-    w.trigger(Trigger.ProcessingTime("5 seconds"))
 }

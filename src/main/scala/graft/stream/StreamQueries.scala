@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryDef
 import graft.Tables.table
 
 /** Harness wiring for the streaming surface. The socket path needs a live
@@ -12,8 +13,6 @@ import graft.Tables.table
   * unframed table.
   */
 object StreamQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Runs `body` (a streaming start + await) with the state/shuffle
     * partition count right-sized for the bounded executed runs, restoring
@@ -399,20 +398,8 @@ object StreamQueries {
     * unmistakable as plumbing in any debug dump. */
   val SentinelUserId: Long = Long.MinValue
 
-  val all: Map[String, Q] = Map(
-    "q_stream_roundtrip" -> (streamRoundtrip _),
-    "q_session_stats" -> (sessionStats _),
-    "q_stream_windowed" -> (streamWindowedCounts _),
-    "q_stream_hll" -> (streamHllDaily _),
-    "q_stream_dedup" -> (streamDedup _),
-    "q_stream_enrich" -> (streamEnrich _),
-    "q_stream_interval_join" -> (streamIntervalJoin _),
-    "q_session_window" -> (sessionWindows _),
-    "q_sessions" -> (sessions _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_session_stats" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_session_stats", sessionStats, Some(
       """WITH s AS (
         |  SELECT user_id, event_id, event_type, ts,
         |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
@@ -441,9 +428,9 @@ object StreamQueries {
         |  CAST(sum(n_events) AS BIGINT) AS total_events,
         |  CAST(sum(duration_us) AS BIGINT) AS total_duration_us
         |FROM per GROUP BY entry_type
-        |ORDER BY entry_type""".stripMargin,
+        |ORDER BY entry_type""".stripMargin)),
 
-    "q_sessions" ->
+    QueryDef("q_sessions", sessions, Some(
       """WITH s AS (
         |  SELECT user_id,
         |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
@@ -456,31 +443,31 @@ object StreamQueries {
         |       count(*) AS n_events
         |FROM s
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin)),
 
-    "q_stream_windowed" ->
+    QueryDef("q_stream_windowed", streamWindowedCounts, Some(
       """SELECT date_trunc('hour', ts) AS win_start, event_type,
         |       count(*) AS n
         |FROM events
         |GROUP BY win_start, event_type
-        |ORDER BY win_start, event_type""".stripMargin,
+        |ORDER BY win_start, event_type""".stripMargin), eager = true),
 
-    "q_stream_dedup" ->
+    QueryDef("q_stream_dedup", streamDedup, Some(
       """SELECT event_type, count(*) AS n
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin), eager = true),
 
-    "q_stream_enrich" ->
+    QueryDef("q_stream_enrich", streamEnrich, Some(
       """WITH s AS (
         |  SELECT event_type, avg(value) AS mu FROM events GROUP BY event_type)
         |SELECT e.event_type, count(*) AS n,
         |  CAST(count(*) FILTER (WHERE e.value > s.mu) AS BIGINT) AS n_above
         |FROM events e JOIN s USING (event_type)
         |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
+        |ORDER BY e.event_type""".stripMargin), eager = true),
 
-    "q_session_window" ->
+    QueryDef("q_session_window", sessionWindows, Some(
       """WITH m AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
@@ -497,9 +484,9 @@ object StreamQueries {
         |SELECT user_id, min(ts) AS session_start, count(*) AS n_events
         |FROM g
         |GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin)),
 
-    "q_stream_interval_join" ->
+    QueryDef("q_stream_interval_join", streamIntervalJoin, Some(
       """WITH c AS (
         |  SELECT user_id, ts FROM events WHERE event_type = 'click'),
         |p AS (
@@ -508,14 +495,16 @@ object StreamQueries {
         |FROM c JOIN p ON c.user_id = p.user_id
         |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 6 HOUR
         |GROUP BY c.user_id
-        |ORDER BY c.user_id""".stripMargin,
+        |ORDER BY c.user_id""".stripMargin), eager = true),
 
-    "q_stream_roundtrip" ->
+    QueryDef("q_stream_roundtrip", streamRoundtrip, Some(
       """SELECT CAST(event_id // 100 AS BIGINT) AS batch_id,
         |       count(*) AS n_rows,
         |       count(DISTINCT event_type) AS n_types
         |FROM events
         |GROUP BY batch_id
-        |ORDER BY batch_id""".stripMargin
+        |ORDER BY batch_id""".stripMargin)),
+
+    QueryDef("q_stream_hll", streamHllDaily, eager = true)
   )
 }

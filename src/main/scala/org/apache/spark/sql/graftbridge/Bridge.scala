@@ -28,14 +28,4 @@ object Bridge {
         r.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** Runtime function registration on a live session (the session-build
-    * path is SparkSessionExtensions.injectFunction; this is the attach
-    * form used by tests/notebooks).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

@@ -60,9 +60,10 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("DotProduct: empty arrays give 0, mismatched lengths use the prefix") {
     val df = Seq(
       (Array.empty[Float], Array.empty[Float]),
-      (Array(1.0f, 2.0f, 3.0f), Array(10.0f))
+      (Array(1.0f, 2.0f, 3.0f), Array(10.0f)),
+      (Array(1.0f, 2.0f), Array(3.0f, 4.0f))
     ).toDF("a", "b").select(graft.functions.ArrayMath.dot($"a", $"b"))
-    assert(df.collect().map(_.getDouble(0)).toSeq == Seq(0.0, 10.0))
+    assert(df.collect().map(_.getDouble(0)).toSeq == Seq(0.0, 10.0, 11.0))
   }
 
   test("DotProduct propagates null inputs as null") {
@@ -381,10 +382,22 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_converted") == 0L)
   }
 
-  test("Dev.eagerQueries names real queries (typo canary for the " +
-      "construction-eager exclusion list)") {
-    assert(graft.Dev.eagerQueries.subsetOf(
-      graft.SparkEntry.queries.keySet))
+  test("the query registry refuses a name given twice, naming it") {
+    def q(name: String) = QueryDef(name, (s, _) => s.emptyDataFrame)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registryOf(Seq(q("q_a"), q("q_b"), q("q_a"))))
+    assert(e.getMessage.endsWith("duplicate queries: q_a"))
+  }
+
+  test("the queries without a DuckDB oracle are exactly the digest-pinned " +
+      "ones") {
+    val noOracle = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
+    for (sf <- Seq("0.01", "0.1")) {
+      val json = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"tools/pinned_digests_sf$sf.json"))
+      val pinned = "\"(q\\w+)\"\\s*:".r.findAllMatchIn(json).map(_.group(1))
+      assert(noOracle.sorted == pinned.toSeq.sorted, s"sf$sf")
+    }
   }
 
   test("a dev query subset with an unknown name is refused, naming it") {
@@ -392,6 +405,13 @@ class EdgeCasesSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       SparkEntry.requireKnown(Seq("q1_lineitem", "q1_lineitme")))
     assert(e.getMessage.endsWith("unknown queries: q1_lineitme"))
+  }
+
+  test("Verify refuses an argument count other than 2 or 3") {
+    for (args <- Seq(Array("sf"), Array("sf", "out", "q1_lineitem", "x"))) {
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage.contains("usage: Verify"))
+    }
   }
 
   test("SPARK_GRAFT_CONF parsing: first '=' splits, empty entries skip, " +

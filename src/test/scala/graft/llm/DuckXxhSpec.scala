@@ -35,7 +35,7 @@ class DuckXxhSpec extends AnyFunSuite {
   }
 
   test("generated SQL is structurally sane (balanced, no unbound vars)") {
-    // the generator is exercised at object-init of the oracle maps; this
+    // the generator is exercised at object-init of the query lists; this
     // pins the cheap invariants a refactor could silently break
     for (sql <- Seq(DuckXxh.xxh64("t"),
                     DuckXxh.xxh64Long("hu", "CAST(1 AS UBIGINT)"),

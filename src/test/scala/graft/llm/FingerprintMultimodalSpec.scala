@@ -110,46 +110,6 @@ class FingerprintMultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("graft_dot SQL function registers and evaluates") {
-    graft.GraftExtensions.register(spark)
-    Seq((Array(1.0, 2.0), Array(3.0, 4.0)))
-      .toDF("a", "b").createOrReplaceTempView("graft_dot_v")
-    assert(spark.sql("SELECT graft_dot(a, b) FROM graft_dot_v")
-      .head().getDouble(0) == 11.0)
-  }
-
-  test("graft_char_entropy / graft_repetition_micro SQL functions evaluate") {
-    graft.GraftExtensions.register(spark)
-    Seq(("abcd", Seq("a", "b", "a", "b", "a"))).toDF("t", "toks")
-      .createOrReplaceTempView("graft_fn_v")
-    val r = spark.sql(
-      "SELECT round(graft_char_entropy(t), 6), graft_repetition_micro(toks) " +
-        "FROM graft_fn_v").head()
-    val ln4 = BigDecimal(math.log(4.0))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(r.getDouble(0) == ln4)
-    // trigrams of (a b a b a): aba, bab, aba → 1 of 3 repeats → 333333
-    assert(r.getLong(1) == 333333L)
-  }
-
-  test("graft_token_hash_set / graft_minhash_signature SQL functions evaluate") {
-    graft.GraftExtensions.register(spark)
-    Seq(Seq("b", "a", "b")).toDF("toks")
-      .createOrReplaceTempView("graft_mh_v")
-    val r = spark.sql(
-      "SELECT graft_token_hash_set(toks) AS hs, " +
-        "graft_minhash_signature(graft_token_hash_set(toks), 4) AS sig " +
-        "FROM graft_mh_v").head()
-    val hs = r.getSeq[Long](0)
-    assert(hs.length == 2 && hs == hs.sorted, s"hash set $hs")
-    assert(r.getSeq[Long](1).length == 4)
-    // num_hashes must be literal
-    intercept[Exception] {
-      spark.sql("SELECT graft_minhash_signature(graft_token_hash_set(toks), " +
-        "size(toks)) FROM graft_mh_v").head()
-    }
-  }
-
   test("intArrayFeature parses CIFAR-shaped int-array payloads (S5)") {
     val line = """{"0": {"matrix": "[1,2,3]", "label": "7"}}"""
     val parsed = graft.stream.Ingest.parsePayload(Seq(line).toDF("value"))

@@ -41,7 +41,7 @@ class TextStatsSpec extends AnyFunSuite {
     // edge shapes the corpus can't produce: short docs, empty tokens,
     // heavy repetition
     val edge = Seq("a b", "x x x x x", "a b c a b c", "", " ",
-      "p q r p q r p q r p")
+      "p q r p q r p q r p", "a b a b a")
       .toDF("text").select(TextStats.tokens($"text").as("toks"))
       .select(
         graft.functions.RepetitionMicro.repetitionMicro($"toks").as("fast"),
@@ -61,6 +61,8 @@ class TextStatsSpec extends AnyFunSuite {
     assert(rep("a b") == 0L)
     // degenerate full repetition: "x x x x x" → [xxx ×3] → 2/3 repeats
     assert(rep("x x x x x") == 666666L)
+    // "a b a b a": [aba, bab, aba] → 1 repeat of 3 → 333333
+    assert(rep("a b a b a") == 333333L)
   }
 
   test("contamination: benchmark docs score 1e6, overlap scores fractionally") {

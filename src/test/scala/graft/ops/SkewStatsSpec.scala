@@ -8,28 +8,6 @@ class SkewStatsSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
 
-  test("saltedJoin returns exactly the plain-join result") {
-    val large = (1 to 1000).map(i => (if (i % 10 == 0) "hot" else s"k$i", i.toLong))
-      .toDF("key", "id")
-    val small = Seq(("hot", "H"), ("k1", "A"), ("k2", "B")).toDF("key", "tag")
-    val plain = large.join(small, "key").select("key", "id", "tag")
-      .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(large, small, "key", col("id"), buckets = 8)
-      .select("key", "id", "tag").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(plain.count(_.head == "hot") == 100)
-  }
-
-  test("saltedCount equals plain groupBy count") {
-    val df = (1 to 500).map(i => (if (i % 5 == 0) "hot" else s"k${i % 7}", i.toLong))
-      .toDF("key", "id")
-    val plain = df.groupBy("key").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(df, "key", col("id"), buckets = 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
   test("corrMatrix is symmetric with unit diagonal") {
     val li = graft.Tables.table(spark, GraftTestSpark.sfDir, "lineitem")
     val m = Stats.corrMatrix(li, Seq("l_quantity", "l_extendedprice", "l_discount"))
