@@ -31,7 +31,7 @@ object GraftSession {
 
   /** The perturbation knob: SPARK_GRAFT_CONF="k=v;k=v" lets a sweep
     * (codegen off, AQE flipped, odd shuffle-partition counts, the RocksDB
-    * state store) re-run Verify, ScaleCheck or Dev without a code edit.
+    * state store) re-run Verify or Dev without a code edit.
     * The correctness and timing gates never set it, so they are unchanged.
     */
   def envConf(): Seq[(String, String)] =

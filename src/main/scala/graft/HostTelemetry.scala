@@ -1,7 +1,10 @@
 package graft
 
-/** Host-load sampling shared by every timed main (Bench, Verify,
-  * ScaleCheck, Dev's `time`): the three /proc/loadavg averages plus the cumulative
+import scala.io.Source
+import scala.util.Using
+
+/** Host-load sampling shared by every timed main (Bench, Verify, Dev's
+  * `time`): the three /proc/loadavg averages plus the cumulative
   * hypervisor steal ticks (8th field of /proc/stat's aggregate cpu line).
   *
   * Sampled before AND after a run, the steal delta separates "host
@@ -9,9 +12,7 @@ package graft
   * were burned adjudicating exactly that from timings alone, and the first
   * stamped bench captures (round 13) immediately attributed a 147.8 s
   * outlier to a 7,089-tick (~71 cpu-second) steal burst — the highest of
-  * the session by 2–20×, on its slowest capture (BASELINE.md). The tier
-  * runs are even more exposed: a 14–22 min ScaleCheck spans many dip
-  * windows, so its OK/FAIL log now carries the same evidence.
+  * the session by 2–20×, on its slowest capture (BASELINE.md).
   *
   * Both reads are best-effort: on a host without /proc (or without a
   * steal-reporting hypervisor) they return "" and the stamp degrades to an
@@ -19,16 +20,16 @@ package graft
   */
 object HostTelemetry {
   def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split("\\s+").take(3).mkString(",")
+    try Using.resource(Source.fromFile("/proc/loadavg"))(_.mkString.trim
+      .split("\\s+").take(3).mkString(","))
     catch { case _: Throwable => "" }
 
   /** Cumulative steal ticks since boot; visible only on some hypervisors —
     * empty when unreadable. Deltas, not absolutes, are the signal. */
   def stealTicks(): String =
     try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).getOrElse("")
+      val cpu = Using.resource(Source.fromFile("/proc/stat"))(_.getLines()
+        .find(_.startsWith("cpu ")).getOrElse(""))
       cpu.trim.split("\\s+").drop(1).lift(7).getOrElse("")
     } catch { case _: Throwable => "" }
 

@@ -891,9 +891,9 @@ object CorpusQueries {
     collocationsWithMin(spark, dir, collocMinCount)
 
   /** Bigram support threshold for [[collocations]]. Interpolated into the
-    * oracle SQL, and parameterized for ScaleCheck: at R× shared-vocab
-    * growth every count scales by R, so running with minCount = R·20
-    * must reproduce the source top-10 with identical PMIs.
+    * oracle SQL, and parameterized for ScaleInvariantsSpec: at R×
+    * shared-vocab growth every count scales by R, so running with
+    * minCount = R·20 must reproduce the source top-10 with identical PMIs.
     */
   val collocMinCount = 20
 

@@ -227,9 +227,9 @@ object LlmQueries {
     * affordable per round. Measured on sf0.1: 2 s at 200, 64 s at 1000,
     * 269 s at 2000 — so 1000 is the ceiling in practice. Division of
     * duties: these oracles prove the ALGORITHM (hash-level, both SFs) on
-    * the slice; full-corpus behavior (8.4 M pairs at sf1) is covered by
-    * ScaleCheck's CC invariants, which need no quadratic oracle. The
-    * pairwise-family oracles (q_jaccard_pairs etc.) stay at 200 because
+    * the slice; full-corpus behavior is covered by ScaleInvariantsSpec's
+    * CC invariant on replicated corpora, which needs no quadratic oracle.
+    * The pairwise-family oracles (q_jaccard_pairs etc.) stay at 200 because
     * every one of them re-pays the same N² join in DuckDB per round.
     */
   private val GraphSlice = 1000L

@@ -192,8 +192,8 @@ object Graph {
     * n-clique owns Θ(n³) triangles — no enumeration beats its own
     * output size. At scale this op belongs on SPARSE similarity graphs
     * or a blocked/collapsed one (dedup exact groups first, or bound the
-    * block the way q_triangle_stats does); ScaleCheck proves the blocked
-    * per-replica form, not a full dup-graph census.
+    * block the way q_triangle_stats does); ScaleInvariantsSpec proves the
+    * blocked per-replica form, not a full dup-graph census.
     *
     * Every stage is an equi-join keyed by node or edge — wedge build on
     * src, closure on the (dst₁, dst₂) edge key. lcc = n_tri / C(deg, 2)

@@ -142,8 +142,9 @@ object Sampling {
     val level = (budget - below).toDouble / nAbove
     // the returned frame depends only on the scalar `level`, so build it
     // from the UNCACHED input and release the bisection's cache now —
-    // otherwise every invocation (bench reruns, ScaleCheck) leaks one
-    // cached frame into executor storage for the session lifetime
+    // otherwise every invocation (bench reruns, ScaleInvariantsSpec)
+    // leaks one cached frame into executor storage for the session
+    // lifetime
     counts.unpersist()
     perGroup.select(col(groupCol).as("g"), col(cCol).cast("long").as("c"))
       .select(col("g").as(groupCol), col("c"),

@@ -35,7 +35,8 @@ object StreamQueries {
     * has used; a corpus whose state outgrows 8 partitions needs the
     * count derived from its measured state size, not a knob.
     */
-  private def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
+  private[graft] def withStatePartitions[A](spark: SparkSession)(
+      body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "8")
@@ -332,71 +333,6 @@ object StreamQueries {
         col("total_events"), col("total_duration_us"))
       .orderBy("entry_type")
   }
-
-  /** Streaming sessionization over a DIRECTORY OF TIME-ORDERED FILES,
-    * EXECUTED: the drivable heavy-tier form of [[Sessionize
-    * .sessionizeStream]]. `streamDir` must hold (user_id, ts) parquet
-    * files whose TIME RANGES ARE DISJOINT AND ASCEND WITH FILE
-    * MODIFICATION TIME (ScaleCheck writes them via repartitionByRange +
-    * per-file mod-time stamps), plus trailing far-future sentinel files:
-    * with `maxFilesPerTrigger=1` each file becomes one micro-batch under
-    * `Trigger.AvailableNow`, so the watermark genuinely advances
-    * batch-to-batch and event-time timeouts fire — unlike the
-    * single-file corpus, where the whole table is one micro-batch and no
-    * session ever closes. The first sentinel advances the watermark past
-    * every open session's timeout; the second triggers the timed-out
-    * state sweep (the MemoryStream fuzz spec's pattern, on the real
-    * file-stream path). Time-ordered arrival is the documented
-    * batch-parity precondition, so the result must equal a batch
-    * recompute exactly — the heavy tier pins that at 100 M events.
-    *
-    * Sink is parquet-with-checkpoint, not the memory sink: at the decade
-    * the closed-session output is tens of millions of rows, and a memory
-    * sink would be a driver-sized collect — the exact anti-pattern the
-    * harness bans. Caller owns `workDir` (wiped here before the run).
-    *
-    * Sentinel contract: the watermark-driver rows carry exactly
-    * [[SentinelUserId]], and ONLY that id is dropped from the result —
-    * never a range like "all negative ids", which would silently exclude
-    * legitimately negative ids from the parity check (ADVICE r13). The
-    * corpus generator enforces the other half: it refuses to build a
-    * stream corpus whose REAL data contains the sentinel id.
-    */
-  def streamSessionizeFiles(spark: SparkSession, streamDir: String,
-                            workDir: String,
-                            gapSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(workDir))
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("ts", TimestampType)))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-      .withWatermark("ts", "0 seconds")
-      .as[Sessionize.SessionEvent]
-    val sessions = Sessionize.sessionizeStream(src, gapSeconds)
-    withStatePartitions(spark) {
-      val q = sessions.writeStream.format("parquet")
-        .option("path", s"$workDir/out")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // drop exactly the sentinel sessions — harness plumbing, not data
-    spark.read.parquet(s"$workDir/out")
-      .filter(col("user_id") =!= SentinelUserId)
-  }
-
-  /** The reserved watermark-driver user id for file-stream corpora
-    * (see [[streamSessionizeFiles]]'s sentinel contract). Long.MinValue:
-    * unreachable by the replica id-striding arithmetic, and visually
-    * unmistakable as plumbing in any debug dump. */
-  val SentinelUserId: Long = Long.MinValue
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("q_session_stats", sessionStats, Some(

@@ -34,8 +34,8 @@ class AlgorithmicFuzzSpec extends AnyFunSuite {
       "(disjoint id ranges, one batched CC call)") {
     // 10 graphs in ONE connectedComponents invocation: id ranges are
     // disjoint (offset g*1000), so per-graph components are exactly the
-    // components of the union — same trick ScaleCheck's replication
-    // tiers use, and it keeps this to one iterative CC run.
+    // components of the union — same trick ScaleInvariantsSpec's
+    // replicas use, and it keeps this to one iterative CC run.
     val allNodes = scala.collection.mutable.ArrayBuffer[Long]()
     val allEdges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     for (g <- 0 until 10) {

@@ -480,4 +480,13 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(Multimodal.microMean(bigSum, bigN) ==
       (BigInt(bigSum) * 1000000 / bigN).toLong)
   }
+
+  test("HostTelemetry.sample closes the /proc files it reads") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val before = fds.list().length
+    (1 to 500).foreach(_ => HostTelemetry.sample())
+    val grown = fds.list().length - before
+    assert(grown <= 10, s"$grown file handles left open by 500 samples")
+  }
 }

@@ -28,7 +28,7 @@ object GraftTestSpark {
     root
   }
 
-  private def rmTree(f: java.io.File): Unit = {
+  def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete(): Unit
   }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.GraftTestSpark
+import graft.{GraftTestSpark, ScaleReplicas}
 import Sessionize.{ClosedSession, SessionEvent}
 
 class SessionizeSpec extends AnyFunSuite {
@@ -85,7 +85,7 @@ class SessionizeSpec extends AnyFunSuite {
 
   test("streamSessionizeFiles: file-per-micro-batch parity — sessions " +
       "continue across batch boundaries and close via watermark timeouts") {
-    // the ScaleCheck heavy-tier harness shape at hand-fixture size: three
+    // the ScaleInvariantsSpec stream corpus shape at hand-fixture size: three
     // time-ordered data files + two far-future sentinels, mod-times
     // ascending (FileStreamSource picks pending files oldest-first)
     val root = GraftTestSpark.tempPath("graft_ssf").toString
@@ -114,10 +114,10 @@ class SessionizeSpec extends AnyFunSuite {
       (7L, "2024-01-01 00:40:00"), (8L, "2024-01-01 01:00:00"))
     writeFile("ev_2", base + 4000L, (7L, "2024-01-01 05:00:00"))
     writeFile("zz_sentinel_0", base + 6000L,
-      (StreamQueries.SentinelUserId, "2024-01-03 00:00:00"))
+      (ScaleReplicas.SentinelUserId, "2024-01-03 00:00:00"))
     writeFile("zz_sentinel_1", base + 8000L,
-      (StreamQueries.SentinelUserId, "2024-01-05 00:00:00"))
-    val got = StreamQueries.streamSessionizeFiles(spark,
+      (ScaleReplicas.SentinelUserId, "2024-01-05 00:00:00"))
+    val got = ScaleReplicas.streamSessionizeFiles(spark,
         streamDir.toString, s"$root/work", gapSeconds = 3600L)
       .as[ClosedSession].collect()
       .map(s => (s.user_id, s.n_events, s.duration_s)).sorted.toSeq
