@@ -17,6 +17,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * PAIR, which dominated q_cosine_pairs (13 s of 80 s at sf0.1). This
   * expression generates a primitive loop — no allocation, stays inside
   * whole-stage codegen.
+  *
+  * Both vectors must have the same length: a ragged pair fails with both
+  * lengths in the message, on the interpreted and the generated path
+  * alike, instead of folding the shorter prefix into a number that looks
+  * like a similarity.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -43,7 +48,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
+    val n = xs.numElements()
+    if (ys.numElements() != n) throw DotProduct.ragged(n, ys.numElements())
     val lf = elemType(left) == FloatType
     val rf = elemType(right) == FloatType
     var acc = 0.0
@@ -65,7 +71,10 @@ case class DotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) {
+         |  throw graft.functions.DotProduct.ragged($n, $b.numElements());
+         |}
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  $acc += ((double) $a.$lGet($i)) * ((double) $b.$rGet($i));
@@ -78,6 +87,12 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  def ragged(left: Int, right: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"DotProduct needs vectors of equal length, got $left and $right")
 }
 
 object ArrayMath {

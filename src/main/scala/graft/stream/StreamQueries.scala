@@ -1,7 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.QueryDef
 import graft.Tables.table
 
@@ -14,33 +15,74 @@ import graft.Tables.table
   */
 object StreamQueries {
 
-  /** Runs `body` (a streaming start + await) with the state/shuffle
-    * partition count right-sized for the bounded executed runs, restoring
-    * the session conf afterwards.
+  /** Runs `ds` to completion as a bounded stream: the caller's sink and
+    * `outputMode`, `Trigger.AvailableNow` (process what the source holds,
+    * then stop), start, await. Every executed stream in the engine comes
+    * through here. For the run it sets two session values, then restores
+    * both, whether the run returns or throws:
     *
-    * WHY: the shuffle-partition count is the canonical stateful-streaming
-    * sizing decision — it is frozen into the checkpoint at the query's
-    * FIRST start and cannot change on restart, so production jobs size it
-    * to expected state volume up front rather than inheriting a
-    * CPU-oriented batch default. Every stateful operator commits one
-    * delta file per state store per micro-batch (a stream-stream join
-    * carries FOUR stores per partition — KeyToNumValues +
-    * KeyWithIndexToValue per side), so over-partitioning multiplies
-    * fixed small-file commit cost that dominates when per-partition state
-    * is small: the executed interval join here holds ~40 k state rows,
-    * and 32 partitions spent 2-3.5 s/batch on empty-batch state commits
-    * alone (measured from the per-batch progress durations; 8
-    * partitions cut the query median 8.0 s → 3.3 s with identical
-    * results). It is a constant because 8 is the only value any caller
-    * has used; a corpus whose state outgrows 8 partitions needs the
-    * count derived from its measured state size, not a knob.
+    *  - `spark.sql.shuffle.partitions` = 1. The shuffle-partition count is
+    *    the state-store partition count, so each stateful operator runs
+    *    one task per partition per micro-batch and commits one delta file
+    *    per store (a stream-stream join carries four stores per
+    *    partition). A bounded run is one or a few small micro-batches, and
+    *    that per-task, per-commit cost, not row volume, sets its time: on
+    *    `local[4]`, `q_stream_windowed` counts 10,000 events into 3,385
+    *    state rows, and its 8-partition state stage took 390-490 ms in
+    *    two waves. The largest state any executed stream holds is the
+    *    interval join's ~40 k rows, one partition's worth, so the count is
+    *    a constant; a corpus whose state outgrows one partition needs the
+    *    count derived from its measured state size, not a knob. The count
+    *    is frozen into a checkpoint at its first start, which is why it is
+    *    set here and not inherited from the batch default.
+    *  - `spark.sql.artifact.isolation.enabled` = false. `start()` clones
+    *    the session, and an isolated clone sends its own fresh session
+    *    UUID with every task; the executor builds a new class loader per
+    *    UUID, so code compiled under it misses `CodeGenerator.cache`
+    *    (keyed by class loader and source) and its classes are loaded and
+    *    JIT-compiled again on every run. The clone's `ArtifactManager`
+    *    reads the value from the clone's conf copy, so false at `start()`
+    *    puts the clone's tasks on the executor's shared loader: reruns
+    *    compile nothing. Nothing in the engine adds session artifacts.
+    *
+    * The conf is the session's, so two streams started at once on one
+    * session would race on it; every caller runs one at a time.
     */
-  private[graft] def withStatePartitions[A](spark: SparkSession)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try body finally spark.conf.set(key, prev)
+  private[graft] def runBounded[T](ds: Dataset[T], outputMode: String)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit = {
+    val conf = ds.sparkSession.conf
+    val pinned = Seq("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.artifact.isolation.enabled" -> "false")
+    val explicit = conf.getAll
+    val prev = pinned.map { case (k, _) => k -> explicit.get(k) }
+    pinned.foreach { case (k, v) => conf.set(k, v) }
+    try sink(ds.writeStream).outputMode(outputMode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** [[runBounded]] into a memory sink named `name`; returns its table. */
+  private def toMemory(df: DataFrame, name: String,
+                       outputMode: String): DataFrame = {
+    runBounded(df, outputMode)(_.format("memory").queryName(name))
+    df.sparkSession.table(name)
+  }
+
+  /** The events table as a file STREAM. A file-stream source needs an
+    * explicit schema and a directory to watch: declare the RAW file schema,
+    * narrow the directory to `events.parquet` with a glob filter, and apply
+    * the same schema-adaptive `ts` normalization as the batch loader.
+    */
+  private[graft] def eventsStream(spark: SparkSession,
+                                  dir: String): DataFrame = {
+    val layout = graft.Tables.eventsLayout(spark, dir)
+    spark.readStream.schema(layout.rawSchema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
+      .withColumn("ts", layout.normalizeTs)
   }
 
   /** Producer framing (stream.py:153-179): batches of 100 rows keyed by
@@ -77,27 +119,12 @@ object StreamQueries {
     * aggregation.
     */
   def streamWindowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // file streams need an explicit schema; declare the RAW file schema and
-    // apply the same schema-adaptive ts normalization as the batch loader
-    val layout = graft.Tables.eventsLayout(spark, dir)
-    // the file-stream source wants a DIRECTORY to watch; narrow it to the
-    // events table with a glob filter
-    val stream = spark.readStream.schema(layout.rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", layout.normalizeTs)
-    val counts = stream
+    val counts = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-    val name = "graft_stream_windowed"
-    withStatePartitions(spark) {
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("win_start", "event_type")
+    toMemory(counts, "graft_stream_windowed", "complete")
+      .orderBy("win_start", "event_type")
   }
 
   /** Streaming sketch maintenance, EXECUTED: per-day Datasketches HLL
@@ -113,25 +140,13 @@ object StreamQueries {
     * arrival order cannot move the result).
     */
   def streamHllDaily(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val layout = graft.Tables.eventsLayout(spark, dir)
-    val stream = spark.readStream.schema(layout.rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", layout.normalizeTs)
-    val daily = stream
+    val daily = eventsStream(spark, dir)
       .groupBy(window(col("ts"), "1 day"))
       .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12))
         .as("est_users"))
       .select(col("window.start").cast("date").cast("string").as("day"),
         col("est_users"))
-    val name = "graft_stream_hll"
-    withStatePartitions(spark) {
-      val q = daily.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("day")
+    toMemory(daily, "graft_stream_hll", "complete").orderBy("day")
   }
 
   /** Streaming dedup, EXECUTED and adversarial: every event from the
@@ -145,27 +160,15 @@ object StreamQueries {
     * instead of the whole history.
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val layout = graft.Tables.eventsLayout(spark, dir)
-    val src = spark.readStream.schema(layout.rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", layout.normalizeTs)
     // double every arrival from ONE scan (explode a 2-element array)
     // rather than self-union: same duplicated-delivery semantics, half
     // the source reads — the spec still proves the control plan doubles
-    val counts = src
+    val counts = eventsStream(spark, dir)
       .withColumn("__copy", explode(typedlit(Seq(1, 2))))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val name = "graft_stream_dedup"
-    withStatePartitions(spark) {
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("event_type")
+    toMemory(counts, "graft_stream_dedup", "complete").orderBy("event_type")
   }
 
   /** The NATIVE session-window operator (gap 6 h), batch form: Spark's
@@ -197,26 +200,16 @@ object StreamQueries {
     * parquet, so the executed streaming join is oracle-checked.
     */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val layout = graft.Tables.eventsLayout(spark, dir)
     val static = table(spark, dir, "events")
       .groupBy("event_type")
       .agg(avg(col("value")).as("mu"))
-    val stream = spark.readStream.schema(layout.rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val enriched = stream
+    // `ts` is never read here, so its normalization is pruned away
+    val enriched = eventsStream(spark, dir)
       .join(broadcast(static), Seq("event_type"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("value") > col("mu"), 1L).otherwise(0L)).as("n_above"))
-    val name = "graft_stream_enrich"
-    withStatePartitions(spark) {
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("event_type")
+    toMemory(enriched, "graft_stream_enrich", "complete").orderBy("event_type")
   }
 
   /** Stream-STREAM interval join, EXECUTED: clicks and purchases arrive
@@ -233,14 +226,9 @@ object StreamQueries {
     * aggregated per user batch-side.
     */
   def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val layout = graft.Tables.eventsLayout(spark, dir)
+    val events = eventsStream(spark, dir)
     def side(tpe: String, u: String, t: String) =
-      spark.readStream.schema(layout.rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .withColumn("ts", layout.normalizeTs)
-        .filter(col("event_type") === tpe)
+      events.filter(col("event_type") === tpe)
         .select(col("user_id").as(u), col("ts").as(t))
     val clicks = side("click", "cu", "cts").withWatermark("cts", "1 hour")
     val purchases = side("purchase", "pu", "pts").withWatermark("pts", "1 hour")
@@ -248,13 +236,7 @@ object StreamQueries {
       col("cu") === col("pu") &&
         col("pts") >= col("cts") &&
         col("pts") <= col("cts") + expr("INTERVAL 6 HOURS"))
-    val name = "graft_stream_interval"
-    withStatePartitions(spark) {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    toMemory(joined, "graft_stream_interval", "append")
       .groupBy(col("cu").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")

@@ -57,13 +57,44 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(rows(1).isNullAt(0))
   }
 
-  test("DotProduct: empty arrays give 0, mismatched lengths use the prefix") {
+  test("DotProduct: empty arrays give 0, equal lengths fold every element") {
     val df = Seq(
       (Array.empty[Float], Array.empty[Float]),
-      (Array(1.0f, 2.0f, 3.0f), Array(10.0f)),
       (Array(1.0f, 2.0f), Array(3.0f, 4.0f))
     ).toDF("a", "b").select(graft.functions.ArrayMath.dot($"a", $"b"))
-    assert(df.collect().map(_.getDouble(0)).toSeq == Seq(0.0, 10.0, 11.0))
+    assert(df.collect().map(_.getDouble(0)).toSeq == Seq(0.0, 11.0))
+  }
+
+  test("DotProduct: ragged vectors fail with both lengths, interpreted " +
+      "and generated alike") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions.DotProduct
+    def vec(xs: Float*) = Literal.create(xs.toArray, ArrayType(FloatType))
+    def interpreted(e: DotProduct) = e.eval()
+    def generated(e: DotProduct) =
+      GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty)
+        .getDouble(0)
+    for (path <- Seq[DotProduct => Any](interpreted, generated)) {
+      val long = intercept[IllegalArgumentException](
+        path(DotProduct(vec(1f, 2f, 3f), vec(10f))))
+      assert(long.getMessage ==
+        "DotProduct needs vectors of equal length, got 3 and 1")
+      val short = intercept[IllegalArgumentException](
+        path(DotProduct(vec(), vec(1f, 2f))))
+      assert(short.getMessage ==
+        "DotProduct needs vectors of equal length, got 0 and 2")
+      assert(path(DotProduct(vec(1f, 2f), vec(3f, 4f))) == 11.0)
+    }
+    // and through a query: the failed task names the same lengths
+    val err = intercept[Exception](Seq((Array(1.0f, 2.0f, 3.0f), Array(10.0f)))
+      .toDF("a", "b").repartition(1)
+      .select(graft.functions.ArrayMath.dot($"a", $"b")).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage)
+        .exists(_.contains("equal length, got 3 and 1"))))
   }
 
   test("DotProduct propagates null inputs as null") {

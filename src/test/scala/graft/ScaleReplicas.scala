@@ -154,7 +154,6 @@ object ScaleReplicas {
   def streamSessionizeFiles(spark: SparkSession, streamDir: String,
                             workDir: String,
                             gapSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
     import spark.implicits._
     GraftTestSpark.rmTree(new java.io.File(workDir))
@@ -166,13 +165,10 @@ object ScaleReplicas {
       .withWatermark("ts", "0 seconds")
       .as[stream.Sessionize.SessionEvent]
     val sessions = stream.Sessionize.sessionizeStream(events, gapSeconds)
-    stream.StreamQueries.withStatePartitions(spark) {
-      val q = sessions.writeStream.format("parquet")
+    stream.StreamQueries.runBounded(sessions, "append")(
+      _.format("parquet")
         .option("path", s"$workDir/out")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+        .option("checkpointLocation", s"$workDir/ckpt"))
     spark.read.parquet(s"$workDir/out")
       .filter(col("user_id") =!= SentinelUserId)
   }

@@ -237,16 +237,11 @@ class IngestSpec extends AnyFunSuite {
       .groupBy("event_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // control: the same plan WITHOUT dropDuplicatesWithinWatermark
-    import org.apache.spark.sql.streaming.Trigger
-    val layout = graft.Tables.eventsLayout(spark, sf)
-    def src = spark.readStream.schema(layout.rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(sf)
-      .withColumn("ts", layout.normalizeTs)
-    val ctl = src.withColumn("__copy", explode(typedlit(Seq(1, 2))))
+    val ctl = StreamQueries.eventsStream(spark, sf)
+      .withColumn("__copy", explode(typedlit(Seq(1, 2))))
       .groupBy($"event_type").agg(count(lit(1)).as("n"))
-    val q = ctl.writeStream.format("memory").queryName("dedup_ctl")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    StreamQueries.runBounded(ctl, "complete")(
+      _.format("memory").queryName("dedup_ctl"))
     val doubled = spark.table("dedup_ctl").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(doubled == batch.map { case (k, v) => k -> v * 2 })
