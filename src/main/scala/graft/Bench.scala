@@ -21,6 +21,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runs = GraftSession.envPositiveInt("SPARK_GRAFT_BENCH_RUNS", 3)
     val spark = GraftSession.create(
       GraftSession.envCpus(Runtime.getRuntime.availableProcessors()))
 
@@ -37,7 +38,6 @@ object Bench {
     // warmup: exercises scan + shuffle + agg + sort codepaths once
     try run("q_counts_by_type") catch { case _: Throwable => () }
 
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val attempts = (1 to runs).map { _ =>

@@ -26,8 +26,19 @@ object GraftSession {
   }
 
   /** Cores from SPARK_GRAFT_CPUS, else `default`. */
-  def envCpus(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
+  def envCpus(default: Int): Int = envPositiveInt("SPARK_GRAFT_CPUS", default)
+
+  /** Env var `name` as a positive integer, else `default` when unset.
+    * Read before a session starts, so a bad value costs no start-up. */
+  def envPositiveInt(name: String, default: Int): Int =
+    sys.env.get(name).fold(default)(parsePositiveInt(name, _))
+
+  /** `value` of env var `name` as a positive integer; anything else
+    * (not a number, zero, negative) is refused by name, never clamped. */
+  def parsePositiveInt(name: String, value: String): Int =
+    value.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$value'"))
 
   /** The perturbation knob: SPARK_GRAFT_CONF="k=v;k=v" lets a sweep
     * (codegen off, AQE flipped, odd shuffle-partition counts, the RocksDB

@@ -34,18 +34,6 @@ object Dedup {
       .groupBy("fp")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("copies"))
 
-  /** Exact dedup keep-first: the retained rows (min id per distinct
-    * text). Null-text rows pass through untouched — they are unknown, not
-    * duplicates of each other (see [[exactDupGroups]]).
-    */
-  def exactDedupKeepFirst(docs: DataFrame, textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame = {
-    val keep = exactDupGroups(docs, textCol, idCol).select("keep_id")
-    docs.filter(col(textCol).isNotNull)
-      .join(keep, docs(idCol) === keep("keep_id"), "left_semi")
-      .unionByName(docs.filter(col(textCol).isNull))
-  }
-
   /** MinHash+LSH near-duplicate pairs over word sets, the classic banding
     * scheme (Broder minhash + LSH bands, as in MMDS ch.3):
     *
@@ -365,7 +353,7 @@ object Dedup {
   }
 
   /** Winnowing-overlap pairs: documents sharing at least `minShared`
-    * winnowed fingerprints (TextStats.winnowingFingerprints — cf.
+    * winnowed fingerprints (TextStats.winnowedDocs — cf.
     * Schleimer et al., SIGMOD'03). Detects LOCAL overlap — a copied
     * passage of ≥ w+k-1 tokens inside otherwise-different documents —
     * which global Jaccard/MinHash similarity misses entirely; this is the
@@ -526,65 +514,6 @@ object Dedup {
         round(col("shared").cast("double") / (col("na") + col("nb") - col("shared")), 6))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** One (bands, rowsPerBand) choice of the LSH S-curve, with its
-    * operating numbers: `threshold` ≈ (1/b)^(1/r) is the Jaccard where
-    * collision probability crosses ~50%; `pAtTarget`/`pBelow` are the
-    * catch rates at the target similarity and 0.1 below it (the
-    * false-positive pressure).
-    */
-  final case class LshPlan(bands: Int, rowsPerBand: Int, threshold: Double,
-                           pAtTarget: Double, pBelow: Double)
-
-  /** Closed-form LSH banding selection (Leskovec–Rajaraman–Ullman MMDS
-    * ch. 3): among all (b, r) with b·r = nHashes, pick the pair whose
-    * S-curve midpoint (1/b)^(1/r) lands closest to the target Jaccard.
-    * Collision probability at similarity s is 1 − (1 − s^r)^b.
-    *
-    * Planning arithmetic, not data work — O(divisors of nHashes) on the
-    * driver. This is how [[minhashNearDupPairs]]'s banding would be
-    * derived per-corpus instead of fixed: tighter thresholds want more
-    * rows per band (fewer, more selective buckets), looser ones more
-    * bands. Ties (equidistant midpoints) resolve to the larger band
-    * count — the recall-favoring side, the cheaper error to fix because
-    * the exact-verify stage already prunes false positives.
-    */
-  def lshParams(nHashes: Int, targetJaccard: Double): LshPlan = {
-    require(nHashes > 0 && targetJaccard > 0.0 && targetJaccard < 1.0,
-      s"need nHashes > 0 and 0 < target < 1, got $nHashes, $targetJaccard")
-    def pCollide(s: Double, b: Int, r: Int): Double =
-      1.0 - math.pow(1.0 - math.pow(s, r), b)
-    val candidates = for {
-      r <- 1 to nHashes if nHashes % r == 0
-      b = nHashes / r
-    } yield LshPlan(b, r, math.pow(1.0 / b, 1.0 / r),
-      pCollide(targetJaccard, b, r),
-      pCollide(math.max(targetJaccard - 0.1, 0.0), b, r))
-    // stable sort on (distance, -bands): equidistant picks the most bands
-    candidates.minBy(p => (math.abs(p.threshold - targetJaccard), -p.bands))
-  }
-
-  /** Count-min sketch sizing for a (relative error ε, failure prob δ)
-    * target — the planning companion to [[lshParams]] for the
-    * [[CorpusQueries.approxHeavyHitters]] family: width = ⌈e/ε⌉ (each
-    * estimate overshoots by ≤ ε·N with prob ≥ 1−δ), depth = ⌈ln(1/δ)⌉
-    * (independent rows drive the failure prob down geometrically).
-    * Returns (width, depth, bytes) — the bytes figure is what a capacity
-    * plan actually needs: depth·width 8-byte counters, broadcast to
-    * every executor when used as a pre-filter.
-    */
-  def cmsParams(eps: Double, delta: Double): (Int, Int, Long) = {
-    require(eps > 0.0 && eps < 1.0 && delta > 0.0 && delta < 1.0,
-      s"need 0 < eps, delta < 1, got $eps, $delta")
-    // double→int conversion SATURATES at Int.MaxValue: a very small eps
-    // would silently return a width ~21% under the e/eps contract
-    require(math.E / eps <= Int.MaxValue.toDouble,
-      s"eps $eps needs width ${math.ceil(math.E / eps)} > Int.MaxValue — " +
-        "use a coarser eps or shard the sketch")
-    val width = math.ceil(math.E / eps).toInt
-    val depth = math.ceil(math.log(1.0 / delta)).toInt
-    (width, depth, width.toLong * depth * 8L)
   }
 
   /** Canonical-document selection: for each transitive dup cluster, keep

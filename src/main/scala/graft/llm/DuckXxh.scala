@@ -198,19 +198,6 @@ private[llm] object DuckXxh {
     bind(h1, "hl")(avalanche)
   }
 
-  /** XXH64 of one 4-byte int constant (Spark `XXH64.hashInt`) with a
-    * compile-time seed — both known, so this folds to a literal. */
-  def xxh64IntConst(i: Int, seed: BigInt): BigInt = {
-    def rotlB(x: BigInt, r: Int): BigInt =
-      ((x << r) | (x >> (64 - r))).mod(M64)
-    var h = (seed + P5 + 4).mod(M64)
-    h = h ^ ((BigInt(i) & BigInt("4294967295")) * P1).mod(M64)
-    h = (rotlB(h, 23) * P2 + P3).mod(M64)
-    h = h ^ (h >> 33); h = (h * P2).mod(M64)
-    h = h ^ (h >> 29); h = (h * P3).mod(M64)
-    h ^ (h >> 32)
-  }
-
   // ---- Murmur3_x86_32, Spark's variant (`Murmur3_x86_32.hashUnsafeBytes`:
   // 4-byte LE words, then each remaining TAIL byte mixed individually as a
   // SIGNED int — not the standard murmur3 tail). Feeds the CountMinSketch

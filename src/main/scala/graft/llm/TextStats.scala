@@ -281,48 +281,17 @@ object TextStats {
     */
   def fingerprint(text: Column): Column = md5(text)
 
-  /** Polynomial rolling hash over the token sequence (Rabin–Karp shape):
-    * acc = (acc·B + h(token)) mod M, with M = 1e9+7 so the intermediate
-    * product stays well inside a long — ANSI mode (Spark 4 default) makes
-    * wrapping 64-bit arithmetic an error, so the modular form is the
-    * portable one. Order-SENSITIVE, unlike [[simhash64]]/[[fingerprint]]:
-    * reordered tokens change it.
-    */
-  def rollingHash64(text: Column, base: Long = 1000003L,
-                    mod: Long = 1000000007L): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => pmod(acc * base + pmod(xxhash64(t), lit(mod)), lit(mod)))
-
-  /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): hash every
-    * k-token shingle, then keep the minimum hash of each sliding window of
-    * `w` shingles — the classic document-fingerprint selection that
-    * guarantees matches on any shared run of ≥ w+k-1 tokens. Returns the
-    * selected hashes as a sorted distinct array.
-    *
-    * CAUTION — this single-Column form embeds the shingle-hash array
-    * inside the window lambda, so interpreted HOF evaluation rebuilds it
-    * PER WINDOW: O(len²) per document (measured 11 s for 500 docs).
-    * Fine for tests and one-off use; corpus-scale callers must use
-    * [[winnowedDocs]], which stages each array as a bound attribute.
-    */
-  def winnowingFingerprints(text: Column, k: Int = 3, w: Int = 4): Column = {
-    val toks = tokens(text)
-    val shingleHashes = transform(
-      sequence(lit(0), greatest(size(toks) - k, lit(0))),
-      i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(k)))))
-    val windowMins = transform(
-      sequence(lit(0), greatest(size(shingleHashes) - w, lit(0))),
-      i => array_min(slice(shingleHashes, i + 1, lit(w))))
-    array_sort(array_distinct(windowMins))
-  }
-
-  /** [[winnowingFingerprints]] at corpus scale: (id, fps) with every
-    * intermediate array staged through its own projection, so lambdas
-    * reference a bound ATTRIBUTE (evaluated once per row) instead of
-    * re-deriving the producer array per element — the linear form of the
-    * O(len²) single-Column expression above. CollapseProject keeps the
-    * stages apart (non-cheap producers referenced more than once are
-    * never inlined).
+  /** Winnowing fingerprints (Schleimer et al., SIGMOD'03) per document:
+    * hash every k-token shingle, then keep the minimum hash of each
+    * sliding window of `w` shingles — the classic document-fingerprint
+    * selection that guarantees matches on any shared run of ≥ w+k-1
+    * tokens. Returns (id, fps), fps the selected hashes as a sorted
+    * distinct array. Every intermediate array is staged through its own
+    * projection, so lambdas reference a bound ATTRIBUTE (evaluated once
+    * per row): nested inside the window lambda, the shingle-hash array
+    * would be rebuilt PER WINDOW under interpreted HOF evaluation,
+    * O(len²) per document. CollapseProject keeps the stages apart
+    * (non-cheap producers referenced more than once are never inlined).
     */
   def winnowedDocs(docs: org.apache.spark.sql.DataFrame,
                    k: Int = 3, w: Int = 4,

@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel, Estimator}
-import org.apache.spark.ml.classification.{GBTClassifier, OneVsRest, RandomForestClassifier}
+import org.apache.spark.ml.classification.{LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{StandardScaler, StringIndexer, VectorAssembler}
@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *    (crime.py:38-39,107-120); this is the #1 silent-divergence trap.
   *  - KMeans k=10, seed=0 mirrors crime.py:136-137; parity is metric-level
   *    (WSSSE / cluster-size distribution), never exact ids.
-  *  - The classifier is pluggable: LightGBM (crime.py:171-181) has no MLlib
-  *    equivalent, so RandomForest(maxDepth=10) is the default stand-in.
+  *  - LightGBM (crime.py:171-181) has no MLlib equivalent, so
+  *    RandomForest(maxDepth=10) is the default classifier; q_ml_confusion
+  *    swaps in the [[logistic]] head.
   *  - The reference re-fits encoders on test data (crime.py:117-120,152-153)
   *    — a leakage bug we deliberately do NOT reproduce: fit once on train,
   *    transform test.
@@ -35,8 +36,7 @@ object CrimePipeline {
     * broadcast-centroid jobs, forest = per-tree distributed training.
     */
   def build(schema: Schema,
-            classifier: Estimator[_] = defaultClassifier,
-            clusterer: Estimator[_] = defaultKMeans): Pipeline = {
+            classifier: Estimator[_] = defaultClassifier): Pipeline = {
     // handleInvalid=keep: categories absent from the training split map to
     // an extra index instead of failing at scoring time. The reference
     // avoided unseen labels by re-fitting encoders on test data
@@ -56,7 +56,10 @@ object CrimePipeline {
     val scaler = new StandardScaler() // ML2: z-score, sample std like pandas
       .setInputCol("geo_raw").setOutputCol("geo_scaled")
       .setWithMean(true).setWithStd(true)
-    val kmeans = clusterer // ML3: cluster id becomes a feature
+    // ML3: one seeded k-means|| fit (k=10, seed=0, crime.py:136-137) whose
+    // cluster id becomes a feature
+    val kmeans = new KMeans().setK(10).setSeed(0L)
+      .setFeaturesCol("geo_scaled").setPredictionCol("cluster")
     // The reference hands label-encoded ints to LightGBM as plain numeric
     // features (crime.py:111-120 — no categorical declaration), so indexed
     // columns are demoted to bare doubles here too. The CAST drops the
@@ -77,23 +80,6 @@ object CrimePipeline {
         Seq(geoAssembler, scaler, kmeans, featureAssembler, classifier)).toArray)
   }
 
-  /** ML3 default: one seeded k-means|| fit (k=10, seed=0, crime.py:136-137).
-    * Parity is metric-level (WSSSE / size distribution), never exact ids.
-    */
-  def defaultKMeans: KMeans = new KMeans()
-    .setK(10).setSeed(0L).setFeaturesCol("geo_scaled").setPredictionCol("cluster")
-
-  /** ML3 sklearn-parity variant: sklearn's KMeans takes the best of
-    * `n_init=10` restarts by inertia (crime.py:136 leaves the default);
-    * [[BestOfKMeans]] reproduces that restart loop over seeded
-    * k-means|| fits. Selectable, not default — 10× the clustering fits
-    * for a metric-level-only refinement, the same cost call the
-    * OneVsRest(GBT) classifier variant makes.
-    */
-  def bestOfKMeans(nInit: Int = 10): BestOfKMeans = new BestOfKMeans()
-    .setK(10).setNInit(nInit).setBaseSeed(0L)
-    .setFeaturesCol("geo_scaled").setPredictionCol("cluster")
-
   /** ML5 default: RandomForest is MLlib's native-multiclass tree ensemble
     * (GBTClassifier is binary-only); depth matches the reference config.
     */
@@ -102,19 +88,12 @@ object CrimePipeline {
       .setLabelCol("label").setFeaturesCol("features")
       .setMaxDepth(10).setNumTrees(20).setSeed(0L)
 
-  /** ML5 boosted variant: the reference's model IS boosted trees (a
-    * 100-round LightGBM multiclass GBDT, crime.py:171-181). MLlib's
-    * GBTClassifier is binary-only, so the multiclass boosted path is
-    * one-vs-rest over per-class GBTs — k sequential boosted fits, each
-    * itself distributed. Selectable, not default: k× boosting rounds make
-    * it the expensive fidelity option (same tradeoff LightGBM's own
-    * `multiclassova` objective makes vs multinomial softmax).
+  /** The multinomial logistic head (crime.py:10 import) that
+    * q_ml_confusion plugs into [[build]] in place of the forest.
     */
-  def ovrGbtClassifier(maxIter: Int = 20, maxDepth: Int = 5): OneVsRest =
-    new OneVsRest()
-      .setClassifier(new GBTClassifier()
-        .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(0L))
-      .setLabelCol("label").setFeaturesCol("features")
+  def logistic: LogisticRegression = new LogisticRegression()
+    .setLabelCol("label").setFeaturesCol("features")
+    .setMaxIter(50).setRegParam(0.0).setFamily("multinomial")
 
   /** ML4 + ML6: 70/30 split (seed 0, crime.py:168-169), fit on train only,
     * report holdout accuracy.
@@ -126,27 +105,21 @@ object CrimePipeline {
 
   /** ML4 + ML6 with the reference's actual training metric alongside:
     * `multi_logloss` (crime.py:177) next to accuracy, from ONE transform
-    * of the holdout. logLoss needs per-class probabilities; classifiers
-    * that emit none (OneVsRest picks an argmax over per-class margins,
-    * with no joint distribution) report NaN there rather than a fake.
+    * of the holdout.
     */
-  def trainAndEvaluateMetrics(df: DataFrame, schema: Schema,
-                              classifier: Estimator[_] = defaultClassifier)
+  def trainAndEvaluateMetrics(df: DataFrame, schema: Schema)
       : (PipelineModel, Map[String, Double]) = {
     val Array(train, test) = df.randomSplit(Array(0.7, 0.3), seed = 0L)
-    val model = build(schema, classifier).fit(train)
-    val full = model.transform(test)
-    val hasProb = full.columns.contains("probability")
+    val model = build(schema).fit(train)
     // both evaluators read ONE cached transform of the holdout (narrowed
     // to the metric columns) instead of re-scoring the model per metric
-    val preds = full.select((col("label") +: col("prediction") +:
-      (if (hasProb) Seq(col("probability")) else Nil)): _*).cache()
+    val preds = model.transform(test)
+      .select("label", "prediction", "probability").cache()
     try {
       def eval(metric: String) = new MulticlassClassificationEvaluator()
         .setLabelCol("label").setPredictionCol("prediction")
         .setMetricName(metric).evaluate(preds)
-      val logLoss = if (hasProb) eval("logLoss") else Double.NaN
-      (model, Map("accuracy" -> eval("accuracy"), "logLoss" -> logLoss))
+      (model, Map("accuracy" -> eval("accuracy"), "logLoss" -> eval("logLoss")))
     } finally preds.unpersist(blocking = false)
   }
 

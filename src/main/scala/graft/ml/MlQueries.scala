@@ -104,7 +104,7 @@ object MlQueries {
     * q_ml_pipeline summary numbers: for each true class, support,
     * correct predictions, and precision/recall/F1 in floor micro-units
     * (the rational-score contract). Runs the cheaper logistic head
-    * (Stages.logistic — deterministic LBFGS on standardized features)
+    * (CrimePipeline.logistic — deterministic LBFGS on standardized features)
     * so the bench doesn't pay a second forest fit; the confusion counts
     * themselves are one groupBy over the cached prediction frame, and
     * the per-class rates are exact integer ratios of those counts.
@@ -114,7 +114,7 @@ object MlQueries {
     try {
       val Array(train, holdout) =
         sized.frame.randomSplit(Array(0.7, 0.3), seed = 0L)
-      val model = CrimePipeline.build(schema, Stages.logistic()).fit(train)
+      val model = CrimePipeline.build(schema, CrimePipeline.logistic).fit(train)
       val preds = model.transform(holdout)
         .select(col("label").cast("bigint").as("label"),
           col("prediction").cast("bigint").as("prediction")).cache()

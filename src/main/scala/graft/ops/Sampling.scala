@@ -1,53 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Sampling and split operators for training-data pipelines: stratified
-  * downsampling (class rebalancing) and deterministic hash splits.
+/** Sampling operators for training-data pipelines: budgeted prefixes,
+  * water-filling allocation, md5-rank and weighted samples, temperature
+  * mixing, round-robin interleave, class balancing and sequence packing.
   */
 object Sampling {
-
-  /** Stratified sample: per-stratum fractions (class rebalancing /
-    * language quotas). Membership comes from a hash of the row id — NOT
-    * `sampleBy`, whose rand(seed) stream is partition-layout dependent,
-    * so its "seeded" sample silently drifts when the input layout
-    * changes. Hash membership is stable across any repartition, like
-    * [[hashSplit]]. Single pass, no shuffle, exact-fraction in
-    * expectation (the scalable contract; exact-count sampling needs a
-    * per-stratum sort).
-    */
-  def stratified(df: DataFrame, stratumCol: String, idCol: String,
-                 fractions: Map[String, Double], seed: Long): DataFrame = {
-    val bucket = pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-    val threshold = fractions.foldLeft(lit(-1L)) { case (acc, (k, f)) =>
-      when(col(stratumCol) === k, lit((f * 1000000L).toLong)).otherwise(acc)
-    }
-    df.filter(bucket < threshold)
-  }
-
-  /** Deterministic hash split: rows route to buckets by
-    * pmod(xxhash64(id, salt), 100). Unlike randomSplit — whose assignment
-    * depends on partitioning — the same row lands in the same split on
-    * any cluster layout, any engine run, forever. That stability is what
-    * makes train/test membership auditable in a long-lived corpus.
-    *
-    * Null ids: xxhash64 skips null children, so every null-id row hashes
-    * to the same (salt-only) bucket and the whole null population lands
-    * on ONE side of the split. That is inherent to any deterministic
-    * id-keyed assignment — null carries no identity to split on — so
-    * completeness and disjointness hold, but the train ratio does not,
-    * for null ids. Assign real ids upstream if nulls must be sampled.
-    */
-  def hashBucket(idCol: Column, salt: Long = 0L): Column =
-    pmod(xxhash64(idCol, lit(salt)), lit(100L))
-
-  /** (train, holdout) pair at `trainPct` percent. */
-  def hashSplit(df: DataFrame, idCol: String, trainPct: Int,
-                salt: Long = 0L): (DataFrame, DataFrame) = {
-    val b = hashBucket(col(idCol), salt)
-    (df.filter(b < trainPct), df.filter(b >= trainPct))
-  }
 
   /** Per-group budgeted prefix: the rows whose running `weightCol` total
     * (ordered by `orderCol` within each `groupCol`) stays within `budget`
@@ -323,7 +283,7 @@ object Sampling {
     * -ln(u)/w — the k smallest keys per group are exactly a weighted
     * sample without replacement. The uniform comes from the first 8 hex
     * digits of md5(id) (not rand(seed), whose stream is partition-layout
-    * dependent — the [[stratified]] lesson), so the sample is
+    * dependent), so the sample is
     * reproducible across engines, runs, and repartitions: v ∈ [0,2^32)
     * is exact in a double, u = (v+1)/2^32 never hits 0, and both engines
     * evaluate the same IEEE ln/divide on identical operands. One window

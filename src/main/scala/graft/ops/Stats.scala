@@ -93,22 +93,4 @@ object Stats {
     */
   def argmax(arr: Column): Column =
     (array_position(arr, array_max(arr)) - 1).cast("bigint")
-
-  /** Approximate per-group percentiles via Spark's mergeable
-    * Greenwald-Khanna sketch: single pass, bounded memory per group,
-    * partials merge across partitions — the quantile path that works at
-    * 100 TB where exact percentile_disc would sort each group. Error is
-    * bounded by 1/accuracy of rank; the exact form (q_percentiles) is the
-    * verification baseline.
-    */
-  def approxPercentiles(df: DataFrame, valueCol: String, groupCol: String,
-                        ps: Seq[Double],
-                        accuracy: Int = 10000): DataFrame =
-    df.groupBy(groupCol)
-      .agg(percentile_approx(col(valueCol),
-        typedlit(ps), lit(accuracy)).as("pct"))
-      .select(col(groupCol) +:
-        ps.zipWithIndex.map { case (p, i) =>
-          col("pct").getItem(i).as(s"p${(p * 100).toInt}")
-        }: _*)
 }

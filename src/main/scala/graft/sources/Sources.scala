@@ -3,13 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Batch sources/sinks (SURVEY.md §2.1).
+/** Batch sources (SURVEY.md §2.1).
   *
   * S1 (crime.py:6-7,79-82): CSV with header, schema inferred — plus the
   * explicit-schema fast path our engine prefers (inference is an extra
   * full scan of the file: at 100 TB that is a scan you don't repeat).
   * S2 (crime.py:8): schema introspection.
-  * S8 (crime.py:205-206): result sink — parquet, the harness contract.
   */
 object Sources {
 
@@ -28,30 +27,6 @@ object Sources {
   def jsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S2: schema as a string tree (printSchema's content, returnable). */
   def describeSchema(df: DataFrame): String = df.schema.treeString
-
-  /** S8: parquet result sink. `partitionBy` is the 100 TB layout lever —
-    * downstream scans prune whole directories by partition value.
-    */
-  def writeParquet(df: DataFrame, path: String,
-                   partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
-  }
-
-  /** Bucketed sink: pre-shuffles on the bucket key so equal-bucketed
-    * tables join with NO exchange at read time (saved-table form of
-    * co-partitioning; the single biggest shuffle eliminator for repeated
-    * fact-fact joins at scale).
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
-      .format("parquet").saveAsTable(table)
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
 
-/** Streaming ingest (SURVEY.md §2.7 ST1–ST6).
+/** Streaming ingest: the reference's payload codec and socket source
+  * (SURVEY.md §2.7 ST1–ST2, §2.1 S3/S5/S6). The executed event-time
+  * streams (windows, dedup, joins) are built in [[StreamQueries]].
   *
   * The reference producer (/root/reference/stream.py:153-179) frames each
   * micro-batch as ONE newline-delimited JSON object
@@ -62,45 +64,4 @@ object Ingest {
     parsePayload(
       spark.readStream.format("socket")
         .option("host", host).option("port", port).load())
-
-  /** ST3/ST4 extension (absent in the reference, engine-level capability):
-    * watermarked tumbling-window counts over a typed event stream.
-    */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-                     watermark: String = "10 minutes",
-                     window: String = "5 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window),
-        col(keyCol))
-      .agg(count(lit(1)).as("n"))
-
-  /** Streaming exact dedup: watermark-bounded, id-only — the incremental
-    * form of the batch exact-dedup operator. dropDuplicatesWithinWatermark
-    * keys state on the id alone (replays of the same id with a different
-    * timestamp still dedup) and expires entries past the watermark
-    * horizon, so memory is bounded by (arrival rate × watermark), not by
-    * stream length — the property that makes it viable on an unbounded
-    * 100 TB/day feed.
-    */
-  def dedupStream(events: DataFrame, idCol: String, tsCol: String,
-                  watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(Seq(idCol))
-
-  /** Stream-stream inner join with an event-time interval bound: right
-    * rows join left rows at-or-after them within `withinSeconds`. Both
-    * sides watermarked so join state expires — unbounded state is the
-    * failure mode of naive stream joins.
-    */
-  def intervalJoinStreams(left: DataFrame, right: DataFrame, keyCol: String,
-                          leftTs: String, rightTs: String,
-                          withinSeconds: Long,
-                          watermark: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    l.join(r,
-      l(keyCol) === r(keyCol) &&
-        r(rightTs) >= l(leftTs) &&
-        r(rightTs) <= l(leftTs) + expr(s"INTERVAL $withinSeconds SECONDS"))
-  }
 }

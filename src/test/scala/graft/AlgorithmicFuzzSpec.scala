@@ -471,35 +471,6 @@ class AlgorithmicFuzzSpec extends AnyFunSuite {
     }
   }
 
-  test("approxPercentiles: returned values are group elements within " +
-      "GK rank error across adversarial distributions") {
-    val n = 3000
-    val groups: Seq[(String, Seq[Long])] = Seq(
-      "uniform" -> Seq.fill(n)((rng.nextLong() & Long.MaxValue) % 1000000L),
-      "zipf" -> Seq.fill(n)(math.min(1000L,
-        (1.0 / math.max(1e-6, rng.nextDouble())).toLong)),
-      "constant" -> Seq.fill(n)(42L),
-      "fewdist" -> Seq.fill(n)(rng.nextInt(10).toLong * 100L))
-    val ps = Seq(0.1, 0.5, 0.9, 0.99)
-    val accuracy = 1000
-    val df = groups.flatMap { case (g, vs) => vs.map(v => (g, v)) }
-      .toDF("g", "v")
-    val got = graft.ops.Stats.approxPercentiles(df, "v", "g", ps, accuracy)
-      .collect().map(r => r.getString(0) ->
-        ps.indices.map(i => r.getLong(i + 1))).toMap
-    val slop = n / accuracy + 2                       // εn + convention slop
-    for ((g, vs) <- groups; (p, i) <- ps.zipWithIndex) {
-      val sorted = vs.sorted
-      val v = got(g)(i)
-      assert(sorted.contains(v), s"$g p$p: $v not an element")
-      val lo = sorted.indexOf(v)
-      val hi = sorted.lastIndexOf(v)
-      val target = p * (n - 1)
-      assert(lo - slop <= target && target <= hi + slop,
-        s"$g p$p: value $v spans ranks [$lo,$hi], target $target ± $slop")
-    }
-  }
-
   test("hll_sketch_agg(lgK=12) estimates within 5% of exact distinct " +
       "counts across cardinality magnitudes") {
     val cards = Seq(10, 100, 2000, 20000)

@@ -457,6 +457,17 @@ class EdgeCasesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](GraftSession.parseConf("=v"))
   }
 
+  test("SPARK_GRAFT_CPUS / SPARK_GRAFT_BENCH_RUNS parsing: a positive " +
+      "integer is taken, anything else is refused by name, never clamped") {
+    assert(GraftSession.parsePositiveInt("SPARK_GRAFT_CPUS", " 8 ") == 8)
+    for (bad <- Seq("abc", "0", "-3", "", "2.5", "99999999999")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.parsePositiveInt("SPARK_GRAFT_BENCH_RUNS", bad))
+      assert(e.getMessage ==
+        s"SPARK_GRAFT_BENCH_RUNS must be a positive integer, got '$bad'")
+    }
+  }
+
   test("decimal-routed micro ratios stay exact past the Long product " +
       "ceiling (triangle lcc denominator + microRatioDec vs BigInt)") {
     // deg values where deg*(deg-1) or 1e6*num wrap Long: the decimal

@@ -112,24 +112,6 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("mortonKey preserves locality: adjacent cells differ less than far cells") {
-    // monotone along each axis at fixed other-coordinate prefix ranges is
-    // too strong for a z-curve; instead assert the defining bit property
-    // on random codes: interleave(a,b) recovers a and b exactly
-    forSamples(Gen.zip(Gen.chooseNum(0L, 0xFFFFL), Gen.chooseNum(0L, 0xFFFFL)), n = 20) {
-      case (a, b) =>
-        val key = Seq((a, b)).toDF("a", "b")
-          .select(graft.ops.Layout.mortonKey(col("a"), col("b")))
-          .head().getLong(0)
-        var ra = 0L; var rb = 0L
-        (0 until 16).foreach { i =>
-          ra |= ((key >> (2 * i)) & 1L) << i
-          rb |= ((key >> (2 * i + 1)) & 1L) << i
-        }
-        assert(ra == a && rb == b, s"a=$a b=$b key=$key")
-    }
-  }
-
   test("BMP codec round-trips any (w, h, pixel ramp) exactly") {
     forSamples(Gen.zip(Gen.choose(1, 40), Gen.choose(1, 40),
         Gen.choose(0, 255)), n = 20) { case (w, h, seed) =>

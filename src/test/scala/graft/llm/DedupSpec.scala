@@ -14,15 +14,14 @@ class DedupSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("exactDupGroups: min id kept, copies counted") {
-    val g = Dedup.exactDupGroups(docs).orderBy("keep_id").collect()
-    assert(g.map(r => (r.getLong(1), r.getLong(2))).toSeq ==
-      Seq((0L, 3L), (3L, 1L), (4L, 1L)))
-  }
-
-  test("exactDedupKeepFirst retains one row per distinct text") {
-    val kept = Dedup.exactDedupKeepFirst(docs).select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept == Seq(0L, 3L, 4L))
+    // null texts are unknown content, never one group of copies: adding
+    // two of them leaves the groups as they were
+    val nulls = Seq((5L, null: String), (6L, null: String)).toDF("doc_id", "text")
+    for (in <- Seq(docs, docs.union(nulls))) {
+      val g = Dedup.exactDupGroups(in).orderBy("keep_id").collect()
+      assert(g.map(r => (r.getLong(1), r.getLong(2))).toSeq ==
+        Seq((0L, 3L), (3L, 1L), (4L, 1L)))
+    }
   }
 
   test("ngramJaccardPairs computes exact unigram jaccard") {
@@ -218,21 +217,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map(1L -> ((2L, 3L, 50L)), 4L -> ((4L, 1L, 7L))))
   }
 
-  test("lshParams: MMDS hand math at 128 hashes, S-curve shape, and " +
-      "threshold→rows monotonicity") {
-    val p = Dedup.lshParams(128, 0.9)
-    // midpoints: (b=8,r=16)→0.878 (dist .022) beats (b=4,r=32)→0.958
-    // (dist .058) and (b=16,r=8)→0.707 (dist .193)
-    assert(p.bands == 8 && p.rowsPerBand == 16)
-    assert(math.abs(p.threshold - math.pow(1.0 / 8, 1.0 / 16)) < 1e-12)
-    // the S-curve must separate target from target−0.1: catch more than
-    // half at 0.9 (actual 0.806), less than half at 0.8 (actual 0.204)
-    assert(p.pAtTarget > 0.5 && p.pBelow < 0.5 && p.pAtTarget > p.pBelow)
-    // tighter targets buy more rows per band (more selective buckets)
-    val rows = Seq(0.7, 0.9, 0.95).map(Dedup.lshParams(128, _).rowsPerBand)
-    assert(rows == Seq(8, 16, 32))
-  }
-
   test("leakageSafeSplit: no near-dup pair straddles the split, both " +
       "sides populated") {
     val sf = graft.GraftTestSpark.sfDir
@@ -250,14 +234,5 @@ class DedupSpec extends AnyFunSuite {
       assert(split(a) == split(b),
         s"near-dup pair ($a, $b) straddles the split")
     }
-  }
-
-  test("cmsParams: textbook sizing, monotone in both knobs") {
-    // ε=0.001, δ=0.01: w = ⌈e/0.001⌉ = 2719, d = ⌈ln 100⌉ = 5 → ~106 KiB
-    val (w, d, bytes) = Dedup.cmsParams(0.001, 0.01)
-    assert(w == 2719 && d == 5 && bytes == 2719L * 5 * 8)
-    // tighter error widens, higher confidence deepens — never the reverse
-    assert(Dedup.cmsParams(0.0001, 0.01)._1 > w)
-    assert(Dedup.cmsParams(0.001, 0.0001)._2 > d)
   }
 }

@@ -8,29 +8,6 @@ class FingerprintMultimodalSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
 
-  test("rollingHash64 is order-sensitive, unlike simhash") {
-    val sigs = Seq("alpha beta gamma", "gamma beta alpha", "alpha beta gamma")
-      .toDF("text")
-      .select(TextStats.rollingHash64($"text").as("r"),
-        TextStats.simhash64($"text").as("s"))
-      .collect()
-    assert(sigs(0).getLong(0) == sigs(2).getLong(0)) // identical text
-    assert(sigs(0).getLong(0) != sigs(1).getLong(0)) // reorder changes it
-    assert(sigs(0).getLong(1) == sigs(1).getLong(1)) // simhash does not
-  }
-
-  test("winnowing guarantees shared fingerprints on long shared runs") {
-    val shared = (1 to 20).map(i => s"tok$i").mkString(" ")
-    val a = "aaa bbb " + shared
-    val b = shared + " zzz yyy"
-    val c = (100 to 120).map(i => s"tok$i").mkString(" ")
-    val fps = Seq(a, b, c).toDF("text")
-      .select(TextStats.winnowingFingerprints($"text").as("fp"))
-      .collect().map(_.getSeq[Long](0).toSet)
-    assert((fps(0) intersect fps(1)).nonEmpty) // shared 20-token run
-    assert((fps(0) intersect fps(2)).isEmpty)  // disjoint vocab
-  }
-
   test("BMP codec round-trips dims and raster bytes, padding included") {
     // width 9 → row stride 28 ≠ 27: exercises the 4-byte padding path;
     // the asymmetric pixel ramp catches any row-order (bottom-up) slip

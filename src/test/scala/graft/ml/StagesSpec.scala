@@ -3,6 +3,10 @@ package graft.ml
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftTestSpark
 
+/** The stages the registry's ML queries use beside the default pipeline:
+  * the logistic head q_ml_confusion plugs into [[CrimePipeline.build]], and
+  * the smoothed target encoder behind q_target_encode.
+  */
 class StagesSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
@@ -24,75 +28,11 @@ class StagesSpec extends AnyFunSuite {
 
   test("multinomial logistic regression plugs into the crime pipeline") {
     val Array(train, test) = fixture.randomSplit(Array(0.7, 0.3), seed = 0L)
-    val model = CrimePipeline.build(schema, Stages.logistic()).fit(train)
+    val model = CrimePipeline.build(schema, CrimePipeline.logistic).fit(train)
     val acc = new org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator()
       .setLabelCol("label").setPredictionCol("prediction")
       .setMetricName("accuracy").evaluate(model.transform(test))
     assert(acc >= 0.8, s"accuracy=$acc")
-  }
-
-  test("boosted regression (XGBRegressor mapping) fits a nonlinear curve") {
-    val rng = new scala.util.Random(13)
-    val df = (0 until 2000).map { _ =>
-      val x = rng.nextDouble() * 10
-      (x, x * x + rng.nextGaussian() * 0.5) // quadratic: linear models fail
-    }.toDF("x", "y")
-    val model = Stages.boostedRegression(Seq("x"), "y").fit(df)
-    val r2 = Stages.evaluateRegression(model.transform(df), "y", "r2")
-    assert(r2 >= 0.95, s"r2=$r2")
-  }
-
-  test("rocAuc (roc_auc_score mapping) separates a separable binary label") {
-    val rng = new scala.util.Random(17)
-    val df = (0 until 2000).map { i =>
-      val cls = i % 2
-      (cls.toDouble, cls + rng.nextGaussian() * 0.3)
-    }.toDF("label", "x")
-    val model = new org.apache.spark.ml.classification.LogisticRegression()
-      .setLabelCol("label").setFeaturesCol("features").fit(
-        new org.apache.spark.ml.feature.VectorAssembler()
-          .setInputCols(Array("x")).setOutputCol("features").transform(df))
-    val auc = Stages.rocAuc(model.transform(
-      new org.apache.spark.ml.feature.VectorAssembler()
-        .setInputCols(Array("x")).setOutputCol("features").transform(df)),
-      "label")
-    assert(auc >= 0.95, s"auc=$auc")
-    // and the metric is a real sweep, not a constant
-    assert(auc <= 1.0)
-  }
-
-  test("linear regression recovers a linear relationship (R2 ~ 1)") {
-    val rng = new scala.util.Random(3)
-    val df = (0 until 500).map { _ =>
-      val a = rng.nextGaussian(); val b = rng.nextGaussian()
-      (a, b, 3.0 * a - 2.0 * b + 5.0 + rng.nextGaussian() * 0.01)
-    }.toSeq.toDF("a", "b", "y")
-    val model = Stages.linear(Seq("a", "b"), "y").fit(df)
-    val r2 = Stages.evaluateRegression(model.transform(df), "y", "r2")
-    assert(r2 > 0.99, s"r2=$r2")
-  }
-
-  test("elastic-net regularization shrinks coefficients") {
-    val rng = new scala.util.Random(5)
-    val df = (0 until 300).map { _ =>
-      val a = rng.nextGaussian()
-      (a, 2.0 * a + rng.nextGaussian() * 0.1)
-    }.toSeq.toDF("a", "y")
-    def coef(reg: Double): Double = {
-      val m = Stages.linear(Seq("a"), "y", regParam = reg, elasticNetParam = 1.0)
-        .fit(df).stages.last
-        .asInstanceOf[org.apache.spark.ml.regression.LinearRegressionModel]
-      math.abs(m.coefficients(0))
-    }
-    assert(coef(10.0) < coef(0.0))
-  }
-
-  test("PCA explained variance is descending and sums <= 1") {
-    val li = graft.Tables.table(spark, GraftTestSpark.sfDir, "lineitem")
-    val (transformed, ev) = Stages.pca(li,
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"), k = 2)
-    assert(transformed.columns.contains("pca"))
-    assert(ev.length == 2 && ev(0) >= ev(1) && ev.sum <= 1.0 + 1e-9)
   }
 
   test("target encoding: smoothed means pull rare categories to the prior") {
@@ -108,78 +48,5 @@ class StagesSpec extends AnyFunSuite {
     // common (n=4, mean 25) stays closer to its own mean
     assert(math.abs(enc("common") - (100.0 + 5 * gmean) / 9.0) < 1e-6)
     assert(math.abs(enc("rare") - gmean) < math.abs(100.0 - gmean))
-  }
-
-  test("univariate selector keeps the informative features") {
-    val rng = new scala.util.Random(9)
-    val df = (0 until 600).map { i =>
-      val cls = (i % 2).toDouble
-      // f1 carries the class signal; f2/f3 are noise
-      (cls, cls * 2.0 + rng.nextGaussian() * 0.1,
-        rng.nextGaussian(), rng.nextGaussian())
-    }.toDF("label", "f1", "f2", "f3")
-    val out = Stages.selectFeatures(df, Seq("f1", "f2", "f3"), "label", k = 1)
-    val v = out.select("selected").head()
-      .getAs[org.apache.spark.ml.linalg.Vector](0)
-    assert(v.size == 1) // one feature kept
-    // the kept feature must be f1: its value tracks 2*label
-    val check = out.select("label", "selected").collect().forall { r =>
-      val sel = r.getAs[org.apache.spark.ml.linalg.Vector](1)(0)
-      math.abs(sel - 2.0 * r.getDouble(0)) < 1.0
-    }
-    assert(check)
-  }
-
-  test("cross-validation selects a model with sane accuracy") {
-    val (best, metric) = Stages.crossValidate(fixture.limit(600), schema,
-      numFolds = 2)
-    assert(best != null)
-    assert(metric >= 0.6, s"cv accuracy=$metric")
-  }
-
-  test("best-of-N KMeans restarts never lose to the single seeded fit (sklearn n_init parity)") {
-    // awkward geometry (three tight blobs + scatter) where a single init
-    // can land in a worse local optimum than the best of several
-    val rng = new scala.util.Random(19)
-    val pts = (0 until 900).map { i =>
-      val c = i % 3
-      (i.toLong, c * 4.0 + rng.nextGaussian() * 0.2,
-        (c % 2) * 3.0 + rng.nextGaussian() * 0.2)
-    } ++ (0 until 100).map { i =>
-      (1000L + i, rng.nextDouble() * 12, rng.nextDouble() * 5)
-    }
-    val df = pts.toDF("id", "x", "y")
-    val feats = new org.apache.spark.ml.feature.VectorAssembler()
-      .setInputCols(Array("x", "y")).setOutputCol("f").transform(df)
-    val single = new org.apache.spark.ml.clustering.KMeans()
-      .setK(6).setSeed(0L).setFeaturesCol("f").fit(feats)
-    val best = new BestOfKMeans().setK(6).setNInit(10).setBaseSeed(0L)
-      .setFeaturesCol("f").fit(feats)
-    // seed 0 is restart 0, so the winner can never be worse
-    assert(best.summary.trainingCost <= single.summary.trainingCost + 1e-9,
-      s"best=${best.summary.trainingCost} single=${single.summary.trainingCost}")
-    // deterministic: a second run picks the same winner. Compare the
-    // centroid SET, not the index order — MLlib assigns cluster indices
-    // from distributed aggregation order, which can permute between
-    // otherwise bit-identical same-seed fits (observed in-session: same
-    // six centroids, shuffled), so index order is not part of the
-    // determinism contract
-    val again = new BestOfKMeans().setK(6).setNInit(10).setBaseSeed(0L)
-      .setFeaturesCol("f").fit(feats)
-    def canon(m: org.apache.spark.ml.clustering.KMeansModel) =
-      m.clusterCenters.map(_.toArray.toSeq).toSeq.sortBy(c => (c(0), c(1)))
-    assert(canon(best) == canon(again))
-    assert(math.abs(best.summary.trainingCost - again.summary.trainingCost)
-      <= 1e-9)
-  }
-
-  test("bestOfKMeans plugs into the crime pipeline as the clustering stage") {
-    val Array(train, test) = fixture.randomSplit(Array(0.7, 0.3), seed = 0L)
-    val model = CrimePipeline.build(schema,
-      clusterer = CrimePipeline.bestOfKMeans(nInit = 3)).fit(train)
-    val acc = new org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("prediction")
-      .setMetricName("accuracy").evaluate(model.transform(test))
-    assert(acc >= 0.8, s"accuracy=$acc")
   }
 }

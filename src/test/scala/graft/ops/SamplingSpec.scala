@@ -10,24 +10,6 @@ class SamplingSpec extends AnyFunSuite {
 
   lazy val events = graft.Tables.table(spark, GraftTestSpark.sfDir, "events")
 
-  test("stratified sample respects per-stratum fractions in expectation") {
-    val fractions = Map("click" -> 0.1, "error" -> 0.5)
-    val s = Sampling.stratified(
-      events.filter($"event_type".isin("click", "error")),
-      "event_type", "event_id", fractions, seed = 42L)
-    val got = s.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val base = events.filter($"event_type".isin("click", "error"))
-      .groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    fractions.foreach { case (k, f) =>
-      val ratio = got.getOrElse(k, 0L).toDouble / base(k)
-      assert(math.abs(ratio - f) < 0.15, s"$k ratio=$ratio want~$f")
-    }
-    // strata not named in fractions are excluded entirely
-    assert(!got.contains("view"))
-  }
-
   test("budgetedPrefix admits rows in order until each group's budget") {
     val df = Seq(
       ("a", 1L, 40L), ("a", 2L, 40L), ("a", 3L, 40L), // 40, 80, 120
@@ -38,30 +20,6 @@ class SamplingSpec extends AnyFunSuite {
       .select("g", "id", "cum_weight").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set(("a", 1L, 40L), ("a", 2L, 80L), ("b", 1L, 100L)))
-  }
-
-  test("stratified sample is layout-stable, not just lineage-deterministic") {
-    val fractions = Map("click" -> 0.2, "error" -> 0.2, "purchase" -> 0.2,
-      "signup" -> 0.2, "view" -> 0.2)
-    val run = (df: org.apache.spark.sql.DataFrame) =>
-      Sampling.stratified(df, "event_type", "event_id", fractions, seed = 7L)
-        .select("event_id").collect().map(_.getLong(0)).toSet
-    // same membership even after an arbitrary repartition — the property
-    // sampleBy's rand(seed) stream does NOT have
-    assert(run(events) == run(events.repartition(13)))
-  }
-
-  test("hashSplit is disjoint, complete, ratio-correct, layout-stable") {
-    val (train, test) = Sampling.hashSplit(events, "event_id", trainPct = 70)
-    val nTrain = train.count(); val nTest = test.count()
-    assert(nTrain + nTest == events.count())
-    assert(train.join(test, "event_id", "inner").count() == 0)
-    val ratio = nTrain.toDouble / (nTrain + nTest)
-    assert(math.abs(ratio - 0.7) < 0.05, s"train ratio $ratio")
-    // layout independence: same membership after an arbitrary repartition
-    val (train2, _) = Sampling.hashSplit(events.repartition(13), "event_id", 70)
-    assert(train2.select("event_id").collect().map(_.getLong(0)).toSet ==
-      train.select("event_id").collect().map(_.getLong(0)).toSet)
   }
 
   test("weightedSample matches an independent driver-side E-S reference " +

@@ -77,29 +77,4 @@ class SourcesSpec extends AnyFunSuite {
       assert(good.count() == 2)
     } finally { cached.unpersist(): Unit }
   }
-
-  test("writeParquet partitionBy produces prunable directory layout (S8)") {
-    val out = GraftTestSpark.tempPath("graft_pq").toFile.getAbsolutePath + "/t"
-    val df = Seq((1, "x"), (2, "y"), (3, "x")).toDF("id", "k")
-    Sources.writeParquet(df, out, partitionBy = Seq("k"))
-    assert(new java.io.File(out, "k=x").exists())
-    val back = Sources.parquet(spark, out)
-    assert(back.filter(col("k") === "x").count() == 2)
-  }
-
-  test("bucketed tables join without an exchange on the bucket key") {
-    val a = (1 to 100).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-    val b = (1 to 100).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    Sources.writeBucketed(a, "bucketed_a", "k", 4)
-    Sources.writeBucketed(b, "bucketed_b", "k", 4)
-    // hint forces sort-merge (tiny fixtures would broadcast otherwise);
-    // bucketing must remove the shuffle exchanges on both sides
-    val joined = spark.table("bucketed_a").hint("merge")
-      .join(spark.table("bucketed_b"), "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join should be shuffle-free, got:\n$plan")
-    assert(plan.contains("SortMergeJoin"))
-    assert(joined.count() == 100)
-  }
 }

@@ -49,48 +49,6 @@ class IngestSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("dedupStream drops re-deliveries within the watermark horizon") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp)]
-    val dedup = Ingest.dedupStream(mem.toDF().toDF("id", "ts"), "id", "ts",
-      watermark = "1 minute")
-    val q = dedup.writeStream.format("memory").queryName("dedup_test")
-      .outputMode("append").start()
-    try {
-      val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      mem.addData((1L, t), (2L, t), (1L, t)) // duplicate in-batch
-      q.processAllAvailable()
-      mem.addData((1L, t), (3L, t))          // duplicate across batches
-      q.processAllAvailable()
-      val ids = spark.table("dedup_test").collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("intervalJoinStreams joins within the time bound only") {
-    implicit val sq = spark.sqlContext
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    val buys = MemoryStream[(Long, java.sql.Timestamp)]
-    val joined = Ingest.intervalJoinStreams(
-      clicks.toDF().toDF("user", "click_ts"),
-      buys.toDF().toDF("user", "buy_ts"),
-      keyCol = "user", leftTs = "click_ts", rightTs = "buy_ts",
-      withinSeconds = 600L, watermark = "1 minute")
-    val q = joined.writeStream.format("memory").queryName("ssjoin_test")
-      .outputMode("append").start()
-    try {
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
-      clicks.addData((7L, t("2024-01-01 00:00:00")))
-      buys.addData((7L, t("2024-01-01 00:05:00")),  // within 10 min → joins
-                   (7L, t("2024-01-01 00:20:00")),  // outside → dropped
-                   (8L, t("2024-01-01 00:01:00")))  // other key → dropped
-      q.processAllAvailable()
-      val rows = spark.table("ssjoin_test").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getLong(0) == 7L)
-    } finally q.stop()
-  }
-
   // Live-loopback smoke of the S3 socket source — the reference's actual
   // transport (stream.py:24-36): a ServerSocket inside this JVM plays the
   // producer, the engine's socket consumer parses its framed payload.
@@ -225,11 +183,6 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  // ST5/S8: the DURABLE sink path executed end to end — micro-batches
-  // land as parquet files under a checkpointed query, and the files read
-  // back complete. This is the exactly-once file-sink contract (the
-  // manifest under _spark_metadata records committed batches), vs the
-  // at-most-once socket transport the reference ships.
   test("q_stream_dedup's self-union actually doubles without the dedup " +
       "stage, and the dedup query returns the batch answer") {
     val sf = "/root/testdata/sf0.001"
@@ -251,6 +204,11 @@ class IngestSpec extends AnyFunSuite {
     assert(deduped == batch)
   }
 
+  // ST5/S8: the DURABLE sink path executed end to end — micro-batches
+  // land as parquet files under a checkpointed query, and the files read
+  // back complete. This is the exactly-once file-sink contract (the
+  // manifest under _spark_metadata records committed batches), vs the
+  // at-most-once socket transport the reference ships.
   test("streaming parquet file sink commits batches durably") {
     implicit val sq = spark.sqlContext
     val base = GraftTestSpark.tempPath("graft_sink_").toString
@@ -275,65 +233,6 @@ class IngestSpec extends AnyFunSuite {
       }
       rm(new java.io.File(base))
     }
-  }
-
-  test("windowedCounts groups a typed stream by tumbling window + key") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val events = mem.toDF().toDF("ts", "k")
-    val agg = Ingest.windowedCounts(events, "ts", "k",
-      watermark = "1 minute", window = "5 minutes")
-    val q = agg.writeStream.format("memory").queryName("win_test")
-      .outputMode("complete").start()
-    try {
-      mem.addData(
-        (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "a"),
-        (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "a"),
-        (java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), "a"))
-      q.processAllAvailable()
-      val rows = spark.table("win_test")
-        .select(col("window.start").cast("string").as("start"), col("k"), col("n"))
-        .orderBy("start").collect()
-      assert(rows.map(r => (r.getString(0), r.getLong(2))).toSeq ==
-        Seq(("2024-01-01 00:00:00", 2L), ("2024-01-01 00:05:00", 1L)))
-    } finally q.stop()
-  }
-
-  test("update mode emits ONLY the windows a batch touched — the " +
-      "incremental-dashboard contract complete mode can't give") {
-    // complete mode rewrites every window per batch (O(state) sink
-    // traffic); update re-emits only changed rows (O(batch)). At 100 TB
-    // the difference is the whole sink bill. foreachBatch collects each
-    // batch's emitted rows so the per-batch delta is observable.
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val agg = Ingest.windowedCounts(mem.toDF().toDF("ts", "k"), "ts", "k",
-      watermark = "1 minute", window = "5 minutes")
-      .select(col("window.start").cast("string").as("start"), col("n"))
-    val batches = scala.collection.mutable.Map[Long, Seq[(String, Long)]]()
-    val q = agg.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        batches.synchronized {
-          batches(id) = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        }: Unit
-      }
-      .outputMode("update").start()
-    try {
-      mem.addData(
-        (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "a"),
-        (java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), "a"))
-      q.processAllAvailable()
-      // batch 2 touches ONLY the 00:05 window; 00:00 must not re-emit
-      mem.addData((java.sql.Timestamp.valueOf("2024-01-01 00:08:00"), "a"))
-      q.processAllAvailable()
-      val emitted = batches.synchronized(batches.toMap)
-      val first = emitted.filter(_._2.nonEmpty).minBy(_._1)._2.toSet
-      assert(first == Set(("2024-01-01 00:00:00", 1L),
-        ("2024-01-01 00:05:00", 1L)))
-      val last = emitted.filter(_._2.nonEmpty).maxBy(_._1)._2.toSet
-      assert(last == Set(("2024-01-01 00:05:00", 2L)),
-        s"untouched window re-emitted: $emitted")
-    } finally q.stop()
   }
 
   test("executed stream-stream interval join equals the batch self-join") {
