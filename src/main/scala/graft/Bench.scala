@@ -31,18 +31,14 @@ object Bench {
     // regression?" from timings alone — see BASELINE.md's medians rule)
     val before = HostTelemetry.sample()
 
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
     // warmup: exercises scan + shuffle + agg + sort codepaths once
-    try run("q_counts_by_type") catch { case _: Throwable => () }
+    try SparkEntry.runToNoop(spark, "q_counts_by_type", sfDir) catch { case _: Throwable => () }
 
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val attempts = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { run(name); true } catch { case e: Throwable =>
+        val ok = try { SparkEntry.runToNoop(spark, name, sfDir); true } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }

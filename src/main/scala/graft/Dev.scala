@@ -52,8 +52,8 @@ object Dev {
       case "time" => time(spark, sfDir, runs, names)
       case _ => names.foreach { name =>
         println(s"\n========== $name ==========")
-        try {
-          val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        try SparkEntry.run(spark, name, sfDir) { df =>
+          val qe = df.queryExecution
           // a noop write would plan and run its own QueryExecution and
           // leave this one at isFinalPlan=false: run this one instead
           if (cmd == "executed-plan")
@@ -77,16 +77,12 @@ object Dev {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         println("[dev] stream terminated")
     })
-    val queries = SparkEntry.queries
-    def run(name: String): Unit =
-      queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-
-    try run("q_counts_by_type") catch { case _: Throwable => () }
+    try SparkEntry.runToNoop(spark, "q_counts_by_type", sfDir) catch { case _: Throwable => () }
     println(HostTelemetry.stampLine("dev"))
     val times = (1 to runs).flatMap { i =>
       names.map { name =>
         val t0 = System.nanoTime()
-        run(name)
+        SparkEntry.runToNoop(spark, name, sfDir)
         val s = (System.nanoTime() - t0) / 1e9
         println(f"[dev] run $i $name: $s%.2f s")
         name -> s

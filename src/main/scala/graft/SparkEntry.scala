@@ -50,6 +50,16 @@ object SparkEntry {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
   }
 
+  /** Builds query `name` over `sfDir` into `sink`, then frees every
+    * checkpoint the query made (no query reads another's), returned or
+    * thrown: a main holds no storage for its finished queries. */
+  def run[A](spark: SparkSession, name: String, sfDir: String)(sink: DataFrame => A): A =
+    Checkpoints.sweep(spark)(sink(queries(name)(spark, sfDir)))
+
+  /** [[run]] into the `noop` sink: every row evaluated, none written. */
+  def runToNoop(spark: SparkSession, name: String, sfDir: String): Unit =
+    run(spark, name, sfDir)(_.write.format("noop").mode("overwrite").save())
+
   /** Each query's DuckDB SQL over the same parquet tables; the
     * adjudicated queries have none. */
   val oracleSql: Map[String, String] =

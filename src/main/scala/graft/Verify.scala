@@ -12,9 +12,8 @@ object Verify {
     // query subset (the correctness gate passes exactly 2 args → full run);
     // an unknown name is refused, or oracle_sql.json would shrink with it
     // and the DuckDB compare would pass on fewer queries than asked
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    only.foreach(SparkEntry.requireKnown)
+    val names = args.lift(2).fold(SparkEntry.queries.keySet)(_.split(",").toSet)
+    SparkEntry.requireKnown(names)
     val conf = GraftSession.envConf()
     conf.foreach { case (k, v) => System.err.println(s"[verify] conf $k=$v") }
     val spark = GraftSession.create(GraftSession.envCpus(4), conf)
@@ -26,14 +25,12 @@ object Verify {
       Option(f.listFiles).foreach(_.foreach(deleteRecursively))
       f.delete()
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
       // drop any stale result FIRST: if this query now fails, a leftover
       // parquet from a previous run must not pass the compare as green
       deleteRecursively(new java.io.File(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try SparkEntry.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -51,7 +48,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     System.err.println(HostTelemetry.stampLine("verify"))

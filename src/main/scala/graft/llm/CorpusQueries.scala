@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.QueryDef
+import graft.{Checkpoints, QueryDef}
 import graft.Tables.table
 
 /** Second wave of LLM-training-corpus operators: rule-based quality
@@ -692,7 +692,7 @@ object CorpusQueries {
     * the Sennrich learn_bpe economics), so each round is one
     * vocabulary-keyed aggregate plus a 1-row argmax collect; lineage is
     * cut per round with localCheckpoint and the previous round's blocks
-    * are released eagerly, the [[graft.ops.Graph.pageRank]] discipline.
+    * are freed as soon as the next round is materialized.
     * Ties break (count desc, left asc, right asc) — deterministic on
     * both engines. Tokens shorter than 2 chars never produce a pair and
     * never merge, so they are dropped up front on both sides.
@@ -704,19 +704,16 @@ object CorpusQueries {
   def bpeLearnFromDocs(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val (merges, seg) = bpeTrain(docs, k)
-    bridge.releaseLocalCheckpoint(seg)
-    merges.toDF("merge_rank", "left_sym", "right_sym", "cnt")
+    Checkpoints.scoped(bpeTrain(_, docs, k)._1)
+      .toDF("merge_rank", "left_sym", "right_sym", "cnt")
       .orderBy("merge_rank")
   }
 
-  /** The k-round training loop, returning (merge table, FINAL
-    * checkpointed segmentation frame). Callers own releasing the frame.
+  /** The k-round training loop, returning (merge table, final
+    * segmentation frame); every round's checkpoint belongs to `s`.
     */
-  private def bpeTrain(docs: DataFrame, k: Int)
+  private def bpeTrain(s: Checkpoints.Scope, docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
     val vocab = docs
       .select(TextStats.tokens(col("text")).as("__toks"))
       .select(explode_outer(col("__toks")).as("token"))
@@ -725,9 +722,8 @@ object CorpusQueries {
     // seg_0: every code point wrapped <U+0001>·<U+0002> (regex, not split —
     // Spark's split(tok, '') keeps a trailing '' under its limit=-1
     // semantics, which would fabricate an empty symbol)
-    var seg = vocab.select(col("c"),
-        regexp_replace(col("token"), "(?s)(.)", segS + "$1" + segE).as("seg"))
-      .localCheckpoint()
+    var seg = s.checkpoint(vocab.select(col("c"),
+        regexp_replace(col("token"), "(?s)(.)", segS + "$1" + segE).as("seg")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var r = 1
     var exhausted = false
@@ -749,11 +745,10 @@ object CorpusQueries {
         val (l, rr, cnt) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r.toLong, l, rr, cnt))
-        val next = seg.withColumn("seg", replace(col("seg"),
+        val next = s.checkpoint(seg.withColumn("seg", replace(col("seg"),
             lit(segS + l + segE + segS + rr + segE),
-            lit(segS + l + rr + segE)))
-          .localCheckpoint()
-        bridge.releaseLocalCheckpoint(seg)
+            lit(segS + l + rr + segE))))
+        s.release(seg)
         seg = next
         r += 1
       }
@@ -778,18 +773,15 @@ object CorpusQueries {
   def bpeVocabFromDocs(docs: DataFrame, k: Int, topK: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val (_, seg) = bpeTrain(docs, k)
-    // bounded collect (topK rows) so the checkpointed training state can
-    // be released eagerly instead of leaking until frame GC
-    val top = seg
-      .select(col("c"), split(
-        col("seg").substr(lit(2), length(col("seg")) - 2), segE + segS).as("sy"))
-      .select(col("c"), explode(col("sy")).as("sym"))
-      .groupBy("sym").agg(sum(col("c")).as("cnt"))
-      .orderBy(desc("cnt"), asc("sym"))
-      .limit(topK).collect()
-    bridge.releaseLocalCheckpoint(seg)
+    val top = Checkpoints.scoped { s =>
+      bpeTrain(s, docs, k)._2
+        .select(col("c"), split(
+          col("seg").substr(lit(2), length(col("seg")) - 2), segE + segS).as("sy"))
+        .select(col("c"), explode(col("sy")).as("sym"))
+        .groupBy("sym").agg(sum(col("c")).as("cnt"))
+        .orderBy(desc("cnt"), asc("sym"))
+        .limit(topK).collect()
+    }
     top.map(r => (r.getString(0), r.getLong(1))).toSeq.toDF("sym", "cnt")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** Deduplication operators (SURVEY.md §7.2.5): exact, MinHash+LSH near-dup,
   * SimHash near-dup, n-gram Jaccard.
@@ -408,69 +409,50 @@ object Dedup {
     * Returns (id, component) with component = min id reachable.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-                          maxIter: Int = 20): DataFrame = {
+                          maxIter: Int = 20): DataFrame = Checkpoints.scoped { s =>
     // materialize the edge list ONCE: every round joins it, and without
     // the checkpoint each round would re-run the (expensive) pair
     // detection that produced it. Round-21: symmetrize by EXPLODING each
     // pair into its two directions instead of a self-union — the union
     // form evaluated `pairs` (the expensive detection join) twice inside
     // this one job; the explode form is one evaluation, same rows.
-    val edges = pairs.select(explode(array(
+    val edges = s.checkpoint(pairs.select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .localCheckpoint()
-    try {
-      var cur = nodes.select(col("id"), col("id").as("component"),
-          col("id").as("__prev"))
-        .localCheckpoint()
-      var labels = cur.select("id", "component")
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("id", "v"), "v")
-          .groupBy(col("u").as("id"))
-          .agg(min(col("component")).as("n_min"))
-        // the new label rides the checkpoint NEXT TO the label it
-        // replaces, so convergence is a scan of the freshly cached
-        // blocks — not the join-plus-shuffle of next against labels
-        // the previous form paid every round (one |V|-row exchange per
-        // round saved; at full-corpus CC that join was the same size
-        // as the propagation step itself)
-        val next = labels.join(neighborMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("component"), coalesce(col("n_min"), col("component")))
-              .as("component"),
-            col("component").as("__prev"))
-          .localCheckpoint()
-        converged = next.filter(col("component") =!= col("__prev")).isEmpty
-        // round N only ever reads round N-1: drop the superseded round's
-        // checkpoint blocks NOW (after the convergence check, its last
-        // reader) — at corpus scale maxIter retained label frames would
-        // otherwise sit in executor storage until driver GC
-        org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(cur)
-        cur = next
-        labels = cur.select("id", "component")
-        iter += 1
-      }
-      // a silent non-converged return would hand back split clusters with
-      // intermediate labels; long chains (diameter > maxIter) must fail
-      // loudly so the caller raises maxIter. Release the final label
-      // checkpoint on the failure path — only a RETURNED frame may keep
-      // its blocks (a throw here would otherwise strand them until GC,
-      // the exact accumulation the in-loop release exists to prevent)
-      if (!converged)
-        org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(cur)
-      require(converged,
-        s"connected components did not converge within $maxIter rounds " +
-          "(cluster diameter exceeds maxIter)")
-      labels
-    } finally {
-      // the result frame no longer references the edge list; its blocks
-      // can go even though the returned labels checkpoint stays live
-      org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(edges)
+      .select(col("e.u").as("u"), col("e.v").as("v")))
+    var labels = s.checkpoint(nodes.select(col("id"), col("id").as("component"),
+        col("id").as("__prev"))).select("id", "component")
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIter) {
+      val neighborMin = edges
+        .join(labels.withColumnRenamed("id", "v"), "v")
+        .groupBy(col("u").as("id"))
+        .agg(min(col("component")).as("n_min"))
+      // the new label rides the checkpoint NEXT TO the label it
+      // replaces, so convergence is a scan of the freshly cached
+      // blocks — not the join-plus-shuffle of next against labels
+      // the previous form paid every round (one |V|-row exchange per
+      // round saved; at full-corpus CC that join was the same size
+      // as the propagation step itself)
+      val next = s.checkpoint(labels.join(neighborMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("component"), coalesce(col("n_min"), col("component")))
+            .as("component"),
+          col("component").as("__prev")))
+      converged = next.filter(col("component") =!= col("__prev")).isEmpty
+      // round N only ever reads round N-1, and the check was its last reader
+      s.release(labels)
+      labels = next.select("id", "component")
+      iter += 1
     }
+    // a silent non-converged return would hand back split clusters with
+    // intermediate labels; long chains (diameter > maxIter) must fail
+    // loudly so the caller raises maxIter
+    require(converged,
+      s"connected components did not converge within $maxIter rounds " +
+        "(cluster diameter exceeds maxIter)")
+    labels
   }
 
   /** Exact n-gram (word shingle) Jaccard pairs via inverted-index join:

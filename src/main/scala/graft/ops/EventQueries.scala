@@ -22,13 +22,13 @@ object EventQueries {
     * the same set, offsets by exploding it. Round 22: this replaces the
     * former distinct (user, day) shuffle + separate per-user min
     * aggregate + user-keyed join — three user-keyed exchanges → one,
-    * identical output (events carry no null ts/user_id at any SF by the
-    * generator contract; collect_set's null-dropping is therefore
-    * unobservable). Events load via [[graft.Tables.table]] (the
-    * nanosecond-timestamp parquet trap).
+    * identical output. Events with a null user_id or ts belong to no
+    * user-day and are dropped, here and in the oracle. Events load via
+    * [[graft.Tables.table]] (the nanosecond-timestamp parquet trap).
     */
   def cohortRetention(spark: SparkSession, dir: String): DataFrame = {
     val perUser = table(spark, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy("user_id").agg(collect_set(col("day")).as("ds"))
       .select(array_min(col("ds")).as("cohort_day"), explode(col("ds")).as("day"))
@@ -487,7 +487,8 @@ object EventQueries {
 
     QueryDef("q_cohort_retention", cohortRetention, Some(
       """WITH d AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |c AS (
         |  SELECT user_id, min(day) AS cohort_day FROM d GROUP BY user_id)
         |SELECT c.cohort_day,

@@ -2,13 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** Iterative graph analytics over edge lists — the same
   * join-aggregate-per-round shape as
   * [[graft.llm.Dedup.connectedComponents]]: each round is one shuffle
   * keyed by node, lineage cut by localCheckpoint (a 10-round loop would
-  * otherwise compound a 10-deep join plan), previous rounds' blocks
-  * released eagerly.
+  * otherwise compound a 10-deep join plan) in a [[graft.Checkpoints]] scope.
   */
 object Graph {
 
@@ -25,63 +25,43 @@ object Graph {
     * than |E| + |V| rows.
     */
   def pageRank(edges: DataFrame, iters: Int = 10,
-               damping: Double = 0.85): DataFrame = {
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
+               damping: Double = 0.85): DataFrame = Checkpoints.scoped { s =>
     // materialize the INPUT edge pipeline once: nodes and norm each
     // checkpoint independently, and without this the caller's (often
     // expensive) edge derivation — for q_pagerank, a full per-user
     // window over the events table — executes once per consumer
-    val e = edges.localCheckpoint()
-    // try/finally (the connectedComponents discipline): a failure in the
-    // nodes count or norm checkpoint must not strand e's blocks until
-    // driver GC; release is a no-op once the blocks are gone
-    val (nodes, n, norm) = try {
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct().localCheckpoint()
-      try {
-        val n = nodes.count().toDouble
-        val outStrength = e.groupBy("src").agg(sum(col("weight")).as("wout"))
-        val norm = e.join(outStrength, Seq("src"))
-          .select(col("src"), col("dst"),
-            (col("weight").cast("double") / col("wout")).as("p"))
-          .localCheckpoint()
-        (nodes, n, norm)
-      } catch { case t: Throwable =>
-        // the count or the norm checkpoint failed: nodes' |V|-row blocks
-        // must not outlive the call either
-        bridge.releaseLocalCheckpoint(nodes); throw t
-      }
-    } finally {
-      // nodes and norm are themselves checkpointed; the raw edge blocks
-      // have no further reader
-      bridge.releaseLocalCheckpoint(e)
-    }
+    val e = s.checkpoint(edges)
+    val nodes = s.checkpoint(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct())
+    val n = nodes.count().toDouble
+    val outStrength = e.groupBy("src").agg(sum(col("weight")).as("wout"))
+    val norm = s.checkpoint(e.join(outStrength, Seq("src"))
+      .select(col("src"), col("dst"),
+        (col("weight").cast("double") / col("wout")).as("p")))
+    // nodes and norm are themselves checkpointed; the raw edge blocks
+    // have no further reader
+    s.release(e)
     // nodes with no out-edges: their whole rank is dangling mass
-    val dangling = nodes
-      .join(norm.select(col("src").as("node")), Seq("node"), "left_anti")
-      .localCheckpoint()
+    val dangling = s.checkpoint(nodes
+      .join(norm.select(col("src").as("node")), Seq("node"), "left_anti"))
 
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint()
+    var ranks = s.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
     for (_ <- 1 to iters) {
       val dmass = ranks.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dmass"))
       val contrib = norm.join(ranks, norm("src") === ranks("node"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") * col("p")).as("in_mass"))
-      val next = nodes.join(contrib, Seq("node"), "left")
+      val next = s.checkpoint(nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dmass))
         .select(col("node"),
           (lit((1.0 - damping) / n) +
             lit(damping) * (coalesce(col("in_mass"), lit(0.0)) +
-              col("__dmass") / lit(n))).as("rank"))
-        .localCheckpoint()
-      bridge.releaseLocalCheckpoint(ranks)
+              col("__dmass") / lit(n))).as("rank")))
+      s.release(ranks)
       ranks = next
     }
-    bridge.releaseLocalCheckpoint(norm)
-    bridge.releaseLocalCheckpoint(nodes)
-    bridge.releaseLocalCheckpoint(dangling)
     ranks
   }
 
@@ -93,9 +73,9 @@ object Graph {
     * an [[Observation]] of `min(deg)`, which rides on the checkpoint job:
     * `min(deg) ≥ k` (or no edges left, a null min) means nothing would be
     * peeled, and that degree frame IS the result; otherwise one semi-join
-    * filter peels every underqualified node at once. Checkpoint-per-round
-    * with eager release (the pageRank/CC discipline); rounds are bounded
-    * by the peel depth, which is small on real graphs.
+    * filter peels every underqualified node at once. One checkpoint per
+    * round, freed once superseded; rounds are bounded by the peel depth,
+    * which is small on real graphs.
     *
     * `maxIter` bounds the PEEL rounds: a graph whose peel depth (rounds
     * that delete nodes) is at most `maxIter` converges; one deeper fails
@@ -112,43 +92,42 @@ object Graph {
     * every returned degree ≥ k.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
     require(k >= 1, s"k must be >= 1: $k")
-    @annotation.tailrec
-    def peel(cur: DataFrame, peels: Int): DataFrame = {
-      val obs = Observation()
-      val deg = cur.select(col("u").as("node"))
-        .union(cur.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg_in_core"))
-        .observe(obs, min(col("deg_in_core")).as("min_deg"))
-        .localCheckpoint()
-      // deg is materialized, so releasing cur cannot truncate its lineage
-      // (the CC/pageRank release rule)
-      val converged = obs.get("min_deg") match {
-        case null => true // no edges left: the k-core is empty
-        case m: Long => m >= k
+    Checkpoints.scoped { s =>
+      @annotation.tailrec
+      def peel(cur: DataFrame, peels: Int): DataFrame = {
+        val obs = Observation()
+        val deg = s.checkpoint(cur.select(col("u").as("node"))
+          .union(cur.select(col("v").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg_in_core"))
+          .observe(obs, min(col("deg_in_core")).as("min_deg")))
+        val converged = obs.get("min_deg") match {
+          case null => true // no edges left: the k-core is empty
+          case m: Long => m >= k
+        }
+        if (converged) deg
+        else {
+          require(peels < maxIter, s"k-core peel did not converge in $maxIter rounds")
+          val keep = deg.filter(col("deg_in_core") >= k).select("node")
+          val next = s.checkpoint(cur
+            .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+            .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
+          s.release(cur)
+          s.release(deg)
+          peel(next, peels + 1)
+        }
       }
-      if (converged) {
-        bridge.releaseLocalCheckpoint(cur)
-        deg
-      } else {
-        require(peels < maxIter, s"k-core peel did not converge in $maxIter rounds")
-        val keep = deg.filter(col("deg_in_core") >= k).select("node")
-        val next = cur
-          .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-          .localCheckpoint()
-        bridge.releaseLocalCheckpoint(cur)
-        bridge.releaseLocalCheckpoint(deg)
-        peel(next, peels + 1)
-      }
+      peel(s.checkpoint(undirected(edges)), 0)
     }
-    peel(edges
+  }
+
+  /** The undirected simple graph of an (id_a, id_b) pair list: one (u, v)
+    * row per edge with u < v, however the pair came; no self-loops. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(), 0)
-  }
 
   /** Degree assortativity: Pearson correlation of endpoint degrees over
     * the (symmetrized) edge list — positive means hubs link hubs
@@ -158,10 +137,7 @@ object Graph {
     * q_corr_matrix contract.
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val canon = edges
-      .select(least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val canon = undirected(edges)
     val deg = canon.select(col("u").as("node"))
       .union(canon.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -200,10 +176,7 @@ object Graph {
     * in micro-units (deg < 2 degrades to 0, the microRatio convention).
     */
   def triangleStats(edges: DataFrame): DataFrame = {
-    val canon = edges
-      .select(least(col("id_a"), col("id_b")).as("u"),
-        greatest(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val canon = undirected(edges)
     val deg = canon.select(col("u").as("node"))
       .union(canon.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))

@@ -14,18 +14,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Free the storage behind a `localCheckpoint()`ed frame. The checkpoint
-    * materializes the plan into a persisted internal RDD wrapped in a
-    * LogicalRDD scan; `Dataset.unpersist` can't reach it (the cache
-    * manager never registered it), so iterative algorithms that checkpoint
-    * per round would otherwise pin every round's blocks in executor
-    * storage until the RDD happens to be GC'd on the driver.
-    */
-  def releaseLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

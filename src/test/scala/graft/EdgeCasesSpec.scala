@@ -57,6 +57,25 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(rows(1).isNullAt(0))
   }
 
+  test("cohortRetention drops events with a null user or a null ts") {
+    val day = 19723L // 2024-01-01
+    def ns(d: Long, h: Long) = Some((d * 24 + h) * 3600L * 1000000000L)
+    val dir = GraftTestSpark.tempPath("cohort_nulls").toString
+    Seq((1L, Some(1L), ns(day, 1)), (2L, Some(1L), ns(day + 1, 2)),
+        (3L, Some(2L), ns(day + 1, 3)),
+        // no user: grouped as one user it would add (day, 0) and (day, 2)
+        (4L, None, ns(day, 4)), (5L, None, ns(day + 2, 5)),
+        // no ts: user 3 has no active day, user 2 no extra one
+        (6L, Some(3L), None), (7L, Some(2L), None))
+      .map { case (id, u, ts) => (id, u, "view", ts, 1.0) }
+      .toDF("event_id", "user_id", "event_type", "ts", "value")
+      .write.parquet(s"$dir/events.parquet")
+    val got = graft.ops.EventQueries.cohortRetention(spark, dir).collect()
+      .map(r => (r.getDate(0).toLocalDate.toEpochDay, r.getLong(1), r.getLong(2)))
+      .toSeq
+    assert(got == Seq((day, 0L, 1L), (day, 1L, 1L), (day + 1, 0L, 1L)))
+  }
+
   test("DotProduct: empty arrays give 0, equal lengths fold every element") {
     val df = Seq(
       (Array.empty[Float], Array.empty[Float]),

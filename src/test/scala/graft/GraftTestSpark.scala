@@ -12,6 +12,10 @@ object GraftTestSpark {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Ids of the RDDs the session holds persisted now: a test diffs two
+    * readings to see what a call left behind. */
+  def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** Temp dir under one per-JVM root that a single shutdown hook removes.
     * Suites use this instead of calling Files.createTempDirectory
     * directly, so a test run leaves nothing behind in /tmp (a full suite

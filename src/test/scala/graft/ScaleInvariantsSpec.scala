@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ScaleReplicas.{Stride, Replicas => R}
@@ -41,7 +40,7 @@ class ScaleInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pin(df: DataFrame): DataFrame = hold(df.localCheckpoint())
 
   override def afterAll(): Unit = {
-    held.foreach(Bridge.releaseLocalCheckpoint)
+    held.foreach(Checkpoints.release)
     super.afterAll()
   }
 
@@ -109,7 +108,8 @@ class ScaleInvariantsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no dup cluster crosses replicas") {
-    // connectedComponents returns an already-checkpointed frame
+    // connectedComponents returns a projection of its last checkpoint,
+    // which Checkpoints.release in afterAll finds under the projection
     val comps = hold(Dedup.connectedComponents(
       docs(out).select(col("doc_id").as("id")), pairs))
     assert(pairs.count() > 0, "no pairs to cluster")

@@ -203,6 +203,17 @@ class DedupSpec extends AnyFunSuite {
       6L -> 6L, 7L -> 7L))
   }
 
+  test("connectedComponents: too few rounds fails loudly and frees its checkpoints") {
+    // the chain 1-2-3 needs 2 label rounds to settle and a 3rd to see it
+    val nodes = (1L to 3L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val before = GraftTestSpark.persistedRdds
+    val err = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(nodes, pairs, maxIter = 1))
+    assert(err.getMessage.contains("did not converge within 1 rounds"))
+    assert(GraftTestSpark.persistedRdds -- before == Set.empty[Int])
+  }
+
   test("keepBestPerCluster: max quality wins, ties resolve to the lowest id") {
     val comps = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L))
       .toDF("id", "component")

@@ -130,8 +130,27 @@ class GraphSpec extends AnyFunSuite {
     // maxIter counts peel rounds, so 3 converges and 2 fails loudly
     val chain6 = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     assert(Graph.kCore(chain6, k = 2, maxIter = 3).count() == 0)
+    val before = GraftTestSpark.persistedRdds
     val err = intercept[IllegalArgumentException](
       Graph.kCore(chain6, k = 2, maxIter = 2))
     assert(err.getMessage.contains("k-core peel did not converge in 2 rounds"))
+    // the throw frees the last round's edge and degree checkpoints too
+    assert(GraftTestSpark.persistedRdds -- before == Set.empty[Int])
+  }
+
+  test("pageRank keeps only the checkpoint its result reads") {
+    val before = GraftTestSpark.persistedRdds
+    val ranks = Graph.pageRank(
+      Seq(("a", "b", 1L), ("b", "c", 2L), ("a", "c", 1L)).toDF("src", "dst", "weight"))
+    val left = GraftTestSpark.persistedRdds -- before
+    // the edges, nodes, norm, dangling and superseded rank rounds are
+    // freed; the last round is the result's one scan
+    val scanned = ranks.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(left.size == 1 && left == scanned, s"left $left, result reads $scanned")
+    assert(math.abs(ranks.collect().map(_.getDouble(1)).sum - 1.0) < 1e-9)
+    graft.Checkpoints.release(ranks)
+    assert(GraftTestSpark.persistedRdds -- before == Set.empty[Int])
   }
 }
