@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Checkpoints
+import TextStats.{IdCol, TextCol}
 
 /** Deduplication operators (SURVEY.md §7.2.5): exact, MinHash+LSH near-dup,
   * SimHash near-dup, n-gram Jaccard.
@@ -15,6 +16,12 @@ import graft.Checkpoints
   * tool, used on bounded/blocked subsets only.
   */
 object Dedup {
+
+  /** MinHash signature length and band count: r = 24/3 = 8 rows per band
+    * (see [[minhashNearDupPairs]]). Read by the DuckDB replay too
+    * ([[LlmQueries]] `minhashOracleSql`), so the two cannot drift. */
+  private[llm] val MinhashHashes = 24
+  private[llm] val MinhashBands = 3
 
   /** Exact dedup groups: one row per distinct text with the id to keep
     * (min) and the copy count. Grouping key is the md5 fingerprint, so the
@@ -28,19 +35,18 @@ object Dedup {
     * null band keys and never match). The oracle SQL carries the same
     * `WHERE text IS NOT NULL`.
     */
-  def exactDupGroups(docs: DataFrame, textCol: String = "text",
-                     idCol: String = "doc_id"): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(TextStats.fingerprint(col(textCol)).as("fp"), col(idCol))
+  def exactDupGroups(docs: DataFrame): DataFrame =
+    docs.filter(col(TextCol).isNotNull)
+      .select(TextStats.fingerprint(col(TextCol)).as("fp"), col(IdCol))
       .groupBy("fp")
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("copies"))
+      .agg(min(col(IdCol)).as("keep_id"), count(lit(1)).as("copies"))
 
   /** MinHash+LSH near-duplicate pairs over word sets, the classic banding
     * scheme (Broder minhash + LSH bands, as in MMDS ch.3):
     *
-    *   1. signature: `numHashes` minima of per-seed xxhash64 over the
-    *      token set (pure codegen'd higher-order functions);
-    *   2. banding: signatures split into `bands` groups of r rows; docs
+    *   1. signature: [[MinhashHashes]] minima of per-seed xxhash64 over
+    *      the token set (pure codegen'd higher-order functions);
+    *   2. banding: signatures split into [[MinhashBands]] groups of r rows; docs
     *      sharing any band hash become candidates — a bucket equi-join,
     *      never the N² cross product (the 100 TB property);
     *   3. exact verify: candidates get true Jaccard via array_intersect,
@@ -51,23 +57,20 @@ object Dedup {
     * MinHashLSH.approxSimilarityJoin, which expands per hash table and
     * degenerates to all-pairs × tables on globally-similar corpora.
     *
-    * Default r=8, b=3: P(candidate | j=0.9) ≈ 0.81, ≈1.0 at j=1, while
+    * r=8, b=3: P(candidate | j=0.9) ≈ 0.81, ≈1.0 at j=1, while
     * j=0.6 background pairs land under 5% — tuned against this corpus's
     * unusually high median similarity (31-word vocabulary).
     */
-  def minhashNearDupPairs(docs: DataFrame, minJaccard: Double,
-                          textCol: String = "text", idCol: String = "doc_id",
-                          numHashes: Int = 24, bands: Int = 3): DataFrame = {
+  def minhashNearDupPairs(docs: DataFrame, minJaccard: Double): DataFrame = {
     // materialize the signature index ONCE (round-21, guide §1.2/§2.4):
     // the previous lazy form re-evaluated tokenize+hashset 4× per run
     // (both sides of the bucket self-join + both verify sides) and the
     // 24-hash signature 2× — 8 scans of the corpus in one query plan.
     // At 100 TB this materialization IS the production shape: sign the
     // corpus once, keep the (id, hset) index, join against it.
-    val toks = tokenHashSets(docs, textCol, idCol).localCheckpoint()
-    val buckets = minhashBandBuckets(toks, numHashes, bands).localCheckpoint()
-    val cand = bandCandidates(buckets, buckets, minJaccard, bands,
-      requireIdOrder = true)
+    val toks = tokenHashSets(docs).localCheckpoint()
+    val buckets = minhashBandBuckets(toks).localCheckpoint()
+    val cand = bandCandidates(buckets, buckets, minJaccard, requireIdOrder = true)
     verifyJaccard(cand, toks, minJaccard)
   }
 
@@ -82,13 +85,13 @@ object Dedup {
     * bit-identical (oracle-checked).
     */
   private def bandCandidates(bx: DataFrame, by: DataFrame,
-                             minJaccard: Double, bands: Int,
+                             minJaccard: Double,
                              requireIdOrder: Boolean): DataFrame = {
     val idOrder = if (requireIdOrder) col("x.id") < col("y.id") else lit(true)
     val lengthOk =
       col("y.n") >= lit(minJaccard) * col("x.n") - lit(1e-9) &&
         col("x.n") >= lit(minJaccard) * col("y.n") - lit(1e-9)
-    firstBandJoin(bx, by, bands, idOrder && lengthOk)
+    firstBandJoin(bx, by, MinhashBands, idOrder && lengthOk)
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
   }
 
@@ -139,18 +142,16 @@ object Dedup {
     * signatures, same bands, same exact verify.
     */
   def incrementalNearDupPairs(existing: DataFrame, incoming: DataFrame,
-                              minJaccard: Double, textCol: String = "text",
-                              idCol: String = "doc_id", numHashes: Int = 24,
-                              bands: Int = 3): DataFrame = {
+                              minJaccard: Double): DataFrame = {
     // same materialize-once + pruned-candidate shape as the batch form
     // (round-21); the bipartite join keeps both directions, so no id
     // order — first-band emission and the length filter apply unchanged
-    val te = tokenHashSets(existing, textCol, idCol).localCheckpoint()
-    val ti = tokenHashSets(incoming, textCol, idCol).localCheckpoint()
+    val te = tokenHashSets(existing).localCheckpoint()
+    val ti = tokenHashSets(incoming).localCheckpoint()
     val cand = bandCandidates(
-      minhashBandBuckets(te, numHashes, bands).localCheckpoint(),
-      minhashBandBuckets(ti, numHashes, bands).localCheckpoint(),
-      minJaccard, bands, requireIdOrder = false)
+      minhashBandBuckets(te).localCheckpoint(),
+      minhashBandBuckets(ti).localCheckpoint(),
+      minJaccard, requireIdOrder = false)
     verifyJaccard(cand, te.unionByName(ti), minJaccard)
   }
 
@@ -178,14 +179,12 @@ object Dedup {
     * negatives). Nudging down absorbs the ulp; undershoot merely lengthens
     * the prefix (slower, never wrong).
     */
-  def prefixJaccardPairs(docs: DataFrame, minJaccard: Double, maxId: Long,
-                         textCol: String = "text",
-                         idCol: String = "doc_id"): DataFrame = {
+  def prefixJaccardPairs(docs: DataFrame, minJaccard: Double,
+                         maxId: Long): DataFrame = {
     // materialize the hash-set index once (round-21): the lazy form
     // re-evaluated tokenize+hashset for the df aggregate, the index join,
     // both prefix self-join sides and both verify sides — 6 evaluations
-    val toks = tokenHashSets(docs.filter(col(idCol) < maxId), textCol, idCol)
-      .localCheckpoint()
+    val toks = tokenHashSets(docs.filter(col(IdCol) < maxId)).localCheckpoint()
     // explode_outer + null filter, NOT plain explode: InferFiltersFromGenerate
     // would add a size(hset)>0 pre-filter whose pushdown re-inlines the whole
     // tokenize+hash chain into a per-row Filter under the scan, evaluating it
@@ -219,11 +218,10 @@ object Dedup {
     * array_sort∘array_distinct∘transform / 24× array_min∘transform HOF
     * stacks (bit-identical; HOFs run interpreted as CodegenFallback).
     */
-  private def tokenHashSets(docs: DataFrame, textCol: String,
-                            idCol: String): DataFrame =
-    docs.select(col(idCol).as("id"),
+  private def tokenHashSets(docs: DataFrame): DataFrame =
+    docs.select(col(IdCol).as("id"),
       graft.functions.HashFamily.tokenHashSet(
-        TextStats.tokens(col(textCol))).as("hset"))
+        TextStats.tokens(col(TextCol))).as("hset"))
 
   /** (id, n, band0..band{b-1}, band_idx, band_key) LSH buckets from the
     * minhash signature. Besides the exploded (band_idx, band_key) join
@@ -231,14 +229,12 @@ object Dedup {
     * length filter) and ALL band keys (for [[firstBandJoin]]) — b longs
     * and an int of width per row, paid once in the materialized index.
     */
-  private def minhashBandBuckets(toks: DataFrame, numHashes: Int,
-                                 bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
+  private def minhashBandBuckets(toks: DataFrame): DataFrame = {
+    val r = MinhashHashes / MinhashBands
     val sigs = toks.select(col("id"), size(col("hset")).as("n"),
-      graft.functions.HashFamily.minhashSignature(col("hset"), numHashes)
+      graft.functions.HashFamily.minhashSignature(col("hset"), MinhashHashes)
         .as("sig"))
-    val bandCols = (0 until bands).map { b =>
+    val bandCols = (0 until MinhashBands).map { b =>
       val slice = (b * r until (b + 1) * r).map(i => element_at(col("sig"), i + 1))
       // null text → null signature; xxhash64 skips null children, which
       // would collapse every null-text doc into ONE bucket (silent N²
@@ -247,7 +243,8 @@ object Dedup {
       when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
         .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
     }
-    explodeBands(sigs.select(col("id") +: col("n") +: bandCols: _*), bands)
+    explodeBands(sigs.select(col("id") +: col("n") +: bandCols: _*),
+      MinhashBands)
   }
 
   /** Exact jaccard verify of a candidate pair list against the hash sets.
@@ -279,34 +276,26 @@ object Dedup {
     * guarantee corpus dedup pipelines ship with — transitive clustering
     * needs iterative connected components and buys little at τ≥0.9.
     */
-  def nearDedupKeepFirst(docs: DataFrame, minJaccard: Double,
-                         textCol: String = "text",
-                         idCol: String = "doc_id"): DataFrame = {
-    val drop = minhashNearDupPairs(docs, minJaccard, textCol, idCol)
-      .select(col("id_b").as(idCol)).distinct()
-    docs.join(drop, Seq(idCol), "left_anti")
+  def nearDedupKeepFirst(docs: DataFrame, minJaccard: Double): DataFrame = {
+    val drop = minhashNearDupPairs(docs, minJaccard)
+      .select(col("id_b").as(IdCol)).distinct()
+    docs.join(drop, Seq(IdCol), "left_anti")
   }
 
   /** SimHash near-dup pairs at scale: band the 64-bit signature into
-    * `bands` bit-slices and bucket-join on any shared slice (documents
+    * b bit-slices and bucket-join on any shared slice (documents
     * within hamming distance h share at least one of b slices whenever
     * h < b — pigeonhole), then verify true hamming ≤ maxHamming. Same
     * never-N² shape as the MinHash path.
     */
-  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int,
-                          textCol: String = "text", idCol: String = "doc_id",
-                          bands: Int = -1): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     // recall guarantee is pigeonhole: h differing bits can straddle at most
     // h bands, so a pair within maxHamming shares a band only if
-    // maxHamming < bands. bands <= 0 → auto-derive the smallest divisor of
-    // 64 that preserves full recall; an explicit lossy value is an error.
+    // maxHamming < bands. b is the smallest divisor of 64 above
+    // maxHamming: full recall with the widest slices.
     require(maxHamming < 64, s"maxHamming=$maxHamming: 64-bit signatures " +
       "cannot guarantee recall past hamming 63")
-    val b = if (bands > 0) bands
-            else Seq(1, 2, 4, 8, 16, 32, 64).find(_ > maxHamming).get
-    require(64 % b == 0, "bands must divide 64")
-    require(maxHamming < b,
-      s"maxHamming=$maxHamming needs bands>$maxHamming for full recall")
+    val b = Seq(1, 2, 4, 8, 16, 32, 64).find(_ > maxHamming).get
     val width = 64 / b
     // JVM shifts count mod 64, so (1L << 64) - 1 would be 0 — an all-rows
     // single bucket (silent N²) for bands=1
@@ -317,9 +306,9 @@ object Dedup {
     // projection, re-inlining the tokenize+hash chain into a per-row
     // filter (every document hashed twice per join side)
     val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val sigs = docs.filter(col(textCol).isNotNull).select(col(idCol).as("id"),
+    val sigs = docs.filter(col(TextCol).isNotNull).select(col(IdCol).as("id"),
       bridge.column(KnownNotNull(bridge.expression(
-        TextStats.simhash64(col(textCol))))).as("sig"))
+        TextStats.simhash64(col(TextCol))))).as("sig"))
     val bandCols = (0 until b).map { i =>
       shiftrightunsigned(col("sig"), i * width)
         .bitwiseAND(lit(mask)).as(s"band$i")
@@ -341,12 +330,11 @@ object Dedup {
     * verification form); the scale path joins on signature bands, same as
     * MinHash.
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int, maxId: Long,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sigs = docs.filter(col(idCol) < maxId)
-      .select(col(idCol), TextStats.simhash64(col(textCol)).as("sig"))
-    val a = sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val b = sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b"))
+  def simhashPairs(docs: DataFrame, maxHamming: Int, maxId: Long): DataFrame = {
+    val sigs = docs.filter(col(IdCol) < maxId)
+      .select(col(IdCol), TextStats.simhash64(col(TextCol)).as("sig"))
+    val a = sigs.select(col(IdCol).as("id_a"), col("sig").as("sig_a"))
+    val b = sigs.select(col(IdCol).as("id_b"), col("sig").as("sig_b"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
@@ -369,9 +357,7 @@ object Dedup {
     * signal; a gram shared by half the corpus identifies nothing).
     */
   def winnowingOverlapPairs(docs: DataFrame, minShared: Int,
-                            maxDocFreq: Long = 1000L,
-                            textCol: String = "text",
-                            idCol: String = "doc_id"): DataFrame = {
+                            maxDocFreq: Long): DataFrame = {
     // explode_OUTER, not explode: InferFiltersFromGenerate would add a
     // size(fps) > 0 pre-filter, and predicate pushdown then re-inlines
     // the whole staged fingerprint chain into that per-row predicate —
@@ -381,7 +367,7 @@ object Dedup {
     // materialize the fingerprint postings once (round-21): `indexed` is
     // self-joined and itself contains fp⋈rare, so the lazy form re-ran
     // the staged winnowing chain up to 4× per query
-    val fp = TextStats.winnowedDocs(docs, idCol = idCol, textCol = textCol)
+    val fp = TextStats.winnowedDocs(docs)
       .select(col("id"), explode_outer(col("fps")).as("fp"))
       .filter(col("fp").isNotNull)
       .localCheckpoint()
@@ -461,10 +447,9 @@ object Dedup {
     * scale this runs per LSH bucket or blocking key, not globally.
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int, minJaccard: Double,
-                        maxId: Long, textCol: String = "text",
-                        idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.filter(col(idCol) < maxId)
-      .select(col(idCol).as("id"), TextStats.tokens(col(textCol)).as("toks"))
+                        maxId: Long): DataFrame = {
+    val toks = docs.filter(col(IdCol) < maxId)
+      .select(col(IdCol).as("id"), TextStats.tokens(col(TextCol)).as("toks"))
     val shingled = toks.select(col("id"),
       array_distinct(if (n == 1) col("toks")
                      else TextStats.shingles(col("toks"), n)).as("shingles"))
@@ -511,12 +496,11 @@ object Dedup {
     * then min id), deterministic at any partition layout.
     *
     * `components` is (id, component) from [[connectedComponents]]; `docs`
-    * supplies `idCol` + `qualityCol`. Returns one row per cluster:
+    * supplies `doc_id` + `qualityCol`. Returns one row per cluster:
     * (component, kept_doc, n_members, best_quality).
     */
   def keepBestPerCluster(components: DataFrame, docs: DataFrame,
-                         qualityCol: String,
-                         idCol: String = "doc_id"): DataFrame = {
+                         qualityCol: String): DataFrame = {
     // the output schema fixes best_quality as bigint (the oracle contract);
     // a fractional quality column would TRUNCATE silently (0 for every
     // [0,1) score) while the argmax itself ranked on the true values —
@@ -529,7 +513,7 @@ object Dedup {
         "bigint, so fractional scores would truncate silently — pass an " +
         "integral (micro-unit) quality column")
     components
-      .join(docs.select(col(idCol).as("id"), col(qualityCol).as("__q")), "id")
+      .join(docs.select(col(IdCol).as("id"), col(qualityCol).as("__q")), "id")
       .groupBy(col("component"))
       .agg(count(lit(1)).cast("bigint").as("n_members"),
         max(struct(col("__q").as("q"), (-col("id")).as("nid"))).as("__best"))

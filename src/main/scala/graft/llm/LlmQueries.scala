@@ -22,6 +22,24 @@ import graft.Tables.table
   */
 object LlmQueries {
 
+  // Values a query builder and its DuckDB oracle must agree on live in one
+  // `val` each, interpolated into both (the bpeMerges rule).
+  private val MinJaccard = 0.9
+  private val PairBlock = 200L
+  private val SimhashMaxHamming = 12
+  private val WinnowMinShared = 3
+  private val WinnowMaxDocFreq = 20L
+  private val WinnowBlock = 500L
+  private val MmrCandidates = 20
+  private val MmrK = 10
+  private val MmrLambda = 0.7
+  private val LshMinCosine = 0.3
+  private val KcoreK = 3
+
+  /** The embedding width the DuckDB oracles fix (the Spark side infers it
+    * from the data); TestdataDriftSpec pins the testdata to it. */
+  private[graft] val OracleEmbeddingDim = 64
+
   /** Exact dedup groups (fingerprint → keep-first id + copy count). */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     Dedup.exactDupGroups(table(spark, dir, "documents"))
@@ -32,7 +50,7 @@ object LlmQueries {
     */
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.ngramJaccardPairs(table(spark, dir, "documents"),
-        n = 1, minJaccard = 0.9, maxId = 200L)
+        n = 1, minJaccard = MinJaccard, maxId = PairBlock)
       .orderBy("id_a", "id_b")
 
   /** Prefix-filtered exact Jaccard pairs: the SAME result set as
@@ -43,7 +61,7 @@ object LlmQueries {
     */
   def prefixJaccard(spark: SparkSession, dir: String): DataFrame =
     Dedup.prefixJaccardPairs(table(spark, dir, "documents"),
-        minJaccard = 0.9, maxId = 200L)
+        minJaccard = MinJaccard, maxId = PairBlock)
       .orderBy("id_a", "id_b")
 
   /** MinHash+LSH near-dup pairs — oracle-checked since round 10: the
@@ -51,7 +69,7 @@ object LlmQueries {
     * replays in DuckDB via [[DuckXxh]] ([[minhashOracleSql]]).
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNearDupPairs(table(spark, dir, "documents"), minJaccard = 0.9)
+    Dedup.minhashNearDupPairs(table(spark, dir, "documents"), MinJaccard)
       .orderBy("id_a", "id_b")
 
   /** SimHash near-dup pairs on a bounded block (the all-pairs
@@ -60,7 +78,7 @@ object LlmQueries {
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(table(spark, dir, "documents"),
-        maxHamming = 12, maxId = 200L)
+        maxHamming = SimhashMaxHamming, maxId = PairBlock)
       .orderBy("id_a", "id_b")
 
   /** SimHash near-dup pairs through the SCALE path: band the 64-bit
@@ -73,8 +91,8 @@ object LlmQueries {
     */
   def simhashBanded(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashNearDupPairs(
-        table(spark, dir, "documents").filter(col("doc_id") < 200L),
-        maxHamming = 12)
+        table(spark, dir, "documents").filter(col("doc_id") < PairBlock),
+        maxHamming = SimhashMaxHamming)
       .orderBy("id_a", "id_b")
 
   /** Winnowing local-overlap pairs (oracle-checked since round 10 via
@@ -86,8 +104,8 @@ object LlmQueries {
     */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.winnowingOverlapPairs(
-        table(spark, dir, "documents").filter(col("doc_id") < 500L),
-        minShared = 3, maxDocFreq = 20L)
+        table(spark, dir, "documents").filter(col("doc_id") < WinnowBlock),
+        minShared = WinnowMinShared, maxDocFreq = WinnowMaxDocFreq)
       .orderBy("id_a", "id_b")
 
   /** Brute-force cosine top-10 for query vectors vec_id < 5. */
@@ -137,7 +155,7 @@ object LlmQueries {
   def mmrDiverse(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
     Similarity.mmrSelect(emb, emb.filter(col("vec_id") < 5),
-      m = 20, k = 10, lambda = 0.7)
+      m = MmrCandidates, k = MmrK, lambda = MmrLambda)
   }
 
   /** Exact cosine pairs on a bounded block (oracle-checked baseline for
@@ -153,8 +171,7 @@ object LlmQueries {
     * since round 10 ([[lshCosineOracleSql]]).
     */
   def lshCosinePairs(spark: SparkSession, dir: String): DataFrame =
-    Similarity.lshCosinePairs(table(spark, dir, "embeddings"), minCosine = 0.3,
-        bucketLength = 1.0)
+    Similarity.lshCosinePairs(table(spark, dir, "embeddings"), LshMinCosine)
       .orderBy("id_a", "id_b")
 
   /** Top-k search over int8-quantized vectors (oracle-checked: every
@@ -253,8 +270,7 @@ object LlmQueries {
     val docs = table(spark, dir, "documents")
     val nodes = docs.filter(col("doc_id") < GraphSlice)
       .select(col("doc_id").as("id"))
-    val pairs = Dedup.prefixJaccardPairs(docs, minJaccard = 0.9,
-      maxId = GraphSlice)
+    val pairs = Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = GraphSlice)
     Dedup.connectedComponents(nodes, pairs).orderBy("id")
   }
 
@@ -269,7 +285,7 @@ object LlmQueries {
   def triangleStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     graft.ops.Graph.triangleStats(
-        Dedup.prefixJaccardPairs(docs, minJaccard = 0.9, maxId = 200L))
+        Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = PairBlock))
       .orderBy("node")
   }
 
@@ -282,7 +298,7 @@ object LlmQueries {
   def dupAssortativity(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     graft.ops.Graph.assortativity(
-      Dedup.prefixJaccardPairs(docs, minJaccard = 0.9, maxId = 200L))
+      Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = PairBlock))
   }
 
   /** k-core kernel of the blocked near-dup graph (k=3): the members of
@@ -294,8 +310,8 @@ object LlmQueries {
   def dupKcore(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     graft.ops.Graph.kCore(
-        Dedup.prefixJaccardPairs(docs, minJaccard = 0.9, maxId = 200L),
-        k = 3)
+        Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = PairBlock),
+        k = KcoreK)
       .orderBy("node")
   }
 
@@ -312,8 +328,7 @@ object LlmQueries {
     val docs = table(spark, dir, "documents")
     val nodes = docs.filter(col("doc_id") < GraphSlice)
       .select(col("doc_id").as("id"))
-    val pairs = Dedup.prefixJaccardPairs(docs, minJaccard = 0.9,
-      maxId = GraphSlice)
+    val pairs = Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = GraphSlice)
     Dedup.connectedComponents(nodes, pairs)
       .select(col("id").as("doc_id"), col("component"),
         (conv(substring(md5(col("component").cast("string")), 1, 2), 16, 10)
@@ -332,8 +347,7 @@ object LlmQueries {
     val docs = table(spark, dir, "documents")
     val nodes = docs.filter(col("doc_id") < GraphSlice)
       .select(col("doc_id").as("id"))
-    val pairs = Dedup.prefixJaccardPairs(docs, minJaccard = 0.9,
-      maxId = GraphSlice)
+    val pairs = Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = GraphSlice)
     Dedup.keepBestPerCluster(Dedup.connectedComponents(nodes, pairs),
         docs, "n_chars")
       .orderBy("component")
@@ -344,7 +358,7 @@ object LlmQueries {
     * round 10 — the keepfirst tail of [[minhashOracleSql]]).
     */
   def nearDedupedDocs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.nearDedupKeepFirst(table(spark, dir, "documents"), minJaccard = 0.9)
+    Dedup.nearDedupKeepFirst(table(spark, dir, "documents"), MinJaccard)
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
 
@@ -358,10 +372,9 @@ object LlmQueries {
     */
   def nearDedupExact(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val drop = Dedup.prefixJaccardPairs(docs, minJaccard = 0.9,
-        maxId = 200L)
+    val drop = Dedup.prefixJaccardPairs(docs, MinJaccard, maxId = PairBlock)
       .select(col("id_b").as("doc_id")).distinct()
-    docs.filter(col("doc_id") < 200L)
+    docs.filter(col("doc_id") < PairBlock)
       .join(drop, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
@@ -376,7 +389,7 @@ object LlmQueries {
     */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val drops = Dedup.ngramJaccardPairs(docs, n = 1, minJaccard = 0.9,
+    val drops = Dedup.ngramJaccardPairs(docs, n = 1, minJaccard = MinJaccard,
         maxId = 400L)
       .filter(col("id_a") < 200L && col("id_b") >= 200L)
       .select(col("id_b").as("doc_id")).distinct()
@@ -396,7 +409,7 @@ object LlmQueries {
     Dedup.incrementalNearDupPairs(
         docs.filter(col("doc_id") < 250L),
         docs.filter(col("doc_id") >= 250L),
-        minJaccard = 0.9)
+        MinJaccard)
       .orderBy("id_a", "id_b")
   }
 
@@ -627,7 +640,7 @@ object LlmQueries {
     Multimodal.audioFeatures(spark, table(spark, dir, "documents"))
       .orderBy("doc_id")
 
-  /** k-round CTE unroll of the MMR greedy (λ hardcoded 0.7; the
+  /** k-round CTE unroll of the MMR greedy (λ = [[MmrLambda]]; the
     * diversity weight is written `(1.0 - 0.7)` — an evaluated
     * subtraction, not a folded 0.3 literal — so DuckDB's double matches
     * Spark's `1.0 - lambda` exactly, 0.30000000000000004 and all).
@@ -636,7 +649,8 @@ object LlmQueries {
     * id-asc ties — the same comparisons [[Similarity.mmrSelect]]'s loop
     * performs on identical doubles.
     */
-  private def mmrOracleSql(m: Int, k: Int): String = {
+  private def mmrOracleSql: String = {
+    val (m, k, lam) = (MmrCandidates, MmrK, MmrLambda)
     def cos(av: String, bv: String): String =
       s"""(list_sum(list_transform(range(1, len($av) + 1),
          |      i -> CAST($av[i] AS DOUBLE) * CAST($bv[i] AS DOUBLE))) /
@@ -659,11 +673,11 @@ object LlmQueries {
          |  GROUP BY c.query_id, c.neighbor_id, c.rel_raw, c.rel),
          |sel$i AS MATERIALIZED (
          |  SELECT query_id, neighbor_id, rel,
-         |    CAST(floor((0.7 * rel_raw - (1.0 - 0.7) * mx) * 1000000.0)
+         |    CAST(floor(($lam * rel_raw - (1.0 - $lam) * mx) * 1000000.0)
          |      AS BIGINT) AS mmr_micro FROM (
          |    SELECT query_id, neighbor_id, rel_raw, rel, mx,
          |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY 0.7 * rel_raw - (1.0 - 0.7) * mx DESC,
+         |        ORDER BY $lam * rel_raw - (1.0 - $lam) * mx DESC,
          |          neighbor_id) AS rn
          |    FROM mx$i) WHERE rn = 1),
          |selall$i AS MATERIALIZED (
@@ -695,11 +709,11 @@ object LlmQueries {
        |    ON a.query_id = b.query_id AND a.neighbor_id < b.neighbor_id),
        |sel1 AS MATERIALIZED (
        |  SELECT query_id, neighbor_id, rel,
-       |    CAST(floor((0.7 * rel_raw) * 1000000.0) AS BIGINT) AS mmr_micro
+       |    CAST(floor(($lam * rel_raw) * 1000000.0) AS BIGINT) AS mmr_micro
        |  FROM (
        |    SELECT query_id, neighbor_id, rel_raw, rel,
        |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY 0.7 * rel_raw DESC, neighbor_id) AS rn
+       |        ORDER BY $lam * rel_raw DESC, neighbor_id) AS rn
        |    FROM cand) WHERE rn = 1),
        |selall1 AS MATERIALIZED (SELECT query_id, neighbor_id FROM sel1),
        |$rounds
@@ -718,12 +732,12 @@ object LlmQueries {
     * unroll, the mismatch is a loud hash failure, never a silent wrong
     * answer (Spark's side `require(converged)`s at its own fixpoint).
     */
-  private def kcoreOracleSql(k: Int, rounds: Int): String = {
+  private def kcoreOracleSql(rounds: Int): String = {
     val peel = (1 to rounds).map { i =>
       s"""keep$i AS (
          |  SELECT node FROM (
          |    SELECT u AS node FROM e${i - 1} UNION ALL SELECT v FROM e${i - 1})
-         |  GROUP BY node HAVING count(*) >= $k),
+         |  GROUP BY node HAVING count(*) >= $KcoreK),
          |e$i AS MATERIALIZED (
          |  SELECT u, v FROM e${i - 1}
          |  WHERE u IN (SELECT node FROM keep$i)
@@ -731,12 +745,12 @@ object LlmQueries {
     }.mkString(",\n")
     s"""WITH sh AS (
        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-       |  FROM documents WHERE doc_id < 200),
+       |  FROM documents WHERE doc_id < $PairBlock),
        |p AS (
        |  SELECT a.id AS u, b.id AS v
        |  FROM sh a JOIN sh b ON a.id < b.id
        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-       |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+       |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
        |e0 AS MATERIALIZED (SELECT DISTINCT u, v FROM p),
        |$peel
        |SELECT node, CAST(count(*) AS BIGINT) AS deg_in_core
@@ -755,11 +769,11 @@ object LlmQueries {
     * HUGEINT shifts, NOT `2**b` — DuckDB's `**` returns DOUBLE and
     * silently corrupts bits ≥ 53.
     */
-  private def simhashPairsOracleSql(maxHamming: Int, maxId: Long): String = {
+  private def simhashPairsOracleSql: String = {
     val xxh = DuckXxh.xxh64("t")
     s"""WITH toks AS (
        |  SELECT doc_id, string_split(text, ' ') AS tk
-       |  FROM documents WHERE doc_id < $maxId),
+       |  FROM documents WHERE doc_id < $PairBlock),
        |hs AS MATERIALIZED (
        |  SELECT doc_id, len(tk) AS n,
        |    unnest(list_transform(tk, t -> $xxh)) AS h
@@ -780,7 +794,7 @@ object LlmQueries {
        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |  CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.s, b.s)) <= $maxHamming
+       |WHERE bit_count(xor(a.s, b.s)) <= $SimhashMaxHamming
        |ORDER BY id_a, id_b""".stripMargin
   }
 
@@ -792,34 +806,34 @@ object LlmQueries {
     * inverted-index pair count. Lambda vars are `wi`/`wj` to stay clear
     * of the generator's own short names.
     */
-  private def winnowPairsOracleSql(minShared: Int, maxDocFreq: Long,
-                                   maxId: Long): String = {
-    val shingle = "array_to_string(list_slice(tk, wi+1, wi+3), ' ')"
+  private def winnowPairsOracleSql: String = {
+    val (k, w) = (TextStats.WinnowK, TextStats.WinnowW)
+    val shingle = s"array_to_string(list_slice(tk, wi+1, wi+$k), ' ')"
     val sxxh = DuckXxh.toSigned(DuckXxh.xxh64(shingle))
     s"""WITH toks AS (
        |  SELECT doc_id, string_split(text, ' ') AS tk,
        |    len(string_split(text, ' ')) AS n
-       |  FROM documents WHERE doc_id < $maxId AND text IS NOT NULL),
+       |  FROM documents WHERE doc_id < $WinnowBlock AND text IS NOT NULL),
        |sh AS MATERIALIZED (
        |  SELECT doc_id, list_transform(
-       |    range(0, greatest(n - 3, 0) + 1),
+       |    range(0, greatest(n - $k, 0) + 1),
        |    wi -> $sxxh) AS shl
        |  FROM toks),
        |wm AS MATERIALIZED (
        |  SELECT doc_id, list_transform(
-       |    range(0, greatest(len(shl) - 4, 0) + 1),
-       |    wj -> list_min(list_slice(shl, wj+1, wj+4))) AS wml
+       |    range(0, greatest(len(shl) - $w, 0) + 1),
+       |    wj -> list_min(list_slice(shl, wj+1, wj+$w))) AS wml
        |  FROM sh),
        |fp AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, unnest(wml) AS fp FROM wm),
        |rare AS MATERIALIZED (
-       |  SELECT fp FROM fp GROUP BY fp HAVING count(*) <= $maxDocFreq),
+       |  SELECT fp FROM fp GROUP BY fp HAVING count(*) <= $WinnowMaxDocFreq),
        |idx AS MATERIALIZED (
        |  SELECT doc_id, fp FROM fp WHERE fp IN (SELECT fp FROM rare))
        |SELECT x.doc_id AS id_a, y.doc_id AS id_b,
        |  CAST(count(*) AS BIGINT) AS shared_fp
        |FROM idx x JOIN idx y ON x.fp = y.fp AND x.doc_id < y.doc_id
-       |GROUP BY id_a, id_b HAVING count(*) >= $minShared
+       |GROUP BY id_a, id_b HAVING count(*) >= $WinnowMinShared
        |ORDER BY id_a, id_b""".stripMargin
   }
 
@@ -841,9 +855,8 @@ object LlmQueries {
     * self-join, the bipartite incremental form, and keep-first all share
     * one CTE chain — only the candidate predicate / final shape differ.
     */
-  private def minhashOracleSql(kind: String, minJaccard: Double,
-                               numHashes: Int = 24, bands: Int = 3): String = {
-    require(numHashes % bands == 0)
+  private def minhashOracleSql(kind: String): String = {
+    val (numHashes, bands) = (Dedup.MinhashHashes, Dedup.MinhashBands)
     val r = numHashes / bands
     val sxxh = DuckXxh.toSigned(DuckXxh.xxh64("t"))
     def unsigned(l: Long): BigInt = (BigInt(l) + (BigInt(1) << 64)).mod(BigInt(1) << 64)
@@ -912,7 +925,7 @@ object LlmQueries {
          |    FROM cand c
          |    JOIN keyed a ON a.doc_id = c.id_a
          |    JOIN keyed b ON b.doc_id = c.id_b)
-         |  WHERE jaccard >= $minJaccard)""".stripMargin
+         |  WHERE jaccard >= $MinJaccard)""".stripMargin
     val tail = kind match {
       case "keepfirst" =>
         """SELECT doc_id, lang, source FROM documents
@@ -932,12 +945,13 @@ object LlmQueries {
     * (`list_sum` is bit-identical to the codegen'd DotProduct — the
     * q_knn_cosine precedent); band keys are Spark's chained multi-child
     * `xxhash64` over the floor-bucket longs via [[DuckXxh]]. Embedding
-    * dim is baked at generation time (64) — a testdata drift would fail
-    * loudly at the `len(embedding) = 64` guard, not silently.
+    * dim is baked at generation time ([[OracleEmbeddingDim]]) — a testdata
+    * drift would fail loudly at the `len(embedding) = 64` guard, not
+    * silently, and TestdataDriftSpec names the table first.
     */
-  private def lshCosineOracleSql(minCosine: Double, bucketLength: Double,
-                                 bands: Int = 4, rowsPerBand: Int = 2,
-                                 dim: Int = 64): String = {
+  private def lshCosineOracleSql: String = {
+    val (bands, rowsPerBand) = (Similarity.LshBands, Similarity.LshRowsPerBand)
+    val (dim, bucketLength) = (OracleEmbeddingDim, Similarity.LshBucketLength)
     val rng = new scala.util.Random(42L)
     val projections = Array.fill(bands * rowsPerBand, dim)(rng.nextGaussian())
     def unsigned(l: Long): BigInt =
@@ -989,30 +1003,40 @@ object LlmQueries {
        |      li -> a.u[li] * b.u[li])), 6) AS cosine
        |  FROM cand c JOIN keyed a ON a.id = c.id_a
        |               JOIN keyed b ON b.id = c.id_b)
-       |WHERE cosine >= $minCosine
+       |WHERE cosine >= $LshMinCosine
        |ORDER BY id_a, id_b""".stripMargin
   }
 
+  /** Exact word-set Jaccard pairs on the id block: the oracle of both
+    * q_jaccard_pairs and q_prefix_jaccard. */
+  private def jaccardPairsOracleSql: String =
+    s"""WITH sh AS (
+      |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
+      |  FROM documents WHERE doc_id < $PairBlock)
+      |SELECT a.id AS id_a, b.id AS id_b,
+      |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+      |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
+      |FROM sh a JOIN sh b ON a.id < b.id
+      |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
+      |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard
+      |ORDER BY id_a, id_b""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("q_mmr_diverse", mmrDiverse, Some(mmrOracleSql(20, 10))),
-    QueryDef("q_kcore", dupKcore, Some(kcoreOracleSql(k = 3, rounds = 12)),
+    QueryDef("q_mmr_diverse", mmrDiverse, Some(mmrOracleSql)),
+    QueryDef("q_kcore", dupKcore, Some(kcoreOracleSql(rounds = 12)),
       eager = true),
-    QueryDef("q_lsh_cosine_pairs", lshCosinePairs,
-      Some(lshCosineOracleSql(minCosine = 0.3, bucketLength = 1.0))),
+    QueryDef("q_lsh_cosine_pairs", lshCosinePairs, Some(lshCosineOracleSql)),
     QueryDef("q_minhash_pairs", minhashPairs,
-      Some(minhashOracleSql("pairs", 0.9))),
+      Some(minhashOracleSql("pairs"))),
     QueryDef("q_incremental_minhash", incrementalMinhashPairs,
-      Some(minhashOracleSql("incremental", 0.9))),
+      Some(minhashOracleSql("incremental"))),
     QueryDef("q_near_deduped_docs", nearDedupedDocs,
-      Some(minhashOracleSql("keepfirst", 0.9))),
-    QueryDef("q_winnow_pairs", winnowPairs, Some(winnowPairsOracleSql(
-      minShared = 3, maxDocFreq = 20L, maxId = 500L))),
-    QueryDef("q_simhash_pairs", simhashPairs,
-      Some(simhashPairsOracleSql(maxHamming = 12, maxId = 200L))),
+      Some(minhashOracleSql("keepfirst"))),
+    QueryDef("q_winnow_pairs", winnowPairs, Some(winnowPairsOracleSql)),
+    QueryDef("q_simhash_pairs", simhashPairs, Some(simhashPairsOracleSql)),
     // deliberately the SAME SQL: the banded plan must reproduce the
     // all-pairs result set exactly (pigeonhole makes banding lossless)
-    QueryDef("q_simhash_banded", simhashBanded,
-      Some(simhashPairsOracleSql(maxHamming = 12, maxId = 200L))),
+    QueryDef("q_simhash_banded", simhashBanded, Some(simhashPairsOracleSql)),
     QueryDef("q_dedup_exact", dedupExact, Some(
       """SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS copies
         |FROM documents
@@ -1020,55 +1044,34 @@ object LlmQueries {
         |GROUP BY fp
         |ORDER BY keep_id""".stripMargin)),
 
-    QueryDef("q_jaccard_pairs", jaccardPairs, Some(
-      """WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 200)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.id < b.id
-        |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin)),
-
+    QueryDef("q_jaccard_pairs", jaccardPairs, Some(jaccardPairsOracleSql)),
     // deliberately the SAME SQL as q_jaccard_pairs: the prefix-filtered
     // plan must reproduce the exact result set, not an approximation
-    QueryDef("q_prefix_jaccard", prefixJaccard, Some(
-      """WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 200)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-        |FROM sh a JOIN sh b ON a.id < b.id
-        |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin)),
+    QueryDef("q_prefix_jaccard", prefixJaccard, Some(jaccardPairsOracleSql)),
 
     QueryDef("q_near_dedup_exact", nearDedupExact, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 200),
+        |  FROM documents WHERE doc_id < $PairBlock),
         |p AS (
         |  SELECT b.id AS drop_id
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9)
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard)
         |SELECT doc_id, lang, source
         |FROM documents
-        |WHERE doc_id < 200 AND doc_id NOT IN (SELECT drop_id FROM p)
+        |WHERE doc_id < $PairBlock AND doc_id NOT IN (SELECT drop_id FROM p)
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_incremental_dedup", incrementalDedup, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
         |  FROM documents WHERE doc_id < 400),
         |p AS (
         |  SELECT b.id AS drop_id
         |  FROM sh a JOIN sh b ON a.id < 200 AND b.id >= 200
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9)
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard)
         |SELECT doc_id, lang, source
         |FROM documents
         |WHERE doc_id >= 200 AND doc_id < 400
@@ -1076,14 +1079,14 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_dup_clusters", dupClusters, Some(
-      """WITH RECURSIVE sh AS (
+      s"""WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 1000),
+        |  FROM documents WHERE doc_id < $GraphSlice),
         |p AS (
         |  SELECT a.id AS id_a, b.id AS id_b
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
         |edges AS (
         |  SELECT id_a AS u, id_b AS v FROM p
         |  UNION ALL SELECT id_b, id_a FROM p),
@@ -1096,14 +1099,14 @@ object LlmQueries {
         |ORDER BY id""".stripMargin), eager = true),
 
     QueryDef("q_triangle_stats", triangleStats, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 200),
+        |  FROM documents WHERE doc_id < $PairBlock),
         |p AS (
         |  SELECT a.id AS id_a, b.id AS id_b
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
         |e AS (SELECT DISTINCT least(id_a, id_b) AS u,
         |        greatest(id_a, id_b) AS v FROM p),
         |d AS (
@@ -1125,14 +1128,14 @@ object LlmQueries {
         |ORDER BY node""".stripMargin)),
 
     QueryDef("q_assortativity", dupAssortativity, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 200),
+        |  FROM documents WHERE doc_id < $PairBlock),
         |p AS (
         |  SELECT a.id AS u, b.id AS v
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
         |d AS (
         |  SELECT node, count(*) AS deg
         |  FROM (SELECT u AS node FROM p UNION ALL SELECT v FROM p)
@@ -1146,14 +1149,14 @@ object LlmQueries {
         |FROM sym""".stripMargin)),
 
     QueryDef("q_leakage_safe_split", leakageSafeSplit, Some(
-      """WITH RECURSIVE sh AS (
+      s"""WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 1000),
+        |  FROM documents WHERE doc_id < $GraphSlice),
         |p AS (
         |  SELECT a.id AS id_a, b.id AS id_b
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
         |edges AS (
         |  SELECT id_a AS u, id_b AS v FROM p
         |  UNION ALL SELECT id_b, id_a FROM p),
@@ -1171,14 +1174,14 @@ object LlmQueries {
         |FROM comp ORDER BY doc_id""".stripMargin), eager = true),
 
     QueryDef("q_dedup_keep_best", dedupKeepBest, Some(
-      """WITH RECURSIVE sh AS (
+      s"""WITH RECURSIVE sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 1000),
+        |  FROM documents WHERE doc_id < $GraphSlice),
         |p AS (
         |  SELECT a.id AS id_a, b.id AS id_b
         |  FROM sh a JOIN sh b ON a.id < b.id
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
         |edges AS (
         |  SELECT id_a AS u, id_b AS v FROM p
         |  UNION ALL SELECT id_b, id_a FROM p),
@@ -1411,9 +1414,9 @@ object LlmQueries {
         |ORDER BY e.vec_id""".stripMargin)),
 
     QueryDef("q_label_centroids", labelCentroids, Some(
-      """SELECT label, CAST(r.i AS BIGINT) AS pos,
+      s"""SELECT label, CAST(r.i AS BIGINT) AS pos,
         |  round(sum(CAST(embedding[r.i + 1] AS DOUBLE)) / count(*), 6) AS mean
-        |FROM embeddings CROSS JOIN range(0, 64) r(i)
+        |FROM embeddings CROSS JOIN range(0, $OracleEmbeddingDim) r(i)
         |GROUP BY label, pos
         |ORDER BY label, pos""".stripMargin)),
 
@@ -1687,12 +1690,12 @@ object LlmQueries {
     // every 2nd frame of F = 1 + id%4 frames; per frame f:
     // w = 4 + (id+f)%5, h = 3 + (2id+f)%4, px(i) = (id + 13f + 7i)%256
     QueryDef("q_multimodal_frames", multimodalFrames, Some(
-      """WITH fr AS (
+      s"""WITH fr AS (
         |  SELECT doc_id, r.f AS f,
         |    4 + (doc_id + r.f) % 5 AS w,
         |    3 + (2 * doc_id + r.f) % 4 AS h
         |  FROM documents CROSS JOIN range(0, 4) r(f)
-        |  WHERE r.f < 1 + doc_id % 4 AND r.f % 2 = 0),
+        |  WHERE r.f < 1 + doc_id % 4 AND r.f % ${Multimodal.FrameStride} = 0),
         |px AS (
         |  SELECT doc_id, f, w, h,
         |    list_sum(list_transform(range(0, w * h * 3),

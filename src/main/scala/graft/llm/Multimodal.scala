@@ -24,6 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** Partitions the decode stages spread media rows over. */
+  private val DecodePartitions = 32
+
+  /** [[frameFeatures]] keeps every 2nd frame; its DuckDB oracle
+    * (q_multimodal_frames) reads the same value. */
+  private[llm] val FrameStride = 2
+
   /** 24-bit BMP encoder/decoder (BITMAPFILEHEADER + BITMAPINFOHEADER,
     * uncompressed, bottom-up rows padded to 4 bytes). `pixel(i)` is the
     * raster-order byte stream (3 bytes per pixel); decode reconstructs
@@ -370,11 +377,10 @@ object Multimodal {
     * feature-extract stage of an audio pipeline, same repartition +
     * mapPartitions batch shape as [[decodeFeatures]].
     */
-  def audioFeatures(spark: SparkSession, docs: DataFrame,
-                    partitions: Int = 32): DataFrame = {
+  def audioFeatures(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     withAudioPayload(spark, docs)
-      .repartition(partitions, col("doc_id"))
+      .repartition(DecodePartitions, col("doc_id"))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         // real codec init would happen here, once per partition
@@ -402,7 +408,7 @@ object Multimodal {
                            channels: Long, n_px: Long, mean_px_micro: Long,
                            top_left: Long, resized_mean_micro: Long)
 
-  /** Decoded frame-sample row (every `stride`-th frame of the video). */
+  /** Decoded frame-sample row (every [[FrameStride]]-th frame of the video). */
   case class FrameFeatures(doc_id: Long, frame_idx: Long, width: Long,
                            height: Long, mean_px_micro: Long)
 
@@ -423,11 +429,10 @@ object Multimodal {
     * often clustered by source), then mapPartitions so a real codec
     * binding would be constructed once per partition, not per row.
     */
-  def decodeFeatures(spark: SparkSession, docs: DataFrame,
-                     partitions: Int = 32): DataFrame = {
+  def decodeFeatures(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     withImagePayload(spark, docs)
-      .repartition(partitions, col("doc_id"))
+      .repartition(DecodePartitions, col("doc_id"))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         // real codec init would happen here, once per partition
@@ -464,15 +469,14 @@ object Multimodal {
   }
 
   /** Partition-parallel PPM frame sampling: parse every frame header,
-    * keep every `stride`-th frame, emit its decoded statistics — the
+    * keep every [[FrameStride]]-th frame, emit its decoded statistics — the
     * frame-level feature-extract stage of a video pipeline, same
     * mapPartitions batch shape as [[decodeFeatures]].
     */
-  def frameFeatures(spark: SparkSession, docs: DataFrame,
-                    stride: Int = 2, partitions: Int = 32): DataFrame = {
+  def frameFeatures(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     withVideoPayload(spark, docs)
-      .repartition(partitions, col("doc_id"))
+      .repartition(DecodePartitions, col("doc_id"))
       .as[(Long, Array[Byte])]
       // mapPartitions, not per-row flatMap: the documented batch shape —
       // a real codec binding initializes once per partition here, which
@@ -480,7 +484,7 @@ object Multimodal {
       .mapPartitions { rows =>
         rows.flatMap { case (id, payload) =>
           PpmCodec.decodeAll(payload).zipWithIndex
-            .collect { case ((w, h, px), f) if f % stride == 0 =>
+            .collect { case ((w, h, px), f) if f % FrameStride == 0 =>
               var sum = 0L
               var i = 0
               while (i < px.length) { sum += px(i) & 0xFF; i += 1 }

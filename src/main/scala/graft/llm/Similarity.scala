@@ -18,6 +18,17 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** The embedding table's id and vector columns. */
+  private val IdCol = "vec_id"
+  private val VecCol = "embedding"
+
+  /** [[lshCosinePairs]]' banding: 4 bands of 2 hyperplanes, each
+    * projection floored into buckets of width 1.0. Read by the DuckDB
+    * replay too ([[LlmQueries]] `lshCosineOracleSql`). */
+  private[llm] val LshBands = 4
+  private[llm] val LshRowsPerBand = 2
+  private[llm] val LshBucketLength = 1.0
+
   /** Sequential-fold dot product in double precision — a codegen'd custom
     * Expression ([[graft.functions.DotProduct]]): same fold order as the
     * HOF `aggregate(zip_with(...))` form (bit-identical results), but a
@@ -56,8 +67,8 @@ object Similarity {
     * runs offline on an ~nlist·10³-point sample with the same keyed
     * layout).
     */
-  private def fitLayout(df: DataFrame, parts: Int = 8): DataFrame =
-    df.repartition(parts, col("id")).sortWithinPartitions("id")
+  private def fitLayout(df: DataFrame): DataFrame =
+    df.repartition(8, col("id")).sortWithinPartitions("id")
 
   /** Cosine similarity; zero-norm inputs yield NaN (IEEE 0/0 semantics,
     * matching what DuckDB's double division produces) rather than an
@@ -75,10 +86,9 @@ object Similarity {
     * (label, dim) — scales with labels×dim, never corpus size, and the
     * partial aggregation does the heavy summing map-side.
     */
-  def labelCentroids(corpus: DataFrame, labelCol: String = "label",
-                     vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(labelCol).as("label"),
-        posexplode(col(vecCol)).as(Seq("pos", "x")))
+  def labelCentroids(corpus: DataFrame): DataFrame =
+    corpus.select(col("label").as("label"),
+        posexplode(col(VecCol)).as(Seq("pos", "x")))
       .groupBy("label", "pos")
       .agg(round(sum(col("x").cast("double")) / count(lit(1)), 6).as("mean"))
       .select(col("label"), col("pos").cast("bigint").as("pos"), col("mean"))
@@ -86,11 +96,9 @@ object Similarity {
   /** Brute-force cosine top-k: every query (a small broadcast set) against
     * the full corpus, rank per query. Exact baseline for the ANN variants.
     */
-  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv")))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
     val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
     c.join(q, col("query_id") =!= col("neighbor_id")) // broadcast nested loop
       .select(col("query_id"), col("neighbor_id"),
@@ -117,11 +125,10 @@ object Similarity {
     * break — the q_knn_cosine contract, applied twice.
     */
   def mrlRerank(corpus: DataFrame, queries: DataFrame, dHead: Int, m: Int,
-                k: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+                k: Int): DataFrame = {
+    val q = broadcast(queries.select(col(IdCol).as("query_id"),
+      col(VecCol).as("qv")))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
     val wHead = Window.partitionBy("query_id")
       .orderBy(desc("head_score"), asc("neighbor_id"))
     val cand = c.join(q, col("query_id") =!= col("neighbor_id"))
@@ -171,12 +178,10 @@ object Similarity {
     * (a checkpointed frame plans as Scan ExistingRDD, hiding the window
     * pushdown from the final plan).
     */
-  def mmrCandidates(corpus: DataFrame, queries: DataFrame, m: Int,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+  def mmrCandidates(corpus: DataFrame, queries: DataFrame, m: Int): DataFrame = {
+    val q = broadcast(queries.select(col(IdCol).as("query_id"),
+      col(VecCol).as("qv")))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
     val w = Window.partitionBy("query_id").orderBy(desc("rel"),
       asc("neighbor_id"))
     c.join(q, col("query_id") =!= col("neighbor_id"))
@@ -188,15 +193,14 @@ object Similarity {
   }
 
   def mmrSelect(corpus: DataFrame, queries: DataFrame, m: Int, k: Int,
-                lambda: Double, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+                lambda: Double): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // round-21: `cand` feeds both pair sides AND the singles sentinel —
     // materialize so the corpus-wide scoring pass runs once, not 3×.
     // WindowGroupLimit pushdown on the candidate stage is asserted
     // pre-checkpoint by PlanSpec via [[mmrCandidates]].
-    val cand = mmrCandidates(corpus, queries, m, idCol, vecCol)
+    val cand = mmrCandidates(corpus, queries, m)
       .localCheckpoint()
     val a = cand.select(col("query_id"), col("neighbor_id").as("id_a"),
       col("rel_raw").as("relraw_a"), col("rel").as("rel_a"),
@@ -260,7 +264,7 @@ object Similarity {
         rk += 1
       }
       out.iterator
-    }.toDF("query_id", "rk", idCol, "rel", "mmr_micro")
+    }.toDF("query_id", "rk", IdCol, "rel", "mmr_micro")
       .orderBy("query_id", "rk")
   }
 
@@ -268,14 +272,13 @@ object Similarity {
     * form; the LSH variant below is the scale path). Self-join + HOF
     * cosine stays fully inside whole-stage codegen.
     */
-  def cosinePairsExact(corpus: DataFrame, minCosine: Double, maxId: Long,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
+  def cosinePairsExact(corpus: DataFrame, minCosine: Double,
+                       maxId: Long): DataFrame = {
     // normalize once per vector (N ops), dot per pair (N² ops) — cheaper
     // than per-pair norms, and the exact op order the oracle SQL uses
-    val v = corpus.filter(col(idCol) < maxId)
-      .select(col(idCol).as("id"),
-        unitNormalize(col(vecCol)).as("u"))
+    val v = corpus.filter(col(IdCol) < maxId)
+      .select(col(IdCol).as("id"),
+        unitNormalize(col(VecCol)).as("u"))
       // round-21: both self-join sides read `v` — materialize so the
       // (interpreted-HOF) unit normalization runs once per vector
       .localCheckpoint()
@@ -300,14 +303,12 @@ object Similarity {
     * Same broadcast-queries / corpus-never-shuffled plan as
     * [[knnBruteForce]]; agreement with the float top-k is spec-gated.
     */
-  def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
-               idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"),
-      unitNormalize(col(vecCol)).as("qu")))
+  def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = broadcast(queries.select(col(IdCol).as("query_id"),
+      unitNormalize(col(VecCol)).as("qu")))
     val quant = corpus
-      .select(col(idCol).as("neighbor_id"),
-        unitNormalize(col(vecCol)).as("u"))
+      .select(col(IdCol).as("neighbor_id"),
+        unitNormalize(col(VecCol)).as("u"))
       .withColumn("mn", array_min(col("u")))
       .withColumn("sc", Int8Quant.scale(col("mn"), array_max(col("u"))))
       .withColumn("dq", transform(col("u"), x =>
@@ -367,16 +368,15 @@ object Similarity {
     * centroid fit reuses the IVF economics: a bounded sample, few
     * iterations, seeded.
     */
-  def semanticDedupPairs(corpus: DataFrame, minCosine: Double, maxId: Long,
-                         nlist: Int = 8, nassign: Int = 2,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
+  def semanticDedupPairs(corpus: DataFrame, minCosine: Double,
+                         maxId: Long): DataFrame = {
+    val (nlist, nassign) = (8, 2)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusU = corpus.filter(col(idCol) < maxId)
-      .select(col(idCol).as("id"), unitNormalize(col(vecCol)).as("u"))
+    val corpusU = corpus.filter(col(IdCol) < maxId)
+      .select(col(IdCol).as("id"), unitNormalize(col(VecCol)).as("u"))
       .withColumn("uv", array_to_vector(col("u")))
       // round-21: read by the KMeans fit AND the assignment pass —
       // materialize so unit-normalization runs once. The fit's input
@@ -437,16 +437,15 @@ object Similarity {
     * of N, and the cell assignment is a plain equi-join, so at 100 TB the
     * index is just a partitioned table keyed by cell id.
     */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 16, nprobe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val (nlist, nprobe) = (16, 4)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
 
-    def unit(df: DataFrame): DataFrame = df.select(col(idCol).as("id"),
-      unitNormalize(col(vecCol)).as("u"))
+    def unit(df: DataFrame): DataFrame = df.select(col(IdCol).as("id"),
+      unitNormalize(col(VecCol)).as("u"))
 
     // round-21: read by the KMeans fit AND the post-fit assignment —
     // materialize so unit-normalization runs once (fitLayout re-keys
@@ -502,9 +501,8 @@ object Similarity {
     * codebook fit runs offline on a sample exactly like the IVF build.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-             m: Int = 16, codebookSize: Int = 32, shortlist: Int = 50,
-             sampleN: Int = 2048,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             m: Int = 16): DataFrame = {
+    val (codebookSize, shortlist, sampleN) = (32, 50, 2048)
     val spark = corpus.sparkSession
     import spark.implicits._
 
@@ -517,7 +515,7 @@ object Similarity {
     // rerank all read unit-normalized corpus vectors — materialize them
     // once (per-row deterministic, so the pinned digests hold)
     val corpusU = corpus
-      .select(col(idCol).as("neighbor_id"), unitNormalize(col(vecCol)).as("u"))
+      .select(col(IdCol).as("neighbor_id"), unitNormalize(col(VecCol)).as("u"))
       .localCheckpoint()
     val sample = corpusU
       .orderBy("neighbor_id").limit(sampleN)
@@ -551,7 +549,7 @@ object Similarity {
     // ---- search (ADC): per-query LUT of subspace dot products, m array
     // lookups per candidate, shortlist by approximate score…
     val qU = queries
-      .select(col(idCol).as("query_id"), unitNormalize(col(vecCol)).as("qu"))
+      .select(col(IdCol).as("query_id"), unitNormalize(col(VecCol)).as("qu"))
     val luts = qU.collect() // the QUERY set — bounded input, not corpus data
       .map { r =>
         val qu = r.getSeq[Double](1)
@@ -651,10 +649,9 @@ object Similarity {
     * on a bounded block (oracle-checkable) or [[lshCosinePairs]] at
     * corpus scale.
     */
-  def cosineNearDupKeepFirst(corpus: DataFrame, pairs: DataFrame,
-                             idCol: String = "vec_id"): DataFrame = {
-    val drop = pairs.select(col("id_b").as(idCol)).distinct()
-    corpus.join(drop, Seq(idCol), "left_anti")
+  def cosineNearDupKeepFirst(corpus: DataFrame, pairs: DataFrame): DataFrame = {
+    val drop = pairs.select(col("id_b").as(IdCol)).distinct()
+    corpus.join(drop, Seq(IdCol), "left_anti")
   }
 
   /** LSH-bucketed near-neighbor pairs: seeded random-hyperplane projections
@@ -664,23 +661,18 @@ object Similarity {
     * every false positive. Deterministic: projections come from a fixed
     * seed, all math is codegen'd HOFs — no MLlib model state.
     */
-  def lshCosinePairs(corpus: DataFrame, minCosine: Double,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     dim: Int = -1, bucketLength: Double = 0.3,
-                     bands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
-    // dim <= 0 → infer from the data (one row read), like an MLlib fit();
-    // a wrong explicit dim would null every projection and silently
-    // return zero pairs
-    // empty corpus → no row to infer from; any positive dim works (zero
-    // rows produce zero pairs regardless), so don't throw
-    // filter null sizes (null embeddings) BEFORE take(1): size(null) is a
-    // null slot and getInt would NPE — null vectors are in-model for the
-    // rest of this function (the __ok guard nulls their projections), so
-    // the inference path must tolerate them too
-    val d = if (dim > 0) dim
-            else corpus.select(size(col(vecCol)).as("__d"))
-              .filter(col("__d").isNotNull).take(1).headOption
-              .map(_.getInt(0)).getOrElse(1)
+  def lshCosinePairs(corpus: DataFrame, minCosine: Double): DataFrame = {
+    val (bands, rowsPerBand) = (LshBands, LshRowsPerBand)
+    // the dimension is inferred from the data (one row read), like an
+    // MLlib fit(); an empty corpus has no row to infer from, and any
+    // positive dim works there (zero rows produce zero pairs), so don't
+    // throw. Null sizes (null embeddings) are filtered BEFORE take(1):
+    // size(null) is a null slot and getInt would NPE — null vectors are
+    // in-model for the rest of this function (the __ok guard nulls their
+    // projections), so the inference must tolerate them too
+    val d = corpus.select(size(col(VecCol)).as("__d"))
+      .filter(col("__d").isNotNull).take(1).headOption
+      .map(_.getInt(0)).getOrElse(1)
     val rng = new scala.util.Random(42L)
     val projections = Array.fill(bands * rowsPerBand, d)(rng.nextGaussian())
     // one validity check per VECTOR (not per hyperplane): right dimension
@@ -689,8 +681,8 @@ object Similarity {
     // folds the common prefix of mismatched lengths and reads null slots
     // as garbage, so malformed vectors must null their projections
     // explicitly — null band keys are what keep them out of every bucket.
-    val unit = corpus.select(col(idCol).as("id"),
-        unitNormalize(col(vecCol)).as("u"))
+    val unit = corpus.select(col(IdCol).as("id"),
+        unitNormalize(col(VecCol)).as("u"))
       .withColumn("__ok",
         size(col("u")) === d && !exists(col("u"), x => x.isNull))
       // round-21: `unit` feeds the projection/bucketing chain AND both
@@ -699,14 +691,14 @@ object Similarity {
       .localCheckpoint()
     val bucketCols = projections.zipWithIndex.map { case (g, i) =>
       floor(when(col("__ok"), dotProduct(col("u"), typedlit(g.toSeq)))
-        .otherwise(lit(null)) / bucketLength)
+        .otherwise(lit(null)) / LshBucketLength)
         .cast("long").as(s"b$i")
     }
     val bucketed = unit.select(col("id") +: col("u") +: bucketCols.toSeq: _*)
     val bandCols = (0 until bands).map { b =>
       val slice = (b * rowsPerBand until (b + 1) * rowsPerBand)
         .map(i => col(s"b$i"))
-      // a vector shorter than `dim` zip_withs to null projections;
+      // a vector shorter than `d` zip_withs to null projections;
       // xxhash64 skips null children, which would collapse EVERY row into
       // one bucket (silent N²). Null band keys never equi-join instead.
       when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))

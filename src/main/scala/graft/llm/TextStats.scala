@@ -17,6 +17,16 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
+  /** The documents table's id and text columns, which every frame-level
+    * text operator here and in [[Dedup]] reads. */
+  private[llm] val IdCol = "doc_id"
+  private[llm] val TextCol = "text"
+
+  /** Winnowing shingle length and window ([[winnowedDocs]]), also read by
+    * its DuckDB replay ([[LlmQueries]] `winnowPairsOracleSql`). */
+  private[llm] val WinnowK = 3
+  private[llm] val WinnowW = 4
+
   /** Canonical text normalization for dedup/fingerprint keying: lowercase,
     * drop everything outside [a-z0-9 ], collapse whitespace runs, trim.
     * Normalize-then-fingerprint is what makes exact dedup catch
@@ -238,9 +248,7 @@ object TextStats {
     * explode + one aggregation, linear in corpus grams, no self-join.
     */
   def contaminationMicro(docs: org.apache.spark.sql.DataFrame,
-                         benchMaxId: Long, n: Int = 3,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): org.apache.spark.sql.DataFrame = {
+                         benchMaxId: Long, n: Int = 3): org.apache.spark.sql.DataFrame = {
     // ONE corpus-side evaluation of the (interpreted-HOF) shingle chain:
     // both the per-doc gram total and the hit count come from the same
     // exploded frame via a broadcast LEFT join + one keyed aggregation.
@@ -249,26 +257,26 @@ object TextStats {
     // explode_outer + post-filter, same reason as Dedup.winnowingOverlapPairs:
     // plain explode makes InferFiltersFromGenerate inline the shingle chain
     // into a per-row size() > 0 pre-filter, doubling the tokenize work
-    val grams = docs.select(col(idCol),
-        explode_outer(array_distinct(shingles(tokens(col(textCol)), n))).as("g"))
+    val grams = docs.select(col(IdCol),
+        explode_outer(array_distinct(shingles(tokens(col(TextCol)), n))).as("g"))
       .filter(col("g").isNotNull)
       // round-21: materialized once — the benchmark gram set and the
       // corpus-side aggregation both read `grams`; the bench subtree's
       // pushed-down id filter makes the two subtrees differ, so the lazy
       // form re-ran tokenize+shingle for each (plan-counted 3 scans)
       .localCheckpoint()
-    val bench = grams.filter(col(idCol) < benchMaxId)
+    val bench = grams.filter(col(IdCol) < benchMaxId)
       .select("g").distinct()
       .withColumn("__hit", lit(1))
     val perDoc = grams.join(broadcast(bench), Seq("g"), "left")
-      .groupBy(idCol)
+      .groupBy(IdCol)
       .agg(count(lit(1)).as("t"), count(col("__hit")).as("h"))
     // docs too short for one n-gram explode to nothing: restore them from
     // the id spine with contamination 0 (nothing to leak), guarded
     // against the ANSI divide
-    docs.select(col(idCol))
-      .join(perDoc, Seq(idCol), "left")
-      .select(col(idCol), {
+    docs.select(col(IdCol))
+      .join(perDoc, Seq(IdCol), "left")
+      .select(col(IdCol), {
         val num = lit(1000000L) * coalesce(col("h"), lit(0L))
         when(col("t").isNull || col("t") === 0L, lit(0L))
           .otherwise(longDiv(num, col("t")))
@@ -283,9 +291,9 @@ object TextStats {
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03) per document:
     * hash every k-token shingle, then keep the minimum hash of each
-    * sliding window of `w` shingles — the classic document-fingerprint
-    * selection that guarantees matches on any shared run of ≥ w+k-1
-    * tokens. Returns (id, fps), fps the selected hashes as a sorted
+    * sliding window of w shingles (k = [[WinnowK]], w = [[WinnowW]]) — the
+    * classic document-fingerprint selection that guarantees matches on any shared
+    * run of ≥ w+k-1 tokens. Returns (id, fps), fps the selected hashes as a sorted
     * distinct array. Every intermediate array is staged through its own
     * projection, so lambdas reference a bound ATTRIBUTE (evaluated once
     * per row): nested inside the window lambda, the shingle-hash array
@@ -293,11 +301,9 @@ object TextStats {
     * O(len²) per document. CollapseProject keeps the stages apart
     * (non-cheap producers referenced more than once are never inlined).
     */
-  def winnowedDocs(docs: org.apache.spark.sql.DataFrame,
-                   k: Int = 3, w: Int = 4,
-                   idCol: String = "doc_id",
-                   textCol: String = "text"): org.apache.spark.sql.DataFrame =
-    docs.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
+  def winnowedDocs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (k, w) = (WinnowK, WinnowW)
+    docs.select(col(IdCol).as("id"), tokens(col(TextCol)).as("__toks"))
       .select(col("id"), transform(
         sequence(lit(0), greatest(size(col("__toks")) - k, lit(0))),
         i => xxhash64(concat_ws(" ", slice(col("__toks"), i + 1, lit(k)))))
@@ -305,6 +311,7 @@ object TextStats {
       .select(col("id"), array_sort(array_distinct(transform(
         sequence(lit(0), greatest(size(col("__sh")) - w, lit(0))),
         i => array_min(slice(col("__sh"), i + 1, lit(w)))))).as("fps"))
+  }
 
   /** 64-bit SimHash over the token multiset, using xxhash64 as the
     * per-token hash. For each bit: majority vote across token hashes, i.e.
@@ -343,15 +350,14 @@ object TextStats {
     * ranks between engines; round-6-then-rank makes such ties exact and
     * the (score desc, term asc) order reproducible everywhere.
     */
-  def tfidfTopTerms(docs: org.apache.spark.sql.DataFrame, k: Int,
-                    textCol: String = "text",
-                    idCol: String = "doc_id"): org.apache.spark.sql.DataFrame = {
+  def tfidfTopTerms(docs: org.apache.spark.sql.DataFrame,
+                    k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // explode_outer + null filter: plain explode lets the optimizer infer
     // a size(tokens(text))>0 pre-filter whose pushdown re-tokenizes every
     // row inside a scan Filter (the round-3 trap, plan-gated)
-    val tok = docs.select(col(idCol).as("doc_id"),
-        explode_outer(tokens(col(textCol))).as("term"))
+    val tok = docs.select(col(IdCol).as("doc_id"),
+        explode_outer(tokens(col(TextCol))).as("term"))
       .filter(col("term").isNotNull)
     val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))

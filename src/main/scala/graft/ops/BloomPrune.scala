@@ -32,7 +32,7 @@ object BloomPrune {
     * scalar subquery.
     */
   def keyBloomBytes(dim: DataFrame, keyCol: String,
-                    expectedItems: Long = 1000000L): Array[Byte] = {
+                    expectedItems: Long): Array[Byte] = {
     val agg = new BloomFilterAggregate(
       Bridge.expression(xxhash64(col(keyCol))),
       Literal(expectedItems), Literal(expectedItems * 8))
@@ -58,7 +58,7 @@ object BloomPrune {
     */
   def bloomSemiJoin(fact: DataFrame, dim: DataFrame,
                     factKey: String, dimKey: String,
-                    expectedItems: Long = 1000000L): DataFrame = {
+                    expectedItems: Long): DataFrame = {
     val keyType = dim.schema(dimKey).dataType
     val bloom = keyBloomBytes(dim, dimKey, expectedItems)
     val dimKeys = dim.select(col(dimKey).as("__bloom_dim_key"))

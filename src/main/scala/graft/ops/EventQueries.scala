@@ -195,7 +195,7 @@ object EventQueries {
   /** PageRank over the event-transition graph. Node importance for
     * session modeling — which event types anchor user journeys. Exact
     * small-graph fixed-point values are spec-gated in GraphSpec, and the
-    * full query is oracle-checked against a DuckDB unroll of the same 10
+    * full query is oracle-checked against a DuckDB unroll of the same
     * rounds (see [[pageRankOracleSql]]) — possible because the dangling
     * fix makes each round a deterministic function of (edges, ranks).
     */
@@ -203,8 +203,7 @@ object EventQueries {
     Graph.pageRank(
         eventTransitions(spark, dir)
           .select(col("prev_type").as("src"), col("next_type").as("dst"),
-            col("cnt").as("weight")),
-        iters = 10)
+            col("cnt").as("weight")))
       .select(col("node"), round(col("rank"), 6).as("rank"))
       .orderBy("node")
 
@@ -328,14 +327,15 @@ object EventQueries {
       .orderBy("day")
   }
 
-  /** DuckDB unroll of [[Graph.pageRank]]'s 10 damped rounds over the
+  /** DuckDB unroll of [[Graph.pageRank]]'s damped rounds over the
     * transition graph: one (dangling-mass, contribution, rank) CTE block
     * per round, chained. Arithmetic mirrors the Spark side op-for-op —
     * (1−d)/n + d·(in_mass + dmass/n) in double precision — so the only
     * cross-engine divergence is summation order (~1e-15), absorbed by the
     * round-6 contract.
     */
-  private def pageRankOracleSql(iters: Int = 10, damping: Double = 0.85): String = {
+  private def pageRankOracleSql: String = {
+    val (iters, damping) = (Graph.PageRankIters, Graph.PageRankDamping)
     // every CTE is AS MATERIALIZED: DuckDB inlines plain CTEs, and each
     // round references r{i-1} twice (dangling mass + contributions) — an
     // inlined chain re-evaluates the transition window 2^iters times
@@ -382,7 +382,7 @@ object EventQueries {
   }
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("q_pagerank", transitionPageRank, Some(pageRankOracleSql()),
+    QueryDef("q_pagerank", transitionPageRank, Some(pageRankOracleSql),
       eager = true),
 
     QueryDef("q_new_vs_returning", newVsReturning, Some(

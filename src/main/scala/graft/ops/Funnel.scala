@@ -16,35 +16,35 @@ import org.apache.spark.sql.functions._
   */
 object Funnel {
 
+  /** The event table's user, type and timestamp columns. */
+  private val UserCol = "user_id"
+  private val TypeCol = "event_type"
+  private val TsCol = "ts"
+
   /** Per-user funnel frame: one row per user who completed step 0, with
     * nullable timestamps t0..t(k-1) for each completed step.
     */
-  def userSteps(events: DataFrame, steps: Seq[String],
-                userCol: String = "user_id", typeCol: String = "event_type",
-                tsCol: String = "ts"): DataFrame = {
+  def userSteps(events: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val first = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(userCol))
-      .agg(min(col(tsCol)).as("t0"))
+    val first = events.filter(col(TypeCol) === steps.head)
+      .groupBy(col(UserCol))
+      .agg(min(col(TsCol)).as("t0"))
     steps.zipWithIndex.drop(1).foldLeft(first) { case (acc, (step, k)) =>
-      val next = events.filter(col(typeCol) === step)
-        .select(col(userCol), col(tsCol).as("__ts"))
-        .join(acc.select(col(userCol), col(s"t${k - 1}")), userCol)
+      val next = events.filter(col(TypeCol) === step)
+        .select(col(UserCol), col(TsCol).as("__ts"))
+        .join(acc.select(col(UserCol), col(s"t${k - 1}")), UserCol)
         .filter(col("__ts") > col(s"t${k - 1}"))
-        .groupBy(col(userCol))
+        .groupBy(col(UserCol))
         .agg(min(col("__ts")).as(s"t$k"))
-      acc.join(next, Seq(userCol), "left")
+      acc.join(next, Seq(UserCol), "left")
     }
   }
 
   /** Funnel summary: (step, event_type, n_users) — how many users reached
     * each step in order.
     */
-  def conversionCounts(events: DataFrame, steps: Seq[String],
-                       userCol: String = "user_id",
-                       typeCol: String = "event_type",
-                       tsCol: String = "ts"): DataFrame = {
-    val perUser = userSteps(events, steps, userCol, typeCol, tsCol)
+  def conversionCounts(events: DataFrame, steps: Seq[String]): DataFrame = {
+    val perUser = userSteps(events, steps)
     val counts = perUser.agg(
       count(col("t0")).as("n0"),
       steps.indices.drop(1).map(k => count(col(s"t$k")).as(s"n$k")): _*)

@@ -12,6 +12,11 @@ import graft.Checkpoints
   */
 object Graph {
 
+  /** [[pageRank]]'s round count and damping factor, also read by the
+    * DuckDB unroll of q_pagerank ([[EventQueries]] `pageRankOracleSql`). */
+  private[ops] val PageRankIters = 10
+  private[ops] val PageRankDamping = 0.85
+
   /** Weighted PageRank. `edges` = (src, dst, weight); out-edge
     * probabilities are weight / out-strength. Dangling mass (rank sitting
     * on nodes with no out-edges) is redistributed uniformly each round —
@@ -19,13 +24,14 @@ object Graph {
     * ranks are a true probability distribution (downstream consumers
     * assume it). The per-round cost of the fix is one semi-join scalar
     * aggregate over |V| plus a broadcast of its 1-row result — nothing
-    * node-quadratic. Ranks start uniform at 1/N; each round is
-    * contribution-join + per-node sum + dangling/teleport mix. At corpus
+    * node-quadratic. Ranks start uniform at 1/N; each of the
+    * [[PageRankIters]] rounds is contribution-join + per-node sum +
+    * dangling/teleport mix at damping [[PageRankDamping]]. At corpus
     * scale every stage is keyed by node id; nothing materializes more
     * than |E| + |V| rows.
     */
-  def pageRank(edges: DataFrame, iters: Int = 10,
-               damping: Double = 0.85): DataFrame = Checkpoints.scoped { s =>
+  def pageRank(edges: DataFrame): DataFrame = Checkpoints.scoped { s =>
+    val damping = PageRankDamping
     // materialize the INPUT edge pipeline once: nodes and norm each
     // checkpoint independently, and without this the caller's (often
     // expensive) edge derivation — for q_pagerank, a full per-user
@@ -47,7 +53,7 @@ object Graph {
       .join(norm.select(col("src").as("node")), Seq("node"), "left_anti"))
 
     var ranks = s.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to PageRankIters) {
       val dmass = ranks.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dmass"))
       val contrib = norm.join(ranks, norm("src") === ranks("node"))

@@ -44,7 +44,6 @@ object Pivot {
   /** Wide→long melt. ids stay, each of `valueCols` becomes a
     * (metric, value) row — Spark's `unpivot` has exact melt semantics.
     */
-  def melt(df: DataFrame, ids: Seq[String], valueCols: Seq[String],
-           varName: String = "metric", valName: String = "value"): DataFrame =
-    df.unpivot(ids.map(col).toArray, valueCols.map(col).toArray, varName, valName)
+  def melt(df: DataFrame, ids: Seq[String], valueCols: Seq[String]): DataFrame =
+    df.unpivot(ids.map(col).toArray, valueCols.map(col).toArray, "metric", "value")
 }

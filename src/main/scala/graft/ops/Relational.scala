@@ -25,21 +25,21 @@ object Relational {
     renames.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
 
   /** P5 (crime.py:85-94, the dead `impute`): fill nulls by dtype —
-    * string columns get `strFill`, numeric columns get `numFill`.
+    * string columns get "none", numeric columns get 0.0.
     * Dtype split is driven by the schema, like the reference's
     * `df.dtypes == object` test.
     */
-  def imputeByDtype(df: DataFrame, strFill: String = "none",
-                    numFill: Double = 0.0): DataFrame = {
+  def imputeByDtype(df: DataFrame): DataFrame = {
     val strCols = df.schema.fields.collect {
       case f if f.dataType == StringType => f.name
     }
     val numCols = df.schema.fields.collect {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
     }
-    df.na.fill(strFill, strCols).na.fill(numFill, numCols)
+    df.na.fill("none", strCols).na.fill(0.0, numCols)
   }
 
-  /** P8 (crime.py:100,104): head/preview as a bounded plan, not an action. */
-  def preview(df: DataFrame, n: Int = 5): DataFrame = df.limit(n)
+  /** P8 (crime.py:100,104): head/preview as a bounded plan, not an action:
+    * the first 5 rows, pandas `head()`'s default. */
+  def preview(df: DataFrame): DataFrame = df.limit(5)
 }

@@ -541,8 +541,7 @@ object RelationalQueries {
   /** P8 (crime.py:100,104): bounded preview with a deterministic order. */
   def headLimit(spark: SparkSession, dir: String): DataFrame =
     Relational.preview(
-      table(spark, dir, "events").select("event_id", "event_type").orderBy("event_id"),
-      n = 5)
+      table(spark, dir, "events").select("event_id", "event_type").orderBy("event_id"))
 
   /** Referential-integrity audit across the star schema — the data
     * validation pass a warehouse runs on every load: per foreign key,

@@ -17,9 +17,10 @@ object Stats {
     * co-moment aggregates at once (no MLlib, no vector assembly — the
     * whole pass stays inside whole-stage codegen); the k×k result is
     * driver-side by nature (k = column count, never row count), returned
-    * in long form (col_a, col_b, corr) for relational downstream use.
+    * in long form (col_a, col_b, corr) for relational downstream use,
+    * rounded half-up to 6 places.
     */
-  def corrMatrix(df: DataFrame, cols: Seq[String], roundTo: Int = 6): DataFrame = {
+  def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val upper = for { i <- cols.indices; j <- i + 1 until cols.length }
@@ -67,7 +68,7 @@ object Stats {
       val v = byPair(if (i <= j) (i, j) else (j, i))
       // zero-variance columns correlate as NaN; BigDecimal(NaN) throws
       if (v.isNaN || v.isInfinite) v
-      else BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP)
+      else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
         .toDouble
     })
     rows.toDF("col_a", "col_b", "corr")

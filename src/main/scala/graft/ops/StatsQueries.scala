@@ -113,7 +113,7 @@ object StatsQueries {
         col("value").as("click_value"))
     TimeSeries.asofJoin(errors, clicks, keyCol = "user_id",
         leftTs = "ts", rightTs = "ts", rightValCols = Seq("click_value"),
-        rightTieBreak = Some("tie"))
+        rightTieBreak = "tie")
       .select("event_id", "click_value")
       .orderBy("event_id")
   }

@@ -33,7 +33,9 @@ object TimeSeries {
 
   /** As-of join: for each left row, the single most recent right row with
     * `rightTs <= leftTs` within the same key — the standard time-series
-    * enrichment join (market data, feature stores). Composed as
+    * enrichment join (market data, feature stores). Right rows that
+    * duplicate (key, ts) are told apart by the `rightTieBreak` column: the
+    * highest wins, so the answer never depends on row order. Composed as
     * union → window(last non-null over time order) → filter back to left
     * rows: one shuffle on (key), no custom plan node, and no per-key
     * driver loops — the shape survives any scale.
@@ -41,7 +43,7 @@ object TimeSeries {
   def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
                leftTs: String, rightTs: String,
                rightValCols: Seq[String],
-               rightTieBreak: Option[String] = None): DataFrame = {
+               rightTieBreak: String): DataFrame = {
     // silent-ambiguity guard: a value column shadowing a left column would
     // produce two same-named output columns
     rightValCols.foreach { c =>
@@ -49,11 +51,8 @@ object TimeSeries {
         s"rightValCol '$c' collides with a left column; alias it first")
     }
     // the tiebreak keeps its own orderable type (a cast("long") would be
-    // an ANSI runtime error for string ids). With None, right rows that
-    // duplicate (key, ts) have no deterministic winner — pass a tiebreak
-    // whenever duplicates are possible.
-    val tieType = rightTieBreak.map(c => right.schema(c).dataType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
+    // an ANSI runtime error for string ids)
+    val tieType = right.schema(rightTieBreak).dataType
     val l = left.withColumn("__ts", col(leftTs)).withColumn("__side", lit(0))
       .withColumn("__tie", lit(null).cast(tieType))
     // ALL value columns travel in one struct: the running last() then picks
@@ -63,7 +62,7 @@ object TimeSeries {
     // answer, not a reason to look further back
     val r = right.select(
       col(keyCol), col(rightTs).as("__ts"), lit(1).as("__side"),
-      rightTieBreak.map(col).getOrElse(lit(0L)).as("__tie"),
+      col(rightTieBreak).as("__tie"),
       struct(rightValCols.map(col): _*).as("__r"))
     val lAligned = l.withColumn("__r", lit(null).cast(r.schema("__r").dataType))
     val unioned = lAligned.unionByName(r, allowMissingColumns = true)

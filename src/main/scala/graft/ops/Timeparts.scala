@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object Timeparts {
 
-  /** F1: split a timestamp into its date and time-of-day string parts. */
-  def splitTimestamp(df: DataFrame, tsCol: String,
-                     dateName: String = "date_str",
-                     timeName: String = "time_str"): DataFrame =
-    df.withColumn(dateName, date_format(col(tsCol), "yyyy-MM-dd"))
-      .withColumn(timeName, date_format(col(tsCol), "HH:mm:ss"))
+  /** F1: split a timestamp into its date and time-of-day string parts,
+    * `date_str` and `time_str`. */
+  def splitTimestamp(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("date_str", date_format(col(tsCol), "yyyy-MM-dd"))
+      .withColumn("time_str", date_format(col(tsCol), "HH:mm:ss"))
 
   /** F2: year as BIGINT (matches DuckDB's `year()` return type). */
   def yearOf(c: Column): Column = year(c).cast("bigint")

@@ -22,11 +22,12 @@ object Ingest {
   /** ST2 payload shape: `{rowIdx: {feature: value}}` (stream.py:153-179). */
   val payloadType: MapType = MapType(StringType, MapType(StringType, StringType))
 
-  /** Consumer-side parse: one JSON line (one producer micro-batch) →
+  /** Consumer-side parse: one JSON line in the `value` column (one
+    * producer micro-batch, as the socket source delivers it) →
     * one row per embedded record, with its feature map preserved.
     */
-  def parsePayload(lines: DataFrame, valueCol: String = "value"): DataFrame =
-    lines.select(from_json(col(valueCol), payloadType).as("batch"))
+  def parsePayload(lines: DataFrame): DataFrame =
+    lines.select(from_json(col("value"), payloadType).as("batch"))
       .select(explode(col("batch")).as(Seq("row_idx", "features")))
       .select(col("row_idx").cast("long").as("row_idx"), col("features"))
 
@@ -48,9 +49,10 @@ object Ingest {
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.IntegerType)))
 
-  /** Raw-line variant (stream.py:207-230): one line = JSON string array. */
-  def parseRawLines(lines: DataFrame, valueCol: String = "value"): DataFrame =
-    lines.select(from_json(col(valueCol),
+  /** Raw-line variant (stream.py:207-230): one `value` line = JSON string
+    * array. */
+  def parseRawLines(lines: DataFrame): DataFrame =
+    lines.select(from_json(col("value"),
         org.apache.spark.sql.types.ArrayType(StringType)).as("arr"))
       .select(posexplode(col("arr")).as(Seq("line_idx", "line")))
 

@@ -826,7 +826,7 @@ class AlgorithmicFuzzSpec extends AnyFunSuite {
     val got = graft.ops.TimeSeries.asofJoin(
         leftRows.toDF("id", "k", "lts"),
         rightRows.toDF("k", "rts", "tie", "v"),
-        "k", "lts", "rts", Seq("v"), Some("tie"))
+        "k", "lts", "rts", Seq("v"), "tie")
       .select("id", "v")
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet

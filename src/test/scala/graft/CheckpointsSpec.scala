@@ -60,17 +60,32 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(persistedRdds -- before == Set.empty[Int])
   }
 
+  // Every registry query whose build takes a localCheckpoint: the queries
+  // that hold one through their sink when the whole registry runs at
+  // sf0.01, and the two BPE queries, whose scope frees its rounds before
+  // returning a driver-side result.
+  private val checkpointing = Seq(
+    "q_mmr_diverse", "q_kcore", "q_lsh_cosine_pairs", "q_minhash_pairs",
+    "q_incremental_minhash", "q_near_deduped_docs", "q_winnow_pairs",
+    "q_jaccard_pairs", "q_prefix_jaccard", "q_near_dedup_exact",
+    "q_incremental_dedup", "q_dup_clusters", "q_triangle_stats",
+    "q_assortativity", "q_leakage_safe_split", "q_dedup_keep_best",
+    "q_cosine_pairs", "q_embedding_dedup", "q_contamination",
+    "q_semantic_dedup", "q_ivf_topk", "q_pq_topk", "q_collocations",
+    "q_unigram_logprob", "q_source_overlap", "q_interdoc_dup", "q_dup_spans",
+    "q_bigram_logprob", "q_source_kl", "q_importance_weights", "q_pagerank")
+  private val driverSide = Seq("q_bpe_learn", "q_bpe_vocab")
+
   test("a main's query run frees every checkpoint the query made") {
     val sf = "/root/testdata/sf0.01"
-    Seq("q_jaccard_pairs", "q_kcore", "q_dup_clusters", "q_bpe_vocab").foreach { name =>
+    (checkpointing ++ driverSide).foreach { name =>
       val before = persistedRdds
       val held = SparkEntry.run(spark, name, sf) { df =>
         df.write.format("noop").mode("overwrite").save()
         persistedRdds -- before
       }
       info(s"$name: ${held.size} checkpoints held through the sink")
-      // the bpe scope already freed its rounds: its result is driver-side
-      if (name != "q_bpe_vocab") assert(held.nonEmpty, s"$name held none")
+      if (!driverSide.contains(name)) assert(held.nonEmpty, s"$name held none")
       val left = persistedRdds -- before
       assert(left.isEmpty, s"$name left $left persisted")
     }

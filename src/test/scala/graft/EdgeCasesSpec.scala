@@ -161,7 +161,7 @@ class EdgeCasesSpec extends AnyFunSuite {
       ("u", java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 2L, Option.empty[Double])
     ).toDF("k", "rt", "tie", "v")
     val out = graft.ops.TimeSeries.asofJoin(left, right, "k", "t", "rt",
-      Seq("v"), rightTieBreak = Some("tie")).head()
+      Seq("v"), rightTieBreak = "tie").head()
     // the 10:00 row is the answer; its null must NOT be replaced by 09:00's 5.0
     assert(out.isNullAt(out.fieldIndex("v")))
   }
@@ -169,8 +169,9 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("banded simhash with bands=1 buckets on the full signature") {
     val d = Seq((0L, "a b c"), (1L, "x y z w q")).toDF("doc_id", "text")
     // distinct signatures → distinct single-band keys → no candidates;
-    // before the mask fix every row collapsed into bucket 0
-    assert(Dedup.simhashNearDupPairs(d, maxHamming = 0, bands = 1).count() == 0)
+    // before the mask fix every row collapsed into bucket 0; maxHamming = 0
+    // derives the single band
+    assert(Dedup.simhashNearDupPairs(d, maxHamming = 0).count() == 0)
   }
 
   test("knn over fewer corpus rows than k returns what exists") {

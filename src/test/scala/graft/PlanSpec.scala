@@ -251,7 +251,8 @@ class PlanSpec extends AnyFunSuite {
   test("bloom semi join keeps the pushdown-friendly scan under the probe") {
     val fact = Tables.table(spark, sf, "orders")
     val dim = Tables.table(spark, sf, "customer").limit(100)
-    val p = plan(ops.BloomPrune.bloomSemiJoin(fact, dim, "o_custkey", "c_custkey"))
+    val p = plan(ops.BloomPrune.bloomSemiJoin(fact, dim, "o_custkey", "c_custkey",
+      expectedItems = 1000000L))
     // the probe filter must sit on the scan side (pre-shuffle), and the
     // final exact join stays a real equi-join
     assert(p.contains("might_contain"), s"bloom probe missing:\n${p.take(2000)}")

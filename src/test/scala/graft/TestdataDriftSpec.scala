@@ -111,4 +111,24 @@ class TestdataDriftSpec extends AnyFunSuite {
         s"/root/testdata; adapt Tables and re-pin:\n" +
         drifted.mkString("\n"))
   }
+
+  test("every embeddings vector at every scale factor has the width the " +
+      "DuckDB oracles fix") {
+    // lshCosinePairs infers the width from the data, but its oracle (and
+    // q_label_centroids') bakes it in: a regenerated corpus of another
+    // width would surface as an opaque hash mismatch, so name it here
+    import org.apache.spark.sql.functions.{col, size}
+    val dim = graft.llm.LlmQueries.OracleEmbeddingDim
+    val root = new java.io.File(GraftTestSpark.sfDir).getParent
+    val off = Seq("sf0.001", "sf0.01", "sf0.1").flatMap { sf =>
+      val widths = Tables.table(spark, s"$root/$sf", "embeddings")
+        .filter(col("embedding").isNotNull)
+        .select(size(col("embedding")).as("w")).distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      if (widths == Seq(dim)) None
+      else Some(s"$sf/embeddings: vector widths $widths")
+    }
+    assert(off.isEmpty, s"\nthe oracles fix embedding width $dim, but:\n" +
+      off.mkString("\n"))
+  }
 }

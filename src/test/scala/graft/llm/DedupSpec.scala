@@ -148,7 +148,7 @@ class DedupSpec extends AnyFunSuite {
       (1L, s"seven eight nine ten $passage eleven twelve"),
       (2L, "completely different words about nothing shared here at all"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.winnowingOverlapPairs(docs, minShared = 2)
+    val pairs = Dedup.winnowingOverlapPairs(docs, minShared = 2, maxDocFreq = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the ≥ w+k-1-token shared run guarantees shared window minima for
     // docs 0/1; doc 2 shares no trigram with either
@@ -162,7 +162,7 @@ class DedupSpec extends AnyFunSuite {
       "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
     val capped = Dedup.winnowingOverlapPairs(docs, minShared = 2, maxDocFreq = 3L)
     assert(capped.count() == 0)
-    val uncapped = Dedup.winnowingOverlapPairs(docs, minShared = 2)
+    val uncapped = Dedup.winnowingOverlapPairs(docs, minShared = 2, maxDocFreq = 1000L)
     assert(uncapped.count() == 15) // all C(6,2) pairs share the passage
   }
 

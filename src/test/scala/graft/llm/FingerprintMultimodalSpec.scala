@@ -73,7 +73,7 @@ class FingerprintMultimodalSpec extends AnyFunSuite {
   test("frameFeatures keeps every 2nd frame with per-frame decoded dims") {
     val docs = graft.Tables.table(spark, GraftTestSpark.sfDir, "documents")
       .limit(12)
-    val frames = Multimodal.frameFeatures(spark, docs, stride = 2).collect()
+    val frames = Multimodal.frameFeatures(spark, docs).collect()
     val byDoc = frames.groupBy(_.getAs[Long]("doc_id"))
     assert(byDoc.size == 12)
     byDoc.foreach { case (id, rows) =>

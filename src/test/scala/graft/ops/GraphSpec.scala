@@ -7,9 +7,8 @@ class GraphSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
 
-  private def ranks(edges: Seq[(String, String, Long)],
-                    iters: Int = 10): Map[String, Double] =
-    Graph.pageRank(edges.toDF("src", "dst", "weight"), iters)
+  private def ranks(edges: Seq[(String, String, Long)]): Map[String, Double] =
+    Graph.pageRank(edges.toDF("src", "dst", "weight"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   /** Independent driver-side reference: dense weighted PageRank with

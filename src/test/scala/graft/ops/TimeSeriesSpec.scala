@@ -60,7 +60,7 @@ class TimeSeriesSpec extends AnyFunSuite {
       ("u", ts("2024-01-01 11:00:00"), 102L, 3.0)
     ).toDF("k", "rt", "tie", "v")
     val out = TimeSeries.asofJoin(left, right, "k", "t", "rt", Seq("v"),
-        rightTieBreak = Some("tie"))
+        rightTieBreak = "tie")
       .orderBy("id").collect()
     assert(out(0).getDouble(out(0).fieldIndex("v")) == 2.0) // 10:00 sees 10:00
     assert(out(1).getDouble(out(1).fieldIndex("v")) == 3.0) // 12:00 sees 11:00
@@ -71,7 +71,7 @@ class TimeSeriesSpec extends AnyFunSuite {
     val left = Seq((1L, "a", ts("2024-01-01 10:00:00"))).toDF("id", "k", "t")
     val right = Seq(("b", ts("2024-01-01 09:00:00"), 1L, 9.0))
       .toDF("k", "rt", "tie", "v")
-    val out = TimeSeries.asofJoin(left, right, "k", "t", "rt", Seq("v"))
+    val out = TimeSeries.asofJoin(left, right, "k", "t", "rt", Seq("v"), "tie")
     assert(out.head().isNullAt(out.head().fieldIndex("v")))
   }
 }
