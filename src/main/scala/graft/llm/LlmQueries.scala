@@ -185,7 +185,7 @@ object LlmQueries {
   }
 
   /** Hybrid-search fusion: RRF of the float brute-force top-20 and the
-    * int8 quantized top-20 per query ([[Similarity.rrfFuse]], c=60),
+    * int8 quantized top-20 per query ([[Similarity.rrfFuse]]),
     * fused top-10 — both input rankings are themselves oracle-checked,
     * and the fusion arithmetic is exact-integer-rank based, so the
     * combined query hashes too.
@@ -1315,7 +1315,7 @@ object LlmQueries {
     // the two input rankings are verbatim the q_knn_cosine and
     // q_int8_topk oracle pipelines at k=20; fusion is rank-only
     QueryDef("q_rrf_fusion", rrfFusion, Some(
-      """WITH fq AS (SELECT vec_id AS query_id, embedding AS qv
+      s"""WITH fq AS (SELECT vec_id AS query_id, embedding AS qv
         |            FROM embeddings WHERE vec_id < 5),
         |fc AS (SELECT vec_id AS neighbor_id, embedding AS cv
         |       FROM embeddings),
@@ -1367,8 +1367,8 @@ object LlmQueries {
         |          FROM qranked WHERE rk_b <= 20),
         |fused AS (
         |  SELECT query_id, neighbor_id,
-        |    COALESCE(1.0 / (60.0 + CAST(rk_a AS DOUBLE)), 0.0) +
-        |    COALESCE(1.0 / (60.0 + CAST(rk_b AS DOUBLE)), 0.0) AS rrf
+        |    COALESCE(1.0 / (${Similarity.RrfC} + CAST(rk_a AS DOUBLE)), 0.0) +
+        |    COALESCE(1.0 / (${Similarity.RrfC} + CAST(rk_b AS DOUBLE)), 0.0) AS rrf
         |  FROM flist FULL OUTER JOIN qlist
         |    USING (query_id, neighbor_id)),
         |final AS (

@@ -29,6 +29,9 @@ object Similarity {
   private[llm] val LshRowsPerBand = 2
   private[llm] val LshBucketLength = 1.0
 
+  /** [[rrfFuse]]'s rank offset c, also read by its DuckDB replay. */
+  private[llm] val RrfC = 60.0
+
   /** Sequential-fold dot product in double precision — a codegen'd custom
     * Expression ([[graft.functions.DotProduct]]): same fold order as the
     * HOF `aggregate(zip_with(...))` form (bit-identical results), but a
@@ -87,6 +90,8 @@ object Similarity {
     * partial aggregation does the heavy summing map-side.
     */
   def labelCentroids(corpus: DataFrame): DataFrame =
+    // the no-op alias holds an expression id: without it every later id
+    // shifts and q_source_vocab's Expand order moves in a full Dev plan dump
     corpus.select(col("label").as("label"),
         posexplode(col(VecCol)).as(Seq("pos", "x")))
       .groupBy("label", "pos")
@@ -324,7 +329,7 @@ object Similarity {
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009) of
-    * two per-query rankings: rrf(d) = Σ_lists 1/(c + rank_d), the
+    * two per-query rankings: rrf(d) = Σ_lists 1/([[RrfC]] + rank_d), the
     * score-free way to combine retrieval signals (here: full-precision
     * cosine and the int8 quantized ranking — the hybrid-search shape;
     * at 100 TB the lists fused are whatever recall stages ran). Rank
@@ -335,8 +340,7 @@ object Similarity {
     * fixed a-then-b addition order, floor nano-units output (the mmr
     * lesson: never round a derived double for display).
     */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int,
-              c: Double = 60.0): DataFrame = {
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     val ra = a.select(col("query_id"), col("neighbor_id"),
       col("rk").as("rk_a"))
     val rb = b.select(col("query_id"), col("neighbor_id"),
@@ -345,8 +349,8 @@ object Similarity {
       asc("neighbor_id"))
     ra.join(rb, Seq("query_id", "neighbor_id"), "full_outer")
       .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(c) + col("rk_a").cast("double")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(c) + col("rk_b").cast("double")), lit(0.0)))
+        coalesce(lit(1.0) / (lit(RrfC) + col("rk_a").cast("double")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(RrfC) + col("rk_b").cast("double")), lit(0.0)))
       .withColumn("rk", row_number().over(w).cast("bigint"))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk"), col("neighbor_id"),

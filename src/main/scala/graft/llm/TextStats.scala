@@ -238,7 +238,7 @@ object TextStats {
     qualityScoreMicro(text, nChars).cast("double") / 1000000.0
 
   /** Benchmark decontamination scores: for every document, the fraction
-    * of its distinct word n-grams that also appear in the benchmark set
+    * of its distinct word trigrams that also appear in the benchmark set
     * (docs with id < `benchMaxId`), in exact integer micro-units — the
     * standard "n-gram overlap" contamination check run before training on
     * scraped corpora (a doc scoring high contains eval data).
@@ -248,7 +248,7 @@ object TextStats {
     * explode + one aggregation, linear in corpus grams, no self-join.
     */
   def contaminationMicro(docs: org.apache.spark.sql.DataFrame,
-                         benchMaxId: Long, n: Int = 3): org.apache.spark.sql.DataFrame = {
+                         benchMaxId: Long): org.apache.spark.sql.DataFrame = {
     // ONE corpus-side evaluation of the (interpreted-HOF) shingle chain:
     // both the per-doc gram total and the hit count come from the same
     // exploded frame via a broadcast LEFT join + one keyed aggregation.
@@ -258,7 +258,7 @@ object TextStats {
     // plain explode makes InferFiltersFromGenerate inline the shingle chain
     // into a per-row size() > 0 pre-filter, doubling the tokenize work
     val grams = docs.select(col(IdCol),
-        explode_outer(array_distinct(shingles(tokens(col(TextCol)), n))).as("g"))
+        explode_outer(array_distinct(shingles(tokens(col(TextCol)), 3))).as("g"))
       .filter(col("g").isNotNull)
       // round-21: materialized once — the benchmark gram set and the
       // corpus-side aggregation both read `grams`; the bench subtree's
@@ -271,7 +271,7 @@ object TextStats {
     val perDoc = grams.join(broadcast(bench), Seq("g"), "left")
       .groupBy(IdCol)
       .agg(count(lit(1)).as("t"), count(col("__hit")).as("h"))
-    // docs too short for one n-gram explode to nothing: restore them from
+    // docs too short for one trigram explode to nothing: restore them from
     // the id spine with contamination 0 (nothing to leak), guarded
     // against the ANSI divide
     docs.select(col(IdCol))

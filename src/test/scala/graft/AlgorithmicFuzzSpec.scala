@@ -598,7 +598,7 @@ class AlgorithmicFuzzSpec extends AnyFunSuite {
     }.sorted
     val got = Similarity.rrfFuse(
         listA.toSeq.toDF("query_id", "neighbor_id", "rk"),
-        listB.toSeq.toDF("query_id", "neighbor_id", "rk"), k, c)
+        listB.toSeq.toDF("query_id", "neighbor_id", "rk"), k)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
@@ -805,7 +805,7 @@ class AlgorithmicFuzzSpec extends AnyFunSuite {
       (id, contam)
     }.toSet
     val got = graft.llm.TextStats.contaminationMicro(
-        docs.toDF("doc_id", "text"), benchMaxId, n)
+        docs.toDF("doc_id", "text"), benchMaxId)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want)
   }
