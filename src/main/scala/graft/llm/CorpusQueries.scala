@@ -63,13 +63,7 @@ object CorpusQueries {
     * you must never single-partition sort.
     */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "documents")
-      .select(TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter, NOT plain explode: the inferred
-      // `size(...) > 0` filter re-inlines the split() chain and tokenizes
-      // every row twice (the round-3 winnowing trap)
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    TextStats.tokenRows(table(spark, dir, "documents"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))
       .limit(20)
@@ -89,12 +83,7 @@ object CorpusQueries {
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame = {
     // materialized once (round-21): the LM aggregate and the per-doc
     // score join both read `tok` (differently-pruned, no exchange reuse)
-    val tok = table(spark, dir, "documents")
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: dodge the inferred-filter re-inline
-      // (see heavyHitters)
-      .select(col("doc_id"), explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.tokenRows(table(spark, dir, "documents"), "doc_id")
       .localCheckpoint()
     val freq = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
     val tot = freq.agg(sum(col("cnt")).as("total"))
@@ -107,17 +96,6 @@ object CorpusQueries {
       .orderBy("doc_id")
   }
 
-  /** Inter-document duplication: the fraction of each document's distinct
-    * trigrams that also appear in at least one OTHER document (micro-
-    * units) — the corpus-level "duplicate paragraph fraction" signal that
-    * complements the intra-doc q_repetition_score. Shape at scale:
-    * explode distinct shingles → shingle document-frequency aggregate →
-    * join back → per-doc aggregate. Every stage is shuffle-partitioned by
-    * its key; nothing is corpus-quadratic. explode_outer + null filter
-    * (not plain explode) so InferFiltersFromGenerate can't re-inline the
-    * staged shingle chain as a per-row `size(...) > 0` filter — the
-    * round-3 winnowing trap.
-    */
   /** Cross-source contamination matrix: for every source pair, the count
     * of distinct trigrams present in BOTH, and the overlap coefficient
     * |A∩B| / min(|A|,|B|) in micro-units — the corpus-audit answer to
@@ -138,11 +116,10 @@ object CorpusQueries {
     // gram fan-out both read the distinct (source, gram) set; their
     // pruned subtrees differ, so the lazy form re-ran the whole
     // tokenize+shingle+distinct chain per consumer
-    val sg = table(spark, dir, "documents")
-      .select(col("source"),
-        TextStats.shingles(TextStats.tokens(col("text")), 3).as("__raw"))
-      .select(col("source"), explode_outer(col("__raw")).as("g"))
-      .filter(col("g").isNotNull)
+    val sg = TextStats.explodeNonNull(
+        table(spark, dir, "documents").select(col("source"),
+          TextStats.shingles(TextStats.tokens(col("text")), 3).as("__raw")),
+        Seq(col("source")), col("__raw"), "g")
       .select("source", "g").distinct()
       .localCheckpoint()
     val tot = sg.groupBy("source").agg(count(lit(1)).as("tot"))
@@ -187,11 +164,7 @@ object CorpusQueries {
     * already shuffles by token.
     */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val tok = table(spark, dir, "documents")
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: see heavyHitters
-      .select(col("doc_id"), explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.tokenRows(table(spark, dir, "documents"), "doc_id")
     val perDoc = tok.groupBy("token", "doc_id")
       .agg(count(lit(1)).as("tf"))
     perDoc.groupBy("token")
@@ -228,11 +201,7 @@ object CorpusQueries {
     */
   def bm25Rank(spark: SparkSession, dir: String): DataFrame = {
     val qTerms = Seq("query", "window", "scan")
-    val tok = table(spark, dir, "documents")
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: see heavyHitters
-      .select(col("doc_id"), explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.tokenRows(table(spark, dir, "documents"), "doc_id")
     val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot"))
     val tf = tok.filter(col("token").isin(qTerms: _*))
@@ -255,6 +224,14 @@ object CorpusQueries {
       .limit(20)
   }
 
+  /** Inter-document duplication: the fraction of each document's distinct
+    * trigrams that also appear in at least one OTHER document (micro-
+    * units) — the corpus-level "duplicate paragraph fraction" signal that
+    * complements the intra-doc q_repetition_score. Shape at scale:
+    * explode distinct shingles → shingle document-frequency aggregate →
+    * join back → per-doc aggregate. Every stage is shuffle-partitioned by
+    * its key; nothing is corpus-quadratic.
+    */
   def interDocDupFraction(spark: SparkSession, dir: String): DataFrame = {
     val sh = table(spark, dir, "documents")
       .select(col("doc_id"),
@@ -263,8 +240,7 @@ object CorpusQueries {
     // materialized once (round-21): the df aggregate and the join probe
     // read `ex` through differently-pruned subtrees (no exchange reuse),
     // so the lazy form re-ran tokenize+shingle per consumer
-    val ex = sh.select(col("doc_id"), explode_outer(col("__sh")).as("g"))
-      .filter(col("g").isNotNull)
+    val ex = TextStats.explodeNonNull(sh, Seq(col("doc_id")), col("__sh"), "g")
       .localCheckpoint()
     // Measured adjudication (this corpus, sf0.1): the df>1 semi-join
     // prune that pays off in dup_spans LOSES here — tot needs every
@@ -315,6 +291,8 @@ object CorpusQueries {
     // aggregate AND the dup-occurrence join (differently-pruned subtrees,
     // no exchange reuse) — the lazy form tokenized+shingled the corpus
     // twice per run
+    // the positional form of TextStats.explodeNonNull (see there for why
+    // _outer), written out because it also needs the position column
     val pos = sh.select(col("doc_id"), posexplode_outer(col("__sh")))
       .filter(col("col").isNotNull)
       .select(col("doc_id"), (col("pos") + 1).cast("bigint").as("sp"),
@@ -387,10 +365,8 @@ object CorpusQueries {
     */
   def cooccurPairs(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val dt = docs.select(col("doc_id"),
-        explode_outer(array_distinct(TextStats.tokens(col("text"))))
-          .as("token"))
-      .filter(col("token").isNotNull)
+    val dt = TextStats.explodeNonNull(docs, Seq(col("doc_id")),
+      array_distinct(TextStats.tokens(col("text"))), "token")
     val topf = dt.groupBy("token").agg(count(lit(1)).as("df"))
       .orderBy(desc("df"), asc("token")).limit(50)
     val ft = dt.join(broadcast(topf), Seq("token"))
@@ -590,8 +566,7 @@ object CorpusQueries {
     // lazy form re-ran tokenize+shingle per consumer (3 corpus scans,
     // plan-counted). The (doc, gram) posting list is the standard
     // materialized artifact at corpus scale (the sourceKl call).
-    val ex = bg.select(col("doc_id"), explode_outer(col("__bg")).as("g"))
-      .filter(col("g").isNotNull)
+    val ex = TextStats.explodeNonNull(bg, Seq(col("doc_id")), col("__bg"), "g")
       .localCheckpoint()
     val freq = ex.groupBy("g").agg(count(lit(1)).as("cnt"))
     val prefixTot = freq
@@ -620,13 +595,7 @@ object CorpusQueries {
     * exact distincts expand-and-reaggregate, still keyed by source.
     */
   def sourceVocab(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "documents")
-      .select(col("source"), col("doc_id"),
-        TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: see heavyHitters
-      .select(col("source"), col("doc_id"),
-        explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    TextStats.tokenRows(table(spark, dir, "documents"), "source", "doc_id")
       .groupBy("source")
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_tokens"),
@@ -644,18 +613,14 @@ object CorpusQueries {
     * counts DOWN when start > stop — the round-1 trap).
     */
   def bpePairs(spark: SparkSession, dir: String): DataFrame = {
-    val freq = table(spark, dir, "documents")
-      .select(TextStats.tokens(col("text")).as("__toks"))
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val freq = TextStats.tokenRows(table(spark, dir, "documents"))
       .groupBy("token").agg(count(lit(1)).as("c"))
     val pairsArr = when(length(col("token")) >= 2,
         transform(sequence(lit(1), length(col("token")) - 1),
           i => col("token").substr(i, lit(2))))
       .otherwise(array().cast("array<string>"))
-    freq.select(col("c"), pairsArr.as("__pairs"))
-      .select(col("c"), explode_outer(col("__pairs")).as("pair"))
-      .filter(col("pair").isNotNull)
+    TextStats.explodeNonNull(freq.select(col("c"), pairsArr.as("__pairs")),
+        Seq(col("c")), col("__pairs"), "pair")
       .groupBy("pair").agg(sum(col("c")).as("cnt"))
       // top-k as TakeOrderedAndProject, not a vocabulary-wide rank
       // window — see heavyHitters; the sort order is the rank
@@ -714,10 +679,8 @@ object CorpusQueries {
     */
   private def bpeTrain(s: Checkpoints.Scope, docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
-    val vocab = docs
-      .select(TextStats.tokens(col("text")).as("__toks"))
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull && length(col("token")) >= 2)
+    val vocab = TextStats.tokenRows(docs)
+      .filter(length(col("token")) >= 2)
       .groupBy("token").agg(count(lit(1)).as("c"))
     // seg_0: every code point wrapped <U+0001>·<U+0002> (regex, not split —
     // Spark's split(tok, '') keeps a trailing '' under its limit=-1
@@ -774,10 +737,10 @@ object CorpusQueries {
     val spark = docs.sparkSession
     import spark.implicits._
     val top = Checkpoints.scoped { s =>
-      bpeTrain(s, docs, k)._2
-        .select(col("c"), split(
-          col("seg").substr(lit(2), length(col("seg")) - 2), segE + segS).as("sy"))
-        .select(col("c"), explode(col("sy")).as("sym"))
+      val seg = bpeTrain(s, docs, k)._2
+      TextStats.explodeNonNull(seg.select(col("c"), split(
+          col("seg").substr(lit(2), length(col("seg")) - 2), segE + segS).as("sy")),
+          Seq(col("c")), col("sy"), "sym")
         .groupBy("sym").agg(sum(col("c")).as("cnt"))
         .orderBy(desc("cnt"), asc("sym"))
         .limit(topK).collect()
@@ -892,10 +855,9 @@ object CorpusQueries {
   def collocationsWithMin(spark: SparkSession, dir: String,
                           minCount: Long): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val tok = docs
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("__toks"))
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.explodeNonNull(
+      docs.select(col("doc_id"), TextStats.tokens(col("text")).as("__toks")),
+      Seq.empty, col("__toks"), "token")
     // materialize the unigram aggregate (round-21): it feeds the grand
     // total and TWO w1/w2 joins whose exchange keys differ, so the lazy
     // form re-tokenized the corpus once per consumer. Vocabulary-sized —
@@ -903,11 +865,10 @@ object CorpusQueries {
     val uni = tok.groupBy("token").agg(count(lit(1)).as("uc"))
       .localCheckpoint()
     val uniTot = uni.agg(sum(col("uc")).as("utot"))
-    val bg = docs
-      .select(col("doc_id"),
-        TextStats.shingles(TextStats.tokens(col("text")), 2).as("__bg"))
-      .select(explode_outer(col("__bg")).as("g"))
-      .filter(col("g").isNotNull)
+    val bg = TextStats.explodeNonNull(
+      docs.select(col("doc_id"),
+        TextStats.shingles(TextStats.tokens(col("text")), 2).as("__bg")),
+      Seq.empty, col("__bg"), "g")
     // grand total DERIVES from the keyed aggregate (sum of per-g counts,
     // exact integers, value-identical) so ReuseExchange dedups the
     // corpus-wide tokenize+shingle+explode scan — `bg.agg(count)` has no
@@ -958,10 +919,7 @@ object CorpusQueries {
     * contract).
     */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    val head = table(spark, dir, "documents")
-      .select(TextStats.tokens(col("text")).as("__toks"))
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val head = TextStats.tokenRows(table(spark, dir, "documents"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("token"))
       .limit(zipfHeadK)
@@ -1003,11 +961,7 @@ object CorpusQueries {
     // consumer (4 full scans). Materializing one vocab×sources frame
     // trades bounded executor storage for three corpus passes — the same
     // call Graph.pageRank/Dedup.connectedComponents make.
-    val st = table(spark, dir, "documents")
-      .select(col("source"), TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: see heavyHitters
-      .select(col("source"), explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val st = TextStats.tokenRows(table(spark, dir, "documents"), "source")
       .groupBy("source", "token").agg(count(lit(1)).as("c_st"))
       .localCheckpoint()
     val ct = st.groupBy("token").agg(sum(col("c_st")).as("c_t"))
@@ -1030,10 +984,7 @@ object CorpusQueries {
     * exactly from the xxhash64 register indices (see the oracle entry).
     */
   def sketchCounts(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "documents")
-      .select(col("source"), TextStats.tokens(col("text")).as("__toks"))
-      .select(col("source"), explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    TextStats.tokenRows(table(spark, dir, "documents"), "source")
       .groupBy("source")
       .agg(countDistinct(col("token")).as("exact"),
         approx_count_distinct(col("token"), rsd = 0.02).as("estimate"))
@@ -1061,10 +1012,7 @@ object CorpusQueries {
     */
   def approxHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tok = table(spark, dir, "documents")
-      .select(TextStats.tokens(col("text")).as("__toks"))
-      .select(explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.tokenRows(table(spark, dir, "documents"))
     val cms = tok.stat.countMinSketch(col("token"), eps = cmsEps,
       confidence = cmsConfidence, seed = 42)
     heavyHitters(spark, dir).collect().toSeq

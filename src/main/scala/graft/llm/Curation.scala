@@ -136,14 +136,8 @@ object Curation {
     * no global sort).
     */
   def importanceWeights(spark: SparkSession, dir: String): DataFrame = {
-    val tok = table(spark, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        TextStats.tokens(col("text")).as("__toks"))
-      // explode_outer + null filter: dodge the inferred-filter re-inline
-      // (see CorpusQueries.heavyHitters)
-      .select(col("doc_id"), col("source"),
-        explode_outer(col("__toks")).as("token"))
-      .filter(col("token").isNotNull)
+    val tok = TextStats.tokenRows(table(spark, dir, "documents"),
+      "doc_id", "source")
     // ONE corpus tokenize pass feeds every LM input: checkpoint the
     // (source, token) aggregate (the sourceKl pattern) and derive
     // cfreq / tfreq / t_tot from it. The direct form ran the

@@ -185,13 +185,8 @@ object Dedup {
     // re-evaluated tokenize+hashset for the df aggregate, the index join,
     // both prefix self-join sides and both verify sides — 6 evaluations
     val toks = tokenHashSets(docs.filter(col(IdCol) < maxId)).localCheckpoint()
-    // explode_outer + null filter, NOT plain explode: InferFiltersFromGenerate
-    // would add a size(hset)>0 pre-filter whose pushdown re-inlines the whole
-    // tokenize+hash chain into a per-row Filter under the scan, evaluating it
-    // twice per document (the round-3 trap, plan-gated in PlanSpec)
-    val ex = toks.select(col("id"), size(col("hset")).as("n"),
-      explode_outer(col("hset")).as("h"))
-      .filter(col("h").isNotNull)
+    val ex = TextStats.explodeNonNull(toks,
+      Seq(col("id"), size(col("hset")).as("n")), col("hset"), "h")
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("id").orderBy(col("df").asc, col("h").asc)
     // the prefix index is self-joined below: materialize it so the
@@ -358,18 +353,11 @@ object Dedup {
     */
   def winnowingOverlapPairs(docs: DataFrame, minShared: Int,
                             maxDocFreq: Long): DataFrame = {
-    // explode_OUTER, not explode: InferFiltersFromGenerate would add a
-    // size(fps) > 0 pre-filter, and predicate pushdown then re-inlines
-    // the whole staged fingerprint chain into that per-row predicate —
-    // resurrecting the O(len²) form winnowedDocs exists to avoid
-    // (measured 94 s vs 0.7 s at sf0.1). The outer form infers nothing;
-    // the null rows filter out AFTER the generate, on a bound attribute.
     // materialize the fingerprint postings once (round-21): `indexed` is
     // self-joined and itself contains fp⋈rare, so the lazy form re-ran
     // the staged winnowing chain up to 4× per query
-    val fp = TextStats.winnowedDocs(docs)
-      .select(col("id"), explode_outer(col("fps")).as("fp"))
-      .filter(col("fp").isNotNull)
+    val fp = TextStats.explodeNonNull(TextStats.winnowedDocs(docs),
+        Seq(col("id")), col("fps"), "fp")
       .localCheckpoint()
     val rare = fp.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq)
@@ -453,9 +441,6 @@ object Dedup {
     val shingled = toks.select(col("id"),
       array_distinct(if (n == 1) col("toks")
                      else TextStats.shingles(col("toks"), n)).as("shingles"))
-    // explode_outer + null filter: plain explode would let the optimizer
-    // push a size(shingles)>0 pre-filter that re-inlines the shingle HOF
-    // stack into the scan Filter (see prefixJaccardPairs).
     // Round-21 restructure (guide §1.2/§2.3): each posting row carries its
     // document's shingle count `n_sh`, and the index is MATERIALIZED once
     // — the previous form re-ran tokenize+shingle for both self-join
@@ -465,9 +450,8 @@ object Dedup {
     // nudge as in prefixJaccardPairs) prunes candidate rows BEFORE the
     // pair aggregation — it only drops pairs the exact jaccard filter
     // below would reject, so the output set is identical (oracle-checked).
-    val inv = shingled.select(col("id"), size(col("shingles")).as("n_sh"),
-        explode_outer(col("shingles")).as("sh"))
-      .filter(col("sh").isNotNull)
+    val inv = TextStats.explodeNonNull(shingled,
+        Seq(col("id"), size(col("shingles")).as("n_sh")), col("shingles"), "sh")
       .localCheckpoint()
     val shared = inv.as("x").join(inv.as("y"),
         col("x.sh") === col("y.sh") && col("x.id") < col("y.id") &&

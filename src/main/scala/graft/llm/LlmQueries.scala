@@ -33,7 +33,18 @@ object LlmQueries {
   private val MmrCandidates = 20
   private val MmrK = 10
   private val MmrLambda = 0.7
-  private val LshMinCosine = 0.3
+  private val MinCosine = 0.3
+  private val CosineBlock = 1000L
+  private val QueryVecs = 5
+  private val KnnK = 10
+  private val RrfInputK = 20
+  private val MrlHeadDim = 16
+  private val MrlCandidates = 50
+  private val IngestSplit = 200L
+  private val IngestEnd = 400L
+  private val MinhashIngestSplit = 250L
+  private val ContamBenchBlock = 50L
+  private val SourceTokenBudget = 800L
   private val KcoreK = 3
 
   /** The embedding width the DuckDB oracles fix (the Spark side infers it
@@ -111,7 +122,7 @@ object LlmQueries {
   /** Brute-force cosine top-10 for query vectors vec_id < 5. */
   def knnCosine(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.knnBruteForce(emb, emb.filter(col("vec_id") < 5), k = 10)
+    Similarity.knnBruteForce(emb, emb.filter(col("vec_id") < QueryVecs), k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -140,8 +151,8 @@ object LlmQueries {
     */
   def mrlRerank(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.mrlRerank(emb, emb.filter(col("vec_id") < 5),
-        dHead = 16, m = 50, k = 10)
+    Similarity.mrlRerank(emb, emb.filter(col("vec_id") < QueryVecs),
+        dHead = MrlHeadDim, m = MrlCandidates, k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -154,7 +165,7 @@ object LlmQueries {
     */
   def mmrDiverse(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.mmrSelect(emb, emb.filter(col("vec_id") < 5),
+    Similarity.mmrSelect(emb, emb.filter(col("vec_id") < QueryVecs),
       m = MmrCandidates, k = MmrK, lambda = MmrLambda)
   }
 
@@ -163,7 +174,7 @@ object LlmQueries {
     */
   def cosinePairs(spark: SparkSession, dir: String): DataFrame =
     Similarity.cosinePairsExact(table(spark, dir, "embeddings"),
-        minCosine = 0.3, maxId = 1000L)
+        minCosine = MinCosine, maxId = CosineBlock)
       .orderBy("id_a", "id_b")
 
   /** LSH-bucketed cosine near-neighbor pairs (exact-verified so
@@ -171,7 +182,7 @@ object LlmQueries {
     * since round 10 ([[lshCosineOracleSql]]).
     */
   def lshCosinePairs(spark: SparkSession, dir: String): DataFrame =
-    Similarity.lshCosinePairs(table(spark, dir, "embeddings"), LshMinCosine)
+    Similarity.lshCosinePairs(table(spark, dir, "embeddings"), MinCosine)
       .orderBy("id_a", "id_b")
 
   /** Top-k search over int8-quantized vectors (oracle-checked: every
@@ -180,7 +191,7 @@ object LlmQueries {
     */
   def int8TopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.int8TopK(emb, emb.filter(col("vec_id") < 5), k = 10)
+    Similarity.int8TopK(emb, emb.filter(col("vec_id") < QueryVecs), k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -192,10 +203,10 @@ object LlmQueries {
     */
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    val q = emb.filter(col("vec_id") < 5)
+    val q = emb.filter(col("vec_id") < QueryVecs)
     Similarity.rrfFuse(
-        Similarity.knnBruteForce(emb, q, k = 20),
-        Similarity.int8TopK(emb, q, k = 20), k = 10)
+        Similarity.knnBruteForce(emb, q, k = RrfInputK),
+        Similarity.int8TopK(emb, q, k = RrfInputK), k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -205,7 +216,7 @@ object LlmQueries {
     */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame =
     Similarity.semanticDedupPairs(table(spark, dir, "embeddings"),
-        minCosine = 0.3, maxId = 1000L)
+        minCosine = MinCosine, maxId = CosineBlock)
       .orderBy("id_a", "id_b")
 
   /** Embedding-cosine near-dedup on the bounded block: vectors surviving
@@ -214,9 +225,10 @@ object LlmQueries {
     */
   def embeddingDedup(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    val block = emb.filter(col("vec_id") < 1000L)
+    val block = emb.filter(col("vec_id") < CosineBlock)
     Similarity.cosineNearDupKeepFirst(block,
-        Similarity.cosinePairsExact(emb, minCosine = 0.3, maxId = 1000L))
+        Similarity.cosinePairsExact(emb, minCosine = MinCosine,
+          maxId = CosineBlock))
       .select("vec_id", "label")
       .orderBy("vec_id")
   }
@@ -226,7 +238,7 @@ object LlmQueries {
     */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5), k = 10)
+    Similarity.ivfTopK(emb, emb.filter(col("vec_id") < QueryVecs), k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -390,10 +402,10 @@ object LlmQueries {
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val drops = Dedup.ngramJaccardPairs(docs, n = 1, minJaccard = MinJaccard,
-        maxId = 400L)
-      .filter(col("id_a") < 200L && col("id_b") >= 200L)
+        maxId = IngestEnd)
+      .filter(col("id_a") < IngestSplit && col("id_b") >= IngestSplit)
       .select(col("id_b").as("doc_id")).distinct()
-    docs.filter(col("doc_id") >= 200L && col("doc_id") < 400L)
+    docs.filter(col("doc_id") >= IngestSplit && col("doc_id") < IngestEnd)
       .join(drops, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "source")
       .orderBy("doc_id")
@@ -407,8 +419,8 @@ object LlmQueries {
   def incrementalMinhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     Dedup.incrementalNearDupPairs(
-        docs.filter(col("doc_id") < 250L),
-        docs.filter(col("doc_id") >= 250L),
+        docs.filter(col("doc_id") < MinhashIngestSplit),
+        docs.filter(col("doc_id") >= MinhashIngestSplit),
         MinJaccard)
       .orderBy("id_a", "id_b")
   }
@@ -419,7 +431,7 @@ object LlmQueries {
     */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    Similarity.pqTopK(emb, emb.filter(col("vec_id") < 5), k = 10)
+    Similarity.pqTopK(emb, emb.filter(col("vec_id") < QueryVecs), k = KnnK)
       .orderBy("query_id", "rk")
   }
 
@@ -547,7 +559,7 @@ object LlmQueries {
     */
   def contamination(spark: SparkSession, dir: String): DataFrame =
     TextStats.contaminationMicro(table(spark, dir, "documents"),
-        benchMaxId = 50L)
+        benchMaxId = ContamBenchBlock)
       .orderBy("doc_id")
 
   /** Mixture sampling: per-source token budget, documents admitted in
@@ -562,7 +574,7 @@ object LlmQueries {
           .select(col("doc_id"), col("source"),
             TextStats.tokenCount(col("text")).as("n_tokens")),
         groupCol = "source", orderCol = "doc_id", weightCol = "n_tokens",
-        budget = 800L)
+        budget = SourceTokenBudget)
       .orderBy("doc_id")
 
   /** Water-filling token budget across sources at half the corpus total:
@@ -688,7 +700,7 @@ object LlmQueries {
       s"SELECT query_id, CAST($i AS BIGINT) AS rk, neighbor_id AS vec_id, rel, mmr_micro FROM sel$i"
     }.mkString("\nUNION ALL ")
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-       |           FROM embeddings WHERE vec_id < 5),
+       |           FROM embeddings WHERE vec_id < $QueryVecs),
        |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
        |scored AS (
        |  SELECT query_id, neighbor_id, ${cos("cv", "qv")} AS rel_raw
@@ -908,7 +920,8 @@ object LlmQueries {
          |bandrows AS MATERIALIZED (
          |$bandRows),""".stripMargin
     val candCond = kind match {
-      case "incremental" => "x.doc_id < 250 AND y.doc_id >= 250"
+      case "incremental" =>
+        s"x.doc_id < $MinhashIngestSplit AND y.doc_id >= $MinhashIngestSplit"
       case _             => "x.doc_id < y.doc_id"
     }
     val verified =
@@ -1003,7 +1016,7 @@ object LlmQueries {
        |      li -> a.u[li] * b.u[li])), 6) AS cosine
        |  FROM cand c JOIN keyed a ON a.id = c.id_a
        |               JOIN keyed b ON b.id = c.id_b)
-       |WHERE cosine >= $LshMinCosine
+       |WHERE cosine >= $MinCosine
        |ORDER BY id_a, id_b""".stripMargin
   }
 
@@ -1066,15 +1079,15 @@ object LlmQueries {
     QueryDef("q_incremental_dedup", incrementalDedup, Some(
       s"""WITH sh AS (
         |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < 400),
+        |  FROM documents WHERE doc_id < $IngestEnd),
         |p AS (
         |  SELECT b.id AS drop_id
-        |  FROM sh a JOIN sh b ON a.id < 200 AND b.id >= 200
+        |  FROM sh a JOIN sh b ON a.id < $IngestSplit AND b.id >= $IngestSplit
         |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard)
         |SELECT doc_id, lang, source
         |FROM documents
-        |WHERE doc_id >= 200 AND doc_id < 400
+        |WHERE doc_id >= $IngestSplit AND doc_id < $IngestEnd
         |  AND doc_id NOT IN (SELECT drop_id FROM p)
         |ORDER BY doc_id""".stripMargin)),
 
@@ -1216,10 +1229,10 @@ object LlmQueries {
         |ORDER BY label, rk""".stripMargin), eager = true),
 
     QueryDef("q_mrl_rerank", mrlRerank, Some(
-      """WITH q AS (SELECT vec_id AS query_id, embedding[1:16] AS qh,
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding[1:$MrlHeadDim] AS qh,
         |                  embedding AS qf
-        |           FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS neighbor_id, embedding[1:16] AS ch,
+        |           FROM embeddings WHERE vec_id < $QueryVecs),
+        |c AS (SELECT vec_id AS neighbor_id, embedding[1:$MrlHeadDim] AS ch,
         |             embedding AS cf FROM embeddings),
         |head AS (
         |  SELECT query_id, neighbor_id, cf, qf, round(
@@ -1244,19 +1257,19 @@ object LlmQueries {
         |     sqrt(list_sum(list_transform(range(1, len(qf) + 1),
         |      i -> CAST(qf[i] AS DOUBLE) * CAST(qf[i] AS DOUBLE))))), 6)
         |    AS score
-        |  FROM cand WHERE cand_rk <= 50),
+        |  FROM cand WHERE cand_rk <= $MrlCandidates),
         |ranked AS (
         |  SELECT query_id, neighbor_id, head_score, score,
         |    row_number() OVER (PARTITION BY query_id
         |      ORDER BY score DESC, neighbor_id ASC) AS rk
         |  FROM rer)
         |SELECT query_id, rk, neighbor_id, score, head_score
-        |FROM ranked WHERE rk <= 10
+        |FROM ranked WHERE rk <= $KnnK
         |ORDER BY query_id, rk""".stripMargin)),
 
     QueryDef("q_knn_cosine", knnCosine, Some(
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < 5),
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+        |           FROM embeddings WHERE vec_id < $QueryVecs),
         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
         |scored AS (
         |  SELECT query_id, neighbor_id, round(
@@ -1273,7 +1286,7 @@ object LlmQueries {
         |                       ORDER BY score DESC, neighbor_id ASC) AS rk
         |  FROM scored)
         |SELECT query_id, rk, neighbor_id, score
-        |FROM ranked WHERE rk <= 10
+        |FROM ranked WHERE rk <= $KnnK
         |ORDER BY query_id, rk""".stripMargin)),
 
     // op-order-shared with Similarity.int8TopK: normalize → per-vector
@@ -1281,13 +1294,13 @@ object LlmQueries {
     // sequential-fold dot — identical doubles, so the deterministic
     // approximation hashes exactly
     QueryDef("q_int8_topk", int8TopK, Some(
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
         |      sqrt(list_sum(list_transform(embedding,
         |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
         |  FROM embeddings),
-        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < 5),
+        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < $QueryVecs),
         |c AS (
         |  SELECT vec_id AS neighbor_id, uv,
         |    list_min(uv) AS mn,
@@ -1309,14 +1322,14 @@ object LlmQueries {
         |                       ORDER BY score DESC, neighbor_id ASC) AS rk
         |  FROM scored)
         |SELECT query_id, rk, neighbor_id, score
-        |FROM ranked WHERE rk <= 10
+        |FROM ranked WHERE rk <= $KnnK
         |ORDER BY query_id, rk""".stripMargin)),
 
     // the two input rankings are verbatim the q_knn_cosine and
     // q_int8_topk oracle pipelines at k=20; fusion is rank-only
     QueryDef("q_rrf_fusion", rrfFusion, Some(
       s"""WITH fq AS (SELECT vec_id AS query_id, embedding AS qv
-        |            FROM embeddings WHERE vec_id < 5),
+        |            FROM embeddings WHERE vec_id < $QueryVecs),
         |fc AS (SELECT vec_id AS neighbor_id, embedding AS cv
         |       FROM embeddings),
         |fscored AS (
@@ -1335,14 +1348,14 @@ object LlmQueries {
         |                       ORDER BY score DESC, neighbor_id ASC) AS rk_a
         |  FROM fscored),
         |flist AS (SELECT query_id, neighbor_id, rk_a
-        |          FROM franked WHERE rk_a <= 20),
+        |          FROM franked WHERE rk_a <= $RrfInputK),
         |u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
         |      sqrt(list_sum(list_transform(embedding,
         |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
         |  FROM embeddings),
-        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < 5),
+        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < $QueryVecs),
         |c AS (
         |  SELECT vec_id AS neighbor_id, uv,
         |    list_min(uv) AS mn,
@@ -1364,7 +1377,7 @@ object LlmQueries {
         |                       ORDER BY score DESC, neighbor_id ASC) AS rk_b
         |  FROM qscored),
         |qlist AS (SELECT query_id, neighbor_id, rk_b
-        |          FROM qranked WHERE rk_b <= 20),
+        |          FROM qranked WHERE rk_b <= $RrfInputK),
         |fused AS (
         |  SELECT query_id, neighbor_id,
         |    COALESCE(1.0 / (${Similarity.RrfC} + CAST(rk_a AS DOUBLE)), 0.0) +
@@ -1378,39 +1391,39 @@ object LlmQueries {
         |  FROM fused)
         |SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id,
         |  CAST(floor(rrf * 1000000000.0) AS BIGINT) AS rrf_nano
-        |FROM final WHERE rk <= 10
+        |FROM final WHERE rk <= $KnnK
         |ORDER BY query_id, rk""".stripMargin)),
 
     QueryDef("q_cosine_pairs", cosinePairs, Some(
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
         |      sqrt(list_sum(list_transform(embedding,
         |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings WHERE vec_id < 1000)
+        |  FROM embeddings WHERE vec_id < $CosineBlock)
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  round(list_sum(list_transform(range(1, len(a.uv) + 1),
         |    i -> a.uv[i] * b.uv[i])), 6) AS cosine
         |FROM u a JOIN u b ON a.vec_id < b.vec_id
         |WHERE round(list_sum(list_transform(range(1, len(a.uv) + 1),
-        |    i -> a.uv[i] * b.uv[i])), 6) >= 0.3
+        |    i -> a.uv[i] * b.uv[i])), 6) >= $MinCosine
         |ORDER BY id_a, id_b""".stripMargin)),
 
     QueryDef("q_embedding_dedup", embeddingDedup, Some(
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
         |      sqrt(list_sum(list_transform(embedding,
         |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings WHERE vec_id < 1000),
+        |  FROM embeddings WHERE vec_id < $CosineBlock),
         |p AS (
         |  SELECT b.vec_id AS id_b
         |  FROM u a JOIN u b ON a.vec_id < b.vec_id
         |  WHERE round(list_sum(list_transform(range(1, len(a.uv) + 1),
-        |      i -> a.uv[i] * b.uv[i])), 6) >= 0.3)
+        |      i -> a.uv[i] * b.uv[i])), 6) >= $MinCosine)
         |SELECT e.vec_id, e.label
         |FROM embeddings e
-        |WHERE e.vec_id < 1000 AND e.vec_id NOT IN (SELECT id_b FROM p)
+        |WHERE e.vec_id < $CosineBlock AND e.vec_id NOT IN (SELECT id_b FROM p)
         |ORDER BY e.vec_id""".stripMargin)),
 
     QueryDef("q_label_centroids", labelCentroids, Some(
@@ -1530,7 +1543,7 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_contamination", contamination, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
         |      THEN list_transform(range(1, len(string_split(text, ' ')) - 1),
@@ -1540,7 +1553,7 @@ object LlmQueries {
         |      ELSE CAST([] AS VARCHAR[]) END) AS grams
         |  FROM documents),
         |g AS (SELECT doc_id, unnest(grams) AS g FROM sh),
-        |b AS (SELECT DISTINCT g FROM g WHERE doc_id < 50),
+        |b AS (SELECT DISTINCT g FROM g WHERE doc_id < $ContamBenchBlock),
         |hit AS (
         |  SELECT g.doc_id, count(*) AS h FROM g JOIN b USING (g)
         |  GROUP BY g.doc_id)
@@ -1552,7 +1565,7 @@ object LlmQueries {
         |ORDER BY sh.doc_id""".stripMargin)),
 
     QueryDef("q_token_budget_sample", tokenBudgetSample, Some(
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -1562,7 +1575,7 @@ object LlmQueries {
         |      AS BIGINT) AS cum_weight
         |  FROM c)
         |SELECT doc_id, source, n_tokens, cum_weight
-        |FROM s WHERE cum_weight <= 800
+        |FROM s WHERE cum_weight <= $SourceTokenBudget
         |ORDER BY doc_id""".stripMargin)),
 
     // the oracle uses the textbook sorted-prefix scan; the engine bisects

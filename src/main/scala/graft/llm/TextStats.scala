@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.2.5):
@@ -38,6 +38,33 @@ object TextStats {
 
   /** Whitespace tokenization (documents are single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
+
+  /** One row per element of array `arr` in each row of `df`: the `keep`
+    * columns plus the element as column `as`. A null or empty array, and
+    * a null element, give no row. Every explode of a staged array column
+    * goes through here (`dupSpans`' positional explode is the one written
+    * out); a plain `explode` is left only over an inline array expression
+    * or an aggregate's output, where no inferred filter reaches the scan.
+    *
+    * Why not plain `explode`: for it, InferFiltersFromGenerate adds a
+    * `size(arr) > 0` filter, and predicate pushdown carries it under the
+    * projection that staged `arr` — re-inlining the whole producing chain
+    * (tokenize, shingle, hash) as a per-row predicate at the scan, so
+    * every document is processed twice (winnowing: 94 s vs 0.7 s at
+    * sf0.1). `explode_outer` infers no filter, and its null rows drop
+    * after the generate, on the bound output attribute. PlanSpec gates
+    * the registry's batch queries against the inferred filter.
+    */
+  def explodeNonNull(df: DataFrame, keep: Seq[Column], arr: Column,
+                     as: String): DataFrame =
+    df.select(keep :+ explode_outer(arr).as(as): _*).filter(col(as).isNotNull)
+
+  /** [[explodeNonNull]] over the documents' tokens: one row per token
+    * occurrence, the `keep` columns plus the token as `token`. */
+  def tokenRows(docs: DataFrame, keep: String*): DataFrame =
+    explodeNonNull(
+      docs.select(keep.map(col) :+ tokens(col(TextCol)).as("__toks"): _*),
+      keep.map(col), col("__toks"), "token")
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("bigint")
 
@@ -254,12 +281,8 @@ object TextStats {
     // exploded frame via a broadcast LEFT join + one keyed aggregation.
     // Splitting totals and hits into separate branches re-evaluates the
     // shingling per branch — measured 3× slower at sf0.1.
-    // explode_outer + post-filter, same reason as Dedup.winnowingOverlapPairs:
-    // plain explode makes InferFiltersFromGenerate inline the shingle chain
-    // into a per-row size() > 0 pre-filter, doubling the tokenize work
-    val grams = docs.select(col(IdCol),
-        explode_outer(array_distinct(shingles(tokens(col(TextCol)), 3))).as("g"))
-      .filter(col("g").isNotNull)
+    val grams = explodeNonNull(docs, Seq(col(IdCol)),
+        array_distinct(shingles(tokens(col(TextCol)), 3)), "g")
       // round-21: materialized once — the benchmark gram set and the
       // corpus-side aggregation both read `grams`; the bench subtree's
       // pushed-down id filter makes the two subtrees differ, so the lazy
@@ -353,12 +376,8 @@ object TextStats {
   def tfidfTopTerms(docs: org.apache.spark.sql.DataFrame,
                     k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // explode_outer + null filter: plain explode lets the optimizer infer
-    // a size(tokens(text))>0 pre-filter whose pushdown re-tokenizes every
-    // row inside a scan Filter (the round-3 trap, plan-gated)
-    val tok = docs.select(col(IdCol).as("doc_id"),
-        explode_outer(tokens(col(TextCol))).as("term"))
-      .filter(col("term").isNotNull)
+    val tok = explodeNonNull(docs, Seq(col(IdCol).as("doc_id")),
+      tokens(col(TextCol)), "term")
     val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))

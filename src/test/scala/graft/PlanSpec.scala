@@ -1,20 +1,33 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GreaterThan, Literal, Size}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan assertions: the properties that decide 100 TB behavior —
   * pushdown reaching the scan, column pruning, broadcast vs shuffle join
   * selection, top-k fusion, codegen coverage — pinned as tests so a
   * refactor that silently defeats Catalyst fails CI, not the cluster.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = GraftTestSpark.spark
   val sf = GraftTestSpark.sfDir
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The `size(<non-attribute>) > 0` conjuncts of `p`'s Filter conditions,
+    * through adaptive stages and subqueries. */
+  private def inferredExplodeFilters(p: SparkPlan): Seq[Expression] =
+    collectWithSubqueries(p) { case f: FilterExec => f.condition }
+      .flatMap(_.collect {
+        case g @ GreaterThan(Size(a, _), Literal(0, _)) if !a.isInstanceOf[Attribute] => g
+      })
 
   test("filters are pushed into the parquet scan") {
     val df = Tables.table(spark, sf, "orders")
@@ -118,37 +131,35 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("winnowing/contamination explodes don't regress to inferred pre-filters") {
-    // InferFiltersFromGenerate + predicate pushdown can inline a staged
-    // HOF chain into a per-row size(...) > 0 filter under the Generate —
-    // re-deriving the whole fingerprint array per row (measured 94 s vs
-    // 0.7 s at sf0.1). explode_outer + attribute null-filter avoids it;
-    // this pins that no filter carries the re-inlined array pipeline.
-    for (df <- Seq(
-        llm.LlmQueries.winnowPairs(spark, sf),
-        llm.LlmQueries.contamination(spark, sf))) {
-      val p = plan(df)
-      assert(!p.contains("size(array_sort") && !p.contains("size(array_distinct"),
-        s"inferred generate filter re-inlined the array chain:\n${p.take(3000)}")
+  test("no registry query plans a filter inferred from a plain explode") {
+    // InferFiltersFromGenerate gives a plain `explode` a size(arr) > 0
+    // filter; pushed under the projection that staged `arr`, it re-runs
+    // the array's whole producing chain per row (TextStats.explodeNonNull).
+    // Its signature is size(<non-attribute>) > 0 in a Filter. Checked in
+    // every plan a build executes (checkpoints, driver-side collects) and
+    // in the plan it returns. The eager queries are the batch-only ones
+    // whose builders explode through TextStats.
+    val eagerBatch = Set("q_bpe_learn", "q_bpe_vocab",
+      "q_approx_heavy_hitters", "q_source_kl", "q_importance_weights")
+    val eager = SparkEntry.registry.filter(_.eager).map(_.name).toSet
+    assert(eagerBatch.subsetOf(eager), eagerBatch -- eager)
+    val gated = SparkEntry.registry.filter(d => !d.eager || eagerBatch(d.name))
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        built.add(qe.executedPlan): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-  }
-
-  test("token explodes never re-inline split() into an inferred filter") {
-    // same trap, token-family queries: a Filter containing split( means
-    // InferFiltersFromGenerate re-derived the tokenization per row and
-    // every document is split twice
-    for (df <- Seq(
-        llm.CorpusQueries.heavyHitters(spark, sf),
-        llm.CorpusQueries.unigramLogprob(spark, sf),
-        llm.CorpusQueries.sourceVocab(spark, sf),
-        llm.CorpusQueries.bigramLogprob(spark, sf),
-        llm.CorpusQueries.interDocDupFraction(spark, sf),
-        llm.CorpusQueries.dupSpans(spark, sf),
-        llm.LlmQueries.simhashBanded(spark, sf))) {
-      val p = plan(df)
-      val bad = p.linesIterator.exists(l => l.contains("Filter") && l.contains("split("))
-      assert(!bad, s"split() re-inlined into a filter:\n${p.take(3000)}")
-    }
+    spark.listenerManager.register(listener)
+    val bad = try gated.flatMap { d =>
+      built.clear()
+      val returned = SparkEntry.run(spark, d.name, sf)(_.queryExecution.executedPlan)
+      org.apache.spark.GraftTestAccess.drain(spark.sparkContext)
+      (returned +: built.asScala.toSeq).flatMap(inferredExplodeFilters)
+        .map(c => s"${d.name}: $c")
+    } finally spark.listenerManager.unregister(listener)
+    info(s"${gated.size} queries gated")
+    assert(bad.isEmpty, s"inferred explode filters:\n${bad.mkString("\n")}")
   }
 
   test("hash-rank sampling keeps the WindowGroupLimit pushdown") {
@@ -375,7 +386,6 @@ class PlanSpec extends AnyFunSuite {
         .filter(col("event_type") === "click").count()
       assert(df.count() == clickRows)
     } finally {
-      import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }

@@ -30,6 +30,8 @@ with executable evidence instead of a prose note:
   D7  digestcmp: an --only of only empty tokens (e.g. --only ',') is
       refused, not silently degraded to a full-compare no-op filter.
                                               (ADVICE r20, fixed r20)
+  L4  localcheck: 0, 1 or 3 arguments -> usage line, exit 2 (was: an
+      IndexError traceback for too few, a silently ignored 3rd).
 
 Usage: python3 tools/toolcheck.py    (exit 0 iff all fixtures pass)
 """
@@ -169,6 +171,13 @@ def main():
         r = run("digestcmp.py", vd, "--pinned", pinfile, "--only", ",")
         ok &= check("D7 all-empty --only refused",
                     r.returncode == 2 and "no query names" in r.stderr)
+
+    # L4: any argument count but two is refused with the usage line.
+    for argv in ([], ["a"], ["a", "b", "c"]):
+        r = run("localcheck.py", *argv)
+        ok &= check(f"L4 localcheck with {len(argv)} args refused",
+                    r.returncode == 2 and
+                    "usage: localcheck.py <sfDir> <outDir>" in r.stderr)
 
     print("== toolcheck", "OK" if ok else "FAILED", "==")
     return 0 if ok else 1
