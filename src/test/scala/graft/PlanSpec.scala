@@ -131,6 +131,40 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+
+  test("winnowing/contamination explodes don't regress to inferred pre-filters") {
+    // InferFiltersFromGenerate + predicate pushdown can inline a staged
+    // HOF chain into a per-row size(...) > 0 filter under the Generate —
+    // re-deriving the whole fingerprint array per row (measured 94 s vs
+    // 0.7 s at sf0.1). explode_outer + attribute null-filter avoids it;
+    // this pins that no filter carries the re-inlined array pipeline.
+    for (df <- Seq(
+        llm.LlmQueries.winnowPairs(spark, sf),
+        llm.LlmQueries.contamination(spark, sf))) {
+      val p = plan(df)
+      assert(!p.contains("size(array_sort") && !p.contains("size(array_distinct"),
+        s"inferred generate filter re-inlined the array chain:\n${p.take(3000)}")
+    }
+  }
+
+  test("token explodes never re-inline split() into an inferred filter") {
+    // same trap, token-family queries: a Filter containing split( means
+    // InferFiltersFromGenerate re-derived the tokenization per row and
+    // every document is split twice
+    for (df <- Seq(
+        llm.CorpusQueries.heavyHitters(spark, sf),
+        llm.CorpusQueries.unigramLogprob(spark, sf),
+        llm.CorpusQueries.sourceVocab(spark, sf),
+        llm.CorpusQueries.bigramLogprob(spark, sf),
+        llm.CorpusQueries.interDocDupFraction(spark, sf),
+        llm.CorpusQueries.dupSpans(spark, sf),
+        llm.LlmQueries.simhashBanded(spark, sf))) {
+      val p = plan(df)
+      val bad = p.linesIterator.exists(l => l.contains("Filter") && l.contains("split("))
+      assert(!bad, s"split() re-inlined into a filter:\n${p.take(3000)}")
+    }
+  }
+
   test("no registry query plans a filter inferred from a plain explode") {
     // InferFiltersFromGenerate gives a plain `explode` a size(arr) > 0
     // filter; pushed under the projection that staged `arr`, it re-runs
