@@ -442,10 +442,6 @@ object CorpusQueries {
       .orderBy("doc_id")
   }
 
-  /** Deterministic md5-rank sample: 10 docs per source
-    * ([[graft.ops.Sampling.md5RankSample]]) — reproducible down-sampling
-    * for eval sets and ablations, WindowGroupLimit-pruned per group.
-    */
   /** T=2 temperature mix of 2000 docs across sources
     * ([[graft.ops.Sampling.temperatureMix]]): √n-flattened draw counts,
     * md5-rank membership — oracle-exact because sqrt (unlike pow) is
@@ -471,6 +467,11 @@ object CorpusQueries {
       .orderBy("pos").limit(100)
       .select(col("pos"), col("source"), col("doc_id"))
 
+  /** [[chunkDocs]]' window and stride in tokens, also read by its DuckDB
+    * oracles ([[OracleSql.chunkRows]]). */
+  private[llm] val ChunkWindow = 32
+  private[llm] val ChunkStride = 24
+
   /** Fixed-window document chunking with overlap (window 32 tokens,
     * stride 24 → 8-token overlap) — the RAG/embedding prep step that
     * turns documents into retrievable passages, with the provenance a
@@ -488,7 +489,7 @@ object CorpusQueries {
     * inclusive list ranges, both 1-based).
     */
   def chunkDocs(spark: SparkSession, dir: String): DataFrame = {
-    val (w, s) = (32, 24)
+    val (w, s) = (ChunkWindow, ChunkStride)
     table(spark, dir, "documents")
       .select(col("doc_id"), TextStats.tokens(col("text")).as("__toks"))
       .withColumn("__n", size(col("__toks")))
@@ -521,6 +522,10 @@ object CorpusQueries {
       .orderBy(desc("n_docs"), desc("n_chunks"), asc("chunk_md5"))
       .limit(50)
 
+  /** Deterministic md5-rank sample: 10 docs per source
+    * ([[graft.ops.Sampling.md5RankSample]]) — reproducible down-sampling
+    * for eval sets and ablations, WindowGroupLimit-pruned per group.
+    */
   def hashSample(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Sampling.md5RankSample(
         table(spark, dir, "documents").select(col("doc_id"), col("source")),
@@ -1170,19 +1175,9 @@ object CorpusQueries {
       Some(bpeVocabOracleSql(bpeMerges, bpeVocabTopK)), eager = true),
 
     QueryDef("q_quality_mix", qualityMix, Some(
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS t,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','query','table',
-        |                 'der','die','das','und','scan','row',
-        |                 'le','la','les','et','join','merge'))) AS BIGINT) AS h,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS d,
-        |    least(n_chars, 500) AS m
-        |  FROM documents),
+      s"""WITH ${OracleSql.qualityCounts},
         |q AS (
-        |  SELECT CAST((1000000 * (10 * m * t + 3750 * (h + d))) // (12500 * t)
-        |           AS BIGINT) AS q,
+        |  SELECT ${OracleSql.qualityMicro} AS q,
         |         t
         |  FROM c)
         |SELECT CAST(q // 250000 AS BIGINT) AS band,
@@ -1258,9 +1253,7 @@ object CorpusQueries {
     }),
 
     QueryDef("q_unigram_logprob", unigramLogprob, Some(
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
+      s"""WITH ${OracleSql.tokenTable("tok")},
         |freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
         |tot AS (SELECT count(*) AS total FROM tok)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
@@ -1271,19 +1264,11 @@ object CorpusQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_chunk_dupes", chunkDupes, Some(
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks,
-        |    len(string_split(text, ' ')) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks,
-        |    unnest(range(0, 1 + greatest(0, (n - 32 + 23) // 24)))
-        |      AS chunk_id
-        |  FROM d),
+      s"""WITH ${OracleSql.chunkRows},
         |h AS (
         |  SELECT doc_id,
         |    md5(array_to_string(
-        |      toks[chunk_id * 24 + 1 : chunk_id * 24 + 32], ' '))
+        |      ${OracleSql.chunkTokens}, ' '))
         |      AS chunk_md5
         |  FROM c)
         |SELECT chunk_md5,
@@ -1295,18 +1280,10 @@ object CorpusQueries {
         |LIMIT 50""".stripMargin)),
 
     QueryDef("q_chunk_docs", chunkDocs, Some(
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks,
-        |    len(string_split(text, ' ')) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks,
-        |    unnest(range(0, 1 + greatest(0, (n - 32 + 23) // 24)))
-        |      AS chunk_id
-        |  FROM d),
+      s"""WITH ${OracleSql.chunkRows},
         |s AS (
-        |  SELECT doc_id, chunk_id, chunk_id * 24 AS start_tok,
-        |    toks[chunk_id * 24 + 1 : chunk_id * 24 + 32] AS ch
+        |  SELECT doc_id, chunk_id, chunk_id * $ChunkStride AS start_tok,
+        |    ${OracleSql.chunkTokens} AS ch
         |  FROM c)
         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
         |  CAST(start_tok AS BIGINT) AS start_tok,
@@ -1315,22 +1292,19 @@ object CorpusQueries {
         |FROM s ORDER BY doc_id, chunk_id""".stripMargin)),
 
     QueryDef("q_curriculum_order", curriculumOrder, Some(
-      """WITH bi AS (
+      s"""WITH bi AS (
         |  SELECT source,
         |    row_number() OVER (ORDER BY source) - 1 AS bi
         |  FROM (SELECT DISTINCT source FROM documents)),
         |nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM bi),
-        |r AS (
-        |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
+        |${OracleSql.md5Draw("documents", "source", "doc_id")}
         |SELECT CAST((r.rk - 1) * nb.n + bi.bi AS BIGINT) AS pos,
         |       r.source, r.doc_id
         |FROM r JOIN bi USING (source) CROSS JOIN nb
         |ORDER BY pos LIMIT 100""".stripMargin), eager = true),
 
     QueryDef("q_temperature_mix", temperatureMixDocs, Some(
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT source, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY source),
         |w AS (
@@ -1342,18 +1316,13 @@ object CorpusQueries {
         |    least(n, CAST((CAST(2000 AS HUGEINT) * wm) // tw AS BIGINT))
         |      AS alloc
         |  FROM w, t),
-        |r AS (
-        |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
+        |${OracleSql.md5Draw("documents", "source", "doc_id")}
         |SELECT r.source, CAST(rk AS BIGINT) AS rk, doc_id
         |FROM r JOIN a USING (source) WHERE rk <= alloc
         |ORDER BY source, rk""".stripMargin), eager = true),
 
     QueryDef("q_bm25_rank", bm25Rank, Some(
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
+      s"""WITH ${OracleSql.tokenTable("tok")},
         |dl AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
         |  FROM tok GROUP BY doc_id),
@@ -1381,9 +1350,7 @@ object CorpusQueries {
         |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin)),
 
     QueryDef("q_inverted_index", invertedIndex, Some(
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
+      s"""WITH ${OracleSql.tokenTable("tok")},
         |pd AS (
         |  SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf
         |  FROM tok GROUP BY token, doc_id),
@@ -1398,14 +1365,9 @@ object CorpusQueries {
         |FROM bt ORDER BY df DESC, token LIMIT 200""".stripMargin)),
 
     QueryDef("q_source_overlap", sourceOverlap, Some(
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT source,
-        |    CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_transform(range(1, len(string_split(text, ' ')) - 1),
-        |        i -> string_split(text, ' ')[i] || ' ' ||
-        |             string_split(text, ' ')[i+1] || ' ' ||
-        |             string_split(text, ' ')[i+2])
-        |      ELSE CAST([] AS VARCHAR[]) END AS grams
+        |    ${OracleSql.wordTrigrams} AS grams
         |  FROM documents),
         |ex AS (SELECT DISTINCT source, unnest(grams) AS g FROM sh),
         |tot AS (
@@ -1424,15 +1386,7 @@ object CorpusQueries {
         |ORDER BY src_a, src_b""".stripMargin)),
 
     QueryDef("q_interdoc_dup", interDocDupFraction, Some(
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_transform(range(1, len(string_split(text, ' ')) - 1),
-        |        i -> string_split(text, ' ')[i] || ' ' ||
-        |             string_split(text, ' ')[i+1] || ' ' ||
-        |             string_split(text, ' ')[i+2])
-        |      ELSE CAST([] AS VARCHAR[]) END) AS grams
-        |  FROM documents),
+      s"""WITH ${OracleSql.distinctTrigrams},
         |ex AS (SELECT doc_id, unnest(grams) AS g FROM sh),
         |f AS (SELECT g, count(*) AS df FROM ex GROUP BY g),
         |agg AS (
@@ -1475,18 +1429,12 @@ object CorpusQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_hash_sample", hashSample, Some(
-      """WITH r AS (
-        |  SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
+      s"""WITH ${OracleSql.md5Draw("documents", "source", "doc_id")}
         |SELECT source, rk, doc_id FROM r WHERE rk <= 10
         |ORDER BY source, rk""".stripMargin)),
 
     QueryDef("q_cooccur_pairs", cooccurPairs, Some(
-      """WITH dt0 AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
+      s"""WITH ${OracleSql.tokenTable("dt0")},
         |dt AS (SELECT DISTINCT doc_id, token FROM dt0),
         |topf AS (
         |  SELECT token, count(*) AS df FROM dt GROUP BY token

@@ -24,7 +24,7 @@ object LlmQueries {
 
   // Values a query builder and its DuckDB oracle must agree on live in one
   // `val` each, interpolated into both (the bpeMerges rule).
-  private val MinJaccard = 0.9
+  private[llm] val MinJaccard = 0.9
   private val PairBlock = 200L
   private val SimhashMaxHamming = 12
   private val WinnowMinShared = 3
@@ -35,8 +35,8 @@ object LlmQueries {
   private val MmrLambda = 0.7
   private val MinCosine = 0.3
   private val CosineBlock = 1000L
-  private val QueryVecs = 5
-  private val KnnK = 10
+  private[llm] val QueryVecs = 5
+  private[llm] val KnnK = 10
   private val RrfInputK = 20
   private val MrlHeadDim = 16
   private val MrlCandidates = 50
@@ -261,7 +261,7 @@ object LlmQueries {
     * The pairwise-family oracles (q_jaccard_pairs etc.) stay at 200 because
     * every one of them re-pays the same N² join in DuckDB per round.
     */
-  private val GraphSlice = 1000L
+  private[llm] val GraphSlice = 1000L
 
   // Round 22: every bounded-block consumer of the exact-jaccard pair list
   // (the CC family below plus the graph-structure queries) sources pairs
@@ -501,7 +501,7 @@ object LlmQueries {
       .orderBy("lang", "lang_pred")
 
   /** Quality score per document (exact micro-units — see
-    * [[TextStats.qualityScoreMicro]] for why not a rounded float).
+    * [[TextStats.qualityScoreMicroFromTokens]] for why not a rounded float).
     */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
@@ -663,14 +663,7 @@ object LlmQueries {
     */
   private def mmrOracleSql: String = {
     val (m, k, lam) = (MmrCandidates, MmrK, MmrLambda)
-    def cos(av: String, bv: String): String =
-      s"""(list_sum(list_transform(range(1, len($av) + 1),
-         |      i -> CAST($av[i] AS DOUBLE) * CAST($bv[i] AS DOUBLE))) /
-         |    (sqrt(list_sum(list_transform(range(1, len($av) + 1),
-         |      i -> CAST($av[i] AS DOUBLE) * CAST($av[i] AS DOUBLE)))) *
-         |     sqrt(list_sum(list_transform(range(1, len($bv) + 1),
-         |      i -> CAST($bv[i] AS DOUBLE) * CAST($bv[i] AS DOUBLE))))))"""
-        .stripMargin
+    def cos(av: String, bv: String): String = s"(${OracleSql.cosine(av, bv)})"
     val rounds = (2 to k).map { i =>
       s"""mx$i AS MATERIALIZED (
          |  SELECT c.query_id, c.neighbor_id, c.rel_raw, c.rel,
@@ -699,17 +692,14 @@ object LlmQueries {
     val unions = (1 to k).map { i =>
       s"SELECT query_id, CAST($i AS BIGINT) AS rk, neighbor_id AS vec_id, rel, mmr_micro FROM sel$i"
     }.mkString("\nUNION ALL ")
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-       |           FROM embeddings WHERE vec_id < $QueryVecs),
-       |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
+    s"""WITH ${OracleSql.queriesAndCorpus("")},
        |scored AS (
        |  SELECT query_id, neighbor_id, ${cos("cv", "qv")} AS rel_raw
        |  FROM c, q WHERE query_id <> neighbor_id),
        |cand AS MATERIALIZED (
        |  SELECT query_id, neighbor_id, rel_raw, rel FROM (
        |    SELECT query_id, neighbor_id, rel_raw, round(rel_raw, 6) AS rel,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY round(rel_raw, 6) DESC, neighbor_id ASC) AS rk
+       |      ${OracleSql.searchRank("round(rel_raw, 6)")} AS rk
        |    FROM scored) WHERE rk <= $m),
        |cvec AS MATERIALIZED (
        |  SELECT cand.query_id, cand.neighbor_id, e.embedding AS v
@@ -755,14 +745,7 @@ object LlmQueries {
          |  WHERE u IN (SELECT node FROM keep$i)
          |    AND v IN (SELECT node FROM keep$i))""".stripMargin
     }.mkString(",\n")
-    s"""WITH sh AS (
-       |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-       |  FROM documents WHERE doc_id < $PairBlock),
-       |p AS (
-       |  SELECT a.id AS u, b.id AS v
-       |  FROM sh a JOIN sh b ON a.id < b.id
-       |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-       |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
+    s"""WITH ${OracleSql.jaccardPairs(PairBlock, "a.id AS u, b.id AS v")},
        |e0 AS MATERIALIZED (SELECT DISTINCT u, v FROM p),
        |$peel
        |SELECT node, CAST(count(*) AS BIGINT) AS deg_in_core
@@ -1020,19 +1003,22 @@ object LlmQueries {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
+  /** Marker-word hits of language `lang` per document, as `hits_<lang>`:
+    * one arm of [[TextStats.langId]]'s argmax. */
+  private def langHits(lang: String): String =
+    s"""len(list_filter(string_split(text, ' '),
+       |      x -> x IN (${OracleSql.quoted(TextStats.langMarkers(lang))}))) AS hits_$lang"""
+      .stripMargin
+
   /** Exact word-set Jaccard pairs on the id block: the oracle of both
     * q_jaccard_pairs and q_prefix_jaccard. */
-  private def jaccardPairsOracleSql: String =
-    s"""WITH sh AS (
-      |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-      |  FROM documents WHERE doc_id < $PairBlock)
-      |SELECT a.id AS id_a, b.id AS id_b,
-      |  round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-      |FROM sh a JOIN sh b ON a.id < b.id
-      |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard
-      |ORDER BY id_a, id_b""".stripMargin
+  private def jaccardPairsOracleSql: String = {
+    val select =
+      s"a.id AS id_a, b.id AS id_b,\n  round(${OracleSql.jaccard}, 6) AS jaccard"
+    s"""WITH ${OracleSql.wordSets(PairBlock)}
+       |${OracleSql.jaccardJoin(select, "a.id < b.id")}
+       |ORDER BY id_a, id_b""".stripMargin
+  }
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("q_mmr_diverse", mmrDiverse, Some(mmrOracleSql)),
@@ -1063,28 +1049,17 @@ object LlmQueries {
     QueryDef("q_prefix_jaccard", prefixJaccard, Some(jaccardPairsOracleSql)),
 
     QueryDef("q_near_dedup_exact", nearDedupExact, Some(
-      s"""WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $PairBlock),
-        |p AS (
-        |  SELECT b.id AS drop_id
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard)
+      s"""WITH ${OracleSql.jaccardPairs(PairBlock, "b.id AS drop_id")}
         |SELECT doc_id, lang, source
         |FROM documents
         |WHERE doc_id < $PairBlock AND doc_id NOT IN (SELECT drop_id FROM p)
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_incremental_dedup", incrementalDedup, Some(
-      s"""WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $IngestEnd),
+      s"""WITH ${OracleSql.wordSets(IngestEnd)},
         |p AS (
-        |  SELECT b.id AS drop_id
-        |  FROM sh a JOIN sh b ON a.id < $IngestSplit AND b.id >= $IngestSplit
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard)
+        |  ${OracleSql.jaccardJoin("b.id AS drop_id",
+              s"a.id < $IngestSplit AND b.id >= $IngestSplit")})
         |SELECT doc_id, lang, source
         |FROM documents
         |WHERE doc_id >= $IngestSplit AND doc_id < $IngestEnd
@@ -1092,34 +1067,12 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_dup_clusters", dupClusters, Some(
-      s"""WITH RECURSIVE sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $GraphSlice),
-        |p AS (
-        |  SELECT a.id AS id_a, b.id AS id_b
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
-        |edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM p
-        |  UNION ALL SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM sh
-        |  UNION
-        |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id)
-        |SELECT id, CAST(min(r) AS BIGINT) AS component
-        |FROM reach GROUP BY id
+      s"""WITH RECURSIVE ${OracleSql.componentClosure}
+        |${OracleSql.component}
         |ORDER BY id""".stripMargin), eager = true),
 
     QueryDef("q_triangle_stats", triangleStats, Some(
-      s"""WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $PairBlock),
-        |p AS (
-        |  SELECT a.id AS id_a, b.id AS id_b
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
+      s"""WITH ${OracleSql.jaccardPairs(PairBlock, "a.id AS id_a, b.id AS id_b")},
         |e AS (SELECT DISTINCT least(id_a, id_b) AS u,
         |        greatest(id_a, id_b) AS v FROM p),
         |d AS (
@@ -1141,14 +1094,7 @@ object LlmQueries {
         |ORDER BY node""".stripMargin)),
 
     QueryDef("q_assortativity", dupAssortativity, Some(
-      s"""WITH sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $PairBlock),
-        |p AS (
-        |  SELECT a.id AS u, b.id AS v
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
+      s"""WITH ${OracleSql.jaccardPairs(PairBlock, "a.id AS u, b.id AS v")},
         |d AS (
         |  SELECT node, count(*) AS deg
         |  FROM (SELECT u AS node FROM p UNION ALL SELECT v FROM p)
@@ -1162,24 +1108,9 @@ object LlmQueries {
         |FROM sym""".stripMargin)),
 
     QueryDef("q_leakage_safe_split", leakageSafeSplit, Some(
-      s"""WITH RECURSIVE sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $GraphSlice),
-        |p AS (
-        |  SELECT a.id AS id_a, b.id AS id_b
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
-        |edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM p
-        |  UNION ALL SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM sh
-        |  UNION
-        |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
+      s"""WITH RECURSIVE ${OracleSql.componentClosure},
         |comp AS (
-        |  SELECT id, CAST(min(r) AS BIGINT) AS component
-        |  FROM reach GROUP BY id)
+        |  ${OracleSql.component})
         |SELECT id AS doc_id, component,
         |  CAST(CASE WHEN CAST('0x' ||
         |      substring(md5(CAST(component AS VARCHAR)), 1, 2) AS BIGINT)
@@ -1187,21 +1118,7 @@ object LlmQueries {
         |FROM comp ORDER BY doc_id""".stripMargin), eager = true),
 
     QueryDef("q_dedup_keep_best", dedupKeepBest, Some(
-      s"""WITH RECURSIVE sh AS (
-        |  SELECT doc_id AS id, list_distinct(string_split(text, ' ')) AS s
-        |  FROM documents WHERE doc_id < $GraphSlice),
-        |p AS (
-        |  SELECT a.id AS id_a, b.id AS id_b
-        |  FROM sh a JOIN sh b ON a.id < b.id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= $MinJaccard),
-        |edges AS (
-        |  SELECT id_a AS u, id_b AS v FROM p
-        |  UNION ALL SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM sh
-        |  UNION
-        |  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
+      s"""WITH RECURSIVE ${OracleSql.componentClosure},
         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
         |j AS (
         |  SELECT c.component, d.doc_id, d.n_chars
@@ -1218,12 +1135,9 @@ object LlmQueries {
         |ORDER BY component""".stripMargin), eager = true),
 
     QueryDef("q_class_balance", classBalance, Some(
-      """WITH n AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
+      s"""WITH n AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
         |m AS (SELECT min(n) AS n_min FROM n),
-        |r AS (
-        |  SELECT label, vec_id, row_number() OVER (PARTITION BY label
-        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk
-        |  FROM embeddings)
+        |${OracleSql.md5Draw("embeddings", "label", "vec_id")}
         |SELECT label, CAST(rk AS BIGINT) AS rk, vec_id
         |FROM r, m WHERE rk <= n_min
         |ORDER BY label, rk""".stripMargin), eager = true),
@@ -1236,145 +1150,51 @@ object LlmQueries {
         |             embedding AS cf FROM embeddings),
         |head AS (
         |  SELECT query_id, neighbor_id, cf, qf, round(
-        |    list_sum(list_transform(range(1, len(ch) + 1),
-        |      i -> CAST(ch[i] AS DOUBLE) * CAST(qh[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(range(1, len(ch) + 1),
-        |      i -> CAST(ch[i] AS DOUBLE) * CAST(ch[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(range(1, len(qh) + 1),
-        |      i -> CAST(qh[i] AS DOUBLE) * CAST(qh[i] AS DOUBLE))))), 6)
+        |    ${OracleSql.cosine("ch", "qh")}, 6)
         |    AS head_score
         |  FROM c, q WHERE query_id <> neighbor_id),
         |cand AS MATERIALIZED (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY head_score DESC, neighbor_id ASC) AS cand_rk
+        |  SELECT *, ${OracleSql.searchRank("head_score")} AS cand_rk
         |  FROM head),
         |rer AS (
         |  SELECT query_id, neighbor_id, head_score, round(
-        |    list_sum(list_transform(range(1, len(cf) + 1),
-        |      i -> CAST(cf[i] AS DOUBLE) * CAST(qf[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(range(1, len(cf) + 1),
-        |      i -> CAST(cf[i] AS DOUBLE) * CAST(cf[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(range(1, len(qf) + 1),
-        |      i -> CAST(qf[i] AS DOUBLE) * CAST(qf[i] AS DOUBLE))))), 6)
+        |    ${OracleSql.cosine("cf", "qf")}, 6)
         |    AS score
         |  FROM cand WHERE cand_rk <= $MrlCandidates),
         |ranked AS (
         |  SELECT query_id, neighbor_id, head_score, score,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, neighbor_id ASC) AS rk
+        |    ${OracleSql.searchRank("score")} AS rk
         |  FROM rer)
         |SELECT query_id, rk, neighbor_id, score, head_score
         |FROM ranked WHERE rk <= $KnnK
         |ORDER BY query_id, rk""".stripMargin)),
 
     QueryDef("q_knn_cosine", knnCosine, Some(
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |           FROM embeddings WHERE vec_id < $QueryVecs),
-        |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT query_id, neighbor_id, round(
-        |    list_sum(list_transform(range(1, len(cv) + 1),
-        |      i -> CAST(cv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(range(1, len(cv) + 1),
-        |      i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(range(1, len(qv) + 1),
-        |      i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))))), 6) AS score
-        |  FROM c, q WHERE query_id <> neighbor_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, score,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, neighbor_id ASC) AS rk
-        |  FROM scored)
-        |SELECT query_id, rk, neighbor_id, score
-        |FROM ranked WHERE rk <= $KnnK
-        |ORDER BY query_id, rk""".stripMargin)),
+      s"""WITH ${OracleSql.cosineScored("")},
+        |${OracleSql.searchTopK}""".stripMargin)),
 
     // op-order-shared with Similarity.int8TopK: normalize → per-vector
     // (min, scale) → least(floor(...), 255) codes → dequant mn + c*sc →
     // sequential-fold dot — identical doubles, so the deterministic
     // approximation hashes exactly
     QueryDef("q_int8_topk", int8TopK, Some(
-      s"""WITH u AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding,
-        |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings),
-        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < $QueryVecs),
-        |c AS (
-        |  SELECT vec_id AS neighbor_id, uv,
-        |    list_min(uv) AS mn,
-        |    (list_max(uv) - list_min(uv)) / 255.0 AS sc
-        |  FROM u),
-        |dq AS (
-        |  SELECT neighbor_id,
-        |    list_transform(uv, x -> CASE WHEN sc = 0 THEN mn
-        |      ELSE mn + least(floor((x - mn) / sc), 255.0) * sc END) AS d
-        |  FROM c),
-        |scored AS (
-        |  SELECT query_id, neighbor_id, round(
-        |    list_sum(list_transform(range(1, len(d) + 1),
-        |      i -> qu[i] * d[i])), 6) AS score
-        |  FROM dq, qy WHERE query_id <> neighbor_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, score,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, neighbor_id ASC) AS rk
-        |  FROM scored)
-        |SELECT query_id, rk, neighbor_id, score
-        |FROM ranked WHERE rk <= $KnnK
-        |ORDER BY query_id, rk""".stripMargin)),
+      s"""WITH ${OracleSql.int8Scored("scored")},
+        |${OracleSql.searchTopK}""".stripMargin)),
 
-    // the two input rankings are verbatim the q_knn_cosine and
-    // q_int8_topk oracle pipelines at k=20; fusion is rank-only
+    // the two input rankings score as the q_knn_cosine and q_int8_topk
+    // oracles do, cut at k = RrfInputK; fusion is rank-only
     QueryDef("q_rrf_fusion", rrfFusion, Some(
-      s"""WITH fq AS (SELECT vec_id AS query_id, embedding AS qv
-        |            FROM embeddings WHERE vec_id < $QueryVecs),
-        |fc AS (SELECT vec_id AS neighbor_id, embedding AS cv
-        |       FROM embeddings),
-        |fscored AS (
-        |  SELECT query_id, neighbor_id, round(
-        |    list_sum(list_transform(range(1, len(cv) + 1),
-        |      i -> CAST(cv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))) /
-        |    (sqrt(list_sum(list_transform(range(1, len(cv) + 1),
-        |      i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE)))) *
-        |     sqrt(list_sum(list_transform(range(1, len(qv) + 1),
-        |      i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))))), 6)
-        |      AS score
-        |  FROM fc, fq WHERE query_id <> neighbor_id),
+      s"""WITH ${OracleSql.cosineScored("f")},
         |franked AS (
         |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, neighbor_id ASC) AS rk_a
+        |    ${OracleSql.searchRank("score")} AS rk_a
         |  FROM fscored),
         |flist AS (SELECT query_id, neighbor_id, rk_a
         |          FROM franked WHERE rk_a <= $RrfInputK),
-        |u AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding,
-        |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings),
-        |qy AS (SELECT vec_id AS query_id, uv AS qu FROM u WHERE vec_id < $QueryVecs),
-        |c AS (
-        |  SELECT vec_id AS neighbor_id, uv,
-        |    list_min(uv) AS mn,
-        |    (list_max(uv) - list_min(uv)) / 255.0 AS sc
-        |  FROM u),
-        |dq AS (
-        |  SELECT neighbor_id,
-        |    list_transform(uv, x -> CASE WHEN sc = 0 THEN mn
-        |      ELSE mn + least(floor((x - mn) / sc), 255.0) * sc END) AS d
-        |  FROM c),
-        |qscored AS (
-        |  SELECT query_id, neighbor_id, round(
-        |    list_sum(list_transform(range(1, len(d) + 1),
-        |      i -> qu[i] * d[i])), 6) AS score
-        |  FROM dq, qy WHERE query_id <> neighbor_id),
+        |${OracleSql.int8Scored("qscored")},
         |qranked AS (
         |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, neighbor_id ASC) AS rk_b
+        |    ${OracleSql.searchRank("score")} AS rk_b
         |  FROM qscored),
         |qlist AS (SELECT query_id, neighbor_id, rk_b
         |          FROM qranked WHERE rk_b <= $RrfInputK),
@@ -1386,8 +1206,7 @@ object LlmQueries {
         |    USING (query_id, neighbor_id)),
         |final AS (
         |  SELECT query_id, neighbor_id, rrf,
-        |    row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY rrf DESC, neighbor_id ASC) AS rk
+        |    ${OracleSql.searchRank("rrf")} AS rk
         |  FROM fused)
         |SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id,
         |  CAST(floor(rrf * 1000000000.0) AS BIGINT) AS rrf_nano
@@ -1395,32 +1214,19 @@ object LlmQueries {
         |ORDER BY query_id, rk""".stripMargin)),
 
     QueryDef("q_cosine_pairs", cosinePairs, Some(
-      s"""WITH u AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding,
-        |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings WHERE vec_id < $CosineBlock)
+      s"""WITH ${OracleSql.unitVectors(s"embeddings WHERE vec_id < $CosineBlock")}
         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_sum(list_transform(range(1, len(a.uv) + 1),
-        |    i -> a.uv[i] * b.uv[i])), 6) AS cosine
+        |  ${OracleSql.unitPairCosine} AS cosine
         |FROM u a JOIN u b ON a.vec_id < b.vec_id
-        |WHERE round(list_sum(list_transform(range(1, len(a.uv) + 1),
-        |    i -> a.uv[i] * b.uv[i])), 6) >= $MinCosine
+        |WHERE ${OracleSql.unitPairCosine} >= $MinCosine
         |ORDER BY id_a, id_b""".stripMargin)),
 
     QueryDef("q_embedding_dedup", embeddingDedup, Some(
-      s"""WITH u AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding,
-        |        y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS uv
-        |  FROM embeddings WHERE vec_id < $CosineBlock),
+      s"""WITH ${OracleSql.unitVectors(s"embeddings WHERE vec_id < $CosineBlock")},
         |p AS (
         |  SELECT b.vec_id AS id_b
         |  FROM u a JOIN u b ON a.vec_id < b.vec_id
-        |  WHERE round(list_sum(list_transform(range(1, len(a.uv) + 1),
-        |      i -> a.uv[i] * b.uv[i])), 6) >= $MinCosine)
+        |  WHERE ${OracleSql.unitPairCosine} >= $MinCosine)
         |SELECT e.vec_id, e.label
         |FROM embeddings e
         |WHERE e.vec_id < $CosineBlock AND e.vec_id NOT IN (SELECT id_b FROM p)
@@ -1474,14 +1280,11 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_lang_id", langId, Some(
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT lang,
-        |    len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('der','die','das','und','scan','row'))) AS hits_de,
-        |    len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','query','table'))) AS hits_en,
-        |    len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('le','la','les','et','join','merge'))) AS hits_fr
+        |    ${langHits("de")},
+        |    ${langHits("en")},
+        |    ${langHits("fr")}
         |  FROM documents)
         |SELECT lang,
         |  CASE WHEN hits_fr > greatest(hits_de, hits_en) THEN 'fr'
@@ -1493,19 +1296,9 @@ object LlmQueries {
         |ORDER BY lang, lang_pred""".stripMargin)),
 
     QueryDef("q_quality_score", qualityScore, Some(
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS t,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','query','table',
-        |                 'der','die','das','und','scan','row',
-        |                 'le','la','les','et','join','merge'))) AS BIGINT) AS h,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS d,
-        |    least(n_chars, 500) AS m
-        |  FROM documents)
+      s"""WITH ${OracleSql.qualityCounts}
         |SELECT doc_id,
-        |  CAST((1000000 * (10 * m * t + 3750 * (h + d))) // (12500 * t)
-        |    AS BIGINT) AS quality_micro
+        |  ${OracleSql.qualityMicro} AS quality_micro
         |FROM c
         |ORDER BY doc_id""".stripMargin)),
 
@@ -1526,14 +1319,9 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_repetition_score", repetitionScore, Some(
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT doc_id,
-        |    CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_transform(range(1, len(string_split(text, ' ')) - 1),
-        |        i -> string_split(text, ' ')[i] || ' ' ||
-        |             string_split(text, ' ')[i+1] || ' ' ||
-        |             string_split(text, ' ')[i+2])
-        |      ELSE CAST([] AS VARCHAR[]) END AS sh
+        |    ${OracleSql.wordTrigrams} AS sh
         |  FROM documents)
         |SELECT doc_id,
         |  CASE WHEN len(sh) = 0 THEN 0
@@ -1543,15 +1331,7 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     QueryDef("q_contamination", contamination, Some(
-      s"""WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_transform(range(1, len(string_split(text, ' ')) - 1),
-        |        i -> string_split(text, ' ')[i] || ' ' ||
-        |             string_split(text, ' ')[i+1] || ' ' ||
-        |             string_split(text, ' ')[i+2])
-        |      ELSE CAST([] AS VARCHAR[]) END) AS grams
-        |  FROM documents),
+      s"""WITH ${OracleSql.distinctTrigrams},
         |g AS (SELECT doc_id, unnest(grams) AS g FROM sh),
         |b AS (SELECT DISTINCT g FROM g WHERE doc_id < $ContamBenchBlock),
         |hit AS (

@@ -98,17 +98,24 @@ object Similarity {
       .agg(round(sum(col("x").cast("double")) / count(lit(1)), 6).as("mean"))
       .select(col("label"), col("pos").cast("bigint").as("pos"), col("mean"))
 
+  /** A candidate's rank within its query: `score` descending, ties to the
+    * lower neighbor id — the order every top-k search below keeps, and
+    * the one their DuckDB oracles replay ([[OracleSql.searchRank]]).
+    */
+  def searchRank(score: String): Column =
+    row_number().over(
+      Window.partitionBy("query_id").orderBy(desc(score), asc("neighbor_id")))
+
   /** Brute-force cosine top-k: every query (a small broadcast set) against
     * the full corpus, rank per query. Exact baseline for the ANN variants.
     */
   def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(IdCol).as("query_id"), col(VecCol).as("qv")))
     val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
     c.join(q, col("query_id") =!= col("neighbor_id")) // broadcast nested loop
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("cv"), col("qv")), 6).as("score"))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
+      .withColumn("rk", searchRank("score").cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "rk", "neighbor_id", "score")
   }
@@ -134,22 +141,36 @@ object Similarity {
     val q = broadcast(queries.select(col(IdCol).as("query_id"),
       col(VecCol).as("qv")))
     val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
-    val wHead = Window.partitionBy("query_id")
-      .orderBy(desc("head_score"), asc("neighbor_id"))
     val cand = c.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("cv"), col("qv"),
         round(cosine(slice(col("cv"), 1, dHead), slice(col("qv"), 1, dHead)),
           6).as("head_score"))
-      .withColumn("cand_rk", row_number().over(wHead))
+      .withColumn("cand_rk", searchRank("head_score"))
       .filter(col("cand_rk") <= m)
-    val wFull = Window.partitionBy("query_id")
-      .orderBy(desc("score"), asc("neighbor_id"))
     cand
       .select(col("query_id"), col("neighbor_id"), col("head_score"),
         round(cosine(col("cv"), col("qv")), 6).as("score"))
-      .withColumn("rk", row_number().over(wFull).cast("bigint"))
+      .withColumn("rk", searchRank("score").cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "rk", "neighbor_id", "score", "head_score")
+  }
+
+  /** MMR candidate stage: each query's top-`m` by rounded cosine. Kept as
+    * its own method so the WindowGroupLimit plan gate (PlanSpec) can
+    * assert on the candidate subtree BEFORE [[mmrSelect]] checkpoints it
+    * (a checkpointed frame plans as Scan ExistingRDD, hiding the window
+    * pushdown from the final plan).
+    */
+  def mmrCandidates(corpus: DataFrame, queries: DataFrame, m: Int): DataFrame = {
+    val q = broadcast(queries.select(col(IdCol).as("query_id"),
+      col(VecCol).as("qv")))
+    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
+    c.join(q, col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cv"),
+        cosine(col("cv"), col("qv")).as("rel_raw"))
+      .withColumn("rel", round(col("rel_raw"), 6))
+      .withColumn("rk", searchRank("rel"))
+      .filter(col("rk") <= m)
   }
 
   /** Maximal-Marginal-Relevance diverse top-k (Carbonell & Goldstein,
@@ -177,26 +198,6 @@ object Similarity {
     * see the same 0.30000000000000004; ties break on id asc; round 1
     * scores λ·rel (empty S ⇒ no diversity term).
     */
-  /** MMR candidate stage: each query's top-`m` by rounded cosine. Kept as
-    * its own method so the WindowGroupLimit plan gate (PlanSpec) can
-    * assert on the candidate subtree BEFORE [[mmrSelect]] checkpoints it
-    * (a checkpointed frame plans as Scan ExistingRDD, hiding the window
-    * pushdown from the final plan).
-    */
-  def mmrCandidates(corpus: DataFrame, queries: DataFrame, m: Int): DataFrame = {
-    val q = broadcast(queries.select(col(IdCol).as("query_id"),
-      col(VecCol).as("qv")))
-    val c = corpus.select(col(IdCol).as("neighbor_id"), col(VecCol).as("cv"))
-    val w = Window.partitionBy("query_id").orderBy(desc("rel"),
-      asc("neighbor_id"))
-    c.join(q, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cv"),
-        cosine(col("cv"), col("qv")).as("rel_raw"))
-      .withColumn("rel", round(col("rel_raw"), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= m)
-  }
-
   def mmrSelect(corpus: DataFrame, queries: DataFrame, m: Int, k: Int,
                 lambda: Double): DataFrame = {
     val spark = corpus.sparkSession
@@ -319,11 +320,10 @@ object Similarity {
       .withColumn("dq", transform(col("u"), x =>
         Int8Quant.dequant(x, col("mn"), col("sc"))))
       .select("neighbor_id", "dq")
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
     quant.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(dotProduct(col("qu"), col("dq")), 6).as("score"))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
+      .withColumn("rk", searchRank("score").cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "rk", "neighbor_id", "score")
   }
@@ -345,13 +345,11 @@ object Similarity {
       col("rk").as("rk_a"))
     val rb = b.select(col("query_id"), col("neighbor_id"),
       col("rk").as("rk_b"))
-    val w = Window.partitionBy("query_id").orderBy(desc("rrf"),
-      asc("neighbor_id"))
     ra.join(rb, Seq("query_id", "neighbor_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(RrfC) + col("rk_a").cast("double")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(RrfC) + col("rk_b").cast("double")), lit(0.0)))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
+      .withColumn("rk", searchRank("rrf").cast("bigint"))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk"), col("neighbor_id"),
         floor(col("rrf") * lit(1000000000.0)).cast("bigint").as("rrf_nano"))
@@ -480,11 +478,10 @@ object Similarity {
       .filter(col("crk") <= nprobe)
       .select("query_id", "qu", "cell")
 
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), asc("neighbor_id"))
     probes.join(assigned, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score", round(dotProduct(col("cu"), col("qu")), 6))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
+      .withColumn("rk", searchRank("score").cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "rk", "neighbor_id", "score")
   }
@@ -563,29 +560,25 @@ object Similarity {
         }
         (r.getLong(0), lut)
       }.toSeq.toDF("query_id", "lut")
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(desc("approx"), asc("neighbor_id"))
     val short = staged.crossJoin(broadcast(luts))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("approx",
         aggregate(zip_with(col("codes"), col("lut"),
             (c, row) => element_at(row, c + 1)),
           lit(0.0), (acc, x) => acc + x))
-      .withColumn("srk", row_number().over(wApprox))
+      .withColumn("srk", searchRank("approx"))
       .filter(col("srk") <= shortlist)
       .select("query_id", "neighbor_id")
 
     // ---- …then EXACT rerank of the shortlist (what production PQ does):
     // the shortlist is Q·shortlist rows — broadcast it against the corpus
     // so only shortlisted vectors are ever re-read at full precision.
-    val wFinal = Window.partitionBy("query_id")
-      .orderBy(desc("score"), asc("neighbor_id"))
     val corpusVecs = corpusU.select(col("neighbor_id"),
       col("u").as("cu"))
     corpusVecs.join(broadcast(short), Seq("neighbor_id"))
       .join(broadcast(qU), Seq("query_id"))
       .withColumn("score", round(dotProduct(col("cu"), col("qu")), 6))
-      .withColumn("rk", row_number().over(wFinal).cast("bigint"))
+      .withColumn("rk", searchRank("score").cast("bigint"))
       .filter(col("rk") <= k)
       .select("query_id", "rk", "neighbor_id", "score")
   }

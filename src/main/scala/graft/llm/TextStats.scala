@@ -217,9 +217,9 @@ object TextStats {
     }._1
   }
 
-  /** Composite quality score in [0,1]: length saturation (0.4 weight) +
-    * stopword mass (0.3) + lexical diversity (0.3). Weights fixed; the
-    * value is a filter signal, not a metric.
+  /** Composite quality score in [0,1] of a tokenized document: length
+    * saturation (0.4 weight) + stopword mass (0.3) + lexical diversity
+    * (0.3). Weights fixed; the value is a filter signal, not a metric.
     *
     * Emitted as exact micro-units (BIGINT, integer division):
     *   0.4·min(nc,500)/500 + 0.3·h/t + 0.3·d/t
@@ -229,13 +229,9 @@ object TextStats {
     * (double round-tripping through shortest-repr in Spark's round vs
     * true-value rounding in DuckDB breaks exact decimal ties like
     * 0.5011125 — doc_id 7 at sf0.1). Integer arithmetic has no ties.
-    */
-  def qualityScoreMicro(text: Column, nChars: Column): Column =
-    qualityScoreMicroFromTokens(tokens(text), nChars)
-
-  /** [[qualityScoreMicro]] over an already-tokenized column. Use this with
-    * the token array hoisted into its own projection when scoring at
-    * corpus scale: the score references the array three times (count,
+    *
+    * Takes the token array, hoisted into its own projection when scoring
+    * at corpus scale: the score references the array three times (count,
     * stopword hits, distinct), and HOFs are interpreted with no
     * subexpression elimination, so an inline `tokens(text)` would
     * re-split every document three times.
@@ -257,12 +253,6 @@ object TextStats {
     when(t === 0L, lit(0L))
       .otherwise(longDiv(num, den))
   }
-
-  /** Float view of [[qualityScoreMicro]] for human-facing use (not the
-    * oracle contract — float rounding is engine-dependent on exact ties).
-    */
-  def qualityScore(text: Column, nChars: Column): Column =
-    qualityScoreMicro(text, nChars).cast("double") / 1000000.0
 
   /** Benchmark decontamination scores: for every document, the fraction
     * of its distinct word trigrams that also appear in the benchmark set

@@ -237,12 +237,6 @@ object RelationalQueries {
       .agg(sum(col("value")).cast("double").as("total"))
       .orderBy("l_returnflag", "metric")
 
-  /** S1 as a harness query: the orders table written to CSV (header) and
-    * read back through the explicit-schema scan, then aggregated — the
-    * oracle reads the original PARQUET, so a hash match proves the CSV
-    * sink/scan round-trips every value (doubles via shortest-repr
-    * strings, timestamps as ISO UTC, quoted strings) bit-exactly.
-    */
   /** Scratch dir for sink round-trips: unique per JVM so concurrent
     * sessions (Bench + Verify, parallel CI) never overwrite each other's
     * directory mid-read.
@@ -276,6 +270,12 @@ object RelationalQueries {
     path
   }
 
+  /** S1 as a harness query: the orders table written to CSV (header) and
+    * read back through the explicit-schema scan, then aggregated — the
+    * oracle reads the original PARQUET, so a hash match proves the CSV
+    * sink/scan round-trips every value (doubles via shortest-repr
+    * strings, timestamps as ISO UTC, quoted strings) bit-exactly.
+    */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val orders = table(spark, dir, "orders")
     val path = roundtripPath("csv_orders", dir)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Sampling operators for training-data pipelines: budgeted prefixes,
@@ -24,13 +24,6 @@ object Sampling {
       .filter(col("cum_weight") <= budget)
   }
 
-  /** Deterministic uniform sample: keep the `k` rows with the smallest
-    * md5(id) per group. Hash-rank sampling is reproducible across engines
-    * and runs (unlike rand(seed), whose stream depends on partitioning),
-    * uniform for any id distribution, and one window pass per group —
-    * Spark plans it as WindowGroupLimit, so only k rows per group survive
-    * the shuffle. md5 (not xxhash64) keeps it DuckDB-replayable.
-    */
   /** Water-filling budget allocation: given per-group totals `c_g` and a
     * budget B = `budgetFrac` × Σc, the unique level T with
     * Σ min(c_g, T) = B; each group gets `min(c_g, T)` — small groups keep
@@ -56,6 +49,23 @@ object Sampling {
                      budgetFrac: Double): DataFrame = {
     val counts = perGroup.select(col(groupCol).as("g"),
       col(cCol).cast("long").as("c")).cache()
+    // the returned frame depends only on the scalar level, so build it
+    // from the UNCACHED input and release the bisection's cache once the
+    // level is known, or the input is refused — otherwise every
+    // invocation (bench reruns, ScaleInvariantsSpec) leaks one cached
+    // frame into executor storage for the session lifetime
+    val level = try waterLevel(counts, budgetFrac) finally counts.unpersist()
+    perGroup.select(col(groupCol).as("g"), col(cCol).cast("long").as("c"))
+      .select(col("g").as(groupCol), col("c"),
+        round(least(col("c").cast("double"), lit(level)), 6).as("alloc"),
+        (col("c").cast("double") > lit(level)).cast("bigint").as("capped"))
+  }
+
+  /** [[waterfillAlloc]]'s level T over the per-group frame `counts`
+    * (`g`, `c`), found by bisection. Refuses a budget that is not below
+    * the total.
+    */
+  private def waterLevel(counts: DataFrame, budgetFrac: Double): Double = {
     // coalesce: on an empty frame both aggregates are NULL — degrade to
     // total 0 so the B < Σc contract require below fires with its own
     // message instead of a driver NPE
@@ -99,27 +109,31 @@ object Sampling {
           coalesce(sum(when(col("c") <= lo, col("c"))), lit(0L)),
           count(when(col("c") > lo, lit(1)))).head()
     val (below, nAbove) = (r.getLong(0), r.getLong(1))
-    val level = (budget - below).toDouble / nAbove
-    // the returned frame depends only on the scalar `level`, so build it
-    // from the UNCACHED input and release the bisection's cache now —
-    // otherwise every invocation (bench reruns, ScaleInvariantsSpec)
-    // leaks one cached frame into executor storage for the session
-    // lifetime
-    counts.unpersist()
-    perGroup.select(col(groupCol).as("g"), col(cCol).cast("long").as("c"))
-      .select(col("g").as(groupCol), col("c"),
-        round(least(col("c").cast("double"), lit(level)), 6).as("alloc"),
-        (col("c").cast("double") > lit(level)).cast("bigint").as("capped"))
+    (budget - below).toDouble / nAbove
   }
 
+  /** The md5 draw: each row's BIGINT rank within its `groupCol` group by
+    * md5 of its `idCol` string, ties to the lower id. The order every
+    * md5-rank sampler below draws in, and the one their DuckDB oracles
+    * replay.
+    */
+  def md5Rank(groupCol: String, idCol: String): Column =
+    row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(groupCol)
+        .orderBy(md5(col(idCol).cast("string")), col(idCol)))
+      .cast("bigint")
+
+  /** Deterministic uniform sample: keep the `k` rows with the smallest
+    * md5(id) per group. Hash-rank sampling is reproducible across engines
+    * and runs (unlike rand(seed), whose stream depends on partitioning),
+    * uniform for any id distribution, and one window pass per group —
+    * Spark plans it as WindowGroupLimit, so only k rows per group survive
+    * the shuffle. md5 (not xxhash64) keeps it DuckDB-replayable.
+    */
   def md5RankSample(df: DataFrame, groupCol: String, idCol: String,
-                    k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("rk", row_number().over(w).cast("bigint"))
+                    k: Int): DataFrame =
+    df.withColumn("rk", md5Rank(groupCol, idCol))
       .filter(col("rk") <= k)
-  }
 
   /** Temperature-flattened source mixing (the T knob of multilingual /
     * multi-source LM training, Conneau & Lample arXiv 1901.07291):
@@ -166,31 +180,31 @@ object Sampling {
     // __wm itself fits a Long for any per-group count below ~9e12 even
     // at T=1 (and far beyond at the T≥2 flattening this mix exists for).
     val dec = "DECIMAL(38,0)"
-    val head = weighted.agg(
-      coalesce(sum(col("__wm").cast(dec)), lit(0L).cast(dec)),
-      coalesce(sum(col(groupCol).isNull.cast("long")), lit(0L))).head()
-    val (wSum, nNull) = (head.getDecimal(0), head.getLong(1))
-    require(nNull == 0L, s"$groupCol keys must be non-null")
-    // wSum = 0 iff df is empty (every non-empty group has __wm ≥ 1e6):
-    // the alloc frame is empty then, so the divisor is never read — any
-    // non-zero value keeps the expression total instead of div-by-zero
-    val divisor = if (wSum.signum == 0) "1" else wSum.toPlainString
-    val alloc = weighted.select(col(groupCol),
-      least(col("__n"),
-        expr(s"CAST($budget AS $dec) * CAST(__wm AS $dec) " +
-          s"DIV CAST($divisor AS $dec)")).as("__alloc"))
-    // max over an empty alloc frame is NULL, not a row-less result:
-    // degrade to cutoff 0 (empty output with the contract schema)
-    val maxRow = alloc.agg(max(col("__alloc"))).head()
-    val maxAlloc = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     // the returned plan depends only on the alloc FRAME SHAPE and the
-    // scalar cutoff; release the cache now (waterfillAlloc pattern) and
-    // let the final query recompute the one cheap map-side-combine agg
-    weighted.unpersist()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(groupCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("rk", row_number().over(w).cast("bigint"))
+    // scalar cutoff; release the cache once both are known, or the input
+    // is refused (waterfillAlloc pattern), and let the final query
+    // recompute the one cheap map-side-combine agg
+    val (alloc, maxAlloc) = try {
+      val head = weighted.agg(
+        coalesce(sum(col("__wm").cast(dec)), lit(0L).cast(dec)),
+        coalesce(sum(col(groupCol).isNull.cast("long")), lit(0L))).head()
+      val (wSum, nNull) = (head.getDecimal(0), head.getLong(1))
+      require(nNull == 0L, s"$groupCol keys must be non-null")
+      // wSum = 0 iff df is empty (every non-empty group has __wm ≥ 1e6):
+      // the alloc frame is empty then, so the divisor is never read — any
+      // non-zero value keeps the expression total instead of div-by-zero
+      val divisor = if (wSum.signum == 0) "1" else wSum.toPlainString
+      val alloc = weighted.select(col(groupCol),
+        least(col("__n"),
+          expr(s"CAST($budget AS $dec) * CAST(__wm AS $dec) " +
+            s"DIV CAST($divisor AS $dec)")).as("__alloc"))
+      // max over an empty alloc frame is NULL, not a row-less result:
+      // degrade to cutoff 0 (empty output with the contract schema)
+      val maxRow = alloc.agg(max(col("__alloc"))).head()
+      val maxAlloc = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+      (alloc, maxAlloc)
+    } finally weighted.unpersist()
+    df.withColumn("rk", md5Rank(groupCol, idCol))
       .filter(col("rk") <= lit(maxAlloc)) // literal: WindowGroupLimit fires
       .join(alloc, groupCol)
       .filter(col("rk") <= col("__alloc"))
@@ -235,10 +249,7 @@ object Sampling {
     // scalable "rank without a single-partition window" shape.
     val idx = b.orderBy("__b").as[String].rdd.zipWithIndex()
       .toDF("__b", "__bi")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(bucketCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__rk", row_number().over(w).cast("bigint"))
+    df.withColumn("__rk", md5Rank(bucketCol, idCol))
       // join on the CAST key so a non-string bucket column can't smuggle
       // in a lossy numeric coercion of the compare; un-hinted — AQE
       // broadcasts the index frame when it is taxonomy-small
@@ -270,10 +281,7 @@ object Sampling {
     val minRow = df.groupBy(classCol).agg(count(lit(1)).as("__n"))
       .agg(min(col("__n"))).head()
     val nMin = if (minRow.isNullAt(0)) 0L else minRow.getLong(0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(classCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("rk", row_number().over(w).cast("bigint"))
+    df.withColumn("rk", md5Rank(classCol, idCol))
       .filter(col("rk") <= lit(nMin))
   }
 

@@ -78,6 +78,16 @@ class SamplingSpec extends AnyFunSuite {
     }
   }
 
+  test("waterfillAlloc: a budget of the whole total fails loudly and " +
+      "frees its cache") {
+    val groups = Seq(("a", 10L), ("b", 20L)).toDF("g", "c")
+    val before = GraftTestSpark.persistedRdds
+    val err = intercept[IllegalArgumentException](
+      Sampling.waterfillAlloc(groups, "g", "c", budgetFrac = 1.0))
+    assert(err.getMessage.contains("budget 30 must be < total 30"))
+    assert(GraftTestSpark.persistedRdds -- before == Set.empty[Int])
+  }
+
   test("classBalance: every class downsampled to exactly the minority " +
       "size, layout-stable") {
     val df = ((1L to 5L).map(i => (i, "a")) ++ (6L to 7L).map(i => (i, "b"))
@@ -118,6 +128,17 @@ class SamplingSpec extends AnyFunSuite {
       "id", budget = 200L, temperature = 2.0)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(again == kept.select("id").collect().map(_.getLong(0)).toSet)
+  }
+
+  test("temperatureMix: a null source fails loudly and frees its cache") {
+    val df = Seq((1L, Some("a")), (2L, Some("b")), (3L, None))
+      .toDF("id", "source")
+    val before = GraftTestSpark.persistedRdds
+    val err = intercept[IllegalArgumentException](
+      Sampling.temperatureMix(df, "source", "id",
+        budget = 2L, temperature = 2.0))
+    assert(err.getMessage.contains("source keys must be non-null"))
+    assert(GraftTestSpark.persistedRdds -- before == Set.empty[Int])
   }
 
   test("roundRobinInterleave: positions are unique and cycle buckets " +
