@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -20,21 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (callers filter empties — the engines disagree on whether '' splits
   * into [''] or [], the round-4 ADVICE edge).
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
+case class CharEntropy(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = DoubleType
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"CharEntropy needs string input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(s: Any): Any =
     CharEntropy.entropyNats(s.asInstanceOf[UTF8String])

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -20,34 +20,20 @@ import org.apache.spark.sql.types._
   * token-set encoding the near-dup verify stage merges. Null slots hash
   * to the seed, matching `xxhash64(null)`.
   */
-case class TokenHashSet(child: Expression) extends UnaryExpression {
+case class TokenHashSet(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"TokenHashSet needs array<string> input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    new GenericArrayData(TokenHashSet.hashSortDistinct(xs))
-  }
+  override def nullSafeEval(a: Any): Any =
+    TokenHashSet.hashSortDistinct(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.TokenHashSet.hashSortDistinct($a));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.TokenHashSet.hashSortDistinct($a)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenHashSet =
     copy(child = newChild)
@@ -55,7 +41,7 @@ case class TokenHashSet(child: Expression) extends UnaryExpression {
 
 object TokenHashSet {
   /** Hash every slot, sort, dedupe — shared by eval and generated code. */
-  def hashSortDistinct(xs: ArrayData): Array[Long] = {
+  def hashSortDistinct(xs: ArrayData): ArrayData = {
     val n = xs.numElements()
     val hs = new Array[Long](n)
     var i = 0
@@ -71,7 +57,7 @@ object TokenHashSet {
       if (w == 0 || hs(r) != hs(w - 1)) { hs(w) = hs(r); w += 1 }
       r += 1
     }
-    if (w == n) hs else java.util.Arrays.copyOf(hs, w)
+    new GenericArrayData(if (w == n) hs else java.util.Arrays.copyOf(hs, w))
   }
 }
 
@@ -82,46 +68,24 @@ object TokenHashSet {
   * minima. Empty sets yield null elements, like array_min of empty.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"MinHashSignature needs array<bigint> input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(LongType))
 
   private lazy val seeds: Array[Long] =
     Array.tabulate(numHashes)(k => XXH64.hashInt(k, 42L))
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](numHashes))
-    val sig = MinHashSignature.minima(xs, seeds)
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(a: Any): Any =
+    MinHashSignature.signature(a.asInstanceOf[ArrayData], seeds)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val seedsRef = ctx.addReferenceObj("mhSeeds", seeds, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |if ($a.numElements() == 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    new Object[${numHashes}]);
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    graft.functions.MinHashSignature.minima($a, $seedsRef));
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.MinHashSignature.signature($a, $seedsRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
@@ -130,15 +94,17 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 
 object MinHashSignature {
   /** All per-seed minima in one pass; shared by eval and generated code.
-    * Null slots are skipped — getLong on a null slot would read an
-    * undefined value and poison every minimum (TokenHashSet output never
-    * contains nulls, but the type check admits nullable arrays).
+    * An empty set gives all-null elements. Null slots are skipped —
+    * getLong on a null slot would read an undefined value and poison
+    * every minimum (TokenHashSet output never contains nulls, but the
+    * type check admits nullable arrays).
     */
-  def minima(xs: ArrayData, seeds: Array[Long]): Array[Long] = {
+  def signature(xs: ArrayData, seeds: Array[Long]): ArrayData = {
     val m = seeds.length
+    val n = xs.numElements()
+    if (n == 0) return new GenericArrayData(new Array[Any](m))
     val sig = new Array[Long](m)
     java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = xs.numElements()
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i)) {
@@ -152,7 +118,7 @@ object MinHashSignature {
       }
       i += 1
     }
-    sig
+    new GenericArrayData(sig)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   * input; the HOF form degrades to nulls through zip_with padding too).
   */
 case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   private val m = books.length
   private val k = books(0).length
@@ -44,29 +44,16 @@ case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
   // isNull slot for that branch
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"PqEncode needs array<double> input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(DoubleType))
 
   override def nullSafeEval(u: Any): Any =
     PqEncode.encode(u.asInstanceOf[ArrayData], flat, m, k, d)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pqBooks", flat, "double[]")
-    nullSafeCodeGen(ctx, ev, u => {
-      val out = ctx.freshName("codes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $out =
-         |  graft.functions.PqEncode.encode($u, $ref, $m, $k, $d);
-         |if ($out == null) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, u =>
+      s"""${ev.value} = graft.functions.PqEncode.encode($u, $ref, $m, $k, $d);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =

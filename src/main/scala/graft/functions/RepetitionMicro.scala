@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
@@ -22,21 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * concat_ws-identical slow path (split() never produces nulls; the
   * fallback keeps the expression total).
   */
-case class RepetitionMicro(child: Expression) extends UnaryExpression {
+case class RepetitionMicro(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"RepetitionMicro needs array<string> input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def nullSafeEval(a: Any): Any =
     RepetitionMicro.micro(a.asInstanceOf[ArrayData])

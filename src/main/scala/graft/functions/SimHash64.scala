@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd 64-bit SimHash over a token array: one pass hashing each
   * token (the same XXH64(seed=42) as SQL `xxhash64`) and accumulating all
@@ -25,31 +23,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokenization never produces null slots, so these only matter for
   * direct callers with hand-built arrays.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = LongType
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"SimHash64 needs array<string> input, got ${other.simpleString}")
-    }
+  override def inputTypes = Seq(ArrayType(StringType))
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    SimHash64.signature(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.SimHash64.signature($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  /** The 64-counter majority of both evaluation paths. */
+  def signature(xs: ArrayData): Long = {
     val n = xs.numElements()
     val cnt = new Array[Int](64)
     var i = 0
     while (i < n) {
       if (!xs.isNullAt(i)) {
-        val s = xs.getUTF8String(i)
-        val h = XXH64.hashUTF8String(s, 42L)
+        val h = XXH64.hashUTF8String(xs.getUTF8String(i), 42L)
         var b = 0
         while (b < 64) {
           cnt(b) += ((h >>> b) & 1L).toInt
@@ -66,35 +66,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i"); val b = ctx.freshName("b")
-      val s = ctx.freshName("s"); val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $cnt = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    long $h = org.apache.spark.sql.catalyst.expressions.XXH64
-         |      .hashUTF8String($a.getUTF8String($i), 42L);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      $cnt[$b] += (int) (($h >>> $b) & 1L);
-         |    }
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($cnt[$b] * 2L > $n) $sig |= (1L << $b);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }
 
 object TextHash {

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -19,33 +19,36 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * `array_sort(array_distinct(transform(toks, xxhash64)))`).
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def dataType: DataType = IntegerType
 
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"SortedIntersectCount needs array<bigint> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
+  override def inputTypes =
+    Seq.fill(2)(ArrayType(LongType))
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.merge(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.SortedIntersectCount.merge($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  /** The merge of both evaluation paths. array_sort places null elements
+    * last, so the first null ends the merge; null slots never count as
+    * matches (getLong on a null slot would otherwise read an undefined 0).
+    */
+  def merge(xs: ArrayData, ys: ArrayData): Int = {
     val nx = xs.numElements()
     val ny = ys.numElements()
     var i = 0; var j = 0; var c = 0
-    // array_sort places null elements last, so the first null ends the
-    // merge; null slots never count as matches (getLong on a null slot
-    // would otherwise read an undefined 0)
     while (i < nx && j < ny && !xs.isNullAt(i) && !ys.isNullAt(j)) {
       val x = xs.getLong(i)
       val y = ys.getLong(j)
@@ -55,32 +58,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $nx && $j < $ny &&
-         |       !$a.isNullAt($i) && !$b.isNullAt($j)) {
-         |  long $x = $a.getLong($i);
-         |  long $y = $b.getLong($j);
-         |  if ($x == $y) { $c++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
 }
 
 object SetMath {

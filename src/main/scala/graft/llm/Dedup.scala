@@ -95,6 +95,16 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
   }
 
+  /** Band `b`'s key `band{b}` over its `slice` of signature or
+    * projection slots: `xxhash64(lit(b), slice…)`, or null when any slot
+    * is null. xxhash64 skips null children, which would collapse every
+    * row with a null slot into ONE bucket (silent N² candidate blowup);
+    * null band keys never equi-join instead.
+    */
+  private[llm] def bandKey(b: Int, slice: Seq[Column]): Column =
+    when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
+      .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
+
   /** One row per (document, band): every column of `withBands` — which
     * carries all band keys `band0`…`band{bands-1}` — plus the exploded
     * `band_idx`/`band_key` that [[firstBandJoin]] buckets on.
@@ -229,15 +239,9 @@ object Dedup {
     val sigs = toks.select(col("id"), size(col("hset")).as("n"),
       graft.functions.HashFamily.minhashSignature(col("hset"), MinhashHashes)
         .as("sig"))
-    val bandCols = (0 until MinhashBands).map { b =>
-      val slice = (b * r until (b + 1) * r).map(i => element_at(col("sig"), i + 1))
-      // null text → null signature; xxhash64 skips null children, which
-      // would collapse every null-text doc into ONE bucket (silent N²
-      // candidate blowup). Null band keys never equi-join instead — same
-      // guard as Similarity.lshCosinePairs.
-      when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
-        .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
-    }
+    // null text → null signature → null band keys
+    val bandCols = (0 until MinhashBands).map(b =>
+      bandKey(b, (b * r until (b + 1) * r).map(i => element_at(col("sig"), i + 1))))
     explodeBands(sigs.select(col("id") +: col("n") +: bandCols: _*),
       MinhashBands)
   }

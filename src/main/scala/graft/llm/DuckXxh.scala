@@ -198,6 +198,22 @@ private[llm] object DuckXxh {
     bind(h1, "hl")(avalanche)
   }
 
+  /** A signed Spark long's UBIGINT bit pattern, as a literal value. */
+  def unsigned(l: Long): BigInt = (BigInt(l) + M64).mod(M64)
+
+  /** Band `b`'s key over its signed BIGINT `slots`: Spark's multi-child
+    * `xxhash64(lit(b), slots…)` ([[Dedup.bandKey]]), which CHAINS — each
+    * child's hash becomes the next child's seed, starting from
+    * `hashInt(b, 42)` (a constant here). Returns an UBIGINT expression.
+    */
+  def bandKey(b: Int, slots: Seq[String]): String = {
+    val init = unsigned(
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, 42L))
+    slots.foldLeft(s"CAST($init AS UBIGINT)") { (seedE, slot) =>
+      xxh64Long(toUnsigned(slot), seedE)
+    }
+  }
+
   // ---- Murmur3_x86_32, Spark's variant (`Murmur3_x86_32.hashUnsafeBytes`:
   // 4-byte LE words, then each remaining TAIL byte mixed individually as a
   // SIGNED int — not the standard murmur3 tail). Feeds the CountMinSketch

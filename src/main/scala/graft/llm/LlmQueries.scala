@@ -854,19 +854,13 @@ object LlmQueries {
     val (numHashes, bands) = (Dedup.MinhashHashes, Dedup.MinhashBands)
     val r = numHashes / bands
     val sxxh = DuckXxh.toSigned(DuckXxh.xxh64("t"))
-    def unsigned(l: Long): BigInt = (BigInt(l) + (BigInt(1) << 64)).mod(BigInt(1) << 64)
     // the 24 per-signature seeds, from Spark's own hashInt — embedded as
     // a literal UBIGINT list indexed by the permutation number
-    val seedList = (0 until numHashes).map(k => unsigned(
+    val seedList = (0 until numHashes).map(k => DuckXxh.unsigned(
       org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(k, 42L)))
       .mkString("[", ", ", "]")
-    def keyExpr(b: Int): String = {
-      val init = unsigned(
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, 42L))
-      (0 until r).foldLeft(s"CAST($init AS UBIGINT)") { (seedE, i) =>
-        DuckXxh.xxh64Long(DuckXxh.toUnsigned(s"sig[${b * r + i + 1}]"), seedE)
-      }
-    }
+    def keyExpr(b: Int): String =
+      DuckXxh.bandKey(b, (0 until r).map(i => s"sig[${b * r + i + 1}]"))
     val bandRows = (0 until bands).map(b =>
       s"SELECT doc_id, $b AS bi, k$b AS bk FROM keyed").mkString(
       "\nUNION ALL ")
@@ -950,21 +944,14 @@ object LlmQueries {
     val (dim, bucketLength) = (OracleEmbeddingDim, Similarity.LshBucketLength)
     val rng = new scala.util.Random(42L)
     val projections = Array.fill(bands * rowsPerBand, dim)(rng.nextGaussian())
-    def unsigned(l: Long): BigInt =
-      (BigInt(l) + (BigInt(1) << 64)).mod(BigInt(1) << 64)
     val bCols = projections.zipWithIndex.map { case (g, i) =>
       val lit = g.map(java.lang.Double.toString).mkString("[", ", ", "]")
       s"CAST(floor(list_sum(list_transform(range(1, ${dim + 1}), " +
         s"li -> u[li] * CAST($lit AS DOUBLE[])[li])) / $bucketLength) " +
         s"AS BIGINT) AS pb$i"
     }
-    def keyExpr(b: Int): String = {
-      val init = unsigned(
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(b, 42L))
-      (0 until rowsPerBand).foldLeft(s"CAST($init AS UBIGINT)") { (seedE, i) =>
-        DuckXxh.xxh64Long(DuckXxh.toUnsigned(s"pb${b * rowsPerBand + i}"), seedE)
-      }
-    }
+    def keyExpr(b: Int): String =
+      DuckXxh.bandKey(b, (0 until rowsPerBand).map(i => s"pb${b * rowsPerBand + i}"))
     val bandRows = (0 until bands).map(b =>
       s"SELECT id, $b AS bi, k$b AS bk FROM keyed").mkString("\nUNION ALL ")
     s"""WITH ue AS MATERIALIZED (

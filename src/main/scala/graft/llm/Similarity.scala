@@ -692,15 +692,9 @@ object Similarity {
         .cast("long").as(s"b$i")
     }
     val bucketed = unit.select(col("id") +: col("u") +: bucketCols.toSeq: _*)
-    val bandCols = (0 until bands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => col(s"b$i"))
-      // a vector shorter than `d` zip_withs to null projections;
-      // xxhash64 skips null children, which would collapse EVERY row into
-      // one bucket (silent N²). Null band keys never equi-join instead.
-      when(slice.map(_.isNull).reduce(_ || _), lit(null).cast("long"))
-        .otherwise(xxhash64((lit(b) +: slice): _*)).as(s"band$b")
-    }
+    // a malformed vector's null projections give null band keys
+    val bandCols = (0 until bands).map(b => Dedup.bandKey(b,
+      (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"b$i"))))
     // every row carries ALL band keys, so Dedup.firstBandJoin can emit a
     // pair agreeing on k bands once, not k times
     val buckets = Dedup.explodeBands(

@@ -11,8 +11,7 @@ import graft.Tables.dec
   *
   * Exact-decimal sums keep the encoding deterministic under any
   * partitioning (same contract as the money aggregates); one aggregation
-  * pass + a broadcast-sized join back, so it scales with category count,
-  * not row count.
+  * pass, so the table scales with category count, not row count.
   */
 object TargetEncode {
 
@@ -35,16 +34,5 @@ object TargetEncode {
       .select(col(catCol), col("n"),
         round((col("s_dec").cast("double") + lit(m) * col("gmean")) /
           (col("n") + lit(m)), 6).as("enc"))
-  }
-
-  /** Attach the encoded column to the frame. Null-safe join (`<=>`) so
-    * null categories keep their rows and get the null-category encoding —
-    * a plain equi-join would silently drop every null-category row.
-    */
-  def transform(df: DataFrame, catCol: String, targetCol: String,
-                m: Double, outCol: String): DataFrame = {
-    val enc = broadcast(encodingTable(df, catCol, targetCol, m)
-      .select(col(catCol).as("__cat"), col("enc").as(outCol)))
-    df.join(enc, df(catCol) <=> enc("__cat"), "left").drop("__cat")
   }
 }

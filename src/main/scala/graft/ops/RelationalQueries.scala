@@ -237,38 +237,24 @@ object RelationalQueries {
       .agg(sum(col("value")).cast("double").as("total"))
       .orderBy("l_returnflag", "metric")
 
-  /** Scratch dir for sink round-trips: unique per JVM so concurrent
-    * sessions (Bench + Verify, parallel CI) never overwrite each other's
-    * directory mid-read.
+  /** Scratch root for sink round-trips: one fresh temp dir per JVM, so
+    * concurrent sessions (Bench + Verify, parallel CI) never overwrite
+    * each other's files mid-read, and one shutdown hook removes it with
+    * everything the round-trips wrote. Each (kind, dir) pair gets its own
+    * subpath, so two scale factors never share a directory.
     */
-  private lazy val roundtripToken =
-    java.util.UUID.randomUUID().toString.take(8)
-  // every scratch dir this JVM creates is deleted on exit — without the
-  // hook each harness/bench run would leave fresh UUID-named orphans
-  // under tmpdir forever (the UUID that prevents cross-process clobbering
-  // also defeats overwrite-based reuse)
-  private val scratchDirs =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-  private lazy val cleanupHook: Unit = {
-    sys.addShutdownHook {
-      scratchDirs.forEach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(p))
-      }
+  private lazy val roundtripRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_roundtrip_")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
     }
-    ()
+    sys.addShutdownHook(rm(root.toFile))
+    root
   }
-  private def roundtripPath(kind: String, dir: String): String = {
-    cleanupHook
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${kind}_${roundtripToken}_" +
-        dir.replaceAll("[^a-zA-Z0-9]", "_")).toString
-    scratchDirs.add(path)
-    path
-  }
+  private def roundtripPath(kind: String, dir: String): String =
+    roundtripRoot.resolve(s"${kind}_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
+      .toString
 
   /** S1 as a harness query: the orders table written to CSV (header) and
     * read back through the explicit-schema scan, then aggregated — the

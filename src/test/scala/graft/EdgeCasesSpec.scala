@@ -116,6 +116,97 @@ class EdgeCasesSpec extends AnyFunSuite {
         .exists(_.contains("equal length, got 3 and 1"))))
   }
 
+  test("every custom expression gives the same result interpreted and " +
+      "generated") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions._
+    def arr(t: DataType, xs: Any*) = Literal.create(xs, ArrayType(t))
+    def nul(t: DataType) = Literal.create(null, ArrayType(t))
+    def strs(xs: String*) = arr(StringType, xs: _*)
+    def longs(xs: java.lang.Long*) = arr(LongType, xs: _*)
+    val (f, d) = (FloatType, DoubleType)
+    val books = Array(Array(Array(0.0, 0.0), Array(1.0, 1.0)),
+      Array(Array(0.0, 1.0), Array(1.0, 0.0)))
+    val malformed = UTF8String.fromBytes(
+      Array(0x61, 0x80, 0xC3, 0xA9, 0xE2, 0x82).map(_.toByte))
+    // (expression, the value both paths must give; None: they must agree)
+    val cases: Seq[(Expression, Option[Any])] = Seq(
+      DotProduct(arr(f, 1f, 2f), arr(f, 3f, 4f)) -> Some(11.0),
+      DotProduct(arr(f, 0.1f, 2f), arr(d, 3.0, 0.7)) -> Some(0.1f * 3.0 + 2.0 * 0.7),
+      DotProduct(arr(d, 0.5, 0.25), arr(f, 2f, 4f)) -> Some(2.0),
+      DotProduct(arr(d, 0.1, 0.2), arr(d, 0.3, 0.4)) -> Some(0.1 * 0.3 + 0.2 * 0.4),
+      DotProduct(arr(f), arr(d)) -> Some(0.0),
+      DotProduct(arr(f, 1f, null), arr(f, 2f, 3f)) -> None,
+      DotProduct(nul(f), arr(f, 1f)) -> Some(null),
+      SortedIntersectCount(longs(1L, 2L, 3L), longs(2L, 3L, 4L)) -> Some(2),
+      SortedIntersectCount(longs(), longs(1L)) -> Some(0),
+      SortedIntersectCount(longs(1L, null), longs(1L, null)) -> Some(1),
+      SortedIntersectCount(longs(1L), nul(LongType)) -> Some(null),
+      SimHash64(strs("a", "b", "c")) -> None,
+      SimHash64(strs()) -> Some(0L),
+      SimHash64(strs("a", null, "a")) -> None,
+      SimHash64(nul(StringType)) -> Some(null),
+      TokenHashSet(strs("b", "a", "b")) -> None,
+      TokenHashSet(strs()) -> Some(Seq()),
+      TokenHashSet(strs("a", null)) -> None,
+      TokenHashSet(nul(StringType)) -> Some(null),
+      MinHashSignature(longs(1L, 2L, 3L), 4) -> None,
+      MinHashSignature(longs(), 4) -> Some(Seq(null, null, null, null)),
+      MinHashSignature(longs(5L, null), 4) -> None,
+      MinHashSignature(nul(LongType), 4) -> Some(null),
+      CharEntropy(Literal("aab")) -> None,
+      CharEntropy(Literal("")) -> Some(0.0),
+      CharEntropy(Literal(malformed, StringType)) -> None,
+      CharEntropy(Literal.create(null, StringType)) -> Some(null),
+      RepetitionMicro(strs("a", "b", "c", "a", "b", "c")) -> Some(250000L),
+      RepetitionMicro(strs()) -> Some(0L),
+      RepetitionMicro(strs("a", null, "a", "a", null, "a")) -> None,
+      RepetitionMicro(nul(StringType)) -> Some(null),
+      PqEncode(arr(d, 0.9, 0.8, 0.1, 0.9), books) -> Some(Seq(1, 0)),
+      PqEncode(arr(d, 1.0), books) -> Some(null),
+      PqEncode(arr(d), books) -> Some(null),
+      PqEncode(nul(d), books) -> Some(null))
+    val checked = scala.collection.mutable.Set[String]()
+    for ((e, want) <- cases) {
+      val interpreted = convertToScala(e.eval(), e.dataType)
+      val generated = convertToScala(GenerateUnsafeProjection.generate(Seq(e))
+        .apply(InternalRow.empty).get(0, e.dataType), e.dataType)
+      assert(interpreted == generated, e)
+      want.foreach(w => assert(interpreted == w, e))
+      checked += e.nodeName
+    }
+    assert(checked == Set("DotProduct", "SortedIntersectCount", "SimHash64",
+      "TokenHashSet", "MinHashSignature", "CharEntropy", "RepetitionMicro",
+      "PqEncode"))
+  }
+
+  test("every custom expression refuses a wrong-typed input at analysis") {
+    import graft.functions._
+    val df = Seq((1, "x")).toDF("i", "s")
+    val books = Array(Array(Array(0.0)))
+    val ints = array($"i")
+    val wrong = Seq(
+      ArrayMath.dot(ints, array($"i".cast("double"))),
+      ArrayMath.dot(array($"i".cast("float")), ints),
+      SetMath.sortedIntersectCount(ints, array($"i".cast("long"))),
+      SetMath.sortedIntersectCount(array($"i".cast("long")), array($"s")),
+      TextHash.simhash64($"s"),
+      HashFamily.tokenHashSet(ints),
+      HashFamily.minhashSignature(array($"s"), 4),
+      CharEntropy.charEntropy(ints),
+      RepetitionMicro.repetitionMicro($"s"),
+      PqEncode.pqEncode(array($"i".cast("float")), books))
+    for (c <- wrong) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
+    }
+  }
+
   test("DotProduct propagates null inputs as null") {
     val df = Seq((Some(Array(1.0f)), Option.empty[Array[Float]]))
       .toDF("a", "b").select(graft.functions.ArrayMath.dot($"a", $"b"))
@@ -142,15 +233,6 @@ class EdgeCasesSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(m(("x", "x")) == 1.0)
     assert(m(("x", "const")).isNaN)
-  }
-
-  test("target encoding keeps null-category rows") {
-    val df = Seq((Some("a"), 1.0), (Some("a"), 3.0), (None, 10.0))
-      .toDF("cat", "y")
-    val out = graft.ml.TargetEncode.transform(df, "cat", "y", m = 0.0, "enc")
-    assert(out.count() == 3)
-    val nullRow = out.filter($"cat".isNull).head()
-    assert(nullRow.getDouble(nullRow.fieldIndex("enc")) == 10.0)
   }
 
   test("asofJoin returns the newest matching row even when its value is null") {

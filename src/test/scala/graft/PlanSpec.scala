@@ -93,6 +93,24 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val sp = plan(si)
     assert(sp.contains("*(1) Project") && sp.contains("sortedintersectcount"),
       sp)
+    val toks = split(col("text"), " ")
+    val docs = Tables.table(spark, sf, "documents")
+    val books = Array(Array(Array(0.0), Array(1.0)))
+    for ((df, name) <- Seq(
+        docs.select(graft.functions.TextHash.simhash64(toks)) -> "simhash64",
+        docs.select(graft.functions.HashFamily.tokenHashSet(toks)) -> "tokenhashset",
+        docs.select(graft.functions.HashFamily.minhashSignature(
+          graft.functions.HashFamily.tokenHashSet(toks), 4)) -> "minhashsignature",
+        docs.select(graft.functions.CharEntropy.charEntropy(col("text"))) ->
+          "charentropy",
+        docs.select(graft.functions.RepetitionMicro.repetitionMicro(toks)) ->
+          "repetitionmicro",
+        emb.select(graft.functions.PqEncode.pqEncode(
+          slice(col("embedding"), 1, 1).cast("array<double>"), books)) ->
+          "pqencode")) {
+      val p = plan(df)
+      assert(p.contains("*(1) Project") && p.contains(name), p)
+    }
   }
 
   test("exact dedup shuffles 16-byte fingerprints, not document text") {

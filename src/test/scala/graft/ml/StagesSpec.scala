@@ -48,5 +48,13 @@ class StagesSpec extends AnyFunSuite {
     // common (n=4, mean 25) stays closer to its own mean
     assert(math.abs(enc("common") - (100.0 + 5 * gmean) / 9.0) < 1e-6)
     assert(math.abs(enc("rare") - gmean) < math.abs(100.0 - gmean))
+    // a null category is a category of its own: one row, and at m = 0
+    // its encoding is its own mean
+    val withNull = Seq((Some("a"), 1.0), (Some("a"), 3.0), (None, 10.0))
+      .toDF("cat", "y")
+    val rows = TargetEncode.encodingTable(withNull, "cat", "y", m = 0.0)
+      .collect()
+    assert(rows.length == 2)
+    assert(rows.filter(_.isNullAt(0)).map(_.getDouble(2)).toSeq == Seq(10.0))
   }
 }
