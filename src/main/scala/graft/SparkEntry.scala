@@ -37,9 +37,12 @@ object SparkEntry {
     defs
   }
 
-  /** Each query's builder, by name. */
+  /** Each query's builder, by name. A build runs in a
+    * [[Checkpoints.scoped]] block: it frees every checkpoint the returned
+    * frame does not read, and hands the rest to the caller. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(d => d.name -> d.build).toMap
+    registry.map(d => d.name -> ((spark: SparkSession, sfDir: String) =>
+      Checkpoints.scoped(_ => d.build(spark, sfDir)))).toMap
 
   /** Refuses, naming each, any name that is not a key of [[queries]]: a
     * typo in a dev main's query subset must fail before a session starts,
@@ -50,11 +53,14 @@ object SparkEntry {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
   }
 
-  /** Builds query `name` over `sfDir` into `sink`, then frees every
-    * checkpoint the query made (no query reads another's), returned or
-    * thrown: a main holds no storage for its finished queries. */
-  def run[A](spark: SparkSession, name: String, sfDir: String)(sink: DataFrame => A): A =
-    Checkpoints.sweep(spark)(sink(queries(name)(spark, sfDir)))
+  /** Builds query `name` over `sfDir` into `sink`, then frees the
+    * checkpoints its frame reads, returned or thrown: the build already
+    * freed the others, so a main holds no storage for its finished
+    * queries. Checkpoints that other threads take meanwhile are theirs. */
+  def run[A](spark: SparkSession, name: String, sfDir: String)(sink: DataFrame => A): A = {
+    val df = queries(name)(spark, sfDir)
+    try sink(df) finally Checkpoints.release(df)
+  }
 
   /** [[run]] into the `noop` sink: every row evaluated, none written. */
   def runToNoop(spark: SparkSession, name: String, sfDir: String): Unit =

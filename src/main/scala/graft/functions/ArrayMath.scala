@@ -18,10 +18,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * expression runs a primitive loop — no allocation, stays inside
   * whole-stage codegen.
   *
-  * Both vectors must have the same length: a ragged pair fails with both
-  * lengths in the message, on the interpreted and the generated path
-  * alike, instead of folding the shorter prefix into a number that looks
-  * like a similarity.
+  * Both vectors must have the same length and no null element: a ragged
+  * pair fails with both lengths in the message, a null element with its
+  * index, on the interpreted and the generated path alike, instead of
+  * folding the shorter prefix, or a null read as 0.0, into a number that
+  * looks like a similarity.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -58,6 +59,7 @@ object DotProduct {
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (xs.isNullAt(i) || ys.isNullAt(i)) throw nullElement(i)
       val x = if (xf) xs.getFloat(i).toDouble else xs.getDouble(i)
       val y = if (yf) ys.getFloat(i).toDouble else ys.getDouble(i)
       acc += x * y
@@ -69,6 +71,10 @@ object DotProduct {
   def ragged(left: Int, right: Int): IllegalArgumentException =
     new IllegalArgumentException(
       s"DotProduct needs vectors of equal length, got $left and $right")
+
+  def nullElement(i: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"DotProduct needs vectors without null elements, got one at index $i")
 }
 
 object ArrayMath {

@@ -81,10 +81,10 @@ object CorpusQueries {
     * they're transcendental).
     */
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame = {
-    // materialized once (round-21): the LM aggregate and the per-doc
-    // score join both read `tok` (differently-pruned, no exchange reuse)
-    val tok = TextStats.tokenRows(table(spark, dir, "documents"), "doc_id")
-      .localCheckpoint()
+    // the LM aggregate and the per-doc score join both read `tok`, through
+    // differently-pruned subtrees that exchange reuse cannot share
+    val tok = Checkpoints.checkpoint(
+      TextStats.tokenRows(table(spark, dir, "documents"), "doc_id"))
     val freq = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
     val tot = freq.agg(sum(col("cnt")).as("total"))
     val lp = freq.crossJoin(broadcast(tot))
@@ -112,16 +112,14 @@ object CorpusQueries {
     * 20 here, never data-scale).
     */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    // materialized once (round-21): the per-source totals and the shared-
-    // gram fan-out both read the distinct (source, gram) set; their
-    // pruned subtrees differ, so the lazy form re-ran the whole
-    // tokenize+shingle+distinct chain per consumer
-    val sg = TextStats.explodeNonNull(
+    // the per-source totals and the shared-gram fan-out both read the
+    // distinct (source, gram) set, through differently-pruned subtrees
+    // that exchange reuse cannot share
+    val sg = Checkpoints.checkpoint(TextStats.explodeNonNull(
         table(spark, dir, "documents").select(col("source"),
           TextStats.shingles(TextStats.tokens(col("text")), 3).as("__raw")),
         Seq(col("source")), col("__raw"), "g")
-      .select("source", "g").distinct()
-      .localCheckpoint()
+      .select("source", "g").distinct())
     val tot = sg.groupBy("source").agg(count(lit(1)).as("tot"))
     // no array_sort on the set: the order is immediately destroyed by the
     // double explode + src_a < src_b filter, so sorting every gram's
@@ -237,11 +235,10 @@ object CorpusQueries {
       .select(col("doc_id"),
         TextStats.shingles(TextStats.tokens(col("text")), 3).as("__raw"))
       .select(col("doc_id"), array_distinct(col("__raw")).as("__sh"))
-    // materialized once (round-21): the df aggregate and the join probe
-    // read `ex` through differently-pruned subtrees (no exchange reuse),
-    // so the lazy form re-ran tokenize+shingle per consumer
-    val ex = TextStats.explodeNonNull(sh, Seq(col("doc_id")), col("__sh"), "g")
-      .localCheckpoint()
+    // the df aggregate and the join probe read `ex` through
+    // differently-pruned subtrees that exchange reuse cannot share
+    val ex = Checkpoints.checkpoint(
+      TextStats.explodeNonNull(sh, Seq(col("doc_id")), col("__sh"), "g"))
     // Measured adjudication (this corpus, sf0.1): the df>1 semi-join
     // prune that pays off in dup_spans LOSES here — tot needs every
     // posting row anyway, so the "pruned" variant adds a second
@@ -286,18 +283,17 @@ object CorpusQueries {
     val docs = table(spark, dir, "documents")
     val sh = docs.select(col("doc_id"),
       TextStats.shingles(TextStats.tokens(col("text")), 3).as("__sh"))
-    // 1-based start positions to match the oracle's range(1, len-1)
-    // materialized once (round-21): `pos` feeds the cross-doc df
-    // aggregate AND the dup-occurrence join (differently-pruned subtrees,
-    // no exchange reuse) — the lazy form tokenized+shingled the corpus
-    // twice per run
+    // 1-based start positions to match the oracle's range(1, len-1).
+    // `pos` is read by the cross-doc df aggregate and the dup-occurrence
+    // join, through differently-pruned subtrees that exchange reuse
+    // cannot share.
     // the positional form of TextStats.explodeNonNull (see there for why
     // _outer), written out because it also needs the position column
-    val pos = sh.select(col("doc_id"), posexplode_outer(col("__sh")))
-      .filter(col("col").isNotNull)
-      .select(col("doc_id"), (col("pos") + 1).cast("bigint").as("sp"),
-        col("col").as("g"))
-      .localCheckpoint()
+    val pos = Checkpoints.checkpoint(
+      sh.select(col("doc_id"), posexplode_outer(col("__sh")))
+        .filter(col("col").isNotNull)
+        .select(col("doc_id"), (col("pos") + 1).cast("bigint").as("sp"),
+          col("col").as("g")))
     // "appears in ≥2 distinct docs" ⟺ min(doc_id) ≠ max(doc_id) over the
     // raw occurrence rows — one partially-aggregated exchange of (g, 2
     // longs) instead of the former distinct-pairs shuffle PLUS a second
@@ -565,14 +561,12 @@ object CorpusQueries {
     val docs = table(spark, dir, "documents")
     val bg = docs.select(col("doc_id"),
       TextStats.shingles(TextStats.tokens(col("text")), 2).as("__bg"))
-    // materialize the positional posting rows once (round-21): `ex` is
-    // read by the bigram-frequency aggregate AND the final per-doc score
-    // join, whose differently-pruned subtrees defeat ReuseExchange — the
-    // lazy form re-ran tokenize+shingle per consumer (3 corpus scans,
-    // plan-counted). The (doc, gram) posting list is the standard
+    // the posting rows `ex` are read by the bigram-frequency aggregate
+    // and the final per-doc score join, whose differently-pruned subtrees
+    // defeat ReuseExchange. The (doc, gram) posting list is the standard
     // materialized artifact at corpus scale (the sourceKl call).
-    val ex = TextStats.explodeNonNull(bg, Seq(col("doc_id")), col("__bg"), "g")
-      .localCheckpoint()
+    val ex = Checkpoints.checkpoint(
+      TextStats.explodeNonNull(bg, Seq(col("doc_id")), col("__bg"), "g"))
     val freq = ex.groupBy("g").agg(count(lit(1)).as("cnt"))
     val prefixTot = freq
       .groupBy(substring_index(col("g"), " ", 1).as("w1"))
@@ -690,7 +684,7 @@ object CorpusQueries {
     // seg_0: every code point wrapped <U+0001>·<U+0002> (regex, not split —
     // Spark's split(tok, '') keeps a trailing '' under its limit=-1
     // semantics, which would fabricate an empty symbol)
-    var seg = s.checkpoint(vocab.select(col("c"),
+    var seg = Checkpoints.checkpoint(vocab.select(col("c"),
         regexp_replace(col("token"), "(?s)(.)", segS + "$1" + segE).as("seg")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var r = 1
@@ -713,7 +707,7 @@ object CorpusQueries {
         val (l, rr, cnt) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r.toLong, l, rr, cnt))
-        val next = s.checkpoint(seg.withColumn("seg", replace(col("seg"),
+        val next = Checkpoints.checkpoint(seg.withColumn("seg", replace(col("seg"),
             lit(segS + l + segE + segS + rr + segE),
             lit(segS + l + rr + segE))))
         s.release(seg)
@@ -863,12 +857,11 @@ object CorpusQueries {
     val tok = TextStats.explodeNonNull(
       docs.select(col("doc_id"), TextStats.tokens(col("text")).as("__toks")),
       Seq.empty, col("__toks"), "token")
-    // materialize the unigram aggregate (round-21): it feeds the grand
-    // total and TWO w1/w2 joins whose exchange keys differ, so the lazy
-    // form re-tokenized the corpus once per consumer. Vocabulary-sized —
-    // the sourceKl storage-for-passes call.
-    val uni = tok.groupBy("token").agg(count(lit(1)).as("uc"))
-      .localCheckpoint()
+    // the unigram aggregate is read by the grand total and the two w1/w2
+    // joins, whose exchange keys differ. Vocabulary-sized — the sourceKl
+    // storage-for-passes call.
+    val uni = Checkpoints.checkpoint(
+      tok.groupBy("token").agg(count(lit(1)).as("uc")))
     val uniTot = uni.agg(sum(col("uc")).as("utot"))
     val bg = TextStats.explodeNonNull(
       docs.select(col("doc_id"),
@@ -879,8 +872,9 @@ object CorpusQueries {
     // corpus-wide tokenize+shingle+explode scan — `bg.agg(count)` has no
     // common exchange subtree and would run the whole chain a second time
     // (the unigramLogprob pattern, already applied to uni/uniTot above)
-    val bigAll = bg.groupBy("g").agg(count(lit(1)).as("bc"))
-      .localCheckpoint() // round-21: feeds the threshold filter AND btot
+    // the bigram aggregate is read by the threshold filter and btot
+    val bigAll = Checkpoints.checkpoint(
+      bg.groupBy("g").agg(count(lit(1)).as("bc")))
     val big = bigAll.filter(col("bc") >= minCount)
     val bigTot = bigAll.agg(coalesce(sum(col("bc")), lit(0L)).as("btot"))
     // the unigram-count side is token-keyed — vocabulary-sized, Heaps-law
@@ -959,16 +953,15 @@ object CorpusQueries {
     * Round-6: transcendental, can't tie at .5e-6.
     */
   def sourceKl(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint the (source, token) aggregate: THREE consumers read
-    // it (marginal, per-source totals, the join probe), and column
-    // pruning makes their subtrees differ — so exchange reuse can't dedup
-    // them and the un-checkpointed plan re-tokenizes the corpus once per
-    // consumer (4 full scans). Materializing one vocab×sources frame
-    // trades bounded executor storage for three corpus passes — the same
-    // call Graph.pageRank/Dedup.connectedComponents make.
-    val st = TextStats.tokenRows(table(spark, dir, "documents"), "source")
-      .groupBy("source", "token").agg(count(lit(1)).as("c_st"))
-      .localCheckpoint()
+    // the (source, token) aggregate is read by the marginal, the
+    // per-source totals and the join probe, through subtrees that column
+    // pruning makes differ, so exchange reuse cannot share them. One
+    // vocab×sources frame trades bounded executor storage for three
+    // corpus passes — the same call Graph.pageRank and
+    // Dedup.connectedComponents make.
+    val st = Checkpoints.checkpoint(
+      TextStats.tokenRows(table(spark, dir, "documents"), "source")
+        .groupBy("source", "token").agg(count(lit(1)).as("c_st")))
     val ct = st.groupBy("token").agg(sum(col("c_st")).as("c_t"))
     val ns = st.groupBy("source").agg(sum(col("c_st")).as("n_s"))
     val n = ns.agg(sum(col("n_s")).as("n"))

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.QueryDef
+import graft.{Checkpoints, QueryDef}
 import graft.Tables.table
 
 /** Corpus-curation operators a production pretraining pipeline runs after
@@ -138,15 +138,12 @@ object Curation {
   def importanceWeights(spark: SparkSession, dir: String): DataFrame = {
     val tok = TextStats.tokenRows(table(spark, dir, "documents"),
       "doc_id", "source")
-    // ONE corpus tokenize pass feeds every LM input: checkpoint the
-    // (source, token) aggregate (the sourceKl pattern) and derive
-    // cfreq / tfreq / t_tot from it. The direct form ran the
-    // scan+split+explode chain four times — cfreq, tfreq, the t_tot
-    // probe, and scored — because their differing pushed filters defeat
-    // ReuseExchange. All derived values are exact integer counts, so the
-    // restructure is value-identical.
-    val st = tok.groupBy("source", "token")
-      .agg(count(lit(1)).as("cnt")).localCheckpoint()
+    // ONE corpus tokenize pass feeds every LM input: the (source, token)
+    // aggregate (the sourceKl pattern) is read by cfreq, tfreq, the t_tot
+    // probe and the scoring join, whose differing pushed filters defeat
+    // ReuseExchange. All derived values are exact integer counts.
+    val st = Checkpoints.checkpoint(tok.groupBy("source", "token")
+      .agg(count(lit(1)).as("cnt")))
     val cfreq = st.groupBy("token").agg(sum(col("cnt")).as("c_cnt"))
     val tfreq = st.filter(col("source") === importanceTarget)
       .groupBy("token").agg(sum(col("cnt")).as("t_cnt"))

@@ -62,20 +62,18 @@ object Dedup {
     * unusually high median similarity (31-word vocabulary).
     */
   def minhashNearDupPairs(docs: DataFrame, minJaccard: Double): DataFrame = {
-    // materialize the signature index ONCE (round-21, guide §1.2/§2.4):
-    // the previous lazy form re-evaluated tokenize+hashset 4× per run
-    // (both sides of the bucket self-join + both verify sides) and the
-    // 24-hash signature 2× — 8 scans of the corpus in one query plan.
-    // At 100 TB this materialization IS the production shape: sign the
-    // corpus once, keep the (id, hset) index, join against it.
-    val toks = tokenHashSets(docs).localCheckpoint()
-    val buckets = minhashBandBuckets(toks).localCheckpoint()
+    // `toks` is read by the band signatures and both verify sides,
+    // `buckets` by both sides of the band self-join. At 100 TB this is the
+    // production shape: sign the corpus once, keep the (id, hset) index,
+    // join against it.
+    val toks = Checkpoints.checkpoint(tokenHashSets(docs))
+    val buckets = Checkpoints.checkpoint(minhashBandBuckets(toks))
     val cand = bandCandidates(buckets, buckets, minJaccard, requireIdOrder = true)
     verifyJaccard(cand, toks, minJaccard)
   }
 
-  /** Band-bucket candidate join with two result-preserving prunes
-    * (round-21): the PPJoin LENGTH filter (J(A,B) ≥ t ⟹ t·|A| ≤ |B| and
+  /** Band-bucket candidate join with two result-preserving prunes:
+    * the PPJoin LENGTH filter (J(A,B) ≥ t ⟹ t·|A| ≤ |B| and
     * t·|B| ≤ |A|, because J ≤ min/max — the `- 1e-9` nudge absorbs the
     * float-product ulp exactly as in [[prefixJaccardPairs]]), and
     * first-band emission ([[firstBandJoin]]): a pair agreeing on k bands
@@ -153,14 +151,15 @@ object Dedup {
     */
   def incrementalNearDupPairs(existing: DataFrame, incoming: DataFrame,
                               minJaccard: Double): DataFrame = {
-    // same materialize-once + pruned-candidate shape as the batch form
-    // (round-21); the bipartite join keeps both directions, so no id
-    // order — first-band emission and the length filter apply unchanged
-    val te = tokenHashSets(existing).localCheckpoint()
-    val ti = tokenHashSets(incoming).localCheckpoint()
+    // each side's hash sets are read by its band signatures and the
+    // verify; each side's buckets only by the candidate join. The
+    // bipartite join keeps both directions, so no id order — first-band
+    // emission and the length filter apply unchanged
+    val te = Checkpoints.checkpoint(tokenHashSets(existing))
+    val ti = Checkpoints.checkpoint(tokenHashSets(incoming))
     val cand = bandCandidates(
-      minhashBandBuckets(te).localCheckpoint(),
-      minhashBandBuckets(ti).localCheckpoint(),
+      Checkpoints.checkpoint(minhashBandBuckets(te)),
+      Checkpoints.checkpoint(minhashBandBuckets(ti)),
       minJaccard, requireIdOrder = false)
     verifyJaccard(cand, te.unionByName(ti), minJaccard)
   }
@@ -191,22 +190,20 @@ object Dedup {
     */
   def prefixJaccardPairs(docs: DataFrame, minJaccard: Double,
                          maxId: Long): DataFrame = {
-    // materialize the hash-set index once (round-21): the lazy form
-    // re-evaluated tokenize+hashset for the df aggregate, the index join,
-    // both prefix self-join sides and both verify sides — 6 evaluations
-    val toks = tokenHashSets(docs.filter(col(IdCol) < maxId)).localCheckpoint()
+    // the hash-set index is read by the df aggregate, the index join and
+    // both verify sides
+    val toks = Checkpoints.checkpoint(
+      tokenHashSets(docs.filter(col(IdCol) < maxId)))
     val ex = TextStats.explodeNonNull(toks,
       Seq(col("id"), size(col("hset")).as("n")), col("hset"), "h")
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("id").orderBy(col("df").asc, col("h").asc)
-    // the prefix index is self-joined below: materialize it so the
-    // df-aggregate + window chain runs once, not twice
-    val prefix = ex.join(dfreq, "h")
+    // the prefix index is read by both sides of the self-join below
+    val prefix = Checkpoints.checkpoint(ex.join(dfreq, "h")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <=
         col("n") - ceil(lit(minJaccard) * col("n") - lit(1e-9)) + 1)
-      .select("id", "h", "n")
-      .localCheckpoint()
+      .select("id", "h", "n"))
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.h") === col("y.h") && col("x.id") < col("y.id") &&
           col("y.n") >= lit(minJaccard) * col("x.n") - lit(1e-9) &&
@@ -357,16 +354,15 @@ object Dedup {
     */
   def winnowingOverlapPairs(docs: DataFrame, minShared: Int,
                             maxDocFreq: Long): DataFrame = {
-    // materialize the fingerprint postings once (round-21): `indexed` is
-    // self-joined and itself contains fp⋈rare, so the lazy form re-ran
-    // the staged winnowing chain up to 4× per query
-    val fp = TextStats.explodeNonNull(TextStats.winnowedDocs(docs),
-        Seq(col("id")), col("fps"), "fp")
-      .localCheckpoint()
+    // the fingerprint postings are read by the df aggregate and the
+    // semi-join that keeps the rare ones; the rare postings by both sides
+    // of the self-join
+    val fp = Checkpoints.checkpoint(TextStats.explodeNonNull(
+      TextStats.winnowedDocs(docs), Seq(col("id")), col("fps"), "fp"))
     val rare = fp.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq)
       .select("fp")
-    val indexed = fp.join(rare, Seq("fp"), "left_semi").localCheckpoint()
+    val indexed = Checkpoints.checkpoint(fp.join(rare, Seq("fp"), "left_semi"))
     indexed.as("x").join(indexed.as("y"),
         col("x.fp") === col("y.fp") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -388,18 +384,15 @@ object Dedup {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           maxIter: Int = 20): DataFrame = Checkpoints.scoped { s =>
-    // materialize the edge list ONCE: every round joins it, and without
-    // the checkpoint each round would re-run the (expensive) pair
-    // detection that produced it. Round-21: symmetrize by EXPLODING each
-    // pair into its two directions instead of a self-union — the union
-    // form evaluated `pairs` (the expensive detection join) twice inside
-    // this one job; the explode form is one evaluation, same rows.
-    val edges = s.checkpoint(pairs.select(explode(array(
+    // every round joins the edge list, so the (expensive) pair detection
+    // that produced it runs once; exploding each pair into its two
+    // directions evaluates `pairs` once, where a self-union would twice
+    val edges = Checkpoints.checkpoint(pairs.select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v")))
-    var labels = s.checkpoint(nodes.select(col("id"), col("id").as("component"),
-        col("id").as("__prev"))).select("id", "component")
+    var labels = Checkpoints.checkpoint(nodes.select(col("id"),
+        col("id").as("component"), col("id").as("__prev"))).select("id", "component")
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -413,7 +406,7 @@ object Dedup {
       // the previous form paid every round (one |V|-row exchange per
       // round saved; at full-corpus CC that join was the same size
       // as the propagation step itself)
-      val next = s.checkpoint(labels.join(neighborMin, Seq("id"), "left")
+      val next = Checkpoints.checkpoint(labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("n_min"), col("component")))
             .as("component"),
@@ -445,18 +438,15 @@ object Dedup {
     val shingled = toks.select(col("id"),
       array_distinct(if (n == 1) col("toks")
                      else TextStats.shingles(col("toks"), n)).as("shingles"))
-    // Round-21 restructure (guide §1.2/§2.3): each posting row carries its
-    // document's shingle count `n_sh`, and the index is MATERIALIZED once
-    // — the previous form re-ran tokenize+shingle for both self-join
-    // sides AND twice more via the separate `sizes` joins (4 evaluations,
-    // plus two extra shuffled joins). The PPJoin length filter inside the
+    // Each posting row carries its document's shingle count `n_sh`, so
+    // no join brings the sizes back, and the index is read by both sides
+    // of the self-join. The PPJoin length filter inside the
     // join condition (J ≥ t ⟹ t·|A| ≤ |B| ≤ |A|/t, the `- 1e-9` ulp
     // nudge as in prefixJaccardPairs) prunes candidate rows BEFORE the
     // pair aggregation — it only drops pairs the exact jaccard filter
     // below would reject, so the output set is identical (oracle-checked).
-    val inv = TextStats.explodeNonNull(shingled,
-        Seq(col("id"), size(col("shingles")).as("n_sh")), col("shingles"), "sh")
-      .localCheckpoint()
+    val inv = Checkpoints.checkpoint(TextStats.explodeNonNull(shingled,
+      Seq(col("id"), size(col("shingles")).as("n_sh")), col("shingles"), "sh"))
     val shared = inv.as("x").join(inv.as("y"),
         col("x.sh") === col("y.sh") && col("x.id") < col("y.id") &&
           col("y.n_sh") >= lit(minJaccard) * col("x.n_sh") - lit(1e-9) &&

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** Similarity search over an embedding column `Array[Float]`
   * (SURVEY.md §7.2.5).
@@ -202,12 +203,10 @@ object Similarity {
                 lambda: Double): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // round-21: `cand` feeds both pair sides AND the singles sentinel —
-    // materialize so the corpus-wide scoring pass runs once, not 3×.
+    // `cand` is read by both pair sides and the singles sentinel.
     // WindowGroupLimit pushdown on the candidate stage is asserted
-    // pre-checkpoint by PlanSpec via [[mmrCandidates]].
-    val cand = mmrCandidates(corpus, queries, m)
-      .localCheckpoint()
+    // before the checkpoint by PlanSpec via [[mmrCandidates]].
+    val cand = Checkpoints.checkpoint(mmrCandidates(corpus, queries, m))
     val a = cand.select(col("query_id"), col("neighbor_id").as("id_a"),
       col("rel_raw").as("relraw_a"), col("rel").as("rel_a"),
       col("cv").as("va"))
@@ -281,13 +280,10 @@ object Similarity {
   def cosinePairsExact(corpus: DataFrame, minCosine: Double,
                        maxId: Long): DataFrame = {
     // normalize once per vector (N ops), dot per pair (N² ops) — cheaper
-    // than per-pair norms, and the exact op order the oracle SQL uses
-    val v = corpus.filter(col(IdCol) < maxId)
-      .select(col(IdCol).as("id"),
-        unitNormalize(col(VecCol)).as("u"))
-      // round-21: both self-join sides read `v` — materialize so the
-      // (interpreted-HOF) unit normalization runs once per vector
-      .localCheckpoint()
+    // than per-pair norms, and the exact op order the oracle SQL uses;
+    // both self-join sides read `v`
+    val v = Checkpoints.checkpoint(corpus.filter(col(IdCol) < maxId)
+      .select(col(IdCol).as("id"), unitNormalize(col(VecCol)).as("u")))
     val a = v.select(col("id").as("id_a"), col("u").as("ua"))
     val b = v.select(col("id").as("id_b"), col("u").as("ub"))
     a.join(b, col("id_a") < col("id_b"))
@@ -377,14 +373,12 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusU = corpus.filter(col(IdCol) < maxId)
+    // read by the KMeans fit and the assignment pass. fitLayout re-keys
+    // the fit's input deterministically downstream of the block, so the
+    // pinned digests hold.
+    val corpusU = Checkpoints.checkpoint(corpus.filter(col(IdCol) < maxId)
       .select(col(IdCol).as("id"), unitNormalize(col(VecCol)).as("u"))
-      .withColumn("uv", array_to_vector(col("u")))
-      // round-21: read by the KMeans fit AND the assignment pass —
-      // materialize so unit-normalization runs once. The fit's input
-      // layout stays identical (fitLayout re-keys deterministically
-      // downstream of this checkpoint), so the pinned digests hold.
-      .localCheckpoint()
+      .withColumn("uv", array_to_vector(col("u"))))
     // 5 iterations, not convergence: cells only need to be a balanced
     // space partition (the IVF index-build economics) — recall is what's
     // gated, and it holds with margin vs the 0.5 gate
@@ -402,8 +396,9 @@ object Similarity {
     // each assignment row carries the id's FULL probed cell set (a second
     // window over the same id partitioning — no extra exchange), so the
     // pair join below can dedupe multi-probe collisions with a plain
-    // filter instead of shuffling the candidate list
-    val assigned = corpusU.select(col("id"), col("u"))
+    // filter instead of shuffling the candidate list; both sides of that
+    // join read the assignment
+    val assigned = Checkpoints.checkpoint(corpusU.select(col("id"), col("u"))
       .crossJoin(broadcast(centroids))
       .withColumn("csim", dotProduct(col("u"), col("centroid")))
       .withColumn("crk", row_number().over(
@@ -411,10 +406,7 @@ object Similarity {
       .filter(col("crk") <= nassign)
       .withColumn("cells", collect_set(col("cell"))
         .over(Window.partitionBy("id")))
-      .select("id", "u", "cell", "cells")
-      // round-21: self-joined below — materialize so the centroid-rank
-      // assignment (crossJoin + window) runs once, not per join side
-      .localCheckpoint()
+      .select("id", "u", "cell", "cells"))
     // a pair sharing several probed cells meets once per shared cell;
     // keeping only the meeting in the SMALLEST shared cell (array_min ∘
     // array_intersect on the carried cell sets — a codegen filter,
@@ -449,11 +441,10 @@ object Similarity {
     def unit(df: DataFrame): DataFrame = df.select(col(IdCol).as("id"),
       unitNormalize(col(VecCol)).as("u"))
 
-    // round-21: read by the KMeans fit AND the post-fit assignment —
-    // materialize so unit-normalization runs once (fitLayout re-keys
-    // deterministically downstream, so the pinned digests hold)
-    val corpusU = unit(corpus).withColumn("uv", array_to_vector(col("u")))
-      .localCheckpoint()
+    // read by the KMeans fit and the post-fit assignment (fitLayout
+    // re-keys deterministically downstream, so the pinned digests hold)
+    val corpusU = Checkpoints.checkpoint(
+      unit(corpus).withColumn("uv", array_to_vector(col("u"))))
     // index-build economics (what faiss does for IVF training): centroids
     // don't need a converged clustering, only a balanced space partition —
     // random init + few iterations replaces k-means||'s multiple full
@@ -512,12 +503,11 @@ object Similarity {
     // at most sampleN unit vectors. The collect is bounded by sampleN
     // regardless of corpus size; at 100 TB this is the offline index
     // build on a sample, exactly like the IVF centroid fit.
-    // round-21: the codebook sample, the encode pass and the exact
-    // rerank all read unit-normalized corpus vectors — materialize them
-    // once (per-row deterministic, so the pinned digests hold)
-    val corpusU = corpus
-      .select(col(IdCol).as("neighbor_id"), unitNormalize(col(VecCol)).as("u"))
-      .localCheckpoint()
+    // the codebook sample, the encode pass and the exact rerank all read
+    // the unit-normalized corpus vectors (per-row deterministic, so the
+    // pinned digests hold)
+    val corpusU = Checkpoints.checkpoint(corpus
+      .select(col(IdCol).as("neighbor_id"), unitNormalize(col(VecCol)).as("u")))
     val sample = corpusU
       .orderBy("neighbor_id").limit(sampleN)
       .select("u").collect().map(_.getSeq[Double](0).toArray)
@@ -675,17 +665,15 @@ object Similarity {
     // one validity check per VECTOR (not per hyperplane): right dimension
     // and no null elements. DotProduct == aggregate(zip_with(...))
     // bit-for-bit (same fold order) but codegen'd; unlike zip_with it
-    // folds the common prefix of mismatched lengths and reads null slots
-    // as garbage, so malformed vectors must null their projections
-    // explicitly — null band keys are what keep them out of every bucket.
-    val unit = corpus.select(col(IdCol).as("id"),
-        unitNormalize(col(VecCol)).as("u"))
-      .withColumn("__ok",
-        size(col("u")) === d && !exists(col("u"), x => x.isNull))
-      // round-21: `unit` feeds the projection/bucketing chain AND both
-      // exact-verify sides — materialize so unit-normalization (an
-      // interpreted HOF) runs once per vector, not 3-4×
-      .localCheckpoint()
+    // fails the query on a vector of another length or with a null
+    // element, so a malformed vector is neither normalized nor projected
+    // (`__ok`: normalized) — null band keys are what keep it out of every
+    // bucket. `unit` is read by the projection chain and both exact-verify
+    // sides.
+    val ok = size(col(VecCol)) === d && !exists(col(VecCol), x => x.isNull)
+    val unit = Checkpoints.checkpoint(corpus.select(col(IdCol).as("id"),
+        when(ok, unitNormalize(col(VecCol))).as("u"))
+      .withColumn("__ok", col("u").isNotNull))
     val bucketCols = projections.zipWithIndex.map { case (g, i) =>
       floor(when(col("__ok"), dotProduct(col("u"), typedlit(g.toSeq)))
         .otherwise(lit(null)) / LshBucketLength)
@@ -696,12 +684,10 @@ object Similarity {
     val bandCols = (0 until bands).map(b => Dedup.bandKey(b,
       (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"b$i"))))
     // every row carries ALL band keys, so Dedup.firstBandJoin can emit a
-    // pair agreeing on k bands once, not k times
-    val buckets = Dedup.explodeBands(
-        bucketed.select(col("id") +: bandCols: _*), bands)
-      // round-21: self-joined below — materialize so the 8 hyperplane
-      // projections are computed once per vector, not per join side
-      .localCheckpoint()
+    // pair agreeing on k bands once, not k times; both sides of that
+    // self-join read the buckets
+    val buckets = Checkpoints.checkpoint(Dedup.explodeBands(
+      bucketed.select(col("id") +: bandCols: _*), bands))
     val cand = Dedup.firstBandJoin(buckets, buckets, bands,
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §7.2.5):
   * token counting, language-ID heuristics, quality scoring, fingerprinting.
@@ -271,13 +272,11 @@ object TextStats {
     // exploded frame via a broadcast LEFT join + one keyed aggregation.
     // Splitting totals and hits into separate branches re-evaluates the
     // shingling per branch — measured 3× slower at sf0.1.
-    val grams = explodeNonNull(docs, Seq(col(IdCol)),
-        array_distinct(shingles(tokens(col(TextCol)), 3)), "g")
-      // round-21: materialized once — the benchmark gram set and the
-      // corpus-side aggregation both read `grams`; the bench subtree's
-      // pushed-down id filter makes the two subtrees differ, so the lazy
-      // form re-ran tokenize+shingle for each (plan-counted 3 scans)
-      .localCheckpoint()
+    // the benchmark gram set and the corpus-side aggregation both read
+    // `grams`; the bench subtree's pushed-down id filter makes the two
+    // subtrees differ, so exchange reuse cannot share them
+    val grams = Checkpoints.checkpoint(explodeNonNull(docs, Seq(col(IdCol)),
+      array_distinct(shingles(tokens(col(TextCol)), 3)), "g"))
     val bench = grams.filter(col(IdCol) < benchMaxId)
       .select("g").distinct()
       .withColumn("__hit", lit(1))

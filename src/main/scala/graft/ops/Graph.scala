@@ -36,30 +36,30 @@ object Graph {
     // checkpoint independently, and without this the caller's (often
     // expensive) edge derivation — for q_pagerank, a full per-user
     // window over the events table — executes once per consumer
-    val e = s.checkpoint(edges)
-    val nodes = s.checkpoint(e.select(col("src").as("node"))
+    val e = Checkpoints.checkpoint(edges)
+    val nodes = Checkpoints.checkpoint(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct())
     val n = nodes.count().toDouble
     val outStrength = e.groupBy("src").agg(sum(col("weight")).as("wout"))
-    val norm = s.checkpoint(e.join(outStrength, Seq("src"))
+    val norm = Checkpoints.checkpoint(e.join(outStrength, Seq("src"))
       .select(col("src"), col("dst"),
         (col("weight").cast("double") / col("wout")).as("p")))
     // nodes and norm are themselves checkpointed; the raw edge blocks
     // have no further reader
     s.release(e)
     // nodes with no out-edges: their whole rank is dangling mass
-    val dangling = s.checkpoint(nodes
+    val dangling = Checkpoints.checkpoint(nodes
       .join(norm.select(col("src").as("node")), Seq("node"), "left_anti"))
 
-    var ranks = s.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
+    var ranks = Checkpoints.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
     for (_ <- 1 to PageRankIters) {
       val dmass = ranks.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dmass"))
       val contrib = norm.join(ranks, norm("src") === ranks("node"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") * col("p")).as("in_mass"))
-      val next = s.checkpoint(nodes.join(contrib, Seq("node"), "left")
+      val next = Checkpoints.checkpoint(nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(dmass))
         .select(col("node"),
           (lit((1.0 - damping) / n) +
@@ -103,7 +103,7 @@ object Graph {
       @annotation.tailrec
       def peel(cur: DataFrame, peels: Int): DataFrame = {
         val obs = Observation()
-        val deg = s.checkpoint(cur.select(col("u").as("node"))
+        val deg = Checkpoints.checkpoint(cur.select(col("u").as("node"))
           .union(cur.select(col("v").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg_in_core"))
           .observe(obs, min(col("deg_in_core")).as("min_deg")))
@@ -115,7 +115,7 @@ object Graph {
         else {
           require(peels < maxIter, s"k-core peel did not converge in $maxIter rounds")
           val keep = deg.filter(col("deg_in_core") >= k).select("node")
-          val next = s.checkpoint(cur
+          val next = Checkpoints.checkpoint(cur
             .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
             .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
           s.release(cur)
@@ -123,7 +123,7 @@ object Graph {
           peel(next, peels + 1)
         }
       }
-      peel(s.checkpoint(undirected(edges)), 0)
+      peel(Checkpoints.checkpoint(undirected(edges)), 0)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.GraftTestSpark.persistedRdds
 
 class CheckpointsSpec extends AnyFunSuite {
@@ -9,12 +10,15 @@ class CheckpointsSpec extends AnyFunSuite {
 
   private def ids(n: Int) = spark.range(n).toDF("id")
 
+  /** Ids of the checkpoints `df` reads. */
+  private def reads(df: DataFrame): Set[Int] = Checkpoints.reads(df).map(_.id).toSet
+
   test("a scope keeps what its returned frame reads, through a self-join " +
       "copy of the scan, and frees the rest") {
     val before = persistedRdds
-    val joined = Checkpoints.scoped { s =>
-      val a = s.checkpoint(ids(10))
-      val b = s.checkpoint(a.select(($"id" * 2).as("id")))
+    val joined = Checkpoints.scoped { _ =>
+      val a = Checkpoints.checkpoint(ids(10))
+      val b = Checkpoints.checkpoint(a.select(($"id" * 2).as("id")))
       b.as("x").join(b.as("y"), $"x.id" === $"y.id")
     }
     assert((persistedRdds -- before).size == 1)
@@ -26,16 +30,16 @@ class CheckpointsSpec extends AnyFunSuite {
 
   test("a driver-side result reads nothing: every checkpoint is freed") {
     val before = persistedRdds
-    val n = Checkpoints.scoped(s => s.checkpoint(ids(5)).count())
+    val n = Checkpoints.scoped(_ => Checkpoints.checkpoint(ids(5)).count())
     assert(n == 5)
     assert(persistedRdds -- before == Set.empty[Int])
   }
 
   test("a throw frees every checkpoint the scope took and is re-thrown") {
     val before = persistedRdds
-    val err = intercept[IllegalStateException](Checkpoints.scoped { s =>
-      val a = s.checkpoint(ids(5))
-      s.checkpoint(a.filter($"id" > 1))
+    val err = intercept[IllegalStateException](Checkpoints.scoped { _ =>
+      val a = Checkpoints.checkpoint(ids(5))
+      Checkpoints.checkpoint(a.filter($"id" > 1))
       throw new IllegalStateException("round failed")
     })
     assert(err.getMessage == "round failed")
@@ -46,7 +50,7 @@ class CheckpointsSpec extends AnyFunSuite {
     val before = persistedRdds
     val outer = ids(5).localCheckpoint()
     val joined = Checkpoints.scoped { s =>
-      val inner = s.checkpoint(outer.filter($"id" > 0))
+      val inner = Checkpoints.checkpoint(outer.filter($"id" > 0))
       s.release(outer)
       inner.join(outer, "id")
     }
@@ -57,6 +61,45 @@ class CheckpointsSpec extends AnyFunSuite {
     Checkpoints.release(outer.select("id"))
     assert((persistedRdds -- before).size == 1)
     Checkpoints.release(joined)
+    assert(persistedRdds -- before == Set.empty[Int])
+  }
+
+  test("a nested scope hands what its frame reads to the enclosing scope, " +
+      "which frees it once its own result stops reading it") {
+    val before = persistedRdds
+    val doubled = Checkpoints.scoped { _ =>
+      val kept = Checkpoints.scoped { _ =>
+        val a = Checkpoints.checkpoint(ids(10))
+        Checkpoints.checkpoint(a.filter($"id" > 4))
+      }
+      assert((persistedRdds -- before) == reads(kept)) // `a` is freed
+      Checkpoints.checkpoint(kept.select(($"id" * 2).as("id")))
+    }
+    assert((persistedRdds -- before) == reads(doubled)) // `kept` is freed
+    assert(doubled.count() == 5)
+    Checkpoints.release(doubled)
+    assert(persistedRdds -- before == Set.empty[Int])
+  }
+
+  test("a checkpoint another thread takes while a main runs a query " +
+      "survives the run") {
+    def onThread[A](f: => A): A = {
+      var out: Option[A] = None
+      val t = new Thread(() => out = Some(f))
+      t.start()
+      t.join()
+      out.get
+    }
+    val before = persistedRdds
+    val other = SparkEntry.run(spark, "q_winnow_pairs", GraftTestSpark.sfDir) { df =>
+      df.write.format("noop").mode("overwrite").save()
+      onThread(Checkpoints.checkpoint(ids(7)))
+    }
+    // nor does a thread started inside a scope join it
+    val started = Checkpoints.scoped(_ => onThread(Checkpoints.checkpoint(ids(3))))
+    assert(persistedRdds -- before == reads(other) ++ reads(started))
+    assert(other.count() == 7 && started.count() == 3)
+    Seq(other, started).foreach(Checkpoints.release)
     assert(persistedRdds -- before == Set.empty[Int])
   }
 
@@ -81,8 +124,11 @@ class CheckpointsSpec extends AnyFunSuite {
     (checkpointing ++ driverSide).foreach { name =>
       val before = persistedRdds
       val held = SparkEntry.run(spark, name, sf) { df =>
+        // the build freed every checkpoint its frame does not read
+        val held = persistedRdds -- before
+        assert(held == reads(df), s"$name holds $held, its frame reads ${reads(df)}")
         df.write.format("noop").mode("overwrite").save()
-        persistedRdds -- before
+        held
       }
       info(s"$name: ${held.size} checkpoints held through the sink")
       if (!driverSide.contains(name)) assert(held.nonEmpty, s"$name held none")

@@ -141,7 +141,6 @@ class EdgeCasesSpec extends AnyFunSuite {
       DotProduct(arr(d, 0.5, 0.25), arr(f, 2f, 4f)) -> Some(2.0),
       DotProduct(arr(d, 0.1, 0.2), arr(d, 0.3, 0.4)) -> Some(0.1 * 0.3 + 0.2 * 0.4),
       DotProduct(arr(f), arr(d)) -> Some(0.0),
-      DotProduct(arr(f, 1f, null), arr(f, 2f, 3f)) -> None,
       DotProduct(nul(f), arr(f, 1f)) -> Some(null),
       SortedIntersectCount(longs(1L, 2L, 3L), longs(2L, 3L, 4L)) -> Some(2),
       SortedIntersectCount(longs(), longs(1L)) -> Some(0),
@@ -171,15 +170,22 @@ class EdgeCasesSpec extends AnyFunSuite {
       PqEncode(arr(d, 1.0), books) -> Some(null),
       PqEncode(arr(d), books) -> Some(null),
       PqEncode(nul(d), books) -> Some(null))
+    def generate(e: Expression) = GenerateUnsafeProjection.generate(Seq(e))
+      .apply(InternalRow.empty).get(0, e.dataType)
     val checked = scala.collection.mutable.Set[String]()
     for ((e, want) <- cases) {
       val interpreted = convertToScala(e.eval(), e.dataType)
-      val generated = convertToScala(GenerateUnsafeProjection.generate(Seq(e))
-        .apply(InternalRow.empty).get(0, e.dataType), e.dataType)
+      val generated = convertToScala(generate(e), e.dataType)
       assert(interpreted == generated, e)
       want.foreach(w => assert(interpreted == w, e))
       checked += e.nodeName
     }
+    // a null element is refused by its index on both paths, either side
+    for (e <- Seq(DotProduct(arr(f, 1f, null), arr(f, 2f, 3f)),
+                  DotProduct(arr(d, 1.0, 2.0), arr(f, 3f, null)));
+         path <- Seq[Expression => Any](_.eval(), generate))
+      assert(intercept[IllegalArgumentException](path(e)).getMessage ==
+        "DotProduct needs vectors without null elements, got one at index 1")
     assert(checked == Set("DotProduct", "SortedIntersectCount", "SimHash64",
       "TokenHashSet", "MinHashSignature", "CharEntropy", "RepetitionMicro",
       "PqEncode"))
@@ -205,6 +211,23 @@ class EdgeCasesSpec extends AnyFunSuite {
       val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
       assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), e.getMessage)
     }
+  }
+
+  test("a malformed vector fails the exact cosine search, and " +
+      "lshCosinePairs keeps it out of every bucket") {
+    val corpus = Seq((1L, Seq(1f, 0f, 0f)), (2L, Seq(1f, 0f, 0f)),
+        (3L, Seq(1f, 0f, 0f)), (4L, Seq(1f, 0f)))
+      .toDF("vec_id", "embedding")
+      .withColumn("embedding", when($"vec_id" === 3,
+        array(lit(1f), lit(null).cast("float"), lit(0f))).otherwise($"embedding"))
+    val pairs = Similarity.lshCosinePairs(corpus, minCosine = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 1.0)))
+    val err = intercept[Exception](Similarity.knnBruteForce(
+      corpus.filter($"vec_id" =!= 4), corpus.filter($"vec_id" === 1), 2).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage)
+        .exists(_.contains("without null elements, got one at index 1"))))
   }
 
   test("DotProduct propagates null inputs as null") {
